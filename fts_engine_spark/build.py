@@ -43,11 +43,9 @@ import json
 import math
 import os
 import time
-from collections.abc import Iterator
 from dataclasses import dataclass, field
 
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame, SparkSession, functions as F
 from pyspark.sql.types import (
     ArrayType,
@@ -59,12 +57,7 @@ from pyspark.sql.types import (
     StructType,
 )
 
-from .codec import (
-    SKIP_BLOCK,
-    _block_byte_offsets,
-    encode_postings,
-    varbyte_encode,
-)
+from .codec import SKIP_BLOCK
 from .checkpoint import Manifest, atomic_write_json
 from .functions.udfs import make_term_tf_by_lang_udf, make_term_tf_udf
 
@@ -221,9 +214,9 @@ def assign_doc_ids(
 def _group_encoder(shard_size: int, skip: int):
     """Shared batch-vectorized group encoder.
 
-    Returns ``(out_schema, encode_groups)`` where ``encode_groups`` emits one
-    output RecordBatch for the complete (shard, term) groups
-    ``[gstarts, gends)`` over sorted posting arrays. Every group in the call
+    Returns ``encode_groups``, which emits one output RecordBatch for the
+    complete (shard, term) groups ``[gstarts, gends)`` over sorted posting
+    arrays. Every group in the call
     is encoded by ONE whole-batch varbyte pass (``codec.varbyte_encode_all``)
     — the deltas for all groups are computed in one numpy pass (per-group
     bases patched in at the group starts), packed into a single byte buffer,
@@ -337,137 +330,102 @@ def _group_encoder(shard_size: int, skip: int):
         ]
         return pa.RecordBatch.from_arrays(arrays, schema=out_schema)
 
-    return out_schema, encode_groups
+    return encode_groups
 
 
-def _make_arrow_encoder(shard_size: int, skip: int):
-    """mapInArrow kernel over EXPLODED rows: consume (shard_id, term,
-    doc_id, tf, dl) record batches sorted by (shard_id, term, doc_id) within
-    the partition; emit one encoded posting row per (shard_id, term) group.
+def salt_policy(shard_size: int, n_shards: int, parallelism: int) -> int:
+    """Term-salt fan-out of a ``(shard_id, salt)``-partitioned encode — the
+    one rule the postings wave, the compaction re-encode and the positional
+    encode share. Enough salt copies that ``n_shards * salt`` covers
+    ``parallelism`` encode tasks (few-shard builds still use the cluster;
+    a task holds ~``shard_size / salt`` docs' postings), capped so no slice
+    drops below ``_MIN_SALT_SLICE_DOCS`` docs. Salting is NOT free: the
+    postings wave's per-copy pairs filter is an interpreted higher-order
+    function whose cost grows ~linearly in the salt (measured r6 on a
+    6k-doc staged build: postings 1.6 s at salt 4 vs 10.3 s at salt 43,
+    identical output), and below ~2k docs per slice the per-task floor
+    exceeds the encode work (~30 us/doc). Production 1M-doc shards keep the
+    full fan-out; 1-4k-doc shards drop to salt 1-2."""
+    max_salt = max(1, shard_size // _MIN_SALT_SLICE_DOCS)
+    return min(max(1, math.ceil(parallelism / max(1, n_shards))), max_salt)
 
-    This is the verification-grade path (pinned byte-identical to the
-    per-group reference encoder by hypothesis tests in tests/test_codec.py);
-    the production build uses :func:`_make_doc_encoder`, which moves the
-    explode+sort inside the kernel and crosses the JVM→Python boundary once
-    per document instead of once per posting. The partition sort guarantees
-    the trailing group is the only possibly-incomplete one, so the
-    carry-over between batches is a single group fragment (encoded via the
-    per-group ``encode_postings`` path, byte-identical to the vectorized
-    one).
+
+def _flat_encoder(
+    shard_size: int,
+    skip: int,
+    group_chunk: int = 1 << 16,
+    max_chunk_rows: int = 1 << 24,
+):
+    """The sort-group-encode core shared by every postings write (batch
+    build, incremental staging, compaction re-encode).
+
+    Returns ``encode_flat(codes, dictionary, shard, doc, tf, dl)``: one
+    partition's postings as flat int64 arrays in ANY order, terms as codes
+    into the Arrow string ``dictionary``; yields encoded POSTINGS_SCHEMA
+    batches, one row per (shard_id, term) group. The (shard, term, doc)
+    sort is one ``np.lexsort`` over int keys and the varbyte encode is
+    :func:`_group_encoder`'s whole-batch pass — no JVM sort, no per-group
+    Python. Groups are ordered by term STRING (not dictionary code) so
+    parquet row-group min/max stats on ``term`` stay tight.
+
+    Output chunking is bounded by ``group_chunk`` groups AND
+    ``max_chunk_rows`` postings: the group-count bound alone leaves chunk
+    bytes unbounded (65536 head-term groups can pack >2 GiB, wrapping the
+    int32 blob offsets — ``_group_encoder`` additionally hard-fails before
+    the cast). 16M postings encode to <=160 MiB per blob (<=10 B/value),
+    comfortably inside int32.
     """
     import pyarrow as pa
-    import pyarrow.compute as pc
 
-    out_schema, encode_groups = _group_encoder(shard_size, skip)
+    encode_groups = _group_encoder(shard_size, skip)
 
-    def _np(col) -> np.ndarray:
-        try:
-            a = col.to_numpy(zero_copy_only=True)
-        except pa.ArrowInvalid:
-            a = col.to_numpy(zero_copy_only=False)
-        return a if a.dtype == np.int64 else a.astype(np.int64)
+    def encode_flat(codes, dictionary, shard, doc, tf, dl):
+        m = len(doc)
+        if not m:
+            return
+        vocab = np.asarray(dictionary, dtype=object)
+        rank_of = np.empty(len(vocab), dtype=np.int64)
+        rank_of[np.argsort(vocab, kind="stable")] = np.arange(len(vocab))
+        ranks = rank_of[codes]
 
-    def encode_stream(batches):
-        # pending fragment of the (single) unfinished trailing group
-        pend_term: str | None = None
-        pend_shard = 0
-        pend_arrs: list[tuple[np.ndarray, np.ndarray, np.ndarray]] = []
-        rows: list[tuple] = []
+        order = np.lexsort((doc, ranks, shard))
+        doc, tf, dl = doc[order], tf[order], dl[order]
+        shard, ranks, codes = shard[order], ranks[order], codes[order]
 
-        def emit(term: str, shard_id: int, d, t, dl):
-            enc = encode_postings(d, t, base_doc=shard_id * shard_size, skip=skip)
-            dl_blob = varbyte_encode(dl)
-            rows.append(
-                (
-                    term, shard_id, enc.count, int(t.sum()), enc.doc_blob,
-                    enc.tf_blob, dl_blob, enc.skip_last_doc.tolist(),
-                    enc.skip_max_tf.tolist(), enc.skip_doc_off.tolist(),
-                    enc.skip_tf_off.tolist(),
-                    _block_byte_offsets(dl.astype(np.uint64), skip).tolist(),
-                )
-            )
+        change = np.empty(m, dtype=bool)
+        change[0] = True
+        np.logical_or(
+            ranks[1:] != ranks[:-1], shard[1:] != shard[:-1], out=change[1:]
+        )
+        gstarts = np.flatnonzero(change)
+        gends = np.append(gstarts[1:], m)
 
-        def emit_pending():
-            nonlocal pend_term, pend_arrs
-            if pend_term is None:
-                return
-            ds = np.concatenate([a[0] for a in pend_arrs])
-            ts = np.concatenate([a[1] for a in pend_arrs])
-            dls = np.concatenate([a[2] for a in pend_arrs])
-            emit(pend_term, pend_shard, ds, ts, dls)
-            pend_term = None
-            pend_arrs = []
+        G = len(gstarts)
+        i = 0
+        while i < G:
+            row_limit = int(gstarts[i]) + max_chunk_rows
+            j_rows = int(np.searchsorted(gends, row_limit, side="right"))
+            j = max(i + 1, min(i + group_chunk, G, j_rows))
+            gs = gstarts[i:j]
+            ge = gends[i:j]
+            term_at = dictionary.take(pa.array(codes[gs], type=pa.int64()))
+            yield encode_groups(term_at, shard, doc, tf, dl, gs, ge)
+            i = j
 
-        def flush():
-            nonlocal rows
-            if not rows:
-                return None
-            cols = list(zip(*rows))
-            rb = pa.RecordBatch.from_arrays(
-                [pa.array(c, type=f.type) for c, f in zip(cols, out_schema)],
-                schema=out_schema,
-            )
-            rows = []
-            return rb
+    return encode_flat
 
-        for batch in batches:
-            n = batch.num_rows
-            if n == 0:
-                continue
-            term_a = batch.column("term")
-            shard_np = _np(batch.column("shard_id"))
-            doc_np = _np(batch.column("doc_id"))
-            tf_np = _np(batch.column("tf"))
-            dl_np = _np(batch.column("dl"))
 
-            if n > 1:
-                change = pc.or_(
-                    pc.not_equal(term_a.slice(1), term_a.slice(0, n - 1)),
-                    pa.array(shard_np[1:] != shard_np[:-1]),
-                ).to_numpy(zero_copy_only=False)
-                starts = np.flatnonzero(np.concatenate(([True], change)))
-            else:
-                starts = np.array([0])
-            ends = np.append(starts[1:], n)
-            G = len(starts)
+def _one_table(batches):
+    """A partition's non-empty batches as one single-chunk table (None when
+    empty) — the encode kernels buffer their whole partition."""
+    import pyarrow as pa
 
-            g_lo = 0
-            if pend_term is not None:
-                if pend_term == term_a[0].as_py() and pend_shard == int(
-                    shard_np[0]
-                ):
-                    lo, hi = 0, int(ends[0])
-                    pend_arrs.append((doc_np[lo:hi], tf_np[lo:hi], dl_np[lo:hi]))
-                    if G == 1:
-                        continue  # whole batch extends the pending group
-                    emit_pending()  # group 0 completed the fragment
-                    g_lo = 1
-                else:
-                    emit_pending()
+    got = [b for b in batches if b.num_rows]
+    return pa.Table.from_batches(got).combine_chunks() if got else None
 
-            # trailing group: hold back until the next batch
-            lo, hi = int(starts[G - 1]), n
-            if G - 1 >= g_lo:
-                pend_term = term_a[lo].as_py()
-                pend_shard = int(shard_np[lo])
-                pend_arrs = [(doc_np[lo:hi], tf_np[lo:hi], dl_np[lo:hi])]
 
-            rb = flush()  # at most one completed-fragment row
-            if rb is not None:
-                yield rb
-            if g_lo < G - 1:
-                gs = starts[g_lo : G - 1]
-                yield encode_groups(
-                    term_a.take(pa.array(gs, type=pa.int64())),
-                    shard_np, doc_np, tf_np, dl_np,
-                    gs, ends[g_lo : G - 1],
-                )
-        emit_pending()
-        rb = flush()
-        if rb is not None:
-            yield rb
-
-    return encode_stream
+def _i64(col) -> np.ndarray:
+    return col.to_numpy().astype(np.int64)
 
 
 def _make_doc_encoder(
@@ -480,98 +438,66 @@ def _make_doc_encoder(
     pairs:[{term,tf}]) batches — one row per document, in any order — and
     emit one encoded posting row per (shard_id, term) group.
 
-    This is the production encode path. Crossing the JVM→Python boundary
+    This is the batch build's encode path. Crossing the JVM→Python boundary
     once per DOCUMENT instead of once per posting cuts Arrow exchange rows
     ~100x and deletes the JVM ``sortWithinPartitions`` over exploded
-    postings entirely: the explode (Arrow list flatten, zero-copy), the
-    term dictionary encode (Arrow C++), the (shard, term, doc) sort
-    (``np.lexsort`` over int keys), and the varbyte encode
-    (:func:`_group_encoder`) all happen inside one kernel pass over the
-    partition — measured <2 core-seconds for a 60k-doc corpus, vs ~10s of
-    JVM sort + exchange for the exploded plan.
+    postings entirely: the explode (Arrow list flatten, zero-copy) and the
+    term dictionary encode (Arrow C++) feed :func:`_flat_encoder` — measured
+    <2 core-seconds for a 60k-doc corpus, vs ~10s of JVM sort + exchange
+    for the exploded plan.
 
     The kernel buffers its whole partition: task memory is bounded by
     construction — the build partitions by (shard_id, term-hash salt), so a
     task holds ``shard_size / salt_mod`` documents' pairs (the term-salt
     split happens JVM-side with ``F.filter`` on the pairs array; a term's
     (shard, term) group is never split across tasks because the salt is a
-    deterministic hash of the term). Output groups are sorted by term
-    STRING (not dictionary code) so parquet row-group min/max stats on
-    ``term`` stay as tight as the old sorted-by-term plan.
-
-    Output chunking is bounded by ``group_chunk`` groups AND
-    ``max_chunk_rows`` postings: the group-count bound alone leaves chunk
-    bytes unbounded (65536 head-term groups can pack >2 GiB, wrapping the
-    int32 blob offsets — ``_group_encoder`` additionally hard-fails before
-    the cast). 16M postings encode to <=160 MiB per blob (<=10 B/value),
-    comfortably inside int32.
+    deterministic hash of the term).
     """
-    import pyarrow as pa
-    import pyarrow.compute as pc  # NOT imported by pyarrow's __init__ —
-    # relying on `pa.compute` resolving via pyspark's own internal import
-    # is fragile across versions (AttributeError in a bare interpreter)
-
-    out_schema, encode_groups = _group_encoder(shard_size, skip)
+    encode_flat = _flat_encoder(shard_size, skip, group_chunk, max_chunk_rows)
 
     def encode_stream(batches):
-        got = [b for b in batches if b.num_rows]
-        if not got:
+        tbl = _one_table(batches)
+        if tbl is None:
             return
-        tbl = pa.Table.from_batches(got).combine_chunks()
-        shard_doc = tbl.column("shard_id").chunk(0).to_numpy().astype(np.int64)
-        doc_doc = tbl.column("doc_id").chunk(0).to_numpy().astype(np.int64)
-        dl_doc = tbl.column("dl").chunk(0).to_numpy().astype(np.int64)
         pairs = tbl.column("pairs").chunk(0)
-        sizes = pc.list_value_length(pairs).to_numpy().astype(np.int64)
+        parent = np.repeat(np.arange(tbl.num_rows), _i64(pairs.value_lengths()))
         flat = pairs.flatten()  # StructArray over the exact logical range
-        term_flat = flat.field("term")
-        tf_flat = flat.field("tf").to_numpy().astype(np.int64)
-
-        parent = np.repeat(np.arange(len(sizes), dtype=np.int64), sizes)
-        doc = doc_doc[parent]
-        dl = dl_doc[parent]
-        shard = shard_doc[parent]
-
-        denc = term_flat.dictionary_encode()
-        codes = denc.indices.to_numpy().astype(np.int64)
-        dictionary = denc.dictionary
-        # rank codes by term STRING order so output groups sort like the
-        # exploded plan's sortWithinPartitions(term) did
-        vocab = np.asarray(dictionary, dtype=object)
-        rank_of = np.empty(len(vocab), dtype=np.int64)
-        rank_of[np.argsort(vocab, kind="stable")] = np.arange(len(vocab))
-        ranks = rank_of[codes]
-
-        order = np.lexsort((doc, ranks, shard))
-        doc = doc[order]
-        tf = tf_flat[order]
-        dl = dl[order]
-        shard = shard[order]
-        ranks = ranks[order]
-        codes = codes[order]
-
-        m = len(doc)
-        change = np.empty(m, dtype=bool)
-        change[0] = True
-        np.logical_or(
-            ranks[1:] != ranks[:-1], shard[1:] != shard[:-1], out=change[1:]
+        denc = flat.field("term").dictionary_encode()
+        yield from encode_flat(
+            _i64(denc.indices),
+            denc.dictionary,
+            _i64(tbl.column("shard_id").chunk(0))[parent],
+            _i64(tbl.column("doc_id").chunk(0))[parent],
+            _i64(flat.field("tf")),
+            _i64(tbl.column("dl").chunk(0))[parent],
         )
-        gstarts = np.flatnonzero(change)
-        gends = np.append(gstarts[1:], m)
 
-        # emit in chunks of complete groups, bounded by BOTH group count
-        # and posting-row count (byte safety; see docstring)
-        G = len(gstarts)
-        i = 0
-        while i < G:
-            row_limit = int(gstarts[i]) + max_chunk_rows
-            j_rows = int(np.searchsorted(gends, row_limit, side="right"))
-            j = max(i + 1, min(i + group_chunk, G, j_rows))
-            gs = gstarts[i:j]
-            ge = gends[i:j]
-            term_at = dictionary.take(pa.array(codes[gs], type=pa.int64()))
-            yield encode_groups(term_at, shard, doc, tf, dl, gs, ge)
-            i = j
+    return encode_stream
+
+
+def _make_list_encoder(shard_size: int, skip: int):
+    """mapInArrow kernel over POSTING-LIST pieces: consume (shard_id, term,
+    doc_id[], tf[], dl[]) rows — a (shard, term) group may arrive as any
+    number of pieces, in any order — and emit one encoded posting row per
+    group through the same :func:`_flat_encoder` core as the batch build.
+    The compaction re-encode feeds it (``compact._make_tail_decoder``)."""
+    encode_flat = _flat_encoder(shard_size, skip)
+
+    def encode_stream(batches):
+        tbl = _one_table(batches)
+        if tbl is None:
+            return
+        docs = tbl.column("doc_id").chunk(0)
+        parent = np.repeat(np.arange(tbl.num_rows), _i64(docs.value_lengths()))
+        denc = tbl.column("term").chunk(0).dictionary_encode()
+        yield from encode_flat(
+            _i64(denc.indices)[parent],
+            denc.dictionary,
+            _i64(tbl.column("shard_id").chunk(0))[parent],
+            _i64(docs.flatten()),
+            _i64(tbl.column("tf").chunk(0).flatten()),
+            _i64(tbl.column("dl").chunk(0).flatten()),
+        )
 
     return encode_stream
 
@@ -609,18 +535,7 @@ def postings_wave_plan(
     )
     n_wave_shards = hi - lo
     enc_p = cfg.enc_partitions or spark.sparkContext.defaultParallelism * 2
-    # salt fan-out is NOT free: the per-copy pairs filter is an
-    # interpreted higher-order function, and its cost grows ~linearly in
-    # salt_mod (measured r6 on a 6k-doc staged build: postings 1.6 s at
-    # salt 4 vs 10.3 s at salt 43, identical output). Below ~2k docs per
-    # encode slice the per-task floor exceeds the encode work (~30
-    # us/doc), so never slice finer than that: production 1M-doc shards
-    # keep their full enc_p fan-out, while bench/staged builds with
-    # 1-4k-doc shards drop to salt_mod 1-2 and skip the fan-out cost.
-    max_salt = max(1, cfg.shard_size // _MIN_SALT_SLICE_DOCS)
-    salt_mod = min(
-        max(1, math.ceil(enc_p / max(1, n_wave_shards))), max_salt
-    )
+    salt_mod = salt_policy(cfg.shard_size, n_wave_shards, enc_p)
     if salt_mod > 1:
         salted = (
             tf_df.withColumn(
@@ -654,12 +569,20 @@ def build_index(
     index_dir: str,
     cfg: BuildConfig | None = None,
     resume: bool = True,
+    _first_shard: int = 0,
 ) -> dict:
     """Build the full index at ``index_dir``. Returns build stats.
 
     ``docs`` must carry (url, text, lang); ``html`` is accepted and ignored
     (use ``extract_text_udf`` upstream to materialize ``text`` from
     ``html``).
+
+    ``_first_shard`` (internal) numbers the build from shard
+    ``_first_shard`` — doc ids from ``_first_shard * shard_size`` — so an
+    incremental append stages its delta at its final ids and moves the
+    written files into place instead of re-writing them shifted. Every
+    table holds absolute ids; ``n_shards`` in the returned meta stays the
+    number of shards built.
     """
     cfg = cfg or BuildConfig()
     os.makedirs(index_dir, exist_ok=True)
@@ -716,6 +639,10 @@ def build_index(
         64, spark.sparkContext.defaultParallelism * 4
     )
     with_ids, n_docs = assign_doc_ids(docs, id_buckets)
+    if _first_shard:
+        with_ids = with_ids.withColumn(
+            "doc_id", F.col("doc_id") + _first_shard * cfg.shard_size
+        )
     ttf = _term_tf_col(cfg)
     # doclen = sum of doc-local tfs == token count; computed JVM-side from
     # the pairs array (higher-order aggregate, no second Python pass).
@@ -757,7 +684,7 @@ def build_index(
     for w in range(n_waves):
         lo, hi = w * per, min((w + 1) * per, n_shards)
         if lo < hi:
-            waves.append((lo, hi))
+            waves.append((lo + _first_shard, hi + _first_shard))
 
     postings_path = os.path.join(index_dir, "postings")
     encode_stream = _make_doc_encoder(cfg.shard_size, cfg.skip_block)
@@ -806,7 +733,7 @@ def build_index(
 
         build_positions_table(
             spark, with_ids, index_dir, cfg.preset, cfg.shard_size,
-            cfg.bloom_ndv, n_shards=-(-n_docs // cfg.shard_size),
+            cfg.bloom_ndv, n_shards=n_shards,
         )
         manifest.mark_done("positions", {"n_docs": n_docs})
         t_phase = _lap("positions", t_phase)
@@ -850,7 +777,11 @@ def build_index(
     if not (resume and manifest.is_done("meta")):
         metrics_path = os.path.join(index_dir, "metrics")
         postings_all = spark.read.parquet(postings_path)
-        metrics = postings_all.groupBy("shard_id").agg(
+        # shard_id as long, like compaction's rewrite: an append moves
+        # these files into the live table, whose files must share a type
+        metrics = postings_all.groupBy(
+            F.col("shard_id").cast("long").alias("shard_id")
+        ).agg(
             F.count("*").alias("n_terms"),
             F.sum("count").alias("n_postings"),
             F.sum(F.length("doc_blob") + F.length("tf_blob")).alias("blob_bytes"),

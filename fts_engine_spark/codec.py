@@ -74,8 +74,9 @@ def varbyte_encode(values: np.ndarray) -> bytes:
 
 
 def varbyte_decode(blob: bytes) -> np.ndarray:
-    """Decode a varbyte blob back to a uint64 array (vectorized)."""
-    if not blob:
+    """Decode a varbyte blob (bytes or a uint8 array) back to a uint64
+    array (vectorized)."""
+    if len(blob) == 0:
         return np.zeros(0, dtype=np.uint64)
     raw = np.frombuffer(blob, dtype=np.uint8)
     ends = np.nonzero((raw & 0x80) == 0)[0]
@@ -88,6 +89,26 @@ def varbyte_decode(blob: bytes) -> np.ndarray:
             np.uint64
         ) << np.uint64(7 * j)
     return vals
+
+
+def varbyte_decode_binary(arr) -> np.ndarray:
+    """Decode EVERY blob of a pyarrow binary array in one varbyte pass over
+    its data buffer — zero-copy, no per-row ``bytes`` objects, honouring a
+    sliced array's offset. Each blob ends on a terminator byte, so the
+    concatenation decodes to the rows' values back to back; callers split
+    them by per-row value counts."""
+    import pyarrow as pa
+
+    n = len(arr)
+    _, offs_buf, data = arr.buffers()
+    if n == 0 or data is None:
+        return np.zeros(0, dtype=np.uint64)
+    width = np.int64 if pa.types.is_large_binary(arr.type) else np.int32
+    offs = np.frombuffer(
+        offs_buf, dtype=width, count=n + 1,
+        offset=arr.offset * np.dtype(width).itemsize,
+    )
+    return varbyte_decode(np.frombuffer(data, dtype=np.uint8)[offs[0]:offs[-1]])
 
 
 @dataclass

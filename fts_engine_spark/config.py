@@ -22,7 +22,6 @@ import dataclasses
 import json
 import os
 from dataclasses import dataclass, field
-from functools import partial
 
 from .textproc import pipeline as tp
 
@@ -186,21 +185,20 @@ def load_config(
 
 def pipeline_from_flags(flags: PipelineFlags) -> tp.Pipeline:
     """Assemble a pipeline in the reference's filter order
-    (``buildPipeline``, cmd/fts/main.go:562-590)."""
-    filters = []
-    if flags.lowercase:
-        filters.append(tp.lowercase_filter)
-    if flags.min_length > 0:
-        filters.append(partial(tp.min_length_filter, min_length=flags.min_length))
-    if flags.stopwords_en:
-        filters.append(tp.english_stopword_filter)
-    if flags.stopwords_ru:
-        filters.append(tp.russian_stopword_filter)
-    if flags.stem_en:
-        filters.append(tp.english_stem_filter)
-    if flags.stem_ru:
-        filters.append(tp.russian_stem_filter)
-    return tp.Pipeline("custom", tuple(filters))
+    (``buildPipeline``, cmd/fts/main.go:562-590) — the ``custom:`` spec
+    of the flags, so it shares the spec-keyed token memo."""
+    return tp.get_pipeline(_flags_spec(flags))
+
+
+def _flags_spec(f: PipelineFlags) -> str:
+    return tp.custom_spec(
+        lowercase=f.lowercase,
+        min_length=f.min_length,
+        stopwords_en=f.stopwords_en,
+        stopwords_ru=f.stopwords_ru,
+        stem_en=f.stem_en,
+        stem_ru=f.stem_ru,
+    )
 
 
 def resolve_pipeline(cfg: EngineFileConfig) -> str:
@@ -210,12 +208,4 @@ def resolve_pipeline(cfg: EngineFileConfig) -> str:
     (``get_pipeline`` accepts both forms)."""
     if cfg.preset:
         return cfg.preset
-    f = cfg.pipeline
-    return tp.custom_spec(
-        lowercase=f.lowercase,
-        min_length=f.min_length,
-        stopwords_en=f.stopwords_en,
-        stopwords_ru=f.stopwords_ru,
-        stem_en=f.stem_en,
-        stem_ru=f.stem_ru,
-    )
+    return _flags_spec(cfg.pipeline)

@@ -66,6 +66,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession, functions as F
 from pyspark.sql import types as T
 
+from .build import salt_policy
 from .codec import varbyte_decode, varbyte_encode
 
 if TYPE_CHECKING:  # pragma: no cover
@@ -314,17 +315,17 @@ def build_positions_table(
             names=[f.name for f in _POS_ROW_SCHEMA.fields],
         )
 
-    # term-salted encode partitioning (the postings wave's salting
-    # applied to the positional encode, r6): with few shards — staged
-    # incremental batches, small segment builds — a shard-only hash
-    # leaves most of the cluster idle (a 3-shard staged batch encoded on
-    # 3 tasks); salting by a deterministic term hash spreads each
-    # shard's groups over ~enc_p tasks while keeping every (shard, term)
-    # group intact. At production shard counts salt_mod collapses to 1
-    # and the layout is the old per-shard hash.
-    enc_p = max(1, spark.sparkContext.defaultParallelism * 2)
+    # term-salted encode partitioning under the postings wave's salt
+    # policy (build.salt_policy): with few shards a shard-only hash
+    # leaves most of the cluster idle, so a deterministic term hash
+    # spreads each shard's groups over more tasks while keeping every
+    # (shard, term) group intact — never below the policy's minimum
+    # slice, where the task floor outweighs the encode. At production
+    # shard counts salt_mod collapses to 1 (the old per-shard hash).
     if n_shards is not None:
-        salt_mod = max(1, -(-enc_p // max(1, int(n_shards))))
+        salt_mod = salt_policy(
+            shard_size, int(n_shards), spark.sparkContext.defaultParallelism * 2
+        )
         n_parts = max(1, int(n_shards) * salt_mod)
     else:
         salt_mod = 1

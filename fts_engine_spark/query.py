@@ -1220,13 +1220,18 @@ class FtsIndex:
         re-paying exactly the bytes block-partial WAND just skipped; the
         doc blob is ~1/3 of the posting bytes). The projection happens
         BEFORE ``mapInPandas``, so the scan never reads tf_blob/dl_blob
-        (plan-asserted in tests/test_plans.py)."""
+        (plan-asserted in tests/test_plans.py). ``term`` stays in the
+        projection and the kernel skips non-query terms: under
+        ``pruning='none'`` the scan carries EVERY posting row."""
         shard_size = self.shard_size
+        terms = frozenset(mult)
 
         def decode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
             for pdf in batches:
                 outs = []
                 for row in pdf.itertuples(index=False):
+                    if row.term not in terms:
+                        continue
                     base = int(row.shard_id) * shard_size
                     deltas = varbyte_decode(bytes(row.doc_blob))
                     outs.append(np.cumsum(deltas.astype(np.int64)) + base)
@@ -1237,7 +1242,7 @@ class FtsIndex:
                         {"doc_id": np.unique(np.concatenate(outs))}
                     )
 
-        src = self._query_postings(mult).select("shard_id", "doc_blob")
+        src = self._query_postings(mult).select("shard_id", "term", "doc_blob")
         return self._exclude_dead(
             src.mapInPandas(decode, schema="doc_id long")
             # shard-bounded reduce partitioning (see _agg_parts): the

@@ -15,10 +15,14 @@ deployment would swap this one step for server-side copy, which this local
 implementation does not do). Only docs with ``doc_id >= P*shard_size``
 (the partial base tail plus every delta shard) are renumbered — densely,
 in doc-id order, so the remap is MONOTONE and re-sorting within posting
-lists is never needed — then re-encoded through the same arrow encoder the
-batch build verifies (``build._make_arrow_encoder``). After a long ingest
-P covers almost the whole index, so compaction cost is proportional to the
-delta tail, not the index.
+lists is never needed. The tail is decoded by one ``mapInArrow`` kernel
+straight off the Arrow binary buffers (:func:`_make_tail_decoder`: one
+varbyte pass per batch, doc ids rebuilt by a segmented cumsum, tombstones
+dropped, ids remapped) and re-encoded by the batch build's own
+sort-group-encode core (``build._make_list_encoder``), term-salted under
+``build.salt_policy`` — no pandas stage and no JVM sort. After a long
+ingest P covers almost the whole index, so compaction cost is
+proportional to the delta tail, not the index.
 
 Crash safety: new postings/docs/metrics are written to versioned dirs; one
 ``atomic_write_json`` flips all three pointers + ``n_shards`` together. A
@@ -33,19 +37,26 @@ from __future__ import annotations
 import json
 import os
 import shutil
-from collections.abc import Iterator
 
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
-from ..build import BuildConfig, POSTINGS_SCHEMA, _make_arrow_encoder
+from ..build import (
+    POSTINGS_SCHEMA,
+    BuildConfig,
+    _i64,
+    _make_list_encoder,
+    salt_policy,
+)
 from ..checkpoint import Manifest, atomic_write_json
-from ..codec import decode_postings, varbyte_decode
+from ..codec import varbyte_decode_binary
 from ..layout import next_version_dir, table_path
 
-_EXPLODED_SCHEMA = (
-    "shard_id long, term string, doc_id long, tf int, dl int"
+# posting-list pieces of the decoded tail: one row per (old row, new shard)
+_TAIL_PIECES_SCHEMA = (
+    "shard_id long, term string, doc_id array<long>, tf array<int>, "
+    "dl array<int>"
 )
 
 
@@ -84,6 +95,128 @@ def _tail_postings(spark: SparkSession, postings_path: str, P: int) -> DataFrame
         spark.read.parquet(postings_path)
         .where(F.col("shard_id") >= P)
         .withColumn("shard_id", F.col("shard_id").cast("long"))
+    )
+
+
+def _make_tail_decoder(
+    P: int, shard_size: int, shift_arr: np.ndarray, dead_bc
+):
+    """mapInArrow kernel over tail posting rows ``(shard_id, term, count,
+    doc_blob, tf_blob, dl_blob)``: decode each batch in ONE varbyte pass
+    per blob column straight off the Arrow buffers
+    (``codec.varbyte_decode_binary``), rebuild doc ids with a cumsum
+    segmented by ``count`` (each row's first delta is relative to its
+    shard base), drop tombstoned postings, renumber with
+    :func:`remap_ids` and emit posting-list pieces — one row per (input
+    row, new shard), since the remap can carry a list across a shard
+    boundary — for ``build._make_list_encoder``. No per-row Python."""
+    import pyarrow as pa
+
+    def decode(batches):
+        dead = dead_bc.value
+        for b in batches:
+            n = b.num_rows
+            if not n:
+                continue
+            count = _i64(b.column("count"))
+            deltas = varbyte_decode_binary(b.column("doc_blob")).astype(np.int64)
+            tf = varbyte_decode_binary(b.column("tf_blob")).astype(np.int32)
+            dl = varbyte_decode_binary(b.column("dl_blob")).astype(np.int32)
+            if not len(deltas) == len(tf) == len(dl) == int(count.sum()):
+                raise ValueError("tail blobs disagree with their counts")
+            parent = np.repeat(np.arange(n), count)
+            csum = np.cumsum(deltas)
+            starts = np.cumsum(count) - count
+            before = np.concatenate(([0], csum))[starts]
+            doc = csum + (_i64(b.column("shard_id")) * shard_size - before)[parent]
+            if dead.size:
+                pos = np.searchsorted(dead, doc)
+                np.minimum(pos, dead.size - 1, out=pos)
+                keep = dead[pos] != doc
+                doc, tf, dl, parent = doc[keep], tf[keep], dl[keep], parent[keep]
+            m = len(doc)
+            if not m:
+                continue
+            new_ids = remap_ids(doc, P, shard_size, shift_arr, dead)
+            shard = new_ids // shard_size
+            cut = np.empty(m, dtype=bool)
+            cut[0] = True
+            np.logical_or(
+                parent[1:] != parent[:-1], shard[1:] != shard[:-1], out=cut[1:]
+            )
+            first = np.flatnonzero(cut)
+            offs = pa.array(np.append(first, m).astype(np.int32))
+            yield pa.RecordBatch.from_arrays(
+                [
+                    pa.array(shard[first]),
+                    b.column("term").take(pa.array(parent[first])),
+                    pa.ListArray.from_arrays(offs, pa.array(new_ids)),
+                    pa.ListArray.from_arrays(offs, pa.array(tf)),
+                    pa.ListArray.from_arrays(offs, pa.array(dl)),
+                ],
+                names=["shard_id", "term", "doc_id", "tf", "dl"],
+            )
+
+    return decode
+
+
+def _reencoded_tail(
+    tail: DataFrame,
+    P: int,
+    shard_size: int,
+    skip: int,
+    shift_arr: np.ndarray,
+    dead_bc,
+    n_tail_new: int,
+    enc_p: int,
+) -> DataFrame:
+    """The re-encode plan over the tail scan: Scan → MapInArrow(decode) →
+    Exchange(shard, term salt) → MapInArrow(encode) — no pandas stage, no
+    JVM sort (plan-asserted in tests/test_plans.py). The salt follows the
+    postings wave's policy, so an encode task holds ~shard_size/salt docs'
+    postings even at 1M-doc shards; a (shard, term) group may arrive in
+    pieces from several old shards, which the encoder's in-kernel sort
+    merges."""
+    salt_mod = salt_policy(shard_size, n_tail_new, enc_p)
+    pieces = tail.select(
+        "shard_id", "term", "count", "doc_blob", "tf_blob", "dl_blob"
+    ).mapInArrow(
+        _make_tail_decoder(P, shard_size, shift_arr, dead_bc),
+        _TAIL_PIECES_SCHEMA,
+    )
+    return (
+        pieces.withColumn(
+            "_salt", F.pmod(F.xxhash64("term"), F.lit(salt_mod)).cast("int")
+        )
+        .repartition(n_tail_new * salt_mod, "shard_id", "_salt")
+        .drop("_salt")
+        .mapInArrow(_make_list_encoder(shard_size, skip), POSTINGS_SCHEMA)
+    )
+
+
+def _corrected_terms(
+    terms: DataFrame, old_tail: DataFrame, new_tail: DataFrame
+) -> DataFrame:
+    """The dictionary after a tombstone purge: each term's df/cf minus the
+    old tail's Σcount/Σtf_sum plus the re-encoded tail's. Live postings
+    re-encode unchanged, so the difference is exactly the dead docs'
+    contribution — one JVM aggregate over posting rows, no blob decoded a
+    second time (plan-asserted Python-free). Terms left at df 0 drop."""
+
+    def stats(df: DataFrame, sign: int) -> DataFrame:
+        return df.select(
+            "term",
+            (F.col("count").cast("long") * sign).alias("df"),
+            (F.col("tf_sum").cast("long") * sign).alias("cf"),
+        )
+
+    return (
+        terms.select("term", "df", "cf")
+        .unionByName(stats(old_tail, -1))
+        .unionByName(stats(new_tail, 1))
+        .groupBy("term")
+        .agg(F.sum("df").alias("df"), F.sum("cf").alias("cf"))
+        .where(F.col("df") > 0)
     )
 
 
@@ -245,48 +378,11 @@ def compact_index(
     n_new_shards = max(1, -(-n_live // shard_size))
     dead_bc = spark.sparkContext.broadcast(dead)
 
-    def explode_tail(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        dead_l = dead_bc.value
-        for pdf in batches:
-            outs = []
-            for row in pdf.itertuples(index=False):
-                s = int(row.shard_id)
-                d, tf = decode_postings(
-                    bytes(row.doc_blob),
-                    bytes(row.tf_blob),
-                    base_doc=s * shard_size,
-                )
-                dl = varbyte_decode(bytes(row.dl_blob)).astype(np.int32)
-                if dead_l.size:
-                    pos = np.searchsorted(dead_l, d)
-                    np.minimum(pos, dead_l.size - 1, out=pos)
-                    keep = dead_l[pos] != d
-                    if not keep.all():
-                        d, tf, dl = d[keep], tf[keep], dl[keep]
-                    if d.size == 0:
-                        continue
-                new_ids = remap_ids(d, P, shard_size, shift_arr, dead_l)
-                outs.append(
-                    pd.DataFrame(
-                        {
-                            "shard_id": new_ids // shard_size,
-                            "term": row.term,
-                            "doc_id": new_ids,
-                            "tf": tf.astype(np.int32),
-                            "dl": dl,
-                        }
-                    )
-                )
-            if outs:
-                yield pd.concat(outs, ignore_index=True)
-
     tail = _tail_postings(spark, postings_path, P)
-    n_tail_new = n_new_shards - P
-    reencoded = (
-        tail.mapInPandas(explode_tail, schema=_EXPLODED_SCHEMA)
-        .repartition(max(1, n_tail_new), "shard_id")
-        .sortWithinPartitions("shard_id", "term", "doc_id")
-        .mapInArrow(_make_arrow_encoder(shard_size, skip), POSTINGS_SCHEMA)
+    reencoded = _reencoded_tail(
+        tail, P, shard_size, skip, shift_arr, dead_bc,
+        max(1, n_new_shards - P),
+        cfg.enc_partitions or spark.sparkContext.defaultParallelism * 2,
     )
 
     new_postings, _, post_ptr = next_version_dir(index_dir, meta, "postings")
@@ -410,12 +506,11 @@ def compact_index(
     )
 
     # under deletes: correct the global dictionary by the dead docs' EXACT
-    # contributions — one extra O(tail) doc+tf decode restricted to dead
-    # rows (dead docs live in the tail by P's construction), then an
-    # O(vocab) dictionary rewrite. avgdl is re-derived the way the batch
-    # build derives it (sum(cf)/n_docs, exact integer division), so a
-    # compacted index's scores are hash-identical to a fresh build of the
-    # surviving corpus (tests/test_delete.py).
+    # contributions (:func:`_corrected_terms`, an O(tail rows + vocab)
+    # JVM pass), then re-derive avgdl the way the batch build derives it
+    # (sum(cf)/n_docs, exact integer division), so a compacted index's
+    # scores are hash-identical to a fresh build of the surviving corpus
+    # (tests/test_delete.py).
     pointer_updates = {**post_ptr, **docs_ptr, **metr_ptr}
     meta_updates: dict = {}
     drop_keys: list[str] = []
@@ -425,47 +520,11 @@ def compact_index(
         else []
     )
     if have_dead:
-        def dead_deltas(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-            dead_l = dead_bc.value
-            for pdf in batches:
-                terms_out, ddf_out, dcf_out = [], [], []
-                for row in pdf.itertuples(index=False):
-                    s = int(row.shard_id)
-                    d, tf = decode_postings(
-                        bytes(row.doc_blob),
-                        bytes(row.tf_blob),
-                        base_doc=s * shard_size,
-                    )
-                    pos = np.searchsorted(dead_l, d)
-                    np.minimum(pos, dead_l.size - 1, out=pos)
-                    is_dead = dead_l[pos] == d
-                    n = int(is_dead.sum())
-                    if n:
-                        terms_out.append(row.term)
-                        ddf_out.append(n)
-                        dcf_out.append(int(tf[is_dead].sum()))
-                if terms_out:
-                    yield pd.DataFrame(
-                        {"term": terms_out, "ddf": ddf_out, "dcf": dcf_out}
-                    )
-
-        delta = (
-            _tail_postings(spark, postings_path, P)
-            .select("shard_id", "term", "doc_blob", "tf_blob")
-            .mapInPandas(dead_deltas, schema="term string, ddf long, dcf long")
-            .groupBy("term")
-            .agg(F.sum("ddf").alias("ddf"), F.sum("dcf").alias("dcf"))
-        )
         terms_path = table_path(index_dir, meta, "terms")
-        old_terms = spark.read.parquet(terms_path)
-        new_terms_df = (
-            old_terms.join(F.broadcast(delta), "term", "left")
-            .select(
-                "term",
-                (F.col("df") - F.coalesce(F.col("ddf"), F.lit(0))).alias("df"),
-                (F.col("cf") - F.coalesce(F.col("dcf"), F.lit(0))).alias("cf"),
-            )
-            .where(F.col("df") > 0)
+        new_terms_df = _corrected_terms(
+            spark.read.parquet(terms_path),
+            tail,
+            spark.read.parquet(new_postings).where(F.col("shard_id") >= P),
         )
         new_terms_dir, _, terms_ptr = next_version_dir(index_dir, meta, "terms")
         dict_buckets = max(1, spark.sparkContext.defaultParallelism // 2)

@@ -112,6 +112,45 @@ def stream_pages(spark: SparkSession, input_dir: str, fmt: str = "parquet") -> D
     )
 
 
+def _merge_dictionary(
+    spark: SparkSession, index_dir: str, meta: dict, staging: str,
+    bloom_ndv: int,
+) -> dict:
+    """Delta-merge the global term dictionary: union the STAGED batch's
+    (already aggregated) term stats with the existing dictionary and
+    re-aggregate — O(|batch vocab| + |dictionary|) per batch instead of
+    re-scanning every posting in the index; written range-bucketed like
+    the batch build (no single-task repartition(1)).
+
+    Atomic dictionary swap (VERDICT r3 wrong #4): the merge lands in a
+    fresh VERSIONED dir whose meta pointer (returned) flips in the
+    append's single committing ``atomic_write_json`` — a crash at any
+    point leaves meta pointing at a complete dictionary (old before the
+    flip, new after); the old dir is removed only after commit."""
+    merged = (
+        spark.read.parquet(table_path(index_dir, meta, "terms"))
+        .unionByName(spark.read.parquet(os.path.join(staging, "terms")))
+        .groupBy("term")
+        .agg(
+            F.sum("df").cast("long").alias("df"),
+            F.sum("cf").cast("long").alias("cf"),
+        )
+    )
+    dict_buckets = max(1, spark.sparkContext.defaultParallelism // 2)
+    new_terms, _, terms_ptr = next_version_dir(index_dir, meta, "terms")
+    (
+        merged.repartitionByRange(dict_buckets, "term")
+        .sortWithinPartitions("term")
+        .write.mode("overwrite")
+        .option("parquet.bloom.filter.enabled#term", "true")
+        .option(
+            "parquet.bloom.filter.expected.ndv#term", str(bloom_ndv)
+        )
+        .parquet(new_terms)
+    )
+    return terms_ptr
+
+
 def _append_batch(
     spark: SparkSession,
     batch_df: DataFrame,
@@ -124,7 +163,12 @@ def _append_batch(
 ) -> None:
     """foreachBatch body: build the micro-batch as delta shards appended to
     ``index_dir``. Reuses the exact batch build pipeline against a staging
-    dir, then splices the staged shards in at the next free shard range.
+    dir, numbered from the next free shard (``build_index``'s internal
+    ``_first_shard``), so every staged table already holds its final ids:
+    the splice MOVES the staged postings shard dirs and the docs, metrics
+    and sidecar files into the live tables (``os.replace`` /
+    :func:`_move_in_tagged`) — no Spark job re-reads or re-writes them.
+    Only the term dictionary is re-written (a delta-merge).
 
     EXACTLY-ONCE under foreachBatch retries: Structured Streaming re-runs
     a micro-batch after a crash, so the splice must be idempotent —
@@ -140,9 +184,8 @@ def _append_batch(
 
     Sidecar maintenance: a stored-fields / positional sidecar that is
     FRESH going in is EXTENDED by the batch — the staged build produces
-    the batch's sidecar rows, the splice appends them at the shifted
-    ids (positional blobs are shard-relative, so the shift never
-    re-encodes), and the pins flip to the new (n_docs, table_version)
+    the batch's sidecar rows at their final ids, the splice moves them
+    in, and the pins flip to the new (n_docs, table_version)
     inside the same commit. A stale sidecar stays stale and keeps
     failing loudly (retrofit to re-enable maintenance).
 
@@ -191,12 +234,6 @@ def _append_batch(
                 shutil.rmtree(d, ignore_errors=True)
         except ValueError:
             pass
-    # a crash DURING a postings write can leave committed task dirs under
-    # the table's _temporary; the retry's own commitJob would merge them
-    # in (classic double-commit), so remove the whole staging area
-    shutil.rmtree(
-        os.path.join(postings_dir, "_temporary"), ignore_errors=True
-    )
     tag = f"e{next_shard}_"
     for base in ("docs", "metrics"):
         for f_ in glob.glob(
@@ -206,14 +243,12 @@ def _append_batch(
 
     # sidecar maintenance (mirrors compaction's): a FRESH stored-fields /
     # positional sidecar is EXTENDED by this batch — the staged build
-    # produces the batch's sidecar rows and the splice appends them at
-    # the shifted ids (positional blobs are shard-relative like postings,
-    # so the shift is a column rename, zero re-encode). Stale-in stays
-    # stale-out. Cleanup above/below follows the same orphan discipline:
-    # positional shard dirs >= next_shard and tagged stored files can
-    # only be pre-commit orphans.
+    # produces the batch's sidecar rows at their final ids and the splice
+    # moves them in. Stale-in stays stale-out. Cleanup below follows the
+    # same orphan discipline: positional shard dirs >= next_shard and
+    # tagged stored files can only be pre-commit orphans.
     from ..positions import POSITIONS_TABLE
-    from ..stored import DEFAULT_ROWGROUP_BYTES, STORED_TABLE, STORED_VERSION
+    from ..stored import STORED_TABLE, STORED_VERSION
 
     def _sidecar_fresh(key: str, version: int) -> bool:
         sc = meta.get(key)
@@ -242,9 +277,6 @@ def _append_batch(
                     shutil.rmtree(d, ignore_errors=True)
             except ValueError:
                 pass
-        shutil.rmtree(
-            os.path.join(positions_dir, "_temporary"), ignore_errors=True
-        )
     if stored_fresh:
         for f_ in glob.glob(os.path.join(stored_dir, tag + "*")):
             os.remove(f_)
@@ -264,115 +296,39 @@ def _append_batch(
         # missing one fails loudly in build_index instead of splicing
         # NULL-schema'd delta rows under full rows
         meta_cols=tuple(meta.get("meta_cols", ())),
-        # fresh sidecars get the batch's rows built alongside (spliced in
-        # below at the shifted ids)
+        # fresh sidecars get the batch's rows built alongside (moved in
+        # below)
         store_text=stored_fresh,
         store_positions=positions_fresh,
     )
-    stage_meta = build_index(spark, batch_df, staging, stage_cfg, resume=False)
-
-    # splice staged shards in after the current high-water shard; docids
-    # shift by next_shard * shard_size, which keeps every delta blob valid
-    # because blobs store shard-relative deltas (base_doc = shard * size).
-    offset_docs = next_shard * shard_size
-    stage_postings = spark.read.parquet(os.path.join(staging, "postings"))
-    (
-        stage_postings.withColumn(
-            "shard_id", (F.col("shard_id").cast("long") + next_shard)
-        )
-        .withColumn(
-            "skip_last_doc",
-            F.expr(f"transform(skip_last_doc, d -> d + cast({offset_docs} as bigint))"),
-        )
-        .write.mode("append")
-        .partitionBy("shard_id")
-        .parquet(table_path(index_dir, meta, "postings"))
-    )
-    stage_docs = spark.read.parquet(os.path.join(staging, "docs"))
-    docs_delta = os.path.join(staging, "_docs_delta")
-    (
-        stage_docs.withColumn("doc_id", F.col("doc_id") + offset_docs)
-        .write.mode("overwrite")
-        .parquet(docs_delta)
-    )
-    _move_in_tagged(docs_delta, table_path(index_dir, meta, "docs"), tag)
-
-    # delta-merge the global term dictionary: union the STAGED batch's
-    # (already aggregated) term stats with the existing dictionary and
-    # re-aggregate — O(|batch vocab| + |dictionary|) per batch instead of
-    # re-scanning every posting in the index; written range-bucketed like
-    # the batch build (no single-task repartition(1)).
-    old_terms = table_path(index_dir, meta, "terms")
-    staged_terms = spark.read.parquet(os.path.join(staging, "terms"))
-    merged = (
-        spark.read.parquet(old_terms)
-        .unionByName(staged_terms)
-        .groupBy("term")
-        .agg(
-            F.sum("df").cast("long").alias("df"),
-            F.sum("cf").cast("long").alias("cf"),
-        )
-    )
-    dict_buckets = max(1, spark.sparkContext.defaultParallelism // 2)
-    # atomic dictionary swap (VERDICT r3 wrong #4): write a fresh
-    # VERSIONED dir and flip the meta pointer in the single committing
-    # atomic_write_json below — a crash at any point leaves meta pointing
-    # at a complete dictionary (old before the flip, new after); the old
-    # dir is removed only after commit
-    new_terms, _, terms_ptr = next_version_dir(index_dir, meta, "terms")
-    (
-        merged.repartitionByRange(dict_buckets, "term")
-        .sortWithinPartitions("term")
-        .write.mode("overwrite")
-        .option("parquet.bloom.filter.enabled#term", "true")
-        .option(
-            "parquet.bloom.filter.expected.ndv#term",
-            str(int(meta.get("bloom_ndv", cfg.bloom_ndv))),
-        )
-        .parquet(new_terms)
+    stage_meta = build_index(
+        spark, batch_df, staging, stage_cfg, resume=False,
+        _first_shard=next_shard,
     )
 
-    # lineage: append the staged per-shard metrics at their spliced ids
-    staged_metrics = spark.read.parquet(os.path.join(staging, "metrics"))
-    metrics_delta = os.path.join(staging, "_metrics_delta")
-    (
-        staged_metrics.withColumn(
-            "shard_id", F.col("shard_id").cast("long") + next_shard
-        )
-        .write.mode("overwrite")
-        .parquet(metrics_delta)
-    )
-    _move_in_tagged(
-        metrics_delta, table_path(index_dir, meta, "metrics"), tag
-    )
+    # splice: the staged tables already carry their final shard and doc
+    # ids, so the postings (and positional) shard dirs move in whole and
+    # the docs/metrics/stored part files move in under this splice's tag.
+    # Pre-commit: a crash leaves only orphans the cleanup above removes.
+    def _move_shards(src_table: str, dst_table: str) -> None:
+        for d in glob.glob(os.path.join(staging, src_table, "shard_id=*")):
+            os.replace(d, os.path.join(dst_table, os.path.basename(d)))
 
-    # sidecar splices (pre-commit: orphan-cleanable, invisible to readers
-    # until the pins flip in the single commit below)
+    _move_shards("postings", postings_dir)
     if positions_fresh:
-        staged_pos = spark.read.parquet(os.path.join(staging, "positions"))
-        (
-            staged_pos.withColumn(
-                "shard_id", F.col("shard_id").cast("long") + next_shard
-            )
-            .write.mode("append")
-            .partitionBy("shard_id")
-            .option("parquet.bloom.filter.enabled#term", "true")
-            .option(
-                "parquet.bloom.filter.expected.ndv#term",
-                str(int(meta.get("bloom_ndv", cfg.bloom_ndv))),
-            )
-            .parquet(positions_dir)
-        )
-    if stored_fresh:
-        staged_stored = spark.read.parquet(os.path.join(staging, "stored"))
-        stored_delta = os.path.join(staging, "_stored_delta")
-        (
-            staged_stored.withColumn("doc_id", F.col("doc_id") + offset_docs)
-            .write.mode("overwrite")
-            .option("parquet.block.size", str(DEFAULT_ROWGROUP_BYTES))
-            .parquet(stored_delta)
-        )
-        _move_in_tagged(stored_delta, stored_dir, tag)
+        _move_shards(POSITIONS_TABLE, positions_dir)
+    for src, dst, fresh in (
+        ("docs", table_path(index_dir, meta, "docs"), True),
+        ("metrics", table_path(index_dir, meta, "metrics"), True),
+        (STORED_TABLE, stored_dir, stored_fresh),
+    ):
+        if fresh:
+            _move_in_tagged(os.path.join(staging, src), dst, tag)
+
+    old_terms = table_path(index_dir, meta, "terms")
+    terms_ptr = _merge_dictionary(
+        spark, index_dir, meta, staging, stage_cfg.bloom_ndv
+    )
 
     n_new = int(stage_meta["n_docs"])
     total_docs = meta["n_docs"] + n_new

@@ -142,6 +142,10 @@ class Pipeline:
 
     name: str
     filters: Sequence[TokenFilter] = field(default_factory=tuple)
+    # what determines the chain: the full ``custom:`` spec for a
+    # flags-assembled pipeline (all of them are named "custom"), else
+    # the name — the token memo's key
+    spec: str = ""
 
     def process(self, text: str) -> list[str]:
         one = _token_fn(self)
@@ -156,8 +160,9 @@ class Pipeline:
 
 
 # Per-process memo of the whole-chain token function, keyed by pipeline
-# NAME (preset names are unique; custom pipelines encode their filter
-# flags in the name via custom_spec, so the name determines the chain).
+# SPEC (preset names are unique; every flags-assembled pipeline is named
+# "custom" but carries its full custom_spec string, which determines the
+# chain).
 # Lives at module level — NOT on the Pipeline instance — so Pipeline
 # objects captured in UDF closures stay cloudpickle-able; each worker
 # process rebuilds its own memo lazily.
@@ -165,7 +170,8 @@ _TOKEN_FN_CACHE: dict[str, Callable[[str], "str | None"]] = {}
 
 
 def _token_fn(p: "Pipeline") -> Callable[[str], "str | None"]:
-    fn = _TOKEN_FN_CACHE.get(p.name)
+    key = p.spec or p.name
+    fn = _TOKEN_FN_CACHE.get(key)
     if fn is None:
         from functools import lru_cache
 
@@ -183,7 +189,7 @@ def _token_fn(p: "Pipeline") -> Callable[[str], "str | None"]:
             )
             return toks[0]
 
-        _TOKEN_FN_CACHE[p.name] = fn = one
+        _TOKEN_FN_CACHE[key] = fn = one
     return fn
 
 
@@ -267,7 +273,7 @@ def _parse_custom(spec: str) -> Pipeline:
         filters.append(english_stem_filter)
     if kv.get("st_ru", 0):
         filters.append(russian_stem_filter)
-    return Pipeline("custom", tuple(filters))
+    return Pipeline("custom", tuple(filters), spec)
 
 
 def get_pipeline(name: str) -> Pipeline:

@@ -107,13 +107,15 @@ def test_varbyte_encode_all_offsets_slice_per_value(vals):
         assert blob[csum[i] : csum[i + 1]] == one
 
 
-# ---- batch-vectorized encoder (build._make_arrow_encoder): byte-identity
-# with the per-group reference path across arbitrary batch splits
+# ---- shared sort-group-encode core (build._flat_encoder — behind both the
+# batch build's doc encoder and the compaction re-encode): byte-identity
+# with the per-group reference path for postings in ANY order
 
 
 @st.composite
 def _posting_stream(draw):
-    """Sorted (shard, term, doc) stream with tf/dl, plus random batch cuts."""
+    """(shard, term, doc) postings with tf/dl, shuffled, plus an output
+    chunk bound (in groups)."""
     n_groups = draw(st.integers(min_value=1, max_value=12))
     rows = []
     shard, term_i = 0, 0
@@ -135,11 +137,8 @@ def _posting_stream(draw):
             rows.append((f"t{term_i:04d}", shard, d,
                          draw(st.integers(1, 9)), draw(st.integers(1, 500))))
     rows.sort(key=lambda r: (r[1], r[0], r[2]))
-    n = len(rows)
-    n_cuts = draw(st.integers(min_value=0, max_value=min(5, n - 1)))
-    cuts = sorted(draw(st.sets(st.integers(1, n - 1), min_size=n_cuts,
-                               max_size=n_cuts))) if n > 1 else []
-    return rows, cuts
+    shuffled = draw(st.permutations(rows))
+    return rows, shuffled, draw(st.integers(min_value=1, max_value=5))
 
 
 @settings(max_examples=60, deadline=None)
@@ -147,34 +146,28 @@ def _posting_stream(draw):
 def test_arrow_encoder_matches_per_group_reference(stream):
     import pyarrow as pa
 
-    from fts_engine_spark.build import _make_arrow_encoder
+    from fts_engine_spark.build import _flat_encoder
     from fts_engine_spark.codec import varbyte_encode
 
-    rows, cuts = stream
+    rows, shuffled, group_chunk = stream
     shard_size, skip = 64, 8
 
-    def make_batch(chunk):
-        t, s, d, tf, dl = zip(*chunk)
-        return pa.RecordBatch.from_arrays(
-            [
-                pa.array(t, type=pa.string()),
-                pa.array(s, type=pa.int64()),
-                pa.array(d, type=pa.int64()),
-                pa.array(tf, type=pa.int32()),
-                pa.array(dl, type=pa.int32()),
-            ],
-            names=["term", "shard_id", "doc_id", "tf", "dl"],
-        )
-
-    bounds = [0, *cuts, len(rows)]
-    batches = [
-        make_batch(rows[a:b]) for a, b in zip(bounds, bounds[1:]) if b > a
-    ]
-    enc = _make_arrow_encoder(shard_size, skip)
+    t, s, d, tf, dl = (np.array(c) for c in zip(*shuffled))
+    denc = pa.array(t, type=pa.string()).dictionary_encode()
+    enc = _flat_encoder(shard_size, skip, group_chunk=group_chunk)
     got = {}
-    for rb in enc(iter(batches)):
+    order = []
+    for rb in enc(
+        denc.indices.to_numpy().astype(np.int64), denc.dictionary,
+        s.astype(np.int64), d.astype(np.int64), tf.astype(np.int64),
+        dl.astype(np.int64),
+    ):
+        assert rb.num_rows <= group_chunk
         for r in rb.to_pylist():
             got[(r["term"], r["shard_id"])] = r
+            order.append((r["shard_id"], r["term"]))
+    # groups come out in (shard, term STRING) order across chunks
+    assert order == sorted(order)
 
     # reference: encode_postings per (shard, term) group
     from itertools import groupby

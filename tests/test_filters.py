@@ -411,3 +411,19 @@ def test_bucketed_gate_save_gc_spares_foreign_payloads(tmp_path):
     assert not os.path.isdir(os.path.join(path, first)), "prev payload GC'd"
     loaded = BucketedTermGate.load(path)
     assert all(t in loaded for t in vocab)
+
+
+def test_with_total_under_no_pruning_matches_dict(spark, small_index):
+    """pruning='none' scans every posting row; the pre-truncation total
+    must still count only docs matching a QUERY term (regression: the
+    match count counted every doc with any posting)."""
+    from fts_engine_spark.query import FtsIndex
+
+    index_dir, meta = small_index
+    exact = FtsIndex(spark, index_dir, pruning="dict")
+    scan = FtsIndex(spark, index_dir, pruning="none")
+    for q in ("turtle hotel", "river"):
+        want = exact.search_full(q, k=5, scorer="bm25", mode="wand")
+        got = scan.search_full(q, k=5, scorer="bm25", mode="wand")
+        assert 0 < want.total_results_count < int(meta["n_docs"]), q
+        assert got.total_results_count == want.total_results_count, q

@@ -326,6 +326,19 @@ def test_build_postings_wave_plan_has_no_jvm_sort(spark, docs):
     assert not re.search(r"Generate explode\(pairs", plan), plan
 
 
+def test_salt_policy_caps_the_slice():
+    """One salt rule for the postings wave, the compaction re-encode and
+    the positional encode: fan out to ~parallelism tasks, but never below
+    a 2048-doc slice."""
+    from fts_engine_spark.build import salt_policy
+
+    assert salt_policy(1 << 20, 4, 64) == 16  # production: full fan-out
+    assert salt_policy(1 << 20, 100, 64) == 1  # many shards: no salt
+    assert salt_policy(4096, 1, 64) == 2  # capped at shard_size // 2048
+    assert salt_policy(1024, 3, 64) == 1  # small shards: never split
+    assert salt_policy(1 << 20, 0, 8) == 8  # empty build: still >= 1 part
+
+
 def test_assign_doc_ids_join_path_matches_literal_map(spark, docs, monkeypatch):
     """Dense-id assignment must be identical whether offsets ship as a
     literal map (small bucket counts) or a broadcast-join relation (the
@@ -514,3 +527,106 @@ def test_collapse_plan_partial_aggregates(spark, small_index):
     assert "Window" not in plan
     # the docs-side scan reads only the key and the collapse column
     assert_plan(df, "ReadSchema: struct<doc_id:bigint,lang:string>")
+
+
+def _tail_reencode(spark, small_index, dead):
+    import os
+    from types import SimpleNamespace
+
+    import numpy as np
+
+    from fts_engine_spark.streaming.compact import _reencoded_tail, _tail_postings
+
+    index_dir, meta = small_index
+    tail = _tail_postings(spark, os.path.join(index_dir, "postings"), 1)
+    n_tail = int(meta["n_shards"]) - 1
+    return tail, _reencoded_tail(
+        tail, 1, int(meta["shard_size"]), int(meta["skip_block"]),
+        np.zeros(n_tail, dtype=np.int64), SimpleNamespace(value=dead),
+        n_tail, 8,
+    )
+
+
+def test_compaction_reencode_plan_is_arrow_without_sort(spark, small_index):
+    """Compaction decodes the tail in one mapInArrow kernel and re-encodes
+    through the batch build's sort-group-encode core: no pandas stage and
+    no JVM Sort (the (shard, term, doc) sort lives inside the kernel)."""
+    import re
+
+    import numpy as np
+
+    from fts_engine_spark.plans.review import formatted_plan
+
+    _, df = _tail_reencode(spark, small_index, np.array([40], dtype=np.int64))
+    plan = formatted_plan(df)
+    assert len(re.findall(r"^\(\d+\) MapInArrow", plan, re.M)) == 2, plan
+    assert_plan_absent(df, "MapInPandas", "ArrowEvalPython")
+    assert not re.search(r"\(\d+\) Sort\b", plan), f"JVM Sort in plan:\n{plan}"
+
+
+def test_compaction_dictionary_correction_has_no_python_stage(
+    spark, small_index
+):
+    """Under tombstones the dictionary is corrected by a JVM difference of
+    Σcount/Σtf_sum between the old and re-encoded tail rows — no blob is
+    decoded a second time."""
+    import os
+
+    import numpy as np
+
+    from fts_engine_spark.streaming.compact import _corrected_terms
+
+    index_dir, _ = small_index
+    tail, _ = _tail_reencode(spark, small_index, np.array([40], dtype=np.int64))
+    terms = spark.read.parquet(os.path.join(index_dir, "terms"))
+    df = _corrected_terms(terms, tail, tail)
+    assert_plan(df, "HashAggregate")
+    assert_plan_absent(
+        df, "MapInArrow", "MapInPandas", "ArrowEvalPython", "BatchEvalPython",
+        "PythonUDF",
+    )
+    # old == new tail: a no-op correction
+    assert sorted(map(tuple, df.collect())) == sorted(
+        map(tuple, terms.select("term", "df", "cf").collect())
+    )
+
+
+def test_update_documents_splices_without_spark_jobs(
+    spark, small_corpus, tmp_path, monkeypatch
+):
+    """An upsert stages its delta at the final ids and MOVES the staged
+    postings, docs and metrics into place: between the staged build and
+    the dictionary merge no Spark job runs (counted per job group through
+    the status tracker)."""
+    from fts_engine_spark.build import BuildConfig, build_index
+    from fts_engine_spark.mutate import update_documents
+    from fts_engine_spark.streaming import incremental
+
+    cfg = BuildConfig(preset="by_lang", shard_size=32, id_buckets=8)
+    docs = spark.read.parquet(small_corpus).select("url", "text", "lang")
+    index_dir = str(tmp_path / "ix")
+    build_index(spark, docs.limit(60), index_dir, cfg, resume=False)
+
+    sc = spark.sparkContext
+    group = f"splice-{id(tmp_path)}"
+    real_build, real_merge = incremental.build_index, incremental._merge_dictionary
+
+    def build_then_splice(*a, **kw):
+        out = real_build(*a, **kw)
+        sc.setJobGroup(group, "splice")
+        return out
+
+    def merge(*a, **kw):
+        sc.setJobGroup(f"{group}-dict", "dictionary merge")
+        return real_merge(*a, **kw)
+
+    monkeypatch.setattr(incremental, "build_index", build_then_splice)
+    monkeypatch.setattr(incremental, "_merge_dictionary", merge)
+    try:
+        out = update_documents(spark, index_dir, docs.limit(80), cfg)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    tracker = sc.statusTracker()
+    assert list(tracker.getJobIdsForGroup(f"{group}-dict"))  # probe works
+    assert list(tracker.getJobIdsForGroup(group)) == []
+    assert out["meta"]["n_docs"] == 80 + out["replaced"]

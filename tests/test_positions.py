@@ -663,3 +663,46 @@ def test_engine_facade_near_unordered(spark, pos_index):
     ids = {int(r["url"][6:]) for r in out.collect()}
     # covers docs where merge/sort are adjacent in either order
     assert 2 in ids and 0 in ids and 4 in ids
+
+
+def test_positions_salt_policy_keeps_table_content(
+    spark, pos_docs, pos_index, tmp_path, monkeypatch
+):
+    """The positional encode salts under the postings wave's policy
+    (build.salt_policy, capped at a minimum slice) — the salt only moves
+    (shard, term) groups between encode tasks, so the table content must
+    equal an encode under the former uncapped rule, ceil(2·parallelism /
+    n_shards)."""
+    import json
+    import os
+
+    from fts_engine_spark import positions
+    from fts_engine_spark.build import salt_policy
+    from fts_engine_spark.stored import retrofit_with_ids
+
+    meta = json.load(open(os.path.join(pos_index, "meta.json")))
+    n_shards = -(-int(meta["n_docs"]) // int(meta["shard_size"]))
+    par = spark.sparkContext.defaultParallelism * 2
+    uncapped = max(1, -(-par // n_shards))
+    assert salt_policy(int(meta["shard_size"]), n_shards, par) < uncapped
+
+    def rows(path):
+        return sorted(
+            tuple(r) for r in spark.read.parquet(path).select(
+                "shard_id", "term", "n_docs", "doc_blob", "cnt_blob", "pos_blob"
+            ).collect()
+        )
+
+    _, with_ids = retrofit_with_ids(
+        spark, pos_index, _idx_docs(pos_docs), force_lang=True
+    )
+    monkeypatch.setattr(
+        positions, "salt_policy", lambda s, n, p: max(1, -(-p // n))
+    )
+    positions.build_positions_table(
+        spark, with_ids, str(tmp_path), meta["preset"],
+        int(meta["shard_size"]), int(meta["bloom_ndv"]), n_shards=n_shards,
+    )
+    assert rows(str(tmp_path / positions.POSITIONS_TABLE)) == rows(
+        os.path.join(pos_index, positions.POSITIONS_TABLE)
+    )

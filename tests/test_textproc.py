@@ -238,3 +238,15 @@ def test_query_doc_symmetry():
     # NormalizeToKeys uses the same pipeline for queries and documents
     text = "French hotels"
     assert tp.ENGLISH.process(text) == ["french", "hotel"]
+
+
+def test_custom_spec_token_memo_is_keyed_by_full_spec():
+    """Every flags-assembled pipeline is named "custom"; the per-process
+    token memo must key on the full spec, or the first custom chain used
+    answers for every later one (regression: stem_en=False returned the
+    stemmed 'tabl')."""
+    stemmed = tp.get_pipeline(tp.custom_spec(stem_en=True))
+    plain = tp.get_pipeline(tp.custom_spec(stem_en=False))
+    assert stemmed.name == plain.name == "custom"
+    assert stemmed.process("tables") == ["tabl"]
+    assert plain.process("tables") == ["tables"]
