@@ -47,18 +47,10 @@ from dataclasses import dataclass, field
 
 import numpy as np
 from pyspark.sql import DataFrame, SparkSession, functions as F
-from pyspark.sql.types import (
-    ArrayType,
-    BinaryType,
-    IntegerType,
-    LongType,
-    StringType,
-    StructField,
-    StructType,
-)
 
 from .codec import SKIP_BLOCK
 from .checkpoint import Manifest, atomic_write_json
+from .layout import POSTINGS_SCHEMA, read_table
 from .functions.udfs import make_term_tf_by_lang_udf, make_term_tf_udf
 
 # v2: postings gained skip_dl_off (per-block byte offsets into dl_blob) so
@@ -74,23 +66,11 @@ _OFFSET_MAP_MAX_BUCKETS = 1024
 # exceeds the slice's encode work (~30 us/doc), and every extra salt
 # copy pays the interpreted pairs-filter fan-out (see postings wave)
 _MIN_SALT_SLICE_DOCS = 2048
-
-POSTINGS_SCHEMA = StructType(
-    [
-        StructField("term", StringType(), False),
-        StructField("shard_id", LongType(), False),
-        StructField("count", IntegerType(), False),
-        StructField("tf_sum", LongType(), False),
-        StructField("doc_blob", BinaryType(), False),
-        StructField("tf_blob", BinaryType(), False),
-        StructField("dl_blob", BinaryType(), False),
-        StructField("skip_last_doc", ArrayType(LongType()), False),
-        StructField("skip_max_tf", ArrayType(IntegerType()), False),
-        StructField("skip_doc_off", ArrayType(IntegerType()), False),
-        StructField("skip_tf_off", ArrayType(IntegerType()), False),
-        StructField("skip_dl_off", ArrayType(IntegerType()), False),
-    ]
-)
+# smallest doc count worth its own id/tokenize task: ~50 ms of tokenize
+# on the bench corpus (~50 us/doc), the order of the python task floor.
+# A small batch (an upsert) tokenizes in ceil(n / this) tasks instead of
+# one near-empty task per shuffle partition; big builds keep full width
+_MIN_TOKENIZE_TASK_DOCS = 1024
 
 
 @dataclass
@@ -155,6 +135,10 @@ def assign_doc_ids(
     Mirrors ``generateID`` (``loader.go:96-100``) — the string identity stays
     as ``md5(url)`` in the docs table; the dense surrogate enables
     delta/varbyte compression (SURVEY.md §7 hard parts).
+
+    The window's exchange is sized by the collected doc count: at most
+    ``ceil(n / _MIN_TOKENIZE_TASK_DOCS)`` partitions, so the downstream
+    tokenize (same stage) of a small batch runs in one or a few tasks.
     """
     from pyspark.sql.window import Window
 
@@ -171,6 +155,12 @@ def assign_doc_ids(
     for b in range(id_buckets):
         offsets[b] = acc
         acc += counts.get(b, 0)
+    width = int(docs.sparkSession.conf.get("spark.sql.shuffle.partitions"))
+    n_parts = max(1, math.ceil(acc / _MIN_TOKENIZE_TASK_DOCS))
+    if n_parts < width:
+        # the window's own exchange would be shuffle-partitions wide; this
+        # one satisfies its clustering, so it replaces it (ids unchanged)
+        docs = docs.repartition(n_parts, "_bucket")
 
     w = Window.partitionBy("_bucket").orderBy("_h", url_col)
     if id_buckets <= _OFFSET_MAP_MAX_BUCKETS:
@@ -569,7 +559,7 @@ def build_index(
     index_dir: str,
     cfg: BuildConfig | None = None,
     resume: bool = True,
-    _first_shard: int = 0,
+    _first_shard: int | None = None,
 ) -> dict:
     """Build the full index at ``index_dir``. Returns build stats.
 
@@ -577,12 +567,14 @@ def build_index(
     (use ``extract_text_udf`` upstream to materialize ``text`` from
     ``html``).
 
-    ``_first_shard`` (internal) numbers the build from shard
-    ``_first_shard`` — doc ids from ``_first_shard * shard_size`` — so an
-    incremental append stages its delta at its final ids and moves the
-    written files into place instead of re-writing them shifted. Every
+    ``_first_shard`` (internal) makes this a STAGED build numbered from
+    shard ``_first_shard`` — doc ids from ``_first_shard * shard_size`` —
+    so an incremental append stages its delta at its final ids and moves
+    the written files into place instead of re-writing them shifted. Every
     table holds absolute ids; ``n_shards`` in the returned meta stays the
-    number of shards built.
+    number of shards built. A staged build writes no term dictionary: the
+    append merges the staged postings' df/cf into the live dictionary
+    directly (``incremental._merge_dictionary``).
     """
     cfg = cfg or BuildConfig()
     os.makedirs(index_dir, exist_ok=True)
@@ -639,9 +631,10 @@ def build_index(
         64, spark.sparkContext.defaultParallelism * 4
     )
     with_ids, n_docs = assign_doc_ids(docs, id_buckets)
-    if _first_shard:
+    first_shard = _first_shard or 0
+    if first_shard:
         with_ids = with_ids.withColumn(
-            "doc_id", F.col("doc_id") + _first_shard * cfg.shard_size
+            "doc_id", F.col("doc_id") + first_shard * cfg.shard_size
         )
     ttf = _term_tf_col(cfg)
     # doclen = sum of doc-local tfs == token count; computed JVM-side from
@@ -672,7 +665,8 @@ def build_index(
         )
     docs_path = os.path.join(index_dir, "docs")
     t_phase = time.monotonic()
-    if not (resume and manifest.is_done("docs")):
+    docs_written = not (resume and manifest.is_done("docs"))
+    if docs_written:
         docs_table.write.mode("overwrite").parquet(docs_path)
         manifest.mark_done("docs", {"n_docs": n_docs})
     t_phase = _lap("docs_write", t_phase)
@@ -684,7 +678,7 @@ def build_index(
     for w in range(n_waves):
         lo, hi = w * per, min((w + 1) * per, n_shards)
         if lo < hi:
-            waves.append((lo + _first_shard, hi + _first_shard))
+            waves.append((lo + first_shard, hi + first_shard))
 
     postings_path = os.path.join(index_dir, "postings")
     encode_stream = _make_doc_encoder(cfg.shard_size, cfg.skip_block)
@@ -746,10 +740,11 @@ def build_index(
         manifest.mark_done("stored", {"n_docs": n_docs})
         t_phase = _lap("stored", t_phase)
 
-    # ---- global term stats (df/cf) merged across shards
+    # ---- global term stats (df/cf) merged across shards; a staged build
+    # skips it (its delta's df/cf are merged from the staged postings)
     terms_path = os.path.join(index_dir, "terms")
-    if not (resume and manifest.is_done("terms")):
-        postings_all = spark.read.parquet(postings_path)
+    if _first_shard is None and not (resume and manifest.is_done("terms")):
+        postings_all = read_table(spark, postings_path, "postings")
         # df/cf merge across shard-partial indexes — the "merge partial
         # segment indexes into a global index" step, over the (small)
         # postings table instead of the raw token stream.
@@ -776,9 +771,9 @@ def build_index(
     # ---- per-shard metrics (lineage: reference Analyze, stats.go:3-11)
     if not (resume and manifest.is_done("meta")):
         metrics_path = os.path.join(index_dir, "metrics")
-        postings_all = spark.read.parquet(postings_path)
-        # shard_id as long, like compaction's rewrite: an append moves
-        # these files into the live table, whose files must share a type
+        postings_all = read_table(spark, postings_path, "postings")
+        # shard_id as long, the metrics table's pinned read type: an
+        # append moves these files into the live table
         metrics = postings_all.groupBy(
             F.col("shard_id").cast("long").alias("shard_id")
         ).agg(
@@ -795,12 +790,13 @@ def build_index(
         return meta
 
     t_phase = _lap("metrics", t_phase)
-    # avgdl = total tokens / docs, free from the terms table (sum cf) —
-    # avoids one more pass over the cached base.
-    cf_row = (
-        spark.read.parquet(terms_path).agg(F.sum("cf").alias("t")).first()
-    )
-    avgdl = float(cf_row["t"] or 0) / max(1, n_docs)
+    # avgdl = total tokens / docs: Σdoclen over the cached base, which
+    # equals Σcf of the dictionary exactly (a staged build has none). A
+    # resumed build that skipped the docs write has no cached base and
+    # sums the written docs table instead of re-tokenizing.
+    lens = base if docs_written else read_table(spark, docs_path, "docs")
+    total_tokens = lens.agg(F.sum("doclen")).first()[0]
+    avgdl = float(total_tokens or 0) / max(1, n_docs)
     phases["total"] = round(time.monotonic() - t_start, 3)
     import uuid
 

@@ -713,19 +713,23 @@ class FtsEngine:
 
     def analyze(self) -> DataFrame:
         """Per-shard metrics + global rollup of the index shape."""
-        from .layout import table_path
+        from .layout import read_table, table_path
 
-        m = self.spark.read.parquet(
-            table_path(self.index_dir, self.index.meta, "metrics")
+        m = read_table(
+            self.spark,
+            table_path(self.index_dir, self.index.meta, "metrics"),
+            "metrics",
         )
         return m.orderBy("shard_id")
 
     def stats(self) -> dict:
         """Global index stats (reference Stats struct equivalent)."""
-        from .layout import table_path
+        from .layout import read_table, table_path
 
-        terms = self.spark.read.parquet(
-            table_path(self.index_dir, self.index.meta, "terms")
+        terms = read_table(
+            self.spark,
+            table_path(self.index_dir, self.index.meta, "terms"),
+            "terms",
         )
         row = terms.agg(
             F.count("*").alias("n_terms"),

@@ -15,11 +15,96 @@ dictionary).
 
 ``build_index`` writes the legacy unversioned names; ``table_path``
 falls back to them when meta carries no pointer.
+
+Every read of a table the index writes goes through :func:`read_table`
+with the table's known schema, so Spark runs no schema-inference job
+(one footer-reading job per ``spark.read.parquet`` of a directory — the
+bulk of the fixed cost of a small upsert or compaction). Reads of user
+input keep inference.
 """
 
 from __future__ import annotations
 
 import os
+from collections.abc import Sequence
+
+from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import (
+    ArrayType,
+    BinaryType,
+    IntegerType,
+    LongType,
+    StringType,
+    StructField,
+    StructType,
+)
+
+# the postings encoders' output (mapInArrow) schema
+POSTINGS_SCHEMA = StructType(
+    [
+        StructField("term", StringType(), False),
+        StructField("shard_id", LongType(), False),
+        StructField("count", IntegerType(), False),
+        StructField("tf_sum", LongType(), False),
+        StructField("doc_blob", BinaryType(), False),
+        StructField("tf_blob", BinaryType(), False),
+        StructField("dl_blob", BinaryType(), False),
+        StructField("skip_last_doc", ArrayType(LongType()), False),
+        StructField("skip_max_tf", ArrayType(IntegerType()), False),
+        StructField("skip_doc_off", ArrayType(IntegerType()), False),
+        StructField("skip_tf_off", ArrayType(IntegerType()), False),
+        StructField("skip_dl_off", ArrayType(IntegerType()), False),
+    ]
+)
+
+
+def _nullable(*cols: tuple) -> StructType:
+    return StructType([StructField(n, t, True) for n, t in cols])
+
+
+_S, _I, _L, _B = StringType(), IntegerType(), LongType(), BinaryType()
+# read schemas of the written tables, exactly as Spark would infer them
+# (asserted per table in tests/test_layout.py): every column nullable, and
+# a shard_id partition column last, typed int like Spark's inference of
+# the ``shard_id=N`` directory names. The metrics table's shard_id is a
+# data column, pinned long: files of older builds store it as int, and a
+# pinned long read widens those instead of failing on the mix.
+TABLE_SCHEMAS = {
+    "postings": _nullable(
+        ("term", _S), ("count", _I), ("tf_sum", _L), ("doc_blob", _B),
+        ("tf_blob", _B), ("dl_blob", _B), ("skip_last_doc", ArrayType(_L)),
+        ("skip_max_tf", ArrayType(_I)), ("skip_doc_off", ArrayType(_I)),
+        ("skip_tf_off", ArrayType(_I)), ("skip_dl_off", ArrayType(_I)),
+        ("shard_id", _I),
+    ),
+    "terms": _nullable(("term", _S), ("df", _L), ("cf", _L)),
+    "docs": _nullable(
+        ("doc_id", _L), ("url", _S), ("url_md5", _S), ("lang", _S),
+        ("doclen", _I),
+    ),
+    "metrics": _nullable(
+        ("shard_id", _L), ("n_terms", _L), ("n_postings", _L),
+        ("blob_bytes", _L),
+    ),
+    "tombstones": _nullable(("doc_id", _L), ("url", _S)),
+    "stored": _nullable(("doc_id", _L), ("url", _S), ("text", _S), ("lang", _S)),
+    "positions": _nullable(
+        ("term", _S), ("n_docs", _L), ("doc_blob", _B), ("cnt_blob", _B),
+        ("pos_blob", _B), ("shard_id", _I),
+    ),
+}
+
+
+def read_table(
+    spark: SparkSession, path: str, name: str, meta_cols: Sequence[str] = ()
+) -> DataFrame:
+    """Read the index table ``name`` (a :data:`TABLE_SCHEMAS` key) at
+    ``path`` under its pinned schema — no schema-inference job. A docs
+    table carrying ``meta_cols`` (user-typed passthrough columns) is the
+    one read that still infers."""
+    if name == "docs" and meta_cols:
+        return spark.read.parquet(path)
+    return spark.read.schema(TABLE_SCHEMAS[name]).parquet(path)
 
 
 def table_path(index_dir: str, meta: dict, name: str) -> str:

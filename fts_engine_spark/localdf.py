@@ -11,12 +11,14 @@ it is a LocalTableScan the planner can broadcast without running tasks.
 ``local_df`` is the drop-in replacement used by every query-path site
 that materializes bounded results or tiny join relations. Rows must be
 non-null in non-string columns (true for every caller: ids, scores,
-counts); on any conversion surprise it falls back to the classic path,
-so behavior can only differ in speed.
+counts); a row whose arity differs from the schema is rejected. When
+the pandas/Arrow conversion itself refuses the data it falls back to the
+classic path, so behavior can only differ in speed.
 """
 
 from __future__ import annotations
 
+from pyspark.errors import PySparkException
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.types import StructType
 
@@ -24,23 +26,25 @@ from pyspark.sql.types import StructType
 def local_df(spark: SparkSession, rows, schema) -> DataFrame:
     """Bounded local ``rows`` (tuples/Rows) as an Arrow LocalRelation
     DataFrame with exactly ``schema`` (a DDL string or StructType)."""
-    if isinstance(schema, str):
-        from pyspark.sql.types import _parse_datatype_string
-
-        st = _parse_datatype_string(schema)
-    else:
-        st = schema
+    st = StructType.fromDDL(schema) if isinstance(schema, str) else schema
     assert isinstance(st, StructType)
     rows = [tuple(r) for r in rows]
     if not rows:
         return spark.createDataFrame([], st)
-    try:
-        import pandas as pd
-
-        cols = list(zip(*rows))
-        pdf = pd.DataFrame(
-            {f.name: list(c) for f, c in zip(st.fields, cols)}
+    width = len(st.fields)
+    bad = next((r for r in rows if len(r) != width), None)
+    if bad is not None:
+        raise ValueError(
+            f"local_df row {bad!r} has {len(bad)} values; the schema "
+            f"{st.simpleString()} has {width} columns"
         )
+    import pandas as pd
+    import pyarrow as pa
+
+    pdf = pd.DataFrame({f.name: list(c) for f, c in zip(st.fields, zip(*rows))})
+    try:
         return spark.createDataFrame(pdf, schema=st)
-    except Exception:  # pragma: no cover - defensive fallback
+    except (pa.ArrowException, PySparkException, TypeError, ValueError):
+        # the Arrow path refuses some value/type pairs (e.g. a null in a
+        # non-nullable column) that the row path accepts or reports better
         return spark.createDataFrame(rows, st)

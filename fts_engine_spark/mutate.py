@@ -44,16 +44,14 @@ import shutil
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from .checkpoint import Manifest, atomic_write_json
-from .layout import next_version_dir, table_path
-
-TOMBSTONES_SCHEMA = "doc_id long, url string"
+from .layout import next_version_dir, read_table, table_path
 
 
 def read_tombstones(spark: SparkSession, index_dir: str, meta: dict) -> DataFrame | None:
     """The live tombstone table, or None when the index has none."""
     if not meta.get("tombstones_dir"):
         return None
-    return spark.read.parquet(table_path(index_dir, meta, "tombstones"))
+    return read_table(spark, table_path(index_dir, meta, "tombstones"), "tombstones")
 
 
 def delete_documents(
@@ -70,6 +68,10 @@ def delete_documents(
 
     Returns ``{"matched": docs newly+already tombstoned in this url set,
     "n_deleted": total live tombstones, "meta": committed meta}``.
+
+    One docs scan: the (small) matched set is persisted, one aggregate
+    over it and the previous tombstones yields both counts, and the
+    table write reads the cache.
 
     Commit is the standard versioned-dir + single atomic meta write; a
     crash at any point leaves the previous tombstone table (or none)
@@ -90,7 +92,9 @@ def delete_documents(
             f"this build mutates version {META_VERSION}"
         )
 
-    docs = spark.read.parquet(table_path(index_dir, meta, "docs"))
+    # only (doc_id, url) are read: the pinned base schema covers them
+    # whether or not the table carries meta_cols
+    docs = read_table(spark, table_path(index_dir, meta, "docs"), "docs")
     if isinstance(urls, DataFrame):
         url_rel = urls.select(F.col("url").cast("string")).distinct()
         matched = docs.join(url_rel, "url", "left_semi")
@@ -99,14 +103,26 @@ def delete_documents(
             matched = docs.where(F.lit(False))
         else:
             matched = docs.where(F.col("url").isin(list(urls)))
-    matched = matched.select("doc_id", "url")
-    n_matched = matched.count()
-
+    matched = matched.select("doc_id", "url").persist()
     prev = read_tombstones(spark, index_dir, meta)
+    # matched rows are distinct (doc ids are unique): over the distinct
+    # union with the previous tombstones, the row count is the new total
+    # and Σ max(is-matched) counts the matched rows
+    tagged = matched.withColumn("_m", F.lit(1))
+    if prev is not None:
+        tagged = (
+            prev.withColumn("_m", F.lit(0))
+            .unionByName(tagged)
+            .groupBy("doc_id", "url")
+            .agg(F.max("_m").alias("_m"))
+        )
+    n_total, n_matched = tagged.agg(F.count("*"), F.sum("_m")).first()
+    n_matched = int(n_matched or 0)
     if n_matched == 0:
         # nothing newly tombstoned: no table write, no version bump.
         # With no prior tombstones this also avoids committing an empty
         # table that every relational plan would anti-join forever.
+        matched.unpersist()
         return {
             "matched": 0,
             "n_deleted": int(meta.get("n_deleted", 0)),
@@ -121,7 +137,7 @@ def delete_documents(
     # tombstones are tiny relative to the index (bounded per epoch);
     # a handful of files is fine and keeps the write distributed
     combined.write.mode("overwrite").parquet(new_dir)
-    n_total = spark.read.parquet(new_dir).count()
+    matched.unpersist()
 
     old_dir = (
         table_path(index_dir, meta, "tombstones")
@@ -328,7 +344,7 @@ def merge_indexes(
     # postings: shard ids += next_shard, absolute skip docids += offset;
     # blobs untouched (no Python stage at all)
     (
-        spark.read.parquet(table_path(src_dir, src, "postings"))
+        read_table(spark, table_path(src_dir, src, "postings"), "postings")
         .withColumn("shard_id", F.col("shard_id").cast("long") + next_shard)
         .withColumn(
             "skip_last_doc",
@@ -343,7 +359,9 @@ def merge_indexes(
 
     staging = os.path.join(dst_dir, "_staging_merge")
     shutil.rmtree(staging, ignore_errors=True)
-    src_docs = spark.read.parquet(table_path(src_dir, src, "docs"))
+    src_docs = read_table(
+        spark, table_path(src_dir, src, "docs"), "docs", src.get("meta_cols", ())
+    )
     docs_delta = os.path.join(staging, "_docs_delta")
     (
         src_docs.withColumn("doc_id", F.col("doc_id") + offset_docs)
@@ -354,7 +372,7 @@ def merge_indexes(
 
     metrics_delta = os.path.join(staging, "_metrics_delta")
     (
-        spark.read.parquet(table_path(src_dir, src, "metrics"))
+        read_table(spark, table_path(src_dir, src, "metrics"), "metrics")
         .withColumn("shard_id", F.col("shard_id").cast("long") + next_shard)
         .write.mode("overwrite")
         .parquet(metrics_delta)
@@ -364,8 +382,10 @@ def merge_indexes(
     # dictionary delta-merge, atomic via versioned dir + pointer flip
     old_terms = table_path(dst_dir, dst, "terms")
     merged_terms = (
-        spark.read.parquet(old_terms)
-        .unionByName(spark.read.parquet(table_path(src_dir, src, "terms")))
+        read_table(spark, old_terms, "terms")
+        .unionByName(
+            read_table(spark, table_path(src_dir, src, "terms"), "terms")
+        )
         .groupBy("term")
         .agg(
             F.sum("df").cast("long").alias("df"),
@@ -397,10 +417,10 @@ def merge_indexes(
     if n_deleted:
         parts = []
         if dst.get("tombstones_dir"):
-            parts.append(spark.read.parquet(old_tomb))
+            parts.append(read_tombstones(spark, dst_dir, dst))
         if src.get("tombstones_dir"):
             parts.append(
-                spark.read.parquet(table_path(src_dir, src, "tombstones"))
+                read_tombstones(spark, src_dir, src)
                 .withColumn("doc_id", F.col("doc_id") + offset_docs)
             )
         combined = parts[0]
@@ -417,7 +437,9 @@ def merge_indexes(
 
     if positions_fresh:
         (
-            spark.read.parquet(os.path.join(src_dir, POSITIONS_TABLE))
+            read_table(
+                spark, os.path.join(src_dir, POSITIONS_TABLE), "positions"
+            )
             .withColumn(
                 "shard_id", F.col("shard_id").cast("long") + next_shard
             )
@@ -433,7 +455,7 @@ def merge_indexes(
     if stored_fresh:
         stored_delta = os.path.join(staging, "_stored_delta")
         (
-            spark.read.parquet(os.path.join(src_dir, STORED_TABLE))
+            read_table(spark, os.path.join(src_dir, STORED_TABLE), "stored")
             .withColumn("doc_id", F.col("doc_id") + offset_docs)
             .write.mode("overwrite")
             .option("parquet.block.size", str(DEFAULT_ROWGROUP_BYTES))
@@ -531,7 +553,9 @@ def reindex(
         raise ValueError("reindex cannot target the source index dir")
     src = FtsIndex(spark, src_index_dir)
     stored_path = _checked_path(src)
-    docs = spark.read.parquet(stored_path).select("doc_id", "url", "text", "lang")
+    docs = read_table(spark, stored_path, "stored").select(
+        "doc_id", "url", "text", "lang"
+    )
     meta_cols = tuple(getattr(cfg, "meta_cols", ()) or ())
     if meta_cols:
         src_docs = src.docs()

@@ -68,6 +68,7 @@ from pyspark.sql import types as T
 
 from .build import salt_policy
 from .codec import varbyte_decode, varbyte_encode
+from .layout import read_table
 
 if TYPE_CHECKING:  # pragma: no cover
     from .query import FtsIndex
@@ -687,7 +688,7 @@ def fetch_point_positions(
     pos_path = check_positions_fresh(index)
     shard_size = int(index.meta["shard_size"])
     rows = (
-        index.spark.read.parquet(pos_path)
+        read_table(index.spark, pos_path, "positions")
         .where(F.col("term").isin(list(terms)))
         .collect()
     )
@@ -826,7 +827,9 @@ def _search_positional(
     )
     shard_size = int(meta["shard_size"])
 
-    scan = spark.read.parquet(pos_path).where(F.col("term").isin(all_terms))
+    scan = read_table(spark, pos_path, "positions").where(
+        F.col("term").isin(all_terms)
+    )
 
     seq_items = sorted(sequences.items())
 

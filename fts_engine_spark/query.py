@@ -48,6 +48,7 @@ from pyspark.sql.types import (
 )
 
 from .codec import decode_block, varbyte_decode
+from .layout import read_table
 from .textproc.gocompat import go_lower
 from .textproc.pipeline import get_pipeline
 
@@ -394,14 +395,16 @@ class FtsIndex:
         # 8-client QPS 6.9→7.7. One-time sort at warm(), zero per-query
         # cost.
         self._postings_df = (
-            self.spark.read.parquet(self._postings_path)
+            read_table(self.spark, self._postings_path, "postings")
             .withColumn("shard_id", F.col("shard_id").cast("long"))
             .repartition(n_parts, F.col("shard_id"))
             .sortWithinPartitions("shard_id", "term")
             .persist()
         )
         self._postings_df.count()
-        self._terms_df = self.spark.read.parquet(self._terms_path).persist()
+        self._terms_df = read_table(
+            self.spark, self._terms_path, "terms"
+        ).persist()
         n_terms = self._terms_df.count()
         # byte-budgeted driver dictionary (VERDICT r4 wrong #4: an entry
         # cap alone admits ~hundreds of MB at the 5M default). Estimate
@@ -453,12 +456,12 @@ class FtsIndex:
     def _read_postings(self) -> DataFrame:
         if self._postings_df is not None:
             return self._postings_df
-        return self.spark.read.parquet(self._postings_path)
+        return read_table(self.spark, self._postings_path, "postings")
 
     def _read_terms(self) -> DataFrame:
         if self._terms_df is not None:
             return self._terms_df
-        return self.spark.read.parquet(self._terms_path)
+        return read_table(self.spark, self._terms_path, "terms")
 
     # ---- term dictionary gate (reference filter role, engine.go:108-116)
     def term_stats(self, terms: list[str]) -> dict[str, tuple[int, int]]:
@@ -660,7 +663,9 @@ class FtsIndex:
         )
 
     def docs(self) -> DataFrame:
-        return self.spark.read.parquet(self._docs_path)
+        return read_table(
+            self.spark, self._docs_path, "docs", self.meta.get("meta_cols", ())
+        )
 
     def doc_urls_local(
         self, doc_ids: "Iterable[int]"
@@ -708,7 +713,7 @@ class FtsIndex:
         inside its pruning boundary)."""
         if self._tombstones_path is None:
             return None
-        return self.spark.read.parquet(self._tombstones_path)
+        return read_table(self.spark, self._tombstones_path, "tombstones")
 
     def _dead_ids(self) -> np.ndarray | None:
         """Sorted int64 array of tombstoned doc ids on the driver (lazy,

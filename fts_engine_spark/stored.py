@@ -43,6 +43,8 @@ from typing import TYPE_CHECKING, Iterable
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
+from .layout import read_table
+
 if TYPE_CHECKING:  # pragma: no cover
     from .query import FtsIndex
 
@@ -112,7 +114,7 @@ def retrofit_with_ids(
 
     with open(os.path.join(index_dir, "meta.json")) as f:
         meta = json.load(f)
-    ids = spark.read.parquet(table_path(index_dir, meta, "docs")).select(
+    ids = read_table(spark, table_path(index_dir, meta, "docs"), "docs").select(
         "doc_id", "url"
     )
     cols = ["url", "text"] + (["lang"] if "lang" in docs.columns else [])
@@ -203,7 +205,7 @@ def stored_text(
     ids = [int(i) for i in doc_ids]
     cols = ["doc_id", "text"] + (["lang"] if with_lang else [])
     return (
-        index.spark.read.parquet(path)
+        read_table(index.spark, path, "stored")
         .where(F.col("doc_id").isin(ids))
         .select(*cols)
     )

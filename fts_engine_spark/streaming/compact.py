@@ -51,7 +51,7 @@ from ..build import (
 )
 from ..checkpoint import Manifest, atomic_write_json
 from ..codec import varbyte_decode_binary
-from ..layout import next_version_dir, table_path
+from ..layout import next_version_dir, read_table, table_path
 
 # posting-list pieces of the decoded tail: one row per (old row, new shard)
 _TAIL_PIECES_SCHEMA = (
@@ -92,7 +92,7 @@ def _tail_postings(spark: SparkSession, postings_path: str, P: int) -> DataFrame
     only the delta tail, never the full-shard prefix (plan-asserted in
     tests/test_plans.py)."""
     return (
-        spark.read.parquet(postings_path)
+        read_table(spark, postings_path, "postings")
         .where(F.col("shard_id") >= P)
         .withColumn("shard_id", F.col("shard_id").cast("long"))
     )
@@ -316,7 +316,7 @@ def compact_index(
 
     docs_path = table_path(index_dir, meta, "docs")
     postings_path = table_path(index_dir, meta, "postings")
-    docs = spark.read.parquet(docs_path)
+    docs = read_table(spark, docs_path, "docs", meta.get("meta_cols", ()))
     occ = _occupancy(docs, shard_size)
 
     # tombstones (mutate.delete_documents): compaction is where logical
@@ -403,7 +403,9 @@ def compact_index(
     # it has a row exactly for shards the build emitted posting rows for.
     shards_with_postings = {
         int(r["shard_id"])
-        for r in spark.read.parquet(table_path(index_dir, meta, "metrics"))
+        for r in read_table(
+            spark, table_path(index_dir, meta, "metrics"), "metrics"
+        )
         .select("shard_id").where(F.col("shard_id") < P).collect()
     }
     for s in range(P):
@@ -478,11 +480,11 @@ def compact_index(
     # only the re-encoded tail — rescanning every prefix shard's blob
     # columns would make this O(index) when the job is otherwise O(tail)
     new_metrics, _, metr_ptr = next_version_dir(index_dir, meta, "metrics")
-    old_metrics = spark.read.parquet(
-        table_path(index_dir, meta, "metrics")
+    old_metrics = read_table(
+        spark, table_path(index_dir, meta, "metrics"), "metrics"
     ).where(F.col("shard_id") < P)
     tail_metrics = (
-        spark.read.parquet(new_postings)
+        read_table(spark, new_postings, "postings")
         .where(F.col("shard_id") >= P)
         .groupBy("shard_id")
         .agg(
@@ -495,7 +497,6 @@ def compact_index(
     )
     (
         old_metrics.select("shard_id", "n_terms", "n_postings", "blob_bytes")
-        .withColumn("shard_id", F.col("shard_id").cast("long"))
         .unionByName(
             tail_metrics.withColumn(
                 "shard_id", F.col("shard_id").cast("long")
@@ -522,9 +523,11 @@ def compact_index(
     if have_dead:
         terms_path = table_path(index_dir, meta, "terms")
         new_terms_df = _corrected_terms(
-            spark.read.parquet(terms_path),
+            read_table(spark, terms_path, "terms"),
             tail,
-            spark.read.parquet(new_postings).where(F.col("shard_id") >= P),
+            read_table(spark, new_postings, "postings").where(
+                F.col("shard_id") >= P
+            ),
         )
         new_terms_dir, _, terms_ptr = next_version_dir(index_dir, meta, "terms")
         dict_buckets = max(1, spark.sparkContext.defaultParallelism // 2)
@@ -540,7 +543,8 @@ def compact_index(
         )
         pointer_updates.update(terms_ptr)
         total_tokens = int(
-            spark.read.parquet(new_terms_dir).agg(F.sum("cf")).first()[0] or 0
+            read_table(spark, new_terms_dir, "terms").agg(F.sum("cf")).first()[0]
+            or 0
         )
         meta_updates["n_docs"] = n_live
         meta_updates["avgdl"] = float(total_tokens) / max(1, n_live)
@@ -625,7 +629,7 @@ def _rebuild_sidecars(
             dtype="int64",
         )
 
-    stored = spark.read.parquet(stored_path)
+    stored = read_table(spark, stored_path, "stored")
     if dead.size:
 
         @pandas_udf("boolean")
@@ -658,7 +662,7 @@ def _rebuild_sidecars(
         # count check aborts the whole sidecar-maintained compaction)
         with open(os.path.join(index_dir, "meta.json")) as f:
             committed = json.load(f)  # includes the stored pin above
-        with_ids = spark.read.parquet(stored_path).select(
+        with_ids = read_table(spark, stored_path, "stored").select(
             "doc_id", "url", "text", "lang"
         )
         build_positions_table(

@@ -28,7 +28,7 @@ from pyspark.sql.streaming import StreamingQuery
 
 from ..build import BuildConfig, build_index
 from ..checkpoint import Manifest, atomic_write_json
-from ..layout import next_version_dir, table_path
+from ..layout import next_version_dir, read_table, table_path
 
 PAGES_SCHEMA = (
     "url string, warc_ts timestamp, html binary, text string, lang string"
@@ -113,23 +113,30 @@ def stream_pages(spark: SparkSession, input_dir: str, fmt: str = "parquet") -> D
 
 
 def _merge_dictionary(
-    spark: SparkSession, index_dir: str, meta: dict, staging: str,
+    spark: SparkSession, index_dir: str, meta: dict, staged_postings: str,
     bloom_ndv: int,
 ) -> dict:
     """Delta-merge the global term dictionary: union the STAGED batch's
-    (already aggregated) term stats with the existing dictionary and
-    re-aggregate — O(|batch vocab| + |dictionary|) per batch instead of
-    re-scanning every posting in the index; written range-bucketed like
-    the batch build (no single-task repartition(1)).
+    posting rows (``count``/``tf_sum`` per (shard, term) — the staged
+    build writes no dictionary of its own) with the existing dictionary
+    and aggregate df/cf in one pass inside the write — O(|batch postings
+    rows| + |dictionary|) per batch instead of re-scanning every posting
+    in the index; written range-bucketed like the batch build (no
+    single-task repartition(1)).
 
     Atomic dictionary swap (VERDICT r3 wrong #4): the merge lands in a
     fresh VERSIONED dir whose meta pointer (returned) flips in the
     append's single committing ``atomic_write_json`` — a crash at any
     point leaves meta pointing at a complete dictionary (old before the
     flip, new after); the old dir is removed only after commit."""
+    delta = read_table(spark, staged_postings, "postings").select(
+        "term",
+        F.col("count").cast("long").alias("df"),
+        F.col("tf_sum").alias("cf"),
+    )
     merged = (
-        spark.read.parquet(table_path(index_dir, meta, "terms"))
-        .unionByName(spark.read.parquet(os.path.join(staging, "terms")))
+        read_table(spark, table_path(index_dir, meta, "terms"), "terms")
+        .unionByName(delta)
         .groupBy("term")
         .agg(
             F.sum("df").cast("long").alias("df"),
@@ -168,7 +175,10 @@ def _append_batch(
     the splice MOVES the staged postings shard dirs and the docs, metrics
     and sidecar files into the live tables (``os.replace`` /
     :func:`_move_in_tagged`) — no Spark job re-reads or re-writes them.
-    Only the term dictionary is re-written (a delta-merge).
+    Only the term dictionary is re-written: the staged build writes none,
+    and :func:`_merge_dictionary` folds the staged postings' df/cf into
+    the live one before they move. The batch's avgdl comes from the
+    staged build's Σdoclen; every read pins its schema (no inference).
 
     EXACTLY-ONCE under foreachBatch retries: Structured Streaming re-runs
     a micro-batch after a crash, so the splice must be idempotent —
@@ -306,6 +316,14 @@ def _append_batch(
         _first_shard=next_shard,
     )
 
+    # the dictionary merge reads the staged postings, so it runs before
+    # they move; its versioned dir is uncommitted until the meta write
+    old_terms = table_path(index_dir, meta, "terms")
+    terms_ptr = _merge_dictionary(
+        spark, index_dir, meta, os.path.join(staging, "postings"),
+        stage_cfg.bloom_ndv,
+    )
+
     # splice: the staged tables already carry their final shard and doc
     # ids, so the postings (and positional) shard dirs move in whole and
     # the docs/metrics/stored part files move in under this splice's tag.
@@ -324,11 +342,6 @@ def _append_batch(
     ):
         if fresh:
             _move_in_tagged(os.path.join(staging, src), dst, tag)
-
-    old_terms = table_path(index_dir, meta, "terms")
-    terms_ptr = _merge_dictionary(
-        spark, index_dir, meta, staging, stage_cfg.bloom_ndv
-    )
 
     n_new = int(stage_meta["n_docs"])
     total_docs = meta["n_docs"] + n_new

@@ -34,11 +34,13 @@ OPTIMIZATION_r06.md, "The Python task floor"):
 Both effects are process-local and idempotent. They are applied from
 ``fts_engine_spark/__init__`` — i.e. exactly once per worker process,
 when the first task whose kernel references this library unpickles its
-command — and only inside a PySpark worker (daemon children export
-``PYTHON_WORKER_FACTORY_SECRET``); driver and test processes are left
-untouched. On a real cluster the same two costs recur on every
-executor's workers (they are upstream PySpark behavior, not a local-mode
-artifact), so the ~0.2 s/task saving scales with task count.
+command — and only inside a PySpark worker (daemon children inherit
+``PYTHON_WORKER_FACTORY_SECRET`` in TCP mode or
+``PYTHON_WORKER_FACTORY_SOCK_DIR`` in Unix-domain-socket mode); driver
+and test processes are left untouched. On a real cluster the same two
+costs recur on every executor's workers (they are upstream PySpark
+behavior, not a local-mode artifact), so the ~0.2 s/task saving scales
+with task count.
 """
 
 from __future__ import annotations
@@ -48,15 +50,19 @@ import os
 
 _tuned = False
 
+_WORKER_ENV = (
+    # daemon.py, TCP mode: the auth secret its forked workers inherit
+    "PYTHON_WORKER_FACTORY_SECRET",
+    # daemon.py, Unix-domain-socket mode: the socket directory
+    "PYTHON_WORKER_FACTORY_SOCK_DIR",
+    # non-daemon worker.py in UDS mode: its own socket path
+    "PYTHON_WORKER_FACTORY_SOCK_PATH",
+)
+
 
 def _in_pyspark_worker() -> bool:
-    # daemon.py reads PYTHON_WORKER_FACTORY_SECRET from the worker env
-    # (TCP mode); non-daemon / UDS workers get the SOCK_PATH variant.
-    # The driver/test process has neither.
-    return (
-        "PYTHON_WORKER_FACTORY_SECRET" in os.environ
-        or "PYTHON_WORKER_FACTORY_SOCK_PATH" in os.environ
-    )
+    # the driver/test process has none of these
+    return any(k in os.environ for k in _WORKER_ENV)
 
 
 def tune_worker() -> None:

@@ -595,9 +595,10 @@ def test_update_documents_splices_without_spark_jobs(
     spark, small_corpus, tmp_path, monkeypatch
 ):
     """An upsert stages its delta at the final ids and MOVES the staged
-    postings, docs and metrics into place: between the staged build and
-    the dictionary merge no Spark job runs (counted per job group through
-    the status tracker)."""
+    postings, docs and metrics into place: after the dictionary merge
+    (which reads the staged postings before they move) no Spark job runs
+    up to the commit (counted per job group through the status
+    tracker)."""
     from fts_engine_spark.build import BuildConfig, build_index
     from fts_engine_spark.mutate import update_documents
     from fts_engine_spark.streaming import incremental
@@ -611,17 +612,18 @@ def test_update_documents_splices_without_spark_jobs(
     group = f"splice-{id(tmp_path)}"
     real_build, real_merge = incremental.build_index, incremental._merge_dictionary
 
-    def build_then_splice(*a, **kw):
+    def build_then_merge(*a, **kw):
         out = real_build(*a, **kw)
+        sc.setJobGroup(f"{group}-dict", "dictionary merge")
+        return out
+
+    def merge_then_splice(*a, **kw):
+        out = real_merge(*a, **kw)
         sc.setJobGroup(group, "splice")
         return out
 
-    def merge(*a, **kw):
-        sc.setJobGroup(f"{group}-dict", "dictionary merge")
-        return real_merge(*a, **kw)
-
-    monkeypatch.setattr(incremental, "build_index", build_then_splice)
-    monkeypatch.setattr(incremental, "_merge_dictionary", merge)
+    monkeypatch.setattr(incremental, "build_index", build_then_merge)
+    monkeypatch.setattr(incremental, "_merge_dictionary", merge_then_splice)
     try:
         out = update_documents(spark, index_dir, docs.limit(80), cfg)
     finally:
@@ -630,3 +632,109 @@ def test_update_documents_splices_without_spark_jobs(
     assert list(tracker.getJobIdsForGroup(f"{group}-dict"))  # probe works
     assert list(tracker.getJobIdsForGroup(group)) == []
     assert out["meta"]["n_docs"] == 80 + out["replaced"]
+
+
+def _jobs_launched(spark, fn) -> tuple[int, int]:
+    """(jobs, schema-inference jobs) ``fn`` launches, counted through a
+    job group and the status stores. A schema-inference job (parquet
+    footer reads) is a job outside every SQL execution; the other kind,
+    a parallel file listing, is told apart by its description."""
+    import uuid
+
+    sc = spark.sparkContext
+    sql = spark._jsparkSession.sharedState().statusStore()
+
+    def executions(tail: int):
+        n = int(sql.executionsCount())
+        it = sql.executionsList(max(0, n - tail), tail).iterator()
+        while it.hasNext():
+            yield it.next()
+
+    last = max((int(e.executionId()) for e in executions(1)), default=-1)
+    group = f"jobs-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, group)
+    try:
+        fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    jobs = set(sc.statusTracker().getJobIdsForGroup(group))
+    in_sql = set()
+    for e in executions(500):
+        if int(e.executionId()) > last:
+            keys = e.jobs().keys().iterator()
+            while keys.hasNext():
+                in_sql.add(int(keys.next()))
+    store = sc._jsc.sc().statusStore()
+    inference = 0
+    for j in jobs - in_sql:
+        desc = store.job(j).description()
+        if not (desc.isDefined() and desc.get().startswith("Listing leaf")):
+            inference += 1
+    return len(jobs), inference
+
+
+# jobs the same calls launched before table reads pinned their schemas,
+# the staged build dropped its dictionary and deletes scanned docs once
+# (7 of the upsert's and 9 of the compaction's were schema inference)
+_PARENT_UPSERT_JOBS = 36
+_PARENT_COMPACT_JOBS = 25
+
+
+def test_upsert_compact_and_warm_run_no_schema_inference(
+    spark, small_corpus, tmp_path
+):
+    """Every read of an index table pins its schema: an upsert, a
+    compaction and a warm reopen launch no schema-inference job, and the
+    write path runs fewer jobs than before."""
+    from fts_engine_spark.build import BuildConfig, build_index
+    from fts_engine_spark.mutate import update_documents
+    from fts_engine_spark.streaming.compact import compact_index
+
+    cfg = BuildConfig(preset="by_lang", shard_size=32, id_buckets=8)
+    docs = spark.read.parquet(small_corpus).select("url", "text", "lang")
+    index_dir = str(tmp_path / "ix")
+    build_index(spark, docs.limit(60), index_dir, cfg, resume=False)
+    batch = docs.limit(80)  # its input was inferred when read above
+
+    out = {}
+    up_jobs, up_inf = _jobs_launched(
+        spark,
+        lambda: out.update(up=update_documents(spark, index_dir, batch, cfg)),
+    )
+    assert out["up"]["replaced"] == 60
+    c_jobs, c_inf = _jobs_launched(
+        spark, lambda: out.update(c=compact_index(spark, index_dir))
+    )
+    assert out["c"]["n_docs"] == 80 and int(out["c"].get("n_deleted", 0)) == 0
+
+    def reopen():
+        FtsIndex(spark, index_dir).warm().close()
+
+    w_jobs, w_inf = _jobs_launched(spark, reopen)
+    assert (up_inf, c_inf, w_inf) == (0, 0, 0), (up_jobs, c_jobs, w_jobs)
+    assert up_jobs < _PARENT_UPSERT_JOBS
+    assert c_jobs < _PARENT_COMPACT_JOBS
+
+
+def test_staged_build_writes_no_dictionary(spark, small_corpus, tmp_path):
+    """A staged build (``_first_shard``) writes postings, docs and metrics
+    at its final ids but no ``terms`` table; its avgdl is Σdoclen / n."""
+    import os
+
+    from fts_engine_spark.build import BuildConfig, build_index
+    from fts_engine_spark.layout import read_table
+
+    cfg = BuildConfig(preset="by_lang", shard_size=32, id_buckets=8)
+    docs = spark.read.parquet(small_corpus).select("url", "text", "lang")
+    staging = str(tmp_path / "staged")
+    meta = build_index(
+        spark, docs.limit(40), staging, cfg, resume=False, _first_shard=3
+    )
+    assert not os.path.exists(os.path.join(staging, "terms"))
+    for table in ("postings", "docs", "metrics"):
+        assert os.path.isdir(os.path.join(staging, table))
+    lens = read_table(spark, os.path.join(staging, "docs"), "docs")
+    row = lens.agg({"doclen": "sum", "doc_id": "min"}).first()
+    assert row["min(doc_id)"] == 3 * 32
+    assert meta["avgdl"] == float(row["sum(doclen)"]) / 40
