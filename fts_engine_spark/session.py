@@ -77,6 +77,13 @@ def get_spark(
         .config("spark.driver.memory", driver_mem)
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.ui.enabled", "false")
+        # generated-code cache: an ingest cycle (upserts, reopens, a
+        # compaction) uses ~130 distinct generated classes, so Spark's
+        # 100-entry default evicted them before reuse and every op
+        # re-compiled 15-90 of them (~14 ms each on the driver thread,
+        # plus JIT work competing with the op for CPUs). Static: must be
+        # set at session start.
+        .config("spark.sql.codegen.cache.maxEntries", "1024")
         # FAIR job scheduling: concurrent search jobs share task slots
         # instead of queueing whole jobs (measured +10% QPS at 8 clients);
         # identical to FIFO when one job runs at a time (builds). Must be

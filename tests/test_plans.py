@@ -738,3 +738,31 @@ def test_staged_build_writes_no_dictionary(spark, small_corpus, tmp_path):
     row = lens.agg({"doclen": "sum", "doc_id": "min"}).first()
     assert row["min(doc_id)"] == 3 * 32
     assert meta["avgdl"] == float(row["sum(doclen)"]) / 40
+
+
+def test_repeat_write_cycle_reuses_generated_code(spark, small_corpus, tmp_path):
+    """The session's generated-code cache holds a whole write cycle: a
+    second upsert + warm reopen + compaction of the same shape compiles
+    few classes (6-15 measured here, alone or after this module's other
+    tests). With Spark's 100-entry default the cycle's ~100 classes
+    evicted each other and every cycle re-compiled them (114-125)."""
+    from fts_engine_spark.build import BuildConfig, build_index
+    from fts_engine_spark.mutate import update_documents
+    from fts_engine_spark.streaming.compact import compact_index
+
+    codegen = spark.sparkContext._jvm.org.apache.spark.metrics.source.CodegenMetrics
+    cfg = BuildConfig(preset="by_lang", shard_size=32, id_buckets=8)
+    docs = spark.read.parquet(small_corpus).select("url", "text", "lang")
+    index_dir = str(tmp_path / "ix")
+    build_index(spark, docs.limit(60), index_dir, cfg, resume=False)
+    batch = docs.limit(80)
+
+    def cycle() -> int:
+        before = codegen.METRIC_COMPILATION_TIME().getCount()
+        update_documents(spark, index_dir, batch, cfg)
+        FtsIndex(spark, index_dir).warm().close()
+        compact_index(spark, index_dir)
+        return codegen.METRIC_COMPILATION_TIME().getCount() - before
+
+    cycle()
+    assert cycle() <= 30
