@@ -17,7 +17,7 @@ from dataclasses import dataclass, replace
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from .build import BuildConfig, build_index
-from .query import FtsIndex, normalize_query
+from .query import FtsIndex, _default_preset, normalize_query
 from .textproc.pipeline import get_pipeline
 
 
@@ -753,10 +753,7 @@ class FtsEngine:
 
     # ---- ContainsNormalized (filter_normalize.go:31-52): ALL keys present
     def contains_normalized(self, text: str, preset: str | None = None) -> bool:
-        preset = preset or (
-            "multilingual" if self.index.preset == "by_lang" else self.index.preset
-        )
-        keys = set(normalize_query(text, preset))
+        keys = set(normalize_query(text, _default_preset(preset, self.index.preset)))
         if not keys:
             return False
         stats = self.index.term_stats(list(keys))

@@ -63,7 +63,13 @@ from functools import reduce
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from .query import _INCLUDE_TOO_BIG, FtsIndex, normalize_query
+from .query import (
+    _INCLUDE_TOO_BIG,
+    FtsIndex,
+    _default_preset,
+    _resolve_gate,
+    normalize_query,
+)
 
 
 class FederatedFtsIndex:
@@ -114,11 +120,8 @@ class FederatedFtsIndex:
         on snapshot A's vocabulary would false-negative terms that only
         snapshot B contains. Presence is decided per sub by its own
         term_stats lookup instead."""
-        preset = preset or (
-            "multilingual" if self.preset == "by_lang" else self.preset
-        )
         mult: dict[str, int] = {}
-        for t in normalize_query(query, preset):
+        for t in normalize_query(query, _default_preset(preset, self.preset)):
             mult[t] = mult.get(t, 0) + 1
         return mult
 
@@ -153,45 +156,48 @@ class FederatedFtsIndex:
         (the single-index relational fallback has no stats-override twin);
         restrict the set or query the sub directly.
         """
-        if min_match is not None and conjunctive:
-            raise ValueError("pass either conjunctive or min_match, not both")
-        mult = self._query_mult(query, preset)
-        if not mult:
+        rq = self._resolve(query, k, preset, conjunctive, min_match, exclude)
+        stats = self._global_stats(rq) if rq is not None else None
+        if stats is None:
             return self._empty()
-        require_n = len(mult) if conjunctive else max(0, int(min_match or 0))
-        if require_n > len(mult):
-            return self._empty()
-        excl_mult = self._query_mult(exclude, preset) if exclude else {}
-        if excl_mult:
-            if conjunctive and set(mult) & set(excl_mult):
-                return self._empty()
-            mult = {t: m for t, m in mult.items() if t not in excl_mult}
-            if not mult:
-                return self._empty()
+        return self._execute(rq, stats, within)
 
-        # global stats: one point lookup per sub (warm: no job at all)
-        lookup = list(mult) + list(excl_mult)
+    def _resolve(self, query, k, preset, conjunctive, min_match, exclude):
+        """The single-index gate (:func:`fts_engine_spark.query._resolve_gate`)
+        over the federation's gate-free analysis."""
+        return _resolve_gate(
+            lambda q: self._query_mult(q, preset), query, k,
+            conjunctive=conjunctive, exclude=exclude, min_match=min_match,
+        )
+
+    def _global_stats(self, rq):
+        """(per-sub term stats, global df) for the query's scoring and NOT
+        terms — one point lookup per sub (warm: no job at all); None when
+        too few scoring terms exist in ANY snapshot for a match
+        (conjunctive/min_match: a term absent from every snapshot can
+        never be matched — global empty, zero jobs)."""
+        lookup = list(rq.mult) + list(rq.excl)
         sub_stats = [s.term_stats(lookup) for s in self.subs]
         df_global: dict[str, int] = {}
         for st in sub_stats:
             for t, (df_, _cf) in st.items():
                 df_global[t] = df_global.get(t, 0) + int(df_)
-        present_global = {t: m for t, m in mult.items() if t in df_global}
-        if not present_global or (
-            require_n > 0 and len(present_global) < require_n
-        ):
-            # conjunctive/min_match: a term absent from EVERY snapshot can
-            # never be matched — global empty, zero jobs
-            return self._empty()
+        n_present = sum(t in df_global for t in rq.mult)
+        if n_present < max(1, rq.require_n):
+            return None
+        return sub_stats, df_global
 
+    def _execute(self, rq, stats, within=None) -> DataFrame:
+        """The distributed scatter-gather of a resolved query."""
+        sub_stats, df_global = stats
         parts: list[DataFrame] = []
-        for sub, stats in zip(self.subs, sub_stats):
+        for sub, st in zip(self.subs, sub_stats):
             present = {
                 t: (float(m), df_global[t])
-                for t, m in present_global.items()
-                if t in stats
+                for t, m in rq.mult.items()
+                if t in st
             }
-            if not present or (require_n > 0 and len(present) < require_n):
+            if not present or len(present) < rq.require_n:
                 continue  # this snapshot cannot contribute any match
             incl_ids = None
             if within is not None:
@@ -204,15 +210,15 @@ class FederatedFtsIndex:
                     )
                 if incl_ids is not None and len(incl_ids) == 0:
                     continue  # restriction excludes this whole snapshot
-            excl_present = frozenset(t for t in excl_mult if t in stats)
+            excl_present = frozenset(t for t in rq.excl if t in st)
             scored = sub._bm25_wand_stats(
-                present, k,
+                present, rq.k,
                 n_docs=self.n_docs, avgdl=self.avgdl,
-                require_n=require_n,
+                require_n=rq.require_n,
                 excl_terms=excl_present or None,
                 incl_ids=incl_ids,
             )
-            right = F.broadcast(scored) if k > 0 else scored
+            right = F.broadcast(scored) if rq.k > 0 else scored
             parts.append(
                 sub.docs()
                 .select("doc_id", "url", "url_md5")
@@ -224,8 +230,8 @@ class FederatedFtsIndex:
         out = reduce(DataFrame.unionByName, parts).orderBy(
             F.desc("score"), F.asc("url")
         )
-        if k > 0:
-            out = out.limit(k)
+        if rq.k > 0:
+            out = out.limit(rq.k)
         return out
 
     # -- point-serving tier -------------------------------------------------
@@ -267,71 +273,28 @@ class FederatedFtsIndex:
         in-memory sweep + a ~k-row-group parquet read; the merge is
         ``len(subs) * k`` tuples on the driver.
         """
-
-        def _fallback() -> list[tuple[str, str, float]]:
+        rq = self._resolve(query, k, preset, conjunctive, min_match, exclude)
+        stats = self._global_stats(rq) if rq is not None else None
+        if stats is None:
+            return []
+        # the single-index point plan per sub (tier ready, presence on the
+        # SUB-LOCAL dictionary, df cap on the sub-local df — that is what
+        # gets cached); any sub that cannot serve routes the whole query
+        # distributed, with the stats already in hand
+        plans = [s._point_plan(rq) for s in self.subs]
+        if any(p is None for p in plans):
             return [
                 (r["url"], r["url_md5"], float(r["score"]))
-                for r in self.search_bm25(
-                    query, k=k, preset=preset, conjunctive=conjunctive,
-                    min_match=min_match, exclude=exclude,
-                ).collect()
+                for r in self._execute(rq, stats).collect()
             ]
-
-        if any(
-            s._point_cache is None
-            or s._term_dict is None
-            or s.n_deleted > s.dead_broadcast_max
-            for s in self.subs
-        ):
-            return _fallback()
-        if min_match is not None and conjunctive:
-            raise ValueError("pass either conjunctive or min_match, not both")
-        mult = self._query_mult(query, preset)
-        if not mult:
-            return []
-        require_n = len(mult) if conjunctive else max(0, int(min_match or 0))
-        if require_n > len(mult):
-            return []
-        excl_mult = self._query_mult(exclude, preset) if exclude else {}
-        if excl_mult:
-            if conjunctive and set(mult) & set(excl_mult):
-                return []
-            mult = {t: m for t, m in mult.items() if t not in excl_mult}
-            if not mult:
-                return []
-
-        # global stats: warm term_stats is a pure dict lookup, no job
-        lookup = list(mult) + list(excl_mult)
-        sub_stats = [s.term_stats(lookup) for s in self.subs]
-        df_global: dict[str, int] = {}
-        for st in sub_stats:
-            for t, (df_, _cf) in st.items():
-                df_global[t] = df_global.get(t, 0) + int(df_)
-        present_global = {t: m for t, m in mult.items() if t in df_global}
-        if not present_global or (
-            require_n > 0 and len(present_global) < require_n
-        ):
-            return []
-        # budget gate on the SUB-LOCAL df (that is what gets cached): any
-        # oversized posting list routes the whole query distributed, same
-        # rule as the single-index tier (search_bm25_point's df cap)
-        for sub, stats in zip(self.subs, sub_stats):
-            cap = sub._point_max_bytes // 40
-            if any(int(df_) > cap for _, (df_, _cf) in stats.items()):
-                return _fallback()
-
+        _sub_stats, df_global = stats
         merged: list[tuple[float, str, str]] = []
-        for sub, stats in zip(self.subs, sub_stats):
-            present = {
-                t: (m, df_global[t])
-                for t, m in present_global.items()
-                if t in stats
-            }
-            if not present or (require_n > 0 and len(present) < require_n):
+        for sub, (present, excl) in zip(self.subs, plans):
+            if not present:
                 continue
-            excl_present = frozenset(t for t in excl_mult if t in stats)
             rows = sub._point_sweep(
-                present, k, require_n, excl_present or None,
+                {t: (m, df_global[t]) for t, (m, _df) in present.items()},
+                k, rq.require_n, frozenset(excl) or None,
                 n_docs=self.n_docs, avgdl=self.avgdl,
             )
             if not rows:

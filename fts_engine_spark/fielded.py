@@ -58,7 +58,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from .build import BuildConfig, build_index
-from .query import FtsIndex, _round6
+from .query import FtsIndex, _round6, _scored_rows
 
 FIELDED_MANIFEST = "fielded.json"
 FIELDED_VERSION = 1
@@ -254,13 +254,12 @@ class FieldedIndex:
         if mode not in MODES:
             raise ValueError(f"mode must be one of {MODES}, got {mode!r}")
         if mode == "cross_fields":
-            return [
-                (int(r["doc_id"]), float(r["score"]))
-                for r in self.search(
+            return _scored_rows(
+                self.search(
                     query, k=k, weights=weights, mode=mode,
                     tie_breaker=tie_breaker,
-                ).collect()
-            ]
+                )
+            )
         w = self._weights(weights)
         per = {
             name: dict(self.indexes[name].search_bm25_point(query, k=0))

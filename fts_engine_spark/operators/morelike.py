@@ -36,6 +36,7 @@ from collections import Counter
 
 from pyspark.sql import DataFrame, functions as F
 
+from ..query import _Resolved
 from ..textproc.pipeline import get_pipeline
 
 __all__ = ["more_like_this", "more_like_this_point", "select_mlt_terms"]
@@ -138,15 +139,8 @@ def more_like_this(
         index, text, lang, preset, max_terms, min_tf, min_df
     )
     if not terms:
-        return index._maybe_hydrate(
-            index._empty_bm25_result(), hydrate, bounded=True
-        )
-    mult = {t: 1 for t in terms}
-    k_inner = k + 1 if k > 0 else 0
-    if mode == "relational":
-        out = index._bm25_relational(mult, k_inner, False)
-    else:
-        out = index._bm25_wand(mult, k_inner, False)
+        return index._empty_bm25_result(hydrate)
+    out = index._execute(_mlt_query(terms, k), mode)
     out = out.where(F.col("doc_id") != src).orderBy(
         F.desc("score"), F.asc("doc_id")
     )
@@ -172,41 +166,24 @@ def more_like_this_point(
     term's posting list exceeds the point budget."""
     from ..stored import stored_rows_local
 
-    def fallback() -> list[tuple[int, float]]:
-        return [
-            (int(r["doc_id"]), float(r["score"]))
-            for r in more_like_this(
-                index, doc_id=doc_id, k=k, max_terms=max_terms,
-                min_tf=min_tf, min_df=min_df, preset=preset,
-            ).collect()
-        ]
-
-    if (
-        index._point_cache is None
-        or index._term_dict is None
-        or index.n_deleted > index.dead_broadcast_max
-    ):
-        return fallback()
-    rows = stored_rows_local(index, [doc_id])
-    if doc_id not in rows:
-        raise ValueError(f"doc_id {doc_id} is not in the stored table")
-    _url, text, lang = rows[doc_id]
+    if index.has_stored:
+        rows = stored_rows_local(index, [doc_id])
+        if doc_id not in rows:
+            raise ValueError(f"doc_id {doc_id} is not in the stored table")
+        _url, text, lang = rows[doc_id]
+    else:
+        _src, text, lang = _resolve_source(index, None, doc_id, None)
     terms = select_mlt_terms(
         index, text, lang, preset, max_terms, min_tf, min_df
     )
     if not terms:
         return []
-    present = {
-        t: (1, index._term_dict[t][0])
-        for t in terms
-        if t in index._term_dict
-    }
-    if not present:
-        return []
-    df_cap = index._point_max_bytes // 40
-    if any(df_ > df_cap for _, df_ in present.values()):
-        return fallback()
-    k_inner = k + 1 if k > 0 else 0
-    hits = index._point_sweep(present, k_inner, 0)
+    hits = index._point_execute(_mlt_query(terms, k))
     hits = [(d, s) for d, s in hits if d != doc_id]
     return hits[:k] if k > 0 else hits
+
+
+def _mlt_query(terms: list[str], k: int):
+    """The selected terms as a plain OR query fetching the top k+1 (the
+    source doc can appear at most once and is dropped afterwards)."""
+    return _Resolved({t: 1 for t in terms}, k + 1 if k > 0 else 0)

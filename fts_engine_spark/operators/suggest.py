@@ -30,7 +30,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
 
-from ..query import _levenshtein_leq, normalize_query
+from ..query import _default_preset, _levenshtein_leq, normalize_query
 
 __all__ = ["suggest_terms", "suggest_terms_point"]
 
@@ -39,9 +39,7 @@ def _tokens(index, query: str, preset: str | None) -> list[str]:
     """Normalized tokens, dictionary gate BYPASSED (a misspelling is
     precisely a term the gate rejects), duplicates dropped, input order
     kept."""
-    preset = preset or (
-        "multilingual" if index.preset == "by_lang" else index.preset
-    )
+    preset = _default_preset(preset, index.preset)
     return list(dict.fromkeys(normalize_query(query, preset)))
 
 

@@ -622,7 +622,7 @@ def _phrase_prefix_variants(
     (ES ``match_phrase_prefix``): the LAST whitespace token of ``phrase``
     is a dictionary prefix (an optional trailing ``*`` is accepted and
     stripped), the head analyzes like a normal phrase. Follows the
-    repo's established multi-term-rewrite semantics (``_prefix_mult``):
+    repo's established multi-term-rewrite semantics (``_rewrite_mult``):
     the pattern is Go-lowered and expanded against the POST-PIPELINE
     dictionary — never stemmed — via ``expander(pattern, n)`` (the
     distributed ``expand_terms`` or the driver-side ``_point_expand``,

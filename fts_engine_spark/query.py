@@ -33,7 +33,7 @@ import threading
 import time
 from collections import OrderedDict
 from collections.abc import Iterable, Iterator
-from dataclasses import dataclass
+from dataclasses import dataclass, field
 
 import numpy as np
 import pandas as pd
@@ -220,6 +220,166 @@ def normalize_query(query: str, preset: str) -> list[str]:
     return get_pipeline(preset).process(query)
 
 
+def _default_preset(preset: str | None, index_preset: str) -> str:
+    """The pipeline a query analyzes with: the caller's ``preset``, else
+    the index's — a ``by_lang`` index analyzes queries (which carry no
+    language) through the multilingual pipeline."""
+    return preset or ("multilingual" if index_preset == "by_lang" else index_preset)
+
+
+def _scored_rows(df: DataFrame) -> list[tuple[int, float]]:
+    """A collected (doc_id, score) result — the point tier's row shape."""
+    return [(int(r["doc_id"]), float(r["score"])) for r in df.collect()]
+
+
+class _ByteLRU:
+    """Byte-budgeted LRU — the one eviction policy behind the point tier's
+    caches (postings, positional rows, field-filter ids). Each entry is
+    charged the byte count it was inserted with; inserting a key again
+    replaces its charge. :meth:`fetch` pins a query's keys until all of
+    them are in hand and only then evicts down to the budget, so a query
+    never loses its own keys mid-flight (it holds the values) and never
+    leaves the cache over budget. Thread-safe per operation; a loader
+    passed to :meth:`fetch` runs under the cache's lock."""
+
+    def __init__(self, max_bytes: int):
+        self.max_bytes = int(max_bytes)
+        self.bytes = 0
+        self._items: OrderedDict = OrderedDict()  # key -> (value, nbytes)
+        self._lock = threading.RLock()
+
+    def __len__(self) -> int:
+        return len(self._items)
+
+    def __contains__(self, key) -> bool:
+        return key in self._items
+
+    def __iter__(self):
+        return iter(list(self._items))
+
+    def values(self) -> list:
+        return [v for v, _ in list(self._items.values())]
+
+    def get(self, key):
+        """The cached value (refreshed to MRU), or None."""
+        with self._lock:
+            hit = self._items.get(key)
+            if hit is None:
+                return None
+            self._items.move_to_end(key)
+            return hit[0]
+
+    def put(self, key, value, nbytes: int) -> None:
+        with self._lock:
+            self._insert(key, value, nbytes)
+            self._evict()
+
+    def fetch(self, keys, load) -> dict:
+        """``{key: value}`` for every key: ONE ``load(missing)`` call
+        returns ``{key: (value, nbytes)}`` for the uncached keys, every
+        key is refreshed to MRU, then the cache evicts to its budget."""
+        with self._lock:
+            missing = [k for k in keys if k not in self._items]
+            if missing:
+                for key, (value, nbytes) in load(missing).items():
+                    self._insert(key, value, nbytes)
+            out = {k: self.get(k) for k in keys}
+            self._evict()
+            return out
+
+    def _insert(self, key, value, nbytes: int) -> None:
+        old = self._items.pop(key, None)
+        if old is not None:
+            self.bytes -= old[1]
+        self._items[key] = (value, int(nbytes))
+        self.bytes += int(nbytes)
+
+    def _evict(self) -> None:
+        while self.bytes > self.max_bytes and self._items:
+            _, (_, nbytes) = self._items.popitem(last=False)
+            self.bytes -= nbytes
+
+
+@dataclass
+class _Resolved:
+    """One query resolved once, independent of the tier that runs it:
+    scoring ``mult`` (term -> weight), the ``require_n`` distinct-match
+    gate, ``excl`` (NOT terms), boolean MUST groups
+    (``term_gmask``/``full_mask``), the include restriction — driver ids
+    (``incl_ids``: a sorted array, or ``_INCLUDE_TOO_BIG``) and/or its
+    distributed form (``incl_df``) — the ``after`` cursor, ``k`` and
+    ``offset``. :meth:`FtsIndex._execute` runs it distributed,
+    :meth:`FtsIndex._point_execute` in-process."""
+
+    mult: dict
+    k: int
+    require_n: int = 0
+    excl: dict = field(default_factory=dict)
+    term_gmask: dict | None = None
+    full_mask: int = 0
+    incl_df: DataFrame | None = None
+    incl_ids: object = None
+    after: tuple[float, int] | None = None
+    offset: int = 0
+
+    @property
+    def k_eff(self) -> int:
+        """Rows to fetch: the top ``k + offset``, sliced after the merge."""
+        return self.k + self.offset if (self.offset and self.k > 0) else self.k
+
+
+def _resolve_gate(
+    mult_of,
+    query: str,
+    k: int,
+    conjunctive: bool = False,
+    exclude: str | None = None,
+    min_match: int | None = None,
+    offset: int = 0,
+    after: tuple[float, int] | None = None,
+) -> _Resolved | None:
+    """The conjunctive / min_match / exclude / offset / after gate of every
+    bm25 surface (single-index and federated, both tiers): validates the
+    options and resolves ``query`` through ``mult_of`` (query string ->
+    term multiplicities). None when the query provably matches nothing."""
+    if min_match is not None and conjunctive:
+        raise ValueError("pass either conjunctive or min_match, not both")
+    if offset < 0:
+        raise ValueError(f"offset must be >= 0, got {offset}")
+    if after is not None:
+        if offset:
+            raise ValueError("pass either offset or after (cursor), not both")
+        after = (_round6(float(after[0])), int(after[1]))
+    mult = mult_of(query)
+    if not mult:
+        return None
+    excl = mult_of(exclude) if exclude else {}
+    require_n = len(mult) if conjunctive else max(0, int(min_match or 0))
+    if require_n > len(mult):
+        # more distinct matches required than the query has terms
+        return None
+    if excl:
+        if conjunctive and set(mult) & set(excl):
+            return None
+        mult = {t: m for t, m in mult.items() if t not in excl}
+        if not mult:
+            return None
+    return _Resolved(
+        mult, k, require_n=require_n, excl=excl, after=after, offset=offset
+    )
+
+
+# pattern kind -> (query token -> dictionary pattern, or None for a plain
+# word): the token syntax of the prefix / wildcard / regexp rewrites
+_PATTERN_OF = {
+    "prefix": lambda tok: tok[:-1] if len(tok) > 1 and tok.endswith("*") else None,
+    "wildcard": lambda tok: tok if len(tok) > 1 and ("*" in tok or "?" in tok) else None,
+    "regexp": lambda tok: (
+        tok[1:-1] if len(tok) > 2 and tok.startswith("/") and tok.endswith("/") else None
+    ),
+}
+
+
 @dataclass
 class QueryTermStats:
     term: str
@@ -287,27 +447,16 @@ class FtsIndex:
         self._terms_df: DataFrame | None = None
         self._warm = False
         self._term_dict: dict[str, tuple[int, int]] | None = None
-        # point-serving tier (enable_point_serving): term -> {shard_id:
-        # block table}, LRU by term, byte-budgeted
-        self._point_cache: "OrderedDict[str, dict[int, dict]] | None" = None
-        self._point_cache_bytes = 0
-        self._point_max_bytes = 0
+        # point-serving tier (enable_point_serving), each a _ByteLRU:
+        # term -> {shard_id: block table}; positional term -> (doc_ids,
+        # offsets, dpos) global arrays (search_phrase_point); canonical
+        # FieldFilter tuple -> sorted int64 doc_id array
+        # (search_boolean_point). The lock serializes point sweeps (they
+        # fill the cached tables' lazy decode caches).
+        self._point_cache: _ByteLRU | None = None
+        self._pos_point_cache: _ByteLRU | None = None
+        self._point_filter_cache: _ByteLRU | None = None
         self._point_lock = threading.Lock()
-        # positional point tier (search_phrase_point): term -> (doc_ids,
-        # offsets, dpos) global arrays, LRU by term, byte-budgeted
-        self._pos_point_cache: (
-            "OrderedDict[str, tuple[np.ndarray, np.ndarray, np.ndarray]]"
-            " | None"
-        ) = None
-        self._pos_point_bytes = 0
-        self._pos_point_max_bytes = 0
-        # field-filter include-id cache (search_boolean_point): canonical
-        # FieldFilter tuple -> sorted int64 doc_id array, LRU, byte-budgeted
-        self._point_filter_cache: (
-            "OrderedDict[tuple, np.ndarray] | None"
-        ) = None
-        self._point_filter_bytes = 0
-        self._point_filter_max_bytes = 0
         # by_lang point phrases: per-doc pipeline codes (uint8), lazy
         self._pos_pipe_cache: tuple[np.ndarray, dict[str, int]] | str | None = None
         # lazily-built expansion structures over the driver dictionary
@@ -443,11 +592,8 @@ class FtsIndex:
         self._term_dict = None
         self._warm = False
         self._point_cache = None
-        self._point_cache_bytes = 0
         self._pos_point_cache = None
-        self._pos_point_bytes = 0
         self._point_filter_cache = None
-        self._point_filter_bytes = 0
         self._pos_pipe_cache = None
         # expansion structures are derived from _term_dict — drop together
         self._sorted_terms = None
@@ -482,9 +628,8 @@ class FtsIndex:
         is selected (the reference's filter-before-index role,
         engine.go:108-116). Driver-side, no Spark job (the cuckoo/ribbon
         gate is built once, lazily, from the terms table)."""
-        preset = preset or ("multilingual" if self.preset == "by_lang" else self.preset)
         mult: dict[str, int] = {}
-        for t in normalize_query(query, preset):
+        for t in normalize_query(query, _default_preset(preset, self.preset)):
             mult[t] = mult.get(t, 0) + 1
         if self._pruner.needs_vocab and mult:
             if not self._pruner.fitted():
@@ -940,14 +1085,12 @@ class FtsIndex:
         )
 
         check_positions_fresh(self)
-        if self._pos_point_cache is not None and self._term_dict is not None:
-            expander = lambda pat, n: self._point_expand(pat, "prefix", 0, n)
-        else:
-            expander = lambda pat, n: self.expand_terms(
-                pat, "prefix", max_expand=n
-            )
+        point = self._term_dict is not None
         variants = _phrase_prefix_variants(
-            self, phrase, expander, max_expansions
+            self,
+            phrase,
+            lambda pat, n: self._expand(pat, "prefix", 0, n, point),
+            max_expansions,
         )
         if not variants:
             return []
@@ -1076,42 +1219,31 @@ class FtsIndex:
         # a term's positional footprint is ~8 B per posting (ids+offsets)
         # + 8 B per occurrence; past half the budget it cannot live in
         # the driver cache — the distributed path streams it instead
-        half = self._pos_point_max_bytes // 2
+        half = self._pos_point_cache.max_bytes // 2
         if any(
             8 * (2 * self._term_dict[t][0] + self._term_dict[t][1]) > half
             for t in need
         ):
             return None
+
+        def load(missing: list[str]) -> dict:
+            fetched = fetch_point_positions(self, missing)
+            for t in missing:
+                if t not in fetched:
+                    # in the dictionary but no positional rows: only
+                    # possible on a corrupt sidecar — fail loudly
+                    raise RuntimeError(
+                        f"term {t!r} has df={self._term_dict[t][0]} but no "
+                        "rows in the positional table; rebuild with "
+                        "store_positions=True"
+                    )
+            return {
+                t: (fetched[t], sum(a.nbytes for a in fetched[t]))
+                for t in missing
+            }
+
         with self._point_lock:
-            missing = [t for t in need if t not in self._pos_point_cache]
-            if missing:
-                fetched = fetch_point_positions(self, missing)
-                for t in missing:
-                    arrs = fetched.get(t)
-                    if arrs is None:
-                        # in the dictionary but no positional rows: only
-                        # possible on a corrupt sidecar — fail loudly
-                        raise RuntimeError(
-                            f"term {t!r} has df="
-                            f"{self._term_dict[t][0]} but no rows in the "
-                            "positional table; rebuild with "
-                            "store_positions=True"
-                        )
-                    self._pos_point_cache[t] = arrs
-                    self._pos_point_bytes += sum(a.nbytes for a in arrs)
-            for t in need:
-                self._pos_point_cache.move_to_end(t)
-            protect = frozenset(need)
-            while (
-                self._pos_point_bytes > self._pos_point_max_bytes
-                and self._pos_point_cache
-            ):
-                old, arrs = next(iter(self._pos_point_cache.items()))
-                if old in protect:
-                    break
-                del self._pos_point_cache[old]
-                self._pos_point_bytes -= sum(a.nbytes for a in arrs)
-            entries = {t: self._pos_point_cache[t] for t in need}
+            entries = self._pos_point_cache.fetch(need, load)
         docs_offs = {t: (d, o) for t, (d, o, _) in entries.items()}
         pairs: list[tuple[int, int]] = []
         by_seq: dict[tuple[str, ...], tuple[list[int], list[int]]] = {}
@@ -1161,7 +1293,7 @@ class FtsIndex:
         from .functions.udfs import _LANG_PRESETS
 
         n_slots = int(self.meta.get("n_shards", 1)) * self.shard_size
-        if n_slots > self._pos_point_max_bytes:
+        if n_slots > self._pos_point_cache.max_bytes:
             self._pos_pipe_cache = "too_big"
             return None
         presets = sorted({*_LANG_PRESETS.values(), "multilingual"})
@@ -2040,61 +2172,47 @@ class FtsIndex:
         postings is never decoded. Terms removed by ``exclude`` do not
         count toward the requirement.
         """
-        if min_match is not None and conjunctive:
-            raise ValueError("pass either conjunctive or min_match, not both")
-        if offset < 0:
-            raise ValueError(f"offset must be >= 0, got {offset}")
-        if after is not None:
-            if offset:
-                raise ValueError(
-                    "pass either offset or after (cursor), not both"
-                )
-            after = (_round6(float(after[0])), int(after[1]))
-        mult = self._query_mult(query, preset)
-        if not mult:
-            return self._maybe_hydrate(
-                self._empty_bm25_result(), hydrate, bounded=True
-            )
-        excl = self._query_mult(exclude, preset) if exclude else {}
-        require_n = len(mult) if conjunctive else max(0, int(min_match or 0))
-        if require_n > len(mult):
-            # more distinct matches required than the query has terms
-            return self._maybe_hydrate(
-                self._empty_bm25_result(), hydrate, bounded=True
-            )
-        if excl:
-            if conjunctive and set(mult) & set(excl):
-                return self._maybe_hydrate(
-                    self._empty_bm25_result(), hydrate, bounded=True
-                )
-            mult = {t: m for t, m in mult.items() if t not in excl}
-            if not mult:
-                return self._maybe_hydrate(
-                    self._empty_bm25_result(), hydrate, bounded=True
-                )
-        incl_df = self._within_df(within)
-        # pagination: fetch the top k+offset, slice after the global merge
-        # (hydration waits until after the slice so it joins one page)
-        k_eff = k + offset if (offset and k > 0) else k
-        hyd_inner = hydrate and not offset
+        rq = _resolve_gate(
+            lambda q: self._query_mult(q, preset), query, k, conjunctive,
+            exclude, min_match, offset, after,
+        )
+        if rq is None:
+            return self._empty_bm25_result(hydrate)
+        rq.incl_df = self._within_df(within)
+        return self._execute(rq, mode, hydrate)
+
+    def _execute(
+        self, rq: _Resolved, mode: str = "wand", hydrate: bool = False
+    ) -> DataFrame:
+        """The distributed executor of a resolved query: per-shard WAND
+        (the include restriction rides a sorted broadcast) or, in
+        relational mode or when the include set exceeds the driver bound,
+        the relational plan (a semi-join restriction); pagination fetches
+        the top k+offset and slices after the global merge (hydration
+        waits until after the slice so it joins one page)."""
+        hyd_inner = hydrate and not rq.offset
         out = None
         if mode != "relational":
-            incl_ids = self._within_ids(incl_df)
-            if incl_ids is None or incl_ids is not _INCLUDE_TOO_BIG:
+            incl_ids = rq.incl_ids
+            if incl_ids is None:
+                incl_ids = self._within_ids(rq.incl_df)
+            if incl_ids is not _INCLUDE_TOO_BIG:
                 out = self._bm25_wand(
-                    mult, k_eff, hyd_inner, require_n, excl, incl_ids,
-                    after=after,
+                    rq.mult, rq.k_eff, hyd_inner, rq.require_n, rq.excl,
+                    incl_ids, term_gmask=rq.term_gmask,
+                    full_mask=rq.full_mask, after=rq.after,
                 )
         if out is None:
             # include set too large for a driver array — the relational
             # semi-join handles it distributed
             out = self._bm25_relational(
-                mult, k_eff, hyd_inner, require_n, excl, incl_df,
-                after=after,
+                rq.mult, rq.k_eff, hyd_inner, rq.require_n, rq.excl,
+                rq.incl_df, term_gmask=rq.term_gmask,
+                full_mask=rq.full_mask, after=rq.after,
             )
-        if offset:
-            out = self._apply_offset(out, k, offset)
-            out = self._maybe_hydrate(out, hydrate, bounded=k > 0)
+        if rq.offset:
+            out = self._apply_offset(out, rq.k, rq.offset)
+            out = self._maybe_hydrate(out, hydrate, bounded=rq.k > 0)
         return out
 
     def _apply_offset(self, scored: DataFrame, k: int, offset: int) -> DataFrame:
@@ -2147,9 +2265,7 @@ class FtsIndex:
         """
         mult = self._query_mult(query, preset)
         if not mult:
-            return self._maybe_hydrate(
-                self._empty_bm25_result(), hydrate, bounded=True
-            )
+            return self._empty_bm25_result(hydrate)
         scored = self._bm25_scored(mult)
         if boost is not None:
             b = (
@@ -2247,9 +2363,16 @@ class FtsIndex:
         shape, lam = self._decay_params(shape, scale, decay)
         mult = self._query_mult(query, preset)
         if not mult:
-            return self._maybe_hydrate(
-                self._empty_bm25_result(), hydrate, bounded=True
-            )
+            return self._empty_bm25_result(hydrate)
+        return self._decay_df(
+            mult, k, field, origin, offset_dist, shape, lam, hydrate
+        )
+
+    def _decay_df(
+        self, mult, k, field, origin, offset_dist, shape, lam, hydrate=False
+    ) -> DataFrame:
+        """The distributed decay plan of :meth:`search_bm25_decay` for a
+        resolved ``mult`` and validated (shape, lam)."""
         docs_df = self.docs()
         if field not in docs_df.columns:
             raise ValueError(
@@ -2306,62 +2429,47 @@ class FtsIndex:
         distributed path whenever the tier is off, a term exceeds the
         point budget, or the field array exceeds its budget."""
         shape, lam = self._decay_params(shape, scale, decay)
-
-        def _fallback() -> list[tuple[int, float]]:
-            return [
-                (int(r["doc_id"]), float(r["score"]))
-                for r in self.search_bm25_decay(
-                    query, k=k, preset=preset, field=field, origin=origin,
-                    scale=scale, decay=decay, offset_dist=offset_dist,
-                    shape=shape,
-                ).collect()
-            ]
-
-        if (
-            self._point_cache is None
-            or self._term_dict is None
-            or self.n_deleted > self.dead_broadcast_max
-        ):
-            return _fallback()
-        vals = self._field_values_local(field)
-        if vals is None:
-            return _fallback()
         mult = self._query_mult(query, preset)
         if not mult:
             return []
-        present = {
-            t: (m, self._term_dict[t][0])
-            for t, m in mult.items()
-            if t in self._term_dict
-        }
-        if not present:
-            return []
-        df_cap = self._point_max_bytes // 40
-        if any(df_ > df_cap for _, df_ in present.values()):
-            return _fallback()
-        rows = self._point_sweep(present, 0, 0)
-        if not rows:
-            return []
-        ids = np.fromiter((d for d, _ in rows), dtype=np.int64, count=len(rows))
-        base = np.fromiter(
-            (s for _, s in rows), dtype=np.float64, count=len(rows)
+
+        def serve(present) -> list[tuple[int, float]] | None:
+            vals = self._field_values_local(field)
+            if vals is None:
+                return None
+            rows = self._point_sweep(present, 0, 0)
+            if not rows:
+                return []
+            ids = np.fromiter(
+                (d for d, _ in rows), dtype=np.int64, count=len(rows)
+            )
+            base = np.fromiter(
+                (s for _, s in rows), dtype=np.float64, count=len(rows)
+            )
+            v = vals[ids]
+            dist = np.maximum(
+                0.0, np.abs(v - float(origin)) - float(offset_dist)
+            )
+            if shape == "exp":
+                factor = np.exp(lam * dist)
+            elif shape == "gauss":
+                factor = np.exp(lam * dist * dist)
+            else:
+                factor = np.maximum(0.0, 1.0 + lam * dist)
+            factor = np.where(np.isnan(v), 1.0, factor)
+            score = base * factor
+            order = np.lexsort((ids, -score))
+            if k > 0:
+                order = order[:k]
+            return [(int(ids[i]), float(score[i])) for i in order]
+
+        return self._point_execute(
+            _Resolved(mult, k),
+            serve,
+            lambda: self._decay_df(
+                mult, k, field, origin, offset_dist, shape, lam
+            ),
         )
-        v = vals[ids]
-        dist = np.maximum(
-            0.0, np.abs(v - float(origin)) - float(offset_dist)
-        )
-        if shape == "exp":
-            factor = np.exp(lam * dist)
-        elif shape == "gauss":
-            factor = np.exp(lam * dist * dist)
-        else:
-            factor = np.maximum(0.0, 1.0 + lam * dist)
-        factor = np.where(np.isnan(v), 1.0, factor)
-        score = base * factor
-        order = np.lexsort((ids, -score))
-        if k > 0:
-            order = order[:k]
-        return [(int(ids[i]), float(score[i])) for i in order]
 
     def _field_values_local(self, field: str) -> "np.ndarray | None":
         """Dense ``doc_id -> double`` array of a docs-table column, read
@@ -2554,109 +2662,81 @@ class FtsIndex:
         )
         return [r["term"] for r in rows]
 
-    def _expanded_search(
+    def _expand(
+        self, pattern: str, kind: str, max_dist: int, max_expand: int,
+        point: bool,
+    ) -> list[str]:
+        """:meth:`expand_terms` (one bounded Spark job), or with ``point``
+        its driver-dictionary twin :meth:`_point_expand` (no job; the
+        same terms in the same order)."""
+        if point:
+            return self._point_expand(pattern, kind, max_dist, max_expand)
+        return self.expand_terms(
+            pattern, kind, max_dist=max_dist, max_expand=max_expand
+        )
+
+    def _rewrite_mult(
         self,
-        mult: dict[str, int],
-        k: int,
-        mode: str,
-        hydrate: bool,
+        query: str,
+        kind: str,
+        preset: str | None,
+        max_expand: int,
+        max_dist: int = 1,
+        point: bool = False,
+    ) -> dict[str, int]:
+        """Multi-term rewrite term selection, one copy for every kind and
+        both tiers (the point tier can never desynchronize from the
+        distributed rewrite it must mirror). ``fuzzy``: every normalized
+        token expands to the dictionary terms within ``max_dist`` edits,
+        normalized WITHOUT the probabilistic term gate (a typo is
+        precisely a term the gate would reject). ``prefix`` / ``wildcard``
+        / ``regexp``: pattern tokens (see ``_PATTERN_OF``) Go-lowercase
+        and expand — the pattern addresses the post-pipeline dictionary,
+        never stemmed — and every other token normalizes like
+        :meth:`search_bm25`. Multiplicities sum where expansions
+        overlap."""
+        preset = _default_preset(preset, self.preset)
+        mult: dict[str, int] = {}
+
+        def add(terms, m: int = 1) -> None:
+            for t in terms:
+                mult[t] = mult.get(t, 0) + m
+
+        if kind == "fuzzy":
+            raw: dict[str, int] = {}
+            for t in normalize_query(query, preset):
+                raw[t] = raw.get(t, 0) + 1
+            for t0, m in raw.items():
+                add(self._expand(t0, kind, max_dist, max_expand, point), m)
+            return mult
+        exact_parts: list[str] = []
+        for tok in query.split():
+            pat = _PATTERN_OF[kind](tok)
+            if pat is None:
+                exact_parts.append(tok)
+            else:
+                add(self._expand(go_lower(pat), kind, 0, max_expand, point))
+        if exact_parts:
+            for t, m in self._query_mult(" ".join(exact_parts), preset).items():
+                add([t], m)
+        return mult
+
+    def _rewrite_search(
+        self, query, kind, k, preset, mode, hydrate, max_expand, max_dist=1
     ) -> DataFrame:
+        mult = self._rewrite_mult(query, kind, preset, max_expand, max_dist)
         if not mult:
-            return self._maybe_hydrate(
-                self._empty_bm25_result(), hydrate, bounded=True
-            )
-        if mode == "relational":
-            return self._bm25_relational(mult, k, hydrate)
-        return self._bm25_wand(mult, k, hydrate)
+            return self._empty_bm25_result(hydrate)
+        return self._execute(_Resolved(mult, k), mode, hydrate)
 
-    def _prefix_mult(
-        self, query: str, preset: str, max_expand: int, point: bool = False
-    ) -> dict[str, int]:
-        """Shared prefix-rewrite term selection (one copy, so the point
-        tier can never desynchronize from the distributed rewrite it
-        must mirror): trailing-``*`` tokens lowercase-then-expand against
-        the dictionary (the pattern is a dictionary prefix, never
-        stemmed); everything else normalizes like :meth:`search_bm25`."""
-        mult: dict[str, int] = {}
-        exact_parts: list[str] = []
-        for tok in query.split():
-            if len(tok) > 1 and tok.endswith("*"):
-                pat = go_lower(tok[:-1])
-                expanded = (
-                    self._point_expand(pat, "prefix", 0, max_expand)
-                    if point
-                    else self.expand_terms(pat, "prefix", max_expand=max_expand)
-                )
-                for t in expanded:
-                    mult[t] = mult.get(t, 0) + 1
-            else:
-                exact_parts.append(tok)
-        if exact_parts:
-            for t, m in self._query_mult(
-                " ".join(exact_parts), preset
-            ).items():
-                mult[t] = mult.get(t, 0) + m
-        return mult
-
-    def _wildcard_mult(
-        self, query: str, preset: str, max_expand: int, point: bool = False
-    ) -> dict[str, int]:
-        """Shared wildcard-rewrite term selection (one copy — the point
-        tier mirrors the distributed rewrite exactly): tokens containing
-        ``*`` or ``?`` lowercase (Go-lower; the pattern addresses the
-        post-pipeline dictionary, never stemmed) and expand with
-        ``kind='wildcard'``; everything else normalizes like
-        :meth:`search_bm25`."""
-        mult: dict[str, int] = {}
-        exact_parts: list[str] = []
-        for tok in query.split():
-            if len(tok) > 1 and ("*" in tok or "?" in tok):
-                pat = go_lower(tok)
-                expanded = (
-                    self._point_expand(pat, "wildcard", 0, max_expand)
-                    if point
-                    else self.expand_terms(pat, "wildcard", max_expand=max_expand)
-                )
-                for t in expanded:
-                    mult[t] = mult.get(t, 0) + 1
-            else:
-                exact_parts.append(tok)
-        if exact_parts:
-            for t, m in self._query_mult(
-                " ".join(exact_parts), preset
-            ).items():
-                mult[t] = mult.get(t, 0) + m
-        return mult
-
-    def _regexp_mult(
-        self, query: str, preset: str, max_expand: int, point: bool = False
-    ) -> dict[str, int]:
-        """Shared regexp-rewrite term selection (one copy — the point
-        tier mirrors the distributed rewrite exactly): tokens wrapped in
-        ``/.../`` (the Lucene query-syntax regexp marker) lowercase
-        (Go-lower; the pattern addresses the post-pipeline dictionary)
-        and expand with ``kind='regexp'``; everything else normalizes
-        like :meth:`search_bm25`."""
-        mult: dict[str, int] = {}
-        exact_parts: list[str] = []
-        for tok in query.split():
-            if len(tok) > 2 and tok.startswith("/") and tok.endswith("/"):
-                pat = go_lower(tok[1:-1])
-                expanded = (
-                    self._point_expand(pat, "regexp", 0, max_expand)
-                    if point
-                    else self.expand_terms(pat, "regexp", max_expand=max_expand)
-                )
-                for t in expanded:
-                    mult[t] = mult.get(t, 0) + 1
-            else:
-                exact_parts.append(tok)
-        if exact_parts:
-            for t, m in self._query_mult(
-                " ".join(exact_parts), preset
-            ).items():
-                mult[t] = mult.get(t, 0) + m
-        return mult
+    def _rewrite_point(
+        self, query, kind, k, preset, max_expand, max_dist=1
+    ) -> list[tuple[int, float]]:
+        mult = self._rewrite_mult(
+            query, kind, preset, max_expand, max_dist,
+            point=self._term_dict is not None,
+        )
+        return self._point_execute(_Resolved(mult, k)) if mult else []
 
     def search_bm25_regexp(
         self,
@@ -2686,11 +2766,9 @@ class FtsIndex:
         metacharacter pays a full dictionary scan — the known Lucene
         leading-wildcard caveat, one bounded lookup job here.
         """
-        preset = preset or (
-            "multilingual" if self.preset == "by_lang" else self.preset
+        return self._rewrite_search(
+            query, "regexp", k, preset, mode, hydrate, max_expand
         )
-        mult = self._regexp_mult(query, preset, max_expand)
-        return self._expanded_search(mult, k, mode, hydrate)
 
     def search_bm25_wildcard(
         self,
@@ -2715,11 +2793,9 @@ class FtsIndex:
         Lucene caveat — a full dictionary pass, still one bounded lookup
         job); patterns with a literal prefix prune like prefix queries.
         """
-        preset = preset or (
-            "multilingual" if self.preset == "by_lang" else self.preset
+        return self._rewrite_search(
+            query, "wildcard", k, preset, mode, hydrate, max_expand
         )
-        mult = self._wildcard_mult(query, preset, max_expand)
-        return self._expanded_search(mult, k, mode, hydrate)
 
     def search_bm25_prefix(
         self,
@@ -2742,11 +2818,9 @@ class FtsIndex:
         its own idf and multiplicity summed when patterns overlap — the
         semantics of SQL ``term LIKE 'p%'`` against the same corpus.
         """
-        preset = preset or (
-            "multilingual" if self.preset == "by_lang" else self.preset
+        return self._rewrite_search(
+            query, "prefix", k, preset, mode, hydrate, max_expand
         )
-        mult = self._prefix_mult(query, preset, max_expand)
-        return self._expanded_search(mult, k, mode, hydrate)
 
     def search_bm25_fuzzy(
         self,
@@ -2769,27 +2843,14 @@ class FtsIndex:
         only stores analyzed terms (Lucene lowercases-but-does-not-stem
         fuzzy terms only because its dictionary keeps unstemmed fields).
         """
-        preset = preset or (
-            "multilingual" if self.preset == "by_lang" else self.preset
+        return self._rewrite_search(
+            query, "fuzzy", k, preset, mode, hydrate, max_expand, max_dist
         )
-        # normalize WITHOUT the probabilistic term gate (_query_mult):
-        # a typo is precisely a term the gate would reject, and here its
-        # absence from the dictionary is the point, not a pruning win
-        raw: dict[str, int] = {}
-        for t in normalize_query(query, preset):
-            raw[t] = raw.get(t, 0) + 1
-        mult: dict[str, int] = {}
-        for t0, m in raw.items():
-            for t in self.expand_terms(
-                t0, "fuzzy", max_dist=max_dist, max_expand=max_expand
-            ):
-                mult[t] = mult.get(t, 0) + m
-        return self._expanded_search(mult, k, mode, hydrate)
 
     # ---- synonym groups (Lucene SynonymQuery semantics) -----------------
 
     def _synonym_groups(
-        self, query: str, synonyms: dict[str, list[str]], preset: str
+        self, query: str, synonyms: dict[str, list[str]], preset: str | None
     ) -> tuple[dict[str, int], dict[int, int]]:
         """(analyzed member term -> gid, gid -> query multiplicity) for a
         synonym search — the ONE place group semantics are resolved, so
@@ -2798,6 +2859,7 @@ class FtsIndex:
         must still score through a PRESENT synonym (the gate would drop
         the term and its whole group). Raises ValueError on keys/synonyms
         that analyze to other than one term and on overlapping groups."""
+        preset = _default_preset(preset, self.preset)
         mult: dict[str, int] = {}
         for t in normalize_query(query, preset):
             mult[t] = mult.get(t, 0) + 1
@@ -2863,14 +2925,16 @@ class FtsIndex:
         max-over-members skip data the index doesn't store, so there is
         no WAND variant (Lucene similarly special-cases SynonymQuery
         impacts)."""
-        preset = preset or (
-            "multilingual" if self.preset == "by_lang" else self.preset
-        )
         term_gid, gid_mult = self._synonym_groups(query, synonyms, preset)
         if not term_gid:
-            return self._maybe_hydrate(
-                self._empty_bm25_result(), hydrate, bounded=True
-            )
+            return self._empty_bm25_result(hydrate)
+        return self._synonyms_df(term_gid, gid_mult, k, hydrate)
+
+    def _synonyms_df(
+        self, term_gid, gid_mult, k: int, hydrate: bool = False
+    ) -> DataFrame:
+        """The distributed plan of :meth:`search_bm25_synonyms` for
+        resolved groups."""
         all_terms = sorted(term_gid)
         ones = {t: 1 for t in all_terms}
         gid_df = F.broadcast(
@@ -2933,95 +2997,69 @@ class FtsIndex:
         Falls back to the distributed plan when the tier is disabled, a
         member's posting list exceeds the point budget, or tombstones are
         past the driver-array bound."""
-        preset = preset or (
-            "multilingual" if self.preset == "by_lang" else self.preset
-        )
-
-        def fallback() -> list[tuple[int, float]]:
-            return [
-                (int(r["doc_id"]), float(r["score"]))
-                for r in self.search_bm25_synonyms(
-                    query, synonyms, k=k, preset=preset, hydrate=False
-                ).collect()
-            ]
-
         term_gid, gid_mult = self._synonym_groups(query, synonyms, preset)
         if not term_gid:
             return []
-        if (
-            self._point_cache is None
-            or self._term_dict is None
-            or self.n_deleted > self.dead_broadcast_max
-        ):
-            return fallback()
-        present = {
-            t: g for t, g in term_gid.items() if t in self._term_dict
-        }
-        if not present:
-            return []
-        df_cap = self._point_max_bytes // 40
-        if any(self._term_dict[t][0] > df_cap for t in present):
-            return fallback()
-        need = sorted(present)
-        with self._point_lock:
-            missing = [t for t in need if t not in self._point_cache]
-            if missing:
-                self._point_fetch(missing, protect=frozenset(need))
-            else:
-                for t in need:
-                    self._point_cache.move_to_end(t)
-            entries = {t: self._point_cache[t] for t in need}
-        n, avgdl = float(self.n_docs), self.avgdl
-        # per group: concat members' (doc, tf, dl), sum tf per doc, one
-        # idf (max member df) / one saturation — the gtf/gstats plan
-        # in-process
-        by_gid: dict[int, list[tuple[np.ndarray, np.ndarray, np.ndarray]]]
-        by_gid = {}
-        for t in need:
-            parts = [
-                _decode_term_raw(tab, shard * self.shard_size)
-                for shard, tab in sorted(entries[t].items())
-            ]
-            if parts:
-                by_gid.setdefault(present[t], []).append(
-                    tuple(np.concatenate(a) for a in zip(*parts))
+
+        def serve(present) -> list[tuple[int, float]]:
+            with self._point_lock:
+                entries = self._point_cache.fetch(
+                    sorted(present), self._point_load
                 )
-        acc_docs: list[np.ndarray] = []
-        acc_scores: list[np.ndarray] = []
-        for gid, parts in sorted(by_gid.items()):
-            df_g = max(
-                self._term_dict[t][0]
-                for t, g in present.items()
-                if g == gid
-            )
-            docs_c = np.concatenate([p[0] for p in parts])
-            tfs_c = np.concatenate([p[1] for p in parts])
-            dls_c = np.concatenate([p[2] for p in parts])
-            uniq, inv = np.unique(docs_c, return_inverse=True)
-            tf_g = np.zeros(uniq.size, dtype=np.float64)
-            np.add.at(tf_g, inv, tfs_c)
-            dl_g = np.zeros(uniq.size, dtype=np.float64)
-            dl_g[inv] = dls_c  # dl is per-doc constant across members
-            idf = bm25_idf(int(n), int(df_g))
-            norm = K1 * (1.0 - B + B * dl_g / avgdl)
-            acc_docs.append(uniq)
-            acc_scores.append(
-                gid_mult[gid] * idf * tf_g * (K1 + 1.0) / (tf_g + norm)
-            )
-        if not acc_docs:
-            return []
-        docs_all = np.concatenate(acc_docs)
-        uniq, inv = np.unique(docs_all, return_inverse=True)
-        scores = np.zeros(uniq.size, dtype=np.float64)
-        np.add.at(scores, inv, np.concatenate(acc_scores))
-        dead = self._dead_ids()
-        if dead is not None:
-            alive = ~np.isin(uniq, dead)
-            uniq, scores = uniq[alive], scores[alive]
-        order = np.lexsort((uniq, -scores))
-        if k > 0:
-            order = order[:k]
-        return [(int(uniq[i]), float(scores[i])) for i in order]
+            n, avgdl = float(self.n_docs), self.avgdl
+            # per group: concat members' (doc, tf, dl), sum tf per doc,
+            # one idf (max member df) / one saturation — the gtf/gstats
+            # plan in-process
+            by_gid: dict[int, list] = {}
+            for t in sorted(present):
+                parts = [
+                    _decode_term_raw(tab, shard * self.shard_size)
+                    for shard, tab in sorted(entries[t].items())
+                ]
+                if parts:
+                    by_gid.setdefault(term_gid[t], []).append(
+                        tuple(np.concatenate(a) for a in zip(*parts))
+                    )
+            acc_docs: list[np.ndarray] = []
+            acc_scores: list[np.ndarray] = []
+            for gid, parts in sorted(by_gid.items()):
+                df_g = max(
+                    df_ for t, (_m, df_) in present.items()
+                    if term_gid[t] == gid
+                )
+                docs_c = np.concatenate([p[0] for p in parts])
+                tfs_c = np.concatenate([p[1] for p in parts])
+                dls_c = np.concatenate([p[2] for p in parts])
+                uniq, inv = np.unique(docs_c, return_inverse=True)
+                tf_g = np.zeros(uniq.size, dtype=np.float64)
+                np.add.at(tf_g, inv, tfs_c)
+                dl_g = np.zeros(uniq.size, dtype=np.float64)
+                dl_g[inv] = dls_c  # dl is per-doc constant across members
+                idf = bm25_idf(int(n), int(df_g))
+                norm = K1 * (1.0 - B + B * dl_g / avgdl)
+                acc_docs.append(uniq)
+                acc_scores.append(
+                    gid_mult[gid] * idf * tf_g * (K1 + 1.0) / (tf_g + norm)
+                )
+            if not acc_docs:
+                return []
+            uniq, inv = np.unique(np.concatenate(acc_docs), return_inverse=True)
+            scores = np.zeros(uniq.size, dtype=np.float64)
+            np.add.at(scores, inv, np.concatenate(acc_scores))
+            dead = self._dead_ids()
+            if dead is not None:
+                alive = ~np.isin(uniq, dead)
+                uniq, scores = uniq[alive], scores[alive]
+            order = np.lexsort((uniq, -scores))
+            if k > 0:
+                order = order[:k]
+            return [(int(uniq[i]), float(scores[i])) for i in order]
+
+        return self._point_execute(
+            _Resolved({t: 1 for t in term_gid}, k),
+            serve,
+            lambda: self._synonyms_df(term_gid, gid_mult, k),
+        )
 
     # ---- boolean query strings (queryparse.py) ---------------------------
 
@@ -3037,21 +3075,17 @@ class FtsIndex:
         rationale in :meth:`search_bm25_fuzzy`). ``point=True`` expands
         against the driver dictionary (bisect, zero jobs — identical
         preference, asserted in tests/test_point_serving.py)."""
-
-        def expand(pat: str, kind: str, max_dist: int = 1) -> list[str]:
-            if point:
-                return self._point_expand(pat, kind, max_dist, max_expand)
-            return self.expand_terms(
-                pat, kind, max_dist=max_dist, max_expand=max_expand
-            )
-
         out: list[str] = []
         for a in atoms:
             if a.kind == "prefix":
-                out.extend(expand(go_lower(a.text), "prefix"))
+                out.extend(
+                    self._expand(go_lower(a.text), "prefix", 1, max_expand, point)
+                )
             elif a.kind == "fuzzy":
                 for t0 in normalize_query(a.text, preset):
-                    out.extend(expand(t0, "fuzzy", a.max_dist))
+                    out.extend(
+                        self._expand(t0, "fuzzy", a.max_dist, max_expand, point)
+                    )
             else:
                 out.extend(normalize_query(a.text, preset))
         return out
@@ -3162,67 +3196,57 @@ class FtsIndex:
         if offset < 0:
             raise ValueError(f"offset must be >= 0, got {offset}")
         bq = parse_query(query)
-        preset = preset or (
-            "multilingual" if self.preset == "by_lang" else self.preset
-        )
+        rq = self._boolean_resolved(bq, k, preset, max_expand, offset)
+        if rq is None:
+            return self._empty_bm25_result(hydrate)
+        rq.incl_df = self._restriction_df(bq, within)
+        if not rq.mult:
+            # pure-negative / analyzer-empty query: nothing to score
+            return self._empty_bm25_result(hydrate)
+        return self._execute(rq, mode, hydrate)
 
-        def empty() -> DataFrame:
-            return self._maybe_hydrate(
-                self._empty_bm25_result(), hydrate, bounded=True
-            )
-
-        resolved = self._resolve_boolean(bq, preset, max_expand)
+    def _boolean_resolved(
+        self, bq, k: int, preset: str | None, max_expand: int, offset: int,
+        point: bool = False,
+    ) -> _Resolved | None:
+        """A parsed boolean query resolved to its scoring terms and gates
+        (the include restriction is left to the caller's tier): phrase /
+        near terms score like SHOULD terms. None when provably empty."""
+        preset = _default_preset(preset, self.preset)
+        resolved = self._resolve_boolean(bq, preset, max_expand, point)
         if resolved is None:
-            return empty()
+            return None
         mult, groups, excl = resolved
-
-        incl_df = self._within_df(within)
-        if bq.filters:
-            fdf = self._filters_df(bq.filters)
-            incl_df = (
-                fdf
-                if incl_df is None
-                else incl_df.join(fdf, "doc_id", "left_semi")
-            )
-        near_clauses = [(ph, 0) for ph in bq.phrases] + list(bq.near)
-        for ph, slop in near_clauses:
-            ph_docs = (
-                self.search_phrase_positional(ph, k=0)
-                if slop == 0
-                else self.search_near_positional(ph, slop, k=0)
-            ).select("doc_id")
-            incl_df = (
-                ph_docs
-                if incl_df is None
-                else incl_df.join(ph_docs, "doc_id", "left_semi")
-            )
-            # phrase/near terms contribute to the score like SHOULD terms
+        for ph, _slop in [(p, 0) for p in bq.phrases] + list(bq.near):
             for t in normalize_query(ph, preset):
                 mult[t] = mult.get(t, 0) + 1
-        if not mult:
-            # pure-negative / analyzer-empty query: nothing to score
-            return empty()
-
         term_gmask, full_mask = self._group_masks(groups)
-        k_eff = k + offset if (offset and k > 0) else k
-        hyd_inner = hydrate and not offset
-        out = None
-        if mode != "relational":
-            incl_ids = self._within_ids(incl_df)
-            if incl_ids is None or incl_ids is not _INCLUDE_TOO_BIG:
-                out = self._bm25_wand(
-                    mult, k_eff, hyd_inner, 0, excl, incl_ids,
-                    term_gmask=term_gmask or None, full_mask=full_mask,
-                )
-        if out is None:
-            out = self._bm25_relational(
-                mult, k_eff, hyd_inner, 0, excl, incl_df,
-                term_gmask=term_gmask or None, full_mask=full_mask,
+        return _Resolved(
+            mult, k, excl=excl, term_gmask=term_gmask or None,
+            full_mask=full_mask, offset=offset,
+        )
+
+    def _restriction_df(self, bq, within) -> DataFrame | None:
+        """The distributed include restriction of a boolean query: the
+        ``within`` set, its field filters and the docs matching each
+        phrase / near clause, intersected."""
+        incl_df = self._within_df(within)
+        parts = [self._filters_df(bq.filters)] if bq.filters else []
+        for ph, slop in [(ph, 0) for ph in bq.phrases] + list(bq.near):
+            parts.append(
+                (
+                    self.search_phrase_positional(ph, k=0)
+                    if slop == 0
+                    else self.search_near_positional(ph, slop, k=0)
+                ).select("doc_id")
             )
-        if offset:
-            out = self._apply_offset(out, k, offset)
-            out = self._maybe_hydrate(out, hydrate, bounded=k > 0)
-        return out
+        for part in parts:
+            incl_df = (
+                part
+                if incl_df is None
+                else incl_df.join(part, "doc_id", "left_semi")
+            )
+        return incl_df
 
     def search_bm25_batch(
         self,
@@ -3259,50 +3283,29 @@ class FtsIndex:
         """
         if excludes is not None and len(excludes) != len(queries):
             raise ValueError("excludes must be parallel to queries")
-        per_query: dict[int, dict[str, tuple[int, int]]] = {}
-        union_mult: dict[int, dict[str, int]] = {}
-        union_excl: dict[int, dict[str, int]] = {}
-        all_terms: set[str] = set()
-        for i, q in enumerate(queries):
-            m = self._query_mult(q, preset)
-            e = (
-                self._query_mult(excludes[i], preset)
-                if excludes is not None and excludes[i]
-                else {}
+        resolved = {
+            i: rq
+            for i, q in enumerate(queries)
+            if (
+                rq := _resolve_gate(
+                    lambda s: self._query_mult(s, preset), q, k, conjunctive,
+                    excludes[i] if excludes is not None else None,
+                )
             )
-            if e:
-                if conjunctive and set(m) & set(e):
-                    m = {}  # NOT of a required term: provably empty
-                else:
-                    m = {t: mu for t, mu in m.items() if t not in e}
-            union_mult[i] = m
-            union_excl[i] = e
-            all_terms.update(m)
-            all_terms.update(e)
-        if not all_terms:
-            return self.spark.range(0).select(
-                F.col("id").cast("int").alias("query_id"),
-                F.col("id").alias("doc_id"),
-                F.col("id").cast("double").alias("score"),
-            )
-        stats = self.term_stats(sorted(all_terms))  # ONE lookup (or none, warm)
-        for i, m in union_mult.items():
-            pq = {
-                t: (mult, stats[t][0])
-                for t, mult in m.items()
-                if t in stats
-            }
-            if conjunctive and len(pq) < len(m):
-                # a corpus-absent term empties this query's AND result
-                continue
-            if pq:
-                per_query[i] = pq
-        per_query_excl = {
-            i: fs
-            for i, e in union_excl.items()
-            if i in per_query
-            and (fs := frozenset(t for t in e if t in stats))
+            is not None
         }
+        all_terms = {t for rq in resolved.values() for t in [*rq.mult, *rq.excl]}
+        # ONE lookup (or none, warm)
+        stats = self.term_stats(sorted(all_terms)) if all_terms else {}
+        per_query: dict[int, dict[str, tuple[int, int]]] = {}
+        per_query_excl: dict[int, frozenset[str]] = {}
+        for i, rq in resolved.items():
+            pq = {t: (m, stats[t][0]) for t, m in rq.mult.items() if t in stats}
+            # conjunctive: a corpus-absent term empties this query's result
+            if pq and len(pq) >= rq.require_n:
+                per_query[i] = pq
+                if fs := frozenset(t for t in rq.excl if t in stats):
+                    per_query_excl[i] = fs
         if not per_query:
             return self.spark.range(0).select(
                 F.col("id").cast("int").alias("query_id"),
@@ -3376,23 +3379,23 @@ class FtsIndex:
         instead of the driver heap.
         """
         self.warm()
-        self._point_max_bytes = int(cache_max_bytes)
         if self._point_cache is None:
-            self._point_cache = OrderedDict()
+            self._point_cache = _ByteLRU(cache_max_bytes)
+        self._point_cache.max_bytes = int(cache_max_bytes)
         # separate budget for the positional tier (search_phrase_point):
         # positional rows are ~3x a term's postings (doc ids + offsets +
         # every occurrence), so they get their own, smaller, LRU
-        self._pos_point_max_bytes = int(pos_cache_max_bytes)
         if self._pos_point_cache is None and self.has_positions:
-            self._pos_point_cache = OrderedDict()
+            self._pos_point_cache = _ByteLRU(pos_cache_max_bytes)
+        if self._pos_point_cache is not None:
+            self._pos_point_cache.max_bytes = int(pos_cache_max_bytes)
         # include-id arrays for query-string field filters, keyed by the
         # canonical filter tuple: the FIRST query with a filter set pays
         # one Spark job (_filters_df — the SAME resolution the distributed
         # path runs, so semantics match by construction), repeats serve
         # in-process. 8 B/doc_id; own small LRU budget
         if self._point_filter_cache is None:
-            self._point_filter_cache = OrderedDict()
-        self._point_filter_max_bytes = 64 << 20
+            self._point_filter_cache = _ByteLRU(64 << 20)
         return self
 
     @staticmethod
@@ -3451,44 +3454,47 @@ class FtsIndex:
                 return ids
         return ids
 
-    def _point_filter_ids(self, filters: tuple) -> "np.ndarray | None":
+    def _point_filter_ids(self, filters: tuple):
         """Sorted include-id array for a query-string field-filter set,
         served from the point tier's per-filter LRU. A MISS pays one
         Spark job — the SAME :meth:`_filters_df` resolution the
         distributed path runs, so cast/NULL semantics match by
         construction — then repeats of the filter set (the common
         interactive shape: one `lang:en`/time-window across many
-        queries) are in-process. Returns None when the id set exceeds
-        the driver bound (``include_broadcast_max``): the caller falls
-        back to the distributed relational plan, exactly like the
+        queries) are in-process. Returns ``_INCLUDE_TOO_BIG`` when the id
+        set exceeds the driver bound (``include_broadcast_max``): the
+        distributed relational plan serves those, exactly like the
         distributed WAND path does."""
         cache = self._point_filter_cache
-        if cache is not None and filters in cache:
-            cache.move_to_end(filters)
-            return cache[filters]
-        ids = self._within_ids(self._filters_df(list(filters)))
-        if ids is None or ids is _INCLUDE_TOO_BIG:
-            return None
-        if cache is not None:
-            cache[filters] = ids
-            self._point_filter_bytes += 8 * int(ids.size)
-            while (
-                self._point_filter_bytes > self._point_filter_max_bytes
-                and len(cache) > 1
-            ):
-                _, old = cache.popitem(last=False)
-                self._point_filter_bytes -= 8 * int(old.size)
+        ids = cache.get(filters) if cache is not None else None
+        if ids is None:
+            ids = self._within_ids(self._filters_df(list(filters)))
+            if cache is not None and ids is not _INCLUDE_TOO_BIG:
+                cache.put(filters, ids, 8 * int(ids.size))
         return ids
 
-    def _point_fetch(self, terms: list[str], protect: frozenset[str]) -> None:
-        """ONE Spark job fetching the posting rows of every missing term
-        (pruned scan over the warm cache), parsed into kernel block tables
-        and inserted at MRU. ``protect`` is the CURRENT query's full term
-        set: all of it is refreshed to MRU before eviction, so the evictor
-        can never drop a term the in-flight query is about to read (the
-        r5 review found exactly that KeyError: the old guard protected
-        only the missing terms, and a cached-but-LRU-old query term could
-        be evicted by its own query's fetch)."""
+    def _point_restriction(self, bq):
+        """A boolean query's phrase / near / field-filter restriction
+        resolved to a sorted include-id array in-process (an empty array:
+        provably nothing matches); None when the positional tier cannot
+        serve a clause; ``_INCLUDE_TOO_BIG`` when the filter set alone is
+        past the driver include bound."""
+        ids = None
+        if bq.phrases or bq.near:
+            ids = self._point_phrase_restriction(bq)
+            if ids is None or not ids.size:
+                return ids
+        if bq.filters:
+            f_ids = self._point_filter_ids(tuple(bq.filters))
+            if f_ids is _INCLUDE_TOO_BIG:
+                return f_ids if ids is None else None
+            ids = f_ids if ids is None else f_ids[np.isin(f_ids, ids)]
+        return ids
+
+    def _point_load(self, terms: list[str]) -> dict[str, tuple[dict, int]]:
+        """ONE Spark job fetching the posting rows of ``terms`` (pruned
+        scan over the warm cache), parsed into kernel block tables and
+        charged :meth:`_point_term_bytes` — the postings LRU's loader."""
         rows = self.postings_for(terms).collect()
         by_term: dict[str, dict[int, dict]] = {t: {} for t in terms}
         for row in rows:
@@ -3496,31 +3502,10 @@ class FtsIndex:
             t = _parse_posting_row(row, shard * self.shard_size, None)
             if t is not None and row["term"] in by_term:
                 by_term[row["term"]][shard] = t
-        for term, tables in by_term.items():
-            nbytes = self._point_term_bytes(tables)
-            self._point_cache[term] = tables
-            self._point_cache.move_to_end(term)
-            self._point_cache_bytes += nbytes
-        for term in protect:
-            if term in self._point_cache:
-                self._point_cache.move_to_end(term)
-        self._point_evict(protect)
-
-    def _point_evict(self, protect: frozenset[str]) -> None:
-        """Evict from the LRU end until under budget. Protected terms sit
-        contiguously at the MRU end (callers refresh them first), so
-        hitting one means only the in-flight query's terms remain — the
-        transient overshoot is bounded by that query's footprint and the
-        post-sweep unprotected pass restores the hard budget."""
-        while (
-            self._point_cache_bytes > self._point_max_bytes
-            and self._point_cache
-        ):
-            old, tabs = next(iter(self._point_cache.items()))
-            if old in protect:
-                break
-            del self._point_cache[old]
-            self._point_cache_bytes -= self._point_term_bytes(tabs)
+        return {
+            term: (tables, self._point_term_bytes(tables))
+            for term, tables in by_term.items()
+        }
 
     def search_bm25_point(
         self,
@@ -3556,75 +3541,74 @@ class FtsIndex:
         set to doc ids is a Spark job, which defeats the point tier's
         no-job premise.
         """
+        rq = _resolve_gate(
+            lambda q: self._query_mult(q, preset), query, k, conjunctive,
+            exclude, min_match, offset, after,
+        )
+        if rq is None:
+            return []
+        rq.incl_df = self._within_df(within)
+        return self._point_execute(rq)
+
+    def _point_plan(self, rq: _Resolved):
+        """``(present, excl)`` for an in-process run of ``rq``: present
+        maps each scoring term in the driver dictionary to (mult, df),
+        excl lists the dictionary's NOT terms; ``({}, [])`` when rq
+        provably matches nothing here (a term it requires is absent).
+        None when the point tier cannot serve rq: the tier is off, the
+        tombstone set is past the driver-array bound (the distributed
+        path has the relational anti-join fallback for exactly that
+        state), the include restriction has no driver id array, or a
+        posting list is over the df cap."""
         if (
             self._point_cache is None
             or self._term_dict is None
-            or within is not None
-            # beyond the driver-array bound the tombstone set cannot be
-            # materialized in-process; the distributed path has the
-            # relational anti-join fallback for exactly this state
             or self.n_deleted > self.dead_broadcast_max
         ):
-            return [
-                (int(r["doc_id"]), float(r["score"]))
-                for r in self.search_bm25(
-                    query, k=k, preset=preset, mode="wand",
-                    conjunctive=conjunctive, exclude=exclude, within=within,
-                    min_match=min_match, offset=offset, after=after,
-                ).collect()
-            ]
-        if min_match is not None and conjunctive:
-            raise ValueError("pass either conjunctive or min_match, not both")
-        if offset < 0:
-            raise ValueError(f"offset must be >= 0, got {offset}")
-        if after is not None:
-            if offset:
-                raise ValueError(
-                    "pass either offset or after (cursor), not both"
-                )
-            after = (_round6(float(after[0])), int(after[1]))
-        mult = self._query_mult(query, preset)
-        excl = self._query_mult(exclude, preset) if exclude else {}
-        require_n = len(mult) if conjunctive else max(0, int(min_match or 0))
-        if mult and require_n > len(mult):
-            return []
-        if excl:
-            if conjunctive and set(mult) & set(excl):
-                return []
-            mult = {t: m for t, m in mult.items() if t not in excl}
-        present = {
-            t: (m, self._term_dict[t][0])
-            for t, m in mult.items()
-            if t in self._term_dict
-        }
-        excl_present = {
-            t: (0, self._term_dict[t][0])
-            for t in excl
-            if t in self._term_dict
-        }
-        if not present or (require_n > 0 and len(present) < require_n):
-            return []
+            return None
+        if rq.incl_df is not None and not isinstance(rq.incl_ids, np.ndarray):
+            return None
+        td = self._term_dict
+        present = {t: (m, td[t][0]) for t, m in rq.mult.items() if t in td}
+        covered = 0
+        for t in present:
+            covered |= (rq.term_gmask or {}).get(t, 0)
+        if len(present) < max(1, rq.require_n) or (
+            (covered & rq.full_mask) != rq.full_mask
+        ):
+            return {}, []
+        excl = [t for t in rq.excl if t in td]
         # a term with df * 20 bytes > budget/2 cannot be point-cached;
         # stream it through the distributed path instead of the driver
-        df_cap = self._point_max_bytes // 40
-        if any(
-            df_ > df_cap
-            for _, df_ in list(present.values()) + list(excl_present.values())
-        ):
-            return [
-                (int(r["doc_id"]), float(r["score"]))
-                for r in self.search_bm25(
-                    query, k=k, preset=preset, mode="wand",
-                    conjunctive=conjunctive, exclude=exclude,
-                    min_match=min_match, offset=offset, after=after,
-                ).collect()
-            ]
-        k_eff = k + offset if (offset and k > 0) else k
-        rows = self._point_sweep(
-            present, k_eff, require_n, frozenset(excl_present) or None,
-            after=after,
-        )
-        return rows[offset:] if offset else rows
+        df_cap = self._point_cache.max_bytes // 40
+        if any(td[t][0] > df_cap for t in [*present, *excl]):
+            return None
+        return present, excl
+
+    def _point_execute(
+        self, rq: _Resolved, serve=None, distributed=None
+    ) -> list[tuple[int, float]]:
+        """The point tier's executor: plan (:meth:`_point_plan`), then the
+        in-process sweep — or ``serve(present)`` for surfaces that score
+        the cached postings their own way (it returns None to decline).
+        Whatever the tier cannot serve runs the SAME resolved query on
+        the distributed executor (``distributed()``, default
+        :meth:`_execute`), never re-parsing or re-expanding it."""
+        plan = self._point_plan(rq)
+        if plan is not None:
+            present, excl = plan
+            if not present:
+                return []
+            if serve is not None:
+                rows = serve(present)
+            else:
+                rows = self._point_sweep(
+                    present, rq.k_eff, rq.require_n, frozenset(excl) or None,
+                    rq.term_gmask, rq.full_mask, rq.after, rq.incl_ids,
+                )[rq.offset:]
+            if rows is not None:
+                return rows
+        return _scored_rows(distributed() if distributed else self._execute(rq))
 
     def _point_sweep(
         self,
@@ -3655,16 +3639,10 @@ class FtsIndex:
         eff_n_docs = self.n_docs if n_docs is None else int(n_docs)
         eff_avgdl = self.avgdl if avgdl is None else float(avgdl)
         with self._point_lock:
-            all_terms = dict.fromkeys(
-                list(present) + sorted(excl_terms or ())
+            entries = self._point_cache.fetch(
+                list(dict.fromkeys([*present, *sorted(excl_terms or ())])),
+                self._point_load,
             )
-            protect = frozenset(all_terms)
-            missing = [t for t in all_terms if t not in self._point_cache]
-            if missing:
-                self._point_fetch(missing, protect)
-            else:
-                for t in all_terms:
-                    self._point_cache.move_to_end(t)
             # per-shard sweep, exactly the distributed kernel's unit of
             # work; global merge = top-k of the union of shard top-ks
             # term-ASCENDING weighted lists: the distributed kernel sees
@@ -3676,14 +3654,14 @@ class FtsIndex:
                 m, df_ = present[term]
                 w = m * bm25_idf(eff_n_docs, df_)
                 gm = term_gmask.get(term, 0) if term_gmask else 0
-                for shard, table in self._point_cache[term].items():
+                for shard, table in entries[term].items():
                     shards.setdefault(shard, []).append((w, table))
                     shard_gms.setdefault(shard, []).append(gm)
             excl_by_shard: dict[int, np.ndarray] = {}
             if excl_terms:
                 parts: dict[int, list[np.ndarray]] = {}
                 for term in sorted(excl_terms):
-                    for shard, table in self._point_cache[term].items():
+                    for shard, table in entries[term].items():
                         parts.setdefault(shard, []).append(
                             _decode_doc_ids(
                                 table, shard * self.shard_size, None
@@ -3729,10 +3707,6 @@ class FtsIndex:
                         heapq.heappush(heap, (sc, -doc))
                     elif (sc, -doc) > heap[0]:
                         heapq.heapreplace(heap, (sc, -doc))
-            # the sweep is done with this query's terms: enforce the hard
-            # byte budget (fetch-time eviction spares in-flight terms, so
-            # a wide query can transiently overshoot)
-            self._point_evict(frozenset())
         out = [(-d, s) for s, d in heap]
         out.sort(key=lambda x: (-x[1], x[0]))
         return [(int(d), float(s)) for d, s in out]
@@ -3827,24 +3801,7 @@ class FtsIndex:
         """:meth:`search_bm25_prefix` on the point tier: expansion runs
         against the driver dictionary (bisect, no job), the sweep runs
         in-process; results are exactly the distributed rewrite's."""
-        if self._point_cache is None or self._term_dict is None:
-            return [
-                (int(r["doc_id"]), float(r["score"]))
-                for r in self.search_bm25_prefix(
-                    query, k=k, preset=preset, max_expand=max_expand
-                ).collect()
-            ]
-        preset = preset or (
-            "multilingual" if self.preset == "by_lang" else self.preset
-        )
-        mult = self._prefix_mult(query, preset, max_expand, point=True)
-        return self._point_mult_search(
-            mult,
-            k,
-            lambda: self.search_bm25_prefix(
-                query, k=k, preset=preset, max_expand=max_expand
-            ),
-        )
+        return self._rewrite_point(query, "prefix", k, preset, max_expand)
 
     def search_bm25_point_wildcard(
         self,
@@ -3857,24 +3814,7 @@ class FtsIndex:
         regex scans the driver dictionary (literal-prefix bisect bound
         when the pattern has one), the sweep runs in-process; results are
         exactly the distributed rewrite's."""
-        if self._point_cache is None or self._term_dict is None:
-            return [
-                (int(r["doc_id"]), float(r["score"]))
-                for r in self.search_bm25_wildcard(
-                    query, k=k, preset=preset, max_expand=max_expand
-                ).collect()
-            ]
-        preset = preset or (
-            "multilingual" if self.preset == "by_lang" else self.preset
-        )
-        mult = self._wildcard_mult(query, preset, max_expand, point=True)
-        return self._point_mult_search(
-            mult,
-            k,
-            lambda: self.search_bm25_wildcard(
-                query, k=k, preset=preset, max_expand=max_expand
-            ),
-        )
+        return self._rewrite_point(query, "wildcard", k, preset, max_expand)
 
     def search_bm25_point_regexp(
         self,
@@ -3887,24 +3827,7 @@ class FtsIndex:
         fully matches against the driver dictionary (literal-prefix
         bisect bound when the pattern has one), the sweep runs
         in-process; results are exactly the distributed rewrite's."""
-        if self._point_cache is None or self._term_dict is None:
-            return [
-                (int(r["doc_id"]), float(r["score"]))
-                for r in self.search_bm25_regexp(
-                    query, k=k, preset=preset, max_expand=max_expand
-                ).collect()
-            ]
-        preset = preset or (
-            "multilingual" if self.preset == "by_lang" else self.preset
-        )
-        mult = self._regexp_mult(query, preset, max_expand, point=True)
-        return self._point_mult_search(
-            mult,
-            k,
-            lambda: self.search_bm25_regexp(
-                query, k=k, preset=preset, max_expand=max_expand
-            ),
-        )
+        return self._rewrite_point(query, "regexp", k, preset, max_expand)
 
     def search_bm25_point_fuzzy(
         self,
@@ -3916,31 +3839,8 @@ class FtsIndex:
     ) -> list[tuple[int, float]]:
         """:meth:`search_bm25_fuzzy` on the point tier (see
         :meth:`_point_expand` for the fuzzy-scan cost note)."""
-        if self._point_cache is None or self._term_dict is None:
-            return [
-                (int(r["doc_id"]), float(r["score"]))
-                for r in self.search_bm25_fuzzy(
-                    query, k=k, preset=preset,
-                    max_dist=max_dist, max_expand=max_expand,
-                ).collect()
-            ]
-        preset = preset or (
-            "multilingual" if self.preset == "by_lang" else self.preset
-        )
-        mult: dict[str, int] = {}
-        raw: dict[str, int] = {}
-        for t in normalize_query(query, preset):
-            raw[t] = raw.get(t, 0) + 1
-        for t0, m in raw.items():
-            for t in self._point_expand(t0, "fuzzy", max_dist, max_expand):
-                mult[t] = mult.get(t, 0) + m
-        return self._point_mult_search(
-            mult,
-            k,
-            lambda: self.search_bm25_fuzzy(
-                query, k=k, preset=preset,
-                max_dist=max_dist, max_expand=max_expand,
-            ),
+        return self._rewrite_point(
+            query, "fuzzy", k, preset, max_expand, max_dist
         )
 
     def search_boolean_point(
@@ -3970,123 +3870,30 @@ class FtsIndex:
 
         if offset < 0:
             raise ValueError(f"offset must be >= 0, got {offset}")
-
-        def fallback() -> list[tuple[int, float]]:
-            return [
-                (int(r["doc_id"]), float(r["score"]))
-                for r in self.search_boolean(
-                    query, k=k, preset=preset,
-                    max_expand=max_expand, offset=offset,
-                ).collect()
-            ]
-
-        if (
-            self._point_cache is None
-            or self._term_dict is None
-            or self.n_deleted > self.dead_broadcast_max
-        ):
-            return fallback()
         bq = parse_query(query)
-        phrase_ids: np.ndarray | None = None
-        if bq.phrases or bq.near:
-            phrase_ids = self._point_phrase_restriction(bq)
-            if phrase_ids is None:  # positional tier cannot serve this
-                return fallback()
-            if not phrase_ids.size:
-                return []
-        incl_docs = None
-        if bq.filters:
-            # per-filter-set include cache: a MISS pays one Spark job
-            # (identical _filters_df semantics), repeats are in-process
-            incl_docs = self._point_filter_ids(tuple(bq.filters))
-            if incl_docs is None:  # exceeds the driver include bound
-                return fallback()
-            if not incl_docs.size:
-                return []
-        if phrase_ids is not None:
-            incl_docs = (
-                phrase_ids
-                if incl_docs is None
-                else incl_docs[np.isin(incl_docs, phrase_ids)]
-            )
-            if not incl_docs.size:
-                return []
-        preset = preset or (
-            "multilingual" if self.preset == "by_lang" else self.preset
+        rq = self._boolean_resolved(
+            bq, k, preset, max_expand, offset, point=self._term_dict is not None
         )
-        resolved = self._resolve_boolean(bq, preset, max_expand, point=True)
-        if resolved is None:
+        if rq is None:
             return []
-        mult, groups, excl = resolved
-        # phrase/near terms score like SHOULD terms — exactly the
-        # distributed path's post-restriction mult update
-        for ph, _slop in [(p, 0) for p in bq.phrases] + list(bq.near):
-            for t in normalize_query(ph, preset):
-                mult[t] = mult.get(t, 0) + 1
-        if not mult:
-            return []
-        term_gmask, full_mask = self._group_masks(groups)
-        present = {
-            t: (m, self._term_dict[t][0])
-            for t, m in mult.items()
-            if t in self._term_dict
-        }
-        if not present:
-            return []
-        if full_mask:
-            covered = 0
-            for t in present:
-                covered |= term_gmask.get(t, 0)
-            if (covered & full_mask) != full_mask:
-                # a required group has no term in the dictionary
+        if bq.phrases or bq.near or bq.filters:
+            rq.incl_ids = self._point_restriction(bq)
+            if rq.incl_ids is None or rq.incl_ids is _INCLUDE_TOO_BIG:
+                # served distributed; a too-big filter set goes straight
+                # to the relational plan (its size is already known)
+                rq.incl_df = self._restriction_df(bq, None)
+            elif not rq.incl_ids.size:
                 return []
-        excl_present = {t for t in excl if t in self._term_dict}
-        df_cap = self._point_max_bytes // 40
-        if any(
-            self._term_dict[t][0] > df_cap
-            for t in list(present) + sorted(excl_present)
-        ):
-            return fallback()
-        k_eff = k + offset if (offset and k > 0) else k
-        rows = self._point_sweep(
-            present, k_eff, 0, frozenset(excl_present) or None,
-            term_gmask, full_mask, incl_docs=incl_docs,
-        )
-        return rows[offset:] if offset else rows
-
-    def _point_mult_search(
-        self,
-        mult: dict[str, int],
-        k: int,
-        fallback,
-    ) -> list[tuple[int, float]]:
-        """Shared tail of the expanded point queries: df-cap check (a
-        posting list too large for the driver budget streams through the
-        distributed ``fallback`` plan instead), then the in-process
-        sweep. Expanded terms come from the dictionary by construction,
-        so ``present`` only drops exact terms absent from the corpus."""
-        present = {
-            t: (m, self._term_dict[t][0])
-            for t, m in mult.items()
-            if t in self._term_dict
-        }
-        if not present:
+        if not rq.mult:
             return []
-        df_cap = self._point_max_bytes // 40
-        if any(df_ > df_cap for _, df_ in present.values()) or (
-            self.n_deleted > self.dead_broadcast_max
-        ):
-            return [
-                (int(r["doc_id"]), float(r["score"]))
-                for r in fallback().collect()
-            ]
-        return self._point_sweep(present, k, 0)
+        return self._point_execute(rq)
 
     def point_cache_stats(self) -> dict[str, int]:
+        c = self._point_cache
         return {
-            "terms": len(self._point_cache or ()),
-            "bytes": self._point_cache_bytes,
-            "max_bytes": self._point_max_bytes,
+            "terms": len(c) if c is not None else 0,
+            "bytes": c.bytes if c is not None else 0,
+            "max_bytes": c.max_bytes if c is not None else 0,
         }
 
     def _idf_col(self) -> "F.Column":
@@ -4252,9 +4059,7 @@ class FtsIndex:
         if not present or (require_n > 0 and len(present) < require_n):
             # conjunctive: a query term absent from the corpus can
             # never be matched — the whole result is empty, no job
-            return self._maybe_hydrate(
-                self._empty_bm25_result(), hydrate, bounded=True
-            )
+            return self._empty_bm25_result(hydrate)
         if full_mask and term_gmask:
             covered = 0
             for t in present:
@@ -4262,9 +4067,7 @@ class FtsIndex:
             if (covered & full_mask) != full_mask:
                 # a required group has no term in the dictionary:
                 # nothing can match — empty result, no job
-                return self._maybe_hydrate(
-                    self._empty_bm25_result(), hydrate, bounded=True
-                )
+                return self._empty_bm25_result(hydrate)
         excl_present = [t for t in excl_mult if t in stats_all]
         posts = self._pruner(
             self._read_postings(), list(present) + excl_present
@@ -4377,12 +4180,13 @@ class FtsIndex:
             .orderBy(*order)
         )
 
-    def _empty_bm25_result(self) -> DataFrame:
+    def _empty_bm25_result(self, hydrate: bool = False) -> DataFrame:
         # spark.range(0) is a LocalRelation — no tasks scheduled on collect
-        return self.spark.range(0).select(
+        empty = self.spark.range(0).select(
             F.col("id").alias("doc_id"),
             F.col("id").cast("double").alias("score"),
         )
+        return self._maybe_hydrate(empty, hydrate, bounded=True)
 
     def _empty_reference_result(self, hydrate: bool) -> DataFrame:
         return self.spark.range(0).select(

@@ -67,7 +67,7 @@ def test_point_cache_lru_byte_budget(spark, small_index):
         assert stats["terms"] >= 2 and 0 < stats["bytes"] <= stats["max_bytes"]
         # shrink the budget below the current usage and query NEW terms:
         # old terms must be evicted, accounting stays consistent
-        fts._point_max_bytes = stats["bytes"]
+        fts._point_cache.max_bytes = stats["bytes"]
         fts.search_bm25_point("mountain river castle bridge", k=10)
         stats2 = fts.point_cache_stats()
         recount = sum(
@@ -121,7 +121,7 @@ def test_point_query_mixing_cached_and_missing_terms_under_pressure(
     try:
         fts.search_bm25_point("turtle", k=5)  # cache 'turtle'
         # budget so tight that ANY further insert must evict
-        fts._point_max_bytes = fts.point_cache_stats()["bytes"] + 1
+        fts._point_cache.max_bytes = fts.point_cache_stats()["bytes"] + 1
         want = [
             (int(r["doc_id"]), float(r["score"]))
             for r in fts.search_bm25(
@@ -132,7 +132,7 @@ def test_point_query_mixing_cached_and_missing_terms_under_pressure(
         assert got == want
         # post-sweep pass enforces the hard budget again
         assert (
-            fts.point_cache_stats()["bytes"] <= fts._point_max_bytes
+            fts.point_cache_stats()["bytes"] <= fts._point_cache.max_bytes
             or fts.point_cache_stats()["terms"] == 0
         )
     finally:
@@ -300,3 +300,32 @@ def test_banded_levenshtein_matches_reference():
         for b in words:
             for d in (0, 1, 2):
                 assert _levenshtein_leq(a, b, d) == (full(a, b) <= d), (a, b, d)
+
+
+def test_byte_lru_fetch_pins_then_evicts_and_reinsert_replaces_charge():
+    from fts_engine_spark.query import _ByteLRU
+
+    lru = _ByteLRU(10)
+    lru.put("a", "A", 4)
+    lru.put("b", "B", 4)
+    assert lru.bytes == 8 and list(lru) == ["a", "b"]
+    # inserting a key again replaces its charge (and refreshes it)
+    lru.put("a", "A2", 5)
+    assert lru.bytes == 9 and list(lru) == ["b", "a"] and lru.get("a") == "A2"
+    loads = []
+
+    def load(missing):
+        loads.append(list(missing))
+        return {k: (k.upper(), 6) for k in missing}
+
+    # a fetch whose own keys outgrow the budget still returns every key
+    # (one load call for the missing ones), then evicts LRU-first down to
+    # the budget
+    got = lru.fetch(["a", "x", "y"], load)
+    assert got == {"a": "A2", "x": "X", "y": "Y"} and loads == [["x", "y"]]
+    assert list(lru) == ["y"] and lru.bytes == 6 <= lru.max_bytes
+    assert lru.get("b") is None and len(lru) == 1
+    assert lru.fetch(["y"], load) == {"y": "Y"} and len(loads) == 1
+    lru.max_bytes = 0
+    lru.put("z", "Z", 1)  # over budget on its own: not kept
+    assert len(lru) == 0 and lru.bytes == 0

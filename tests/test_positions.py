@@ -305,7 +305,40 @@ def test_phrase_point_matches_positional(spark, pos_index):
         # repeat query is served from the LRU (no refetch): cache holds
         # exactly the distinct phrase terms seen, with a positive budget
         assert set(fts._pos_point_cache) >= {"merge", "sort", "join"}
-        assert fts._pos_point_bytes > 0
+        assert fts._pos_point_cache.bytes > 0
+    finally:
+        fts.close()
+
+
+def test_phrase_point_leaves_cache_within_budget(spark, pos_index):
+    """A phrase whose terms each fit half the positional budget but
+    together outgrow it is served in-process, and the positional cache is
+    back within budget after the query (it used to stay over it)."""
+    from fts_engine_spark.query import normalize_query
+
+    phrase = "merge sort classic algorithm join beats hash data sorting big run"
+    terms = normalize_query(phrase, "simple")
+
+    def held(fts):
+        return sum(a.nbytes for arrs in fts._pos_point_cache.values() for a in arrs)
+
+    big = FtsIndex(spark, pos_index).enable_point_serving()
+    try:
+        want = _positional_pairs(big, phrase)
+        assert _point_pairs(big, phrase) == want
+        total = held(big)
+        td = big._term_dict
+        # the smallest budget whose half-budget cap admits every term
+        budget = 2 * max(8 * (2 * td[t][0] + td[t][1]) for t in terms)
+    finally:
+        big.close()
+    assert total > budget
+    fts = FtsIndex(spark, pos_index).enable_point_serving(
+        pos_cache_max_bytes=budget
+    )
+    try:
+        assert _point_pairs(fts, phrase) == want
+        assert 0 < held(fts) <= budget
     finally:
         fts.close()
 
@@ -376,7 +409,7 @@ def test_phrase_point_by_lang(spark, tmp_path_factory):
         # budget fallback: an index whose id space outgrows the budget
         # routes by_lang phrases to the distributed path, same results
         fts._pos_pipe_cache = None
-        fts._pos_point_max_bytes = 2
+        fts._pos_point_cache.max_bytes = 2
         assert _point_pairs(fts, "french hotels") == _positional_pairs(
             fts, "french hotels"
         )

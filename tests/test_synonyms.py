@@ -240,3 +240,25 @@ def test_synonym_point_excludes_tombstones(spark, tmp_path_factory):
         assert dead_id not in {d_ for d_, _ in got}
     finally:
         fts.close()
+
+
+def test_synonym_point_leaves_cache_within_budget(spark, syn_index, syn_oracle):
+    """Members that each fit the df cap but together outgrow the budget
+    are served in-process, and the cache is back within budget after
+    the query (it used to stay over it until a later bm25 point query)."""
+    big = FtsIndex(spark, syn_index).enable_point_serving()
+    try:
+        _point(big, "fast cars", SYN)
+        total = big.point_cache_stats()["bytes"]
+        max_df = max(big._term_dict[t][0] for t in ("fast", "quick", "rapid", "cars"))
+    finally:
+        big.close()
+    budget = 40 * max_df  # the smallest budget whose df cap admits every member
+    assert total > budget
+    fts = FtsIndex(spark, syn_index).enable_point_serving(cache_max_bytes=budget)
+    try:
+        assert _point(fts, "fast cars", SYN) == _want(syn_oracle, "fast cars", SYN)
+        stats = fts.point_cache_stats()
+        assert 0 < stats["bytes"] <= stats["max_bytes"] == budget
+    finally:
+        fts.close()
