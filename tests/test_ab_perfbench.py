@@ -1,0 +1,30 @@
+"""The verdict rule of tools/ab_perfbench.py (simplicity-review: gain,
+no regression, unresolved, regression) on hand-made paired runs."""
+
+from __future__ import annotations
+
+from tools.ab_perfbench import _seeds, verdict
+
+BASE = [10.0, 11.0, 12.0, 10.5, 11.5, 10.0, 11.0, 12.0, 10.5, 11.5]
+
+
+def test_gain_needs_nine_of_ten_wins_and_a_gap_over_the_base_iqr():
+    assert verdict(BASE, [8.0] * 10, "lower", 0.25) == ("gain", 10)
+    # 9/10 wins but a gap inside the base IQR: not a gain
+    close = [b - 0.1 for b in BASE[:9]] + [BASE[9] + 0.1]
+    assert verdict(BASE, close, "lower", 0.25) == ("no regression", 9)
+    assert verdict([10.0] * 10, [14.0] * 10, "higher", 0.25) == ("gain", 10)
+
+
+def test_regression_and_unresolved():
+    assert verdict([10.0] * 10, [14.0] * 10, "lower", 0.25)[0] == "regression"
+    wide = [5.0, 15.0, 6.0, 14.0, 5.0, 15.0, 6.0, 14.0, 5.0, 15.0]
+    assert verdict(wide, wide[::-1], "lower", 0.25)[0] == "unresolved"
+    # a wide spread still reads as no regression when every change run
+    # beats every base run
+    assert verdict(wide, [1.0, 2.0] * 5, "lower", 0.25)[0] in ("gain", "no regression")
+
+
+def test_seed_ranges():
+    assert _seeds("11-13") == [11, 12, 13]
+    assert _seeds("3,5,7-8") == [3, 5, 7, 8]

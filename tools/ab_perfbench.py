@@ -13,7 +13,7 @@ with the same ``--work`` skips the (revision, workload, seed) triples
 already recorded there.
 
 For every end-to-end metric of ``BENCHMARK.json`` and every workload the
-report gives each side's median, the base's quartiles, the change's wins
+report gives each side's median and quartiles, the change's wins
 out of the pairs run (ties count for neither side), and a verdict:
 
 - ``gain``: the change wins at least 9/10 of the pairs and the medians
@@ -152,7 +152,8 @@ def main() -> None:
                         {"sha": shas[side], "side": side, "workload": wl,
                          "seed": seed, "result": res}
                     ) + "\n")
-                print(f"seed {seed} {wl} {side}: {res['metrics']}", flush=True)
+                vals = {k: round(v["value"], 4) for k, v in res["metrics"].items()}
+                print(f"seed {seed} {wl} {side}: {vals}", flush=True)
 
     print(f"\nbase {shas['base'][:10]}  change {shas['change'][:10]}  "
           f"seeds {seeds[0]}..{seeds[-1]} ({len(seeds)} pairs)")
@@ -166,15 +167,20 @@ def main() -> None:
         }
         print(f"\n[{wl}] failed-op share: base {fails['base']:.4f}, "
               f"change {fails['change']:.4f}")
-        print(f"{'metric':28} {'base med':>11} {'base q1-q3':>21} "
-              f"{'change med':>11} {'wins':>6}  verdict")
+        print(f"{'metric':26} {'base med (q1-q3)':>32} "
+              f"{'change med (q1-q3)':>32} {'wins':>6}  verdict")
         for m in spec["end_to_end"]:
-            b = [float(r["metrics"][m["name"]]) for r in runs["base"]]
-            c = [float(r["metrics"][m["name"]]) for r in runs["change"]]
+            b, c = (
+                [float(r["metrics"][m["name"]]["value"]) for r in runs[side]]
+                for side in ("base", "change")
+            )
             v, wins = verdict(b, c, m["better"], float(m["bound"]))
-            q1, q3 = _quartiles(b)
-            print(f"{m['name']:28} {statistics.median(b):11.4g} "
-                  f"{q1:10.4g}-{q3:<10.4g} {statistics.median(c):11.4g} "
+            cells = [
+                f"{statistics.median(xs):.4g} ({q1:.4g}-{q3:.4g})"
+                for xs in (b, c)
+                for q1, q3 in [_quartiles(xs)]
+            ]
+            print(f"{m['name']:26} {cells[0]:>32} {cells[1]:>32} "
                   f"{wins:>3}/{len(seeds):<2}  {v}")
 
 
