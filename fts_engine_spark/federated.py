@@ -26,11 +26,12 @@ classic distributed-IR mistake); :class:`FederatedFtsIndex` instead:
   1. aggregates (df, N, total_len) for the query terms across snapshots —
      a driver-side sum over per-sub point lookups (`FtsIndex.term_stats`:
      free when warm, one pruned terms-scan job per sub when cold);
-  2. scatters the SAME block-max WAND kernel to every snapshot with the
+  2. scatters the SAME block-max WAND plan to every snapshot with the
      global constants riding its closure
-     (:meth:`fts_engine_spark.query.FtsIndex._bm25_wand_stats` — the plan
-     per sub is identical to a single-index warm query: pruned posting
-     scan -> one applyInPandas per shard -> local top-k, zero exchanges);
+     (:meth:`fts_engine_spark.query.FtsIndex._bm25_wand` with stats
+     overrides — the plan per sub IS the single-index plan: pruned
+     posting scan -> one applyInPandas per shard -> local top-k, zero
+     exchanges warm, one shard-bounded exchange cold);
   3. gathers per-sub top-k and takes the global top-k — a union + sort of
      at most ``len(subs) * k`` hydrated rows, never a rescore.
 
@@ -210,13 +211,10 @@ class FederatedFtsIndex:
                     )
                 if incl_ids is not None and len(incl_ids) == 0:
                     continue  # restriction excludes this whole snapshot
-            excl_present = frozenset(t for t in rq.excl if t in st)
-            scored = sub._bm25_wand_stats(
-                present, rq.k,
-                n_docs=self.n_docs, avgdl=self.avgdl,
-                require_n=rq.require_n,
-                excl_terms=excl_present or None,
-                incl_ids=incl_ids,
+            scored = sub._bm25_wand(
+                rq.mult, rq.k, False, rq.require_n,
+                {t: m for t, m in rq.excl.items() if t in st}, incl_ids,
+                present=present, n_docs=self.n_docs, avgdl=self.avgdl,
             )
             right = F.broadcast(scored) if rq.k > 0 else scored
             parts.append(
@@ -265,8 +263,8 @@ class FederatedFtsIndex:
 
         Per sub this is the single-index point sweep
         (:meth:`FtsIndex._point_sweep`) with the federation's global
-        (df, N, avgdl) riding as overrides — the point-tier twin of
-        :meth:`FtsIndex._bm25_wand_stats`. Falls back to the distributed
+        (df, N, avgdl) riding as overrides, as they do on
+        :meth:`FtsIndex._bm25_wand`. Falls back to the distributed
         federated path when any snapshot cannot point-serve (tier off,
         a term's postings exceed its point budget, or its tombstone set
         exceeds the driver-array bound). Scale shape: per-sub work is an

@@ -59,7 +59,9 @@ re-enter maintenance.
 from __future__ import annotations
 
 import os
-from typing import TYPE_CHECKING
+from dataclasses import dataclass
+from functools import partial
+from typing import TYPE_CHECKING, Callable
 
 import numpy as np
 import pandas as pd
@@ -597,66 +599,15 @@ def span_near_kernel(
     return cand[uniq].tolist(), counts.tolist()
 
 
-def _phrase_sequences(index: "FtsIndex", phrase: str) -> dict[str, list[str]]:
-    """pipeline-name -> analyzed phrase-term sequence (empty sequences
-    dropped). Single-preset indexes get one entry keyed by the preset."""
-    from .query import normalize_query
+def _pipelines(index: "FtsIndex") -> list[str]:
+    """The analysis pipelines a doc of this index can have been built
+    with: the preset itself, or under by_lang every language pipeline
+    plus multilingual (sorted)."""
+    if index.preset != "by_lang":
+        return [index.preset]
+    from .functions.udfs import _LANG_PRESETS
 
-    if index.preset == "by_lang":
-        from .functions.udfs import _LANG_PRESETS
-
-        presets = sorted({*_LANG_PRESETS.values(), "multilingual"})
-        return {
-            p: terms
-            for p in presets
-            if (terms := normalize_query(phrase, p))
-        }
-    terms = normalize_query(phrase, index.preset)
-    return {index.preset: terms} if terms else {}
-
-
-def _phrase_prefix_variants(
-    index: "FtsIndex", phrase: str, expander, max_expansions: int
-) -> dict[str, list[list[str]]]:
-    """pipeline -> concrete sequence variants for a phrase-prefix query
-    (ES ``match_phrase_prefix``): the LAST whitespace token of ``phrase``
-    is a dictionary prefix (an optional trailing ``*`` is accepted and
-    stripped), the head analyzes like a normal phrase. Follows the
-    repo's established multi-term-rewrite semantics (``_rewrite_mult``):
-    the pattern is Go-lowered and expanded against the POST-PIPELINE
-    dictionary — never stemmed — via ``expander(pattern, n)`` (the
-    distributed ``expand_terms`` or the driver-side ``_point_expand``,
-    both df-desc/term-asc deterministic). Unlike ``_phrase_sequences``,
-    a head that analyzes to NOTHING keeps the pipeline with an empty
-    fixed part (the query degrades to a counted prefix term — ES
-    behavior), so single-token autocomplete works."""
-    from .textproc.gocompat import go_lower
-
-    toks = phrase.split()
-    if not toks:
-        return {}
-    pat = toks[-1]
-    if len(pat) > 1 and pat.endswith("*"):
-        pat = pat[:-1]
-    if not pat or pat == "*":
-        return {}
-    head = " ".join(toks[:-1])
-    expansions = expander(go_lower(pat), max_expansions)
-    if not expansions:
-        return {}
-    from .query import normalize_query
-
-    if index.preset == "by_lang":
-        from .functions.udfs import _LANG_PRESETS
-
-        presets = sorted({*_LANG_PRESETS.values(), "multilingual"})
-    else:
-        presets = [index.preset]
-    out: dict[str, list[list[str]]] = {}
-    for p in presets:
-        fixed = normalize_query(head, p) if head else []
-        out[p] = [fixed + [e] for e in expansions]
-    return out
+    return sorted({*_LANG_PRESETS.values(), "multilingual"})
 
 
 def _doc_pipeline_col(index: "FtsIndex") -> F.Column:
@@ -721,6 +672,110 @@ def fetch_point_positions(
     return out
 
 
+@dataclass
+class _PositionalQuery:
+    """One phrase / near / phrase-prefix query resolved once, independent
+    of the tier that runs it: ``sequences`` (pipeline -> concrete term
+    sequences; a doc's counts sum over its pipeline's variants), the
+    matching ``kernel(docs_offs, pos_vals, seq)``, the output
+    ``count_col``, ``k`` (<= 0: all) and the fresh positional table
+    ``path``. :func:`_search_positional` runs it distributed,
+    :meth:`FtsIndex._positional_point` in-process."""
+
+    sequences: dict[str, list[list[str]]]
+    kernel: Callable
+    count_col: str
+    k: int
+    path: str
+
+
+def _resolve_positional(
+    index: "FtsIndex",
+    phrase: str,
+    k: int,
+    slop: int | None = None,
+    in_order: bool = True,
+    expand=None,
+) -> _PositionalQuery:
+    """Resolve a positional query once for either tier. Each pipeline
+    analyzes ``phrase`` on its own (under by_lang a doc matches through
+    its build pipeline's sequence). ``slop=None`` is a phrase
+    (:func:`phrase_match_kernel`, counted as ``phrase_count``); an int
+    is a proximity query (:func:`span_near_kernel`, or
+    :func:`span_near_unordered_kernel` with ``in_order=False``, counted
+    as ``near_count``).
+
+    ``expand(pattern)`` makes it ES ``match_phrase_prefix``: the LAST
+    whitespace token (an optional trailing ``*`` stripped) is a
+    Go-lowered dictionary prefix — never stemmed, the multi-term-rewrite
+    semantics of ``_rewrite_mult`` — and each of its expansions
+    (``expand_terms`` or the driver's ``_point_expand``, both
+    df-desc/term-asc) completes one variant of the analyzed head. A head
+    that analyzes to nothing degrades to a counted prefix term, so
+    single-token autocomplete works.
+
+    Empty sequences drop, and so — when the driver holds the
+    dictionary, the one place that costs no job — do sequences with a
+    term outside it: they can never match. Raises
+    ``PositionsUnavailableError`` when the table is absent or stale."""
+    from .query import normalize_query
+
+    path = check_positions_fresh(index)
+    head, tails = phrase, [[]]
+    if expand is not None:
+        toks = phrase.split()
+        pat = toks[-1] if toks else ""
+        if len(pat) > 1 and pat.endswith("*"):
+            pat = pat[:-1]
+        from .textproc.gocompat import go_lower
+
+        expansions = expand(go_lower(pat)) if pat and pat != "*" else []
+        head, tails = " ".join(toks[:-1]), [[e] for e in expansions]
+    td = index._term_dict
+    sequences = {}
+    for pipe in _pipelines(index):
+        fixed = normalize_query(head, pipe)
+        kept = [
+            s
+            for s in (fixed + tail for tail in tails)
+            if s and (td is None or all(t in td for t in s))
+        ]
+        if kept:
+            sequences[pipe] = kept
+    if slop is None:
+        kernel, count_col = phrase_match_kernel, "phrase_count"
+    else:
+        base = span_near_kernel if in_order else span_near_unordered_kernel
+        kernel, count_col = partial(base, slop=slop), "near_count"
+    return _PositionalQuery(sequences, kernel, count_col, k, path)
+
+
+def _match_variants(sequences, kernel, docs_offs, pos_vals):
+    """Run every sequence variant through ``kernel`` and sum a doc's
+    counts over its pipeline's variants, yielding ``(pipeline, doc_ids
+    asc, counts)`` per pipeline that matched — the one accumulation both
+    tiers run (per shard distributed, over the driver's global arrays
+    in-process). A variant with a term absent from ``docs_offs`` cannot
+    match and is skipped; variant match sets are position-disjoint (one
+    token occupies each (doc, start)), so the sum is exact. A sequence
+    several pipelines share (english and multilingual often agree) runs
+    once."""
+    memo: dict[tuple[str, ...], tuple[list[int], list[int]]] = {}
+    for pipe, seqs in sorted(sequences.items()):
+        acc: dict[int, int] = {}
+        for seq in seqs:
+            if any(t not in docs_offs for t in seq):
+                continue
+            key = tuple(seq)
+            if key not in memo:
+                memo[key] = kernel(docs_offs, pos_vals, seq)
+            for d, c in zip(*memo[key]):
+                acc[d] = acc.get(d, 0) + c
+        if acc:
+            docs = sorted(acc)
+            yield pipe, docs, [acc[d] for d in docs]
+
+
 def search_phrase_positional(
     index: "FtsIndex", phrase: str, k: int = 10
 ) -> DataFrame:
@@ -730,9 +785,7 @@ def search_phrase_positional(
     but resolved ENTIRELY from the positional table: pruned scan of the
     phrase terms' rows → per-shard intersection kernel → docs join for
     url (and, under by_lang, the doc-pipeline filter)."""
-    return _search_positional(
-        index, phrase, k, phrase_match_kernel, "phrase_count"
-    )
+    return _search_positional(index, _resolve_positional(index, phrase, k))
 
 
 def search_phrase_prefix_positional(
@@ -747,15 +800,14 @@ def search_phrase_prefix_positional(
     deterministic df-desc/term-asc top-``max_expansions`` (one bounded
     dictionary job), then ONE positional job runs every variant over
     the same pruned scan of fixed-terms ∪ expansions rows."""
-    variants = _phrase_prefix_variants(
-        index,
-        phrase,
-        lambda pat, n: index.expand_terms(pat, "prefix", max_expand=n),
-        max_expansions,
-    )
     return _search_positional(
-        index, phrase, k, phrase_match_kernel, "phrase_count",
-        seq_variants=variants if variants else {},
+        index,
+        _resolve_positional(
+            index, phrase, k,
+            expand=lambda pat: index.expand_terms(
+                pat, "prefix", max_expand=max_expansions
+            ),
+        ),
     )
 
 
@@ -777,107 +829,61 @@ def search_near_positional(
     kernel call per shard, docs join for url — and ordered ``slop=0``
     returns exactly the phrase result (modulo the count column's
     name)."""
-    base = span_near_kernel if in_order else span_near_unordered_kernel
-
-    def kernel(docs_offs, pos_vals, seq):
-        return base(docs_offs, pos_vals, seq, slop)
-
-    return _search_positional(index, phrase, k, kernel, "near_count")
+    return _search_positional(
+        index,
+        _resolve_positional(index, phrase, k, slop=slop, in_order=in_order),
+    )
 
 
-def _search_positional(
-    index: "FtsIndex",
-    phrase: str,
-    k: int,
-    kernel,
-    count_col: str,
-    seq_variants: dict[str, list[list[str]]] | None = None,
-) -> DataFrame:
-    """Shared distributed plan for the positional kernels: pruned scan
-    of the sequence terms' positional rows → ``kernel`` per shard →
-    tombstone exclusion + docs join (url, and the doc-pipeline filter
-    under by_lang) → (count desc, doc_id asc) top-k.
-
-    ``seq_variants`` (pipeline -> list of concrete sequences) overrides
-    the single analyzed sequence per pipeline: each variant runs the
-    kernel independently and a doc's counts SUM across variants — the
-    multi-rewrite surface (phrase-prefix: one variant per dictionary
-    expansion of the last slot; variant match sets are position-disjoint
-    because one token occupies each (doc, start), so the sum is exact)."""
+def _search_positional(index: "FtsIndex", pq: _PositionalQuery) -> DataFrame:
+    """The distributed executor of a resolved positional query: pruned
+    scan of the sequence terms' positional rows → :func:`_match_variants`
+    per shard → tombstone exclusion + docs join (url, and the
+    doc-pipeline filter under by_lang) → (count desc, doc_id asc) top-k."""
     spark = index.spark
-    meta = index.meta
-    pos_path = check_positions_fresh(index)
-
-    if seq_variants is None:
-        sequences = {
-            p: [seq] for p, seq in _phrase_sequences(index, phrase).items()
-        }
-    else:
-        sequences = {
-            p: [s for s in vs if s] for p, vs in seq_variants.items()
-        }
-        sequences = {p: vs for p, vs in sequences.items() if vs}
-    empty = spark.createDataFrame(
-        [], f"doc_id long, url string, {count_col} long"
-    )
-    if not sequences:
-        return empty
+    count_col = pq.count_col
+    if not pq.sequences:
+        return spark.createDataFrame(
+            [], f"doc_id long, url string, {count_col} long"
+        )
     all_terms = sorted(
-        {t for vs in sequences.values() for seq in vs for t in seq}
+        {t for seqs in pq.sequences.values() for seq in seqs for t in seq}
     )
-    shard_size = int(meta["shard_size"])
-
-    scan = read_table(spark, pos_path, "positions").where(
+    shard_size = int(index.meta["shard_size"])
+    scan = read_table(spark, pq.path, "positions").where(
         F.col("term").isin(all_terms)
     )
-
-    seq_items = sorted(sequences.items())
+    sequences, kernel = pq.sequences, pq.kernel
 
     def match_shard(pdf: pd.DataFrame) -> pd.DataFrame:
         out_docs: list[int] = []
         out_pipes: list[str] = []
         out_counts: list[int] = []
-        if pdf.empty:
-            return pd.DataFrame(
-                {
-                    "doc_id": pd.Series(out_docs, dtype="int64"),
-                    "pipeline": pd.Series(out_pipes, dtype="object"),
-                    "match_count": pd.Series(out_counts, dtype="int64"),
-                }
-            )
-        base = int(pdf["shard_id"].iloc[0]) * shard_size
-        # term -> (doc_ids, offsets, lazy pos values)
-        decoded: dict[str, tuple[np.ndarray, np.ndarray, bytes]] = {}
-        for r in pdf.itertuples(index=False):
-            doc_ids, offsets = decode_position_group(
-                bytes(r.doc_blob), bytes(r.cnt_blob), base
-            )
-            decoded[r.term] = (doc_ids, offsets, bytes(r.pos_blob))
-        pos_cache: dict[str, np.ndarray] = {}
+        if not pdf.empty:
+            base = int(pdf["shard_id"].iloc[0]) * shard_size
+            # term -> (doc_ids, offsets, lazy pos values)
+            decoded: dict[str, tuple[np.ndarray, np.ndarray, bytes]] = {}
+            for r in pdf.itertuples(index=False):
+                doc_ids, offsets = decode_position_group(
+                    bytes(r.doc_blob), bytes(r.cnt_blob), base
+                )
+                decoded[r.term] = (doc_ids, offsets, bytes(r.pos_blob))
+            pos_cache: dict[str, np.ndarray] = {}
 
-        def pos_vals(term: str) -> np.ndarray:
-            v = pos_cache.get(term)
-            if v is None:
-                v = varbyte_decode(decoded[term][2]).astype(np.int64)
-                pos_cache[term] = v
-            return v
+            def pos_vals(term: str) -> np.ndarray:
+                v = pos_cache.get(term)
+                if v is None:
+                    v = varbyte_decode(decoded[term][2]).astype(np.int64)
+                    pos_cache[term] = v
+                return v
 
-        docs_offs = {t: (d, o) for t, (d, o, _) in decoded.items()}
-        for pipe, variants in seq_items:
-            acc: dict[int, int] = {}
-            for seq in variants:
-                # a sequence term with no postings in THIS shard means no
-                # doc of this shard can match this variant
-                if any(t not in decoded for t in set(seq)):
-                    continue
-                docs_m, counts_m = kernel(docs_offs, pos_vals, seq)
-                for d, c in zip(docs_m, counts_m):
-                    acc[d] = acc.get(d, 0) + c
-            if acc:
-                items = sorted(acc.items())
-                out_docs.extend(d for d, _ in items)
-                out_counts.extend(c for _, c in items)
-                out_pipes.extend([pipe] * len(items))
+            docs_offs = {t: (d, o) for t, (d, o, _) in decoded.items()}
+            for pipe, docs_m, counts_m in _match_variants(
+                sequences, kernel, docs_offs, pos_vals
+            ):
+                out_docs.extend(docs_m)
+                out_counts.extend(counts_m)
+                out_pipes.extend([pipe] * len(docs_m))
         return pd.DataFrame(
             {
                 "doc_id": pd.Series(out_docs, dtype="int64"),
@@ -910,4 +916,4 @@ def _search_positional(
         )
         .orderBy(F.desc(count_col), F.asc("doc_id"))
     )
-    return out.limit(k) if k > 0 else out
+    return out.limit(pq.k) if pq.k > 0 else out

@@ -31,6 +31,7 @@ import os
 import re
 import threading
 import time
+import weakref
 from collections import OrderedDict
 from collections.abc import Iterable, Iterator
 from dataclasses import dataclass, field
@@ -232,6 +233,17 @@ def _scored_rows(df: DataFrame) -> list[tuple[int, float]]:
     return [(int(r["doc_id"]), float(r["score"])) for r in df.collect()]
 
 
+def _rescore(cand, counts: dict, weight: float, k: int) -> list:
+    """The rescore phase of both tiers: ``score + weight * count`` per
+    (doc_id, score) candidate, re-sorted (score desc, doc_id asc), top-k."""
+    w = float(weight)
+    out = sorted(
+        ((d, s + w * counts.get(d, 0)) for d, s in cand),
+        key=lambda x: (-x[1], x[0]),
+    )
+    return out[:k] if k > 0 else out
+
+
 class _ByteLRU:
     """Byte-budgeted LRU — the one eviction policy behind the point tier's
     caches (postings, positional rows, field-filter ids). Each entry is
@@ -369,6 +381,19 @@ def _resolve_gate(
     )
 
 
+def _can_match(present, require_n: int, term_gmask, full_mask: int) -> bool:
+    """False when a query provably matches nothing with only the
+    ``present`` (in-dictionary) terms: none present, fewer than the
+    ``require_n`` distinct matches it needs, or a MUST group none of whose
+    terms is present."""
+    covered = 0
+    for t in present:
+        covered |= (term_gmask or {}).get(t, 0)
+    return len(present) >= max(1, require_n) and (
+        covered & full_mask
+    ) == full_mask
+
+
 # pattern kind -> (query token -> dictionary pattern, or None for a plain
 # word): the token syntax of the prefix / wildcard / regexp rewrites
 _PATTERN_OF = {
@@ -400,6 +425,31 @@ class SearchResult:
     results: DataFrame
     total_results_count: int
     timings: dict[str, float]
+
+
+# session -> [AQE value before its first serving handle warmed, handles
+# holding the serving conf]
+_SERVING_CONF: "weakref.WeakKeyDictionary" = weakref.WeakKeyDictionary()
+_SERVING_CONF_LOCK = threading.Lock()
+_AQE = "spark.sql.adaptive.enabled"
+
+
+def _hold_serving_conf(spark: SparkSession, hold: bool) -> None:
+    """Refcount the serving conf per session: the first handle to hold
+    it saves AQE and turns it off, the last to release it restores the
+    saved value — whatever order the handles close in."""
+    with _SERVING_CONF_LOCK:
+        held = _SERVING_CONF.get(spark)
+        if hold:
+            if held is None:
+                held = _SERVING_CONF[spark] = [spark.conf.get(_AQE, "true"), 0]
+                spark.conf.set(_AQE, "false")
+            held[1] += 1
+        elif held is not None:
+            held[1] -= 1
+            if held[1] == 0:
+                spark.conf.set(_AQE, held[0])
+                del _SERVING_CONF[spark]
 
 
 class _IncludeTooBig:
@@ -446,6 +496,7 @@ class FtsIndex:
         self._postings_df: DataFrame | None = None
         self._terms_df: DataFrame | None = None
         self._warm = False
+        self._serving_conf = False  # holds _hold_serving_conf
         self._term_dict: dict[str, tuple[int, int]] | None = None
         # point-serving tier (enable_point_serving), each a _ByteLRU:
         # term -> {shard_id: block table}; positional term -> (doc_ids,
@@ -519,14 +570,11 @@ class FtsIndex:
         """
         if self._warm:
             # idempotent: a repeat warm() would leak the persisted caches
-            # (re-persist without unpersist) and clobber _saved_aqe with the
-            # already-disabled value, so close() would restore AQE wrong
+            # (re-persist without unpersist)
             return self
-        if serving_conf and getattr(self, "_saved_aqe", None) is None:
-            self._saved_aqe = self.spark.conf.get(
-                "spark.sql.adaptive.enabled", "true"
-            )
-            self.spark.conf.set("spark.sql.adaptive.enabled", "false")
+        if serving_conf and not self._serving_conf:
+            _hold_serving_conf(self.spark, True)
+            self._serving_conf = True
         # cache partition count = n_shards, NOT spark.sql.shuffle.partitions:
         # the per-query applyInPandas reuses the cache partitioning, so its
         # task count is the cache's partition count — at 128 shuffle
@@ -578,17 +626,17 @@ class FtsIndex:
 
     def close(self) -> None:
         """Release the warm caches and restore session conf changed by
-        :meth:`warm` (AQE back to its prior value)."""
+        :meth:`warm` (AQE back to its prior value once no other warm
+        handle of the session holds it off)."""
         if self._postings_df is not None:
             self._postings_df.unpersist()
             self._postings_df = None
         if self._terms_df is not None:
             self._terms_df.unpersist()
             self._terms_df = None
-        saved = getattr(self, "_saved_aqe", None)
-        if saved is not None:
-            self.spark.conf.set("spark.sql.adaptive.enabled", saved)
-            self._saved_aqe = None
+        if self._serving_conf:
+            _hold_serving_conf(self.spark, False)
+            self._serving_conf = False
         self._term_dict = None
         self._warm = False
         self._point_cache = None
@@ -1040,14 +1088,9 @@ class FtsIndex:
         or the tombstone set is past the driver-array bound. Raises
         ``PositionsUnavailableError`` when the positional table is absent
         or stale (both tiers)."""
-        from .positions import phrase_match_kernel
+        from .positions import _resolve_positional
 
-        return self._positional_point(
-            phrase,
-            k,
-            phrase_match_kernel,
-            lambda: self.search_phrase_positional(phrase, k),
-        )
+        return self._positional_point(_resolve_positional(self, phrase, k))
 
     def search_phrase_prefix(
         self, phrase: str, k: int = 10, max_expansions: int = 50
@@ -1078,28 +1121,16 @@ class FtsIndex:
         then every variant runs the in-process phrase kernel over the
         positional point cache, counts summed per doc. Same fallbacks
         as :meth:`search_phrase_point`."""
-        from .positions import (
-            _phrase_prefix_variants,
-            check_positions_fresh,
-            phrase_match_kernel,
-        )
+        from .positions import _resolve_positional
 
-        check_positions_fresh(self)
         point = self._term_dict is not None
-        variants = _phrase_prefix_variants(
-            self,
-            phrase,
-            lambda pat, n: self._expand(pat, "prefix", 0, n, point),
-            max_expansions,
-        )
-        if not variants:
-            return []
         return self._positional_point(
-            phrase,
-            k,
-            phrase_match_kernel,
-            lambda: self.search_phrase_prefix(phrase, k, max_expansions),
-            seq_variants=variants,
+            _resolve_positional(
+                self, phrase, k,
+                expand=lambda pat: self._expand(
+                    pat, "prefix", 0, max_expansions, point
+                ),
+            )
         )
 
     def search_near_positional(
@@ -1126,105 +1157,60 @@ class FtsIndex:
         point cache, same fallbacks, same output contract (top-k
         ``(doc_id, near_count)``, count desc / doc_id asc), running
         the ordered or unordered span-near kernel in-process."""
-        from .positions import span_near_kernel, span_near_unordered_kernel
-
-        base = span_near_kernel if in_order else span_near_unordered_kernel
-
-        def kernel(docs_offs, pos_vals, seq):
-            return base(docs_offs, pos_vals, seq, slop)
+        from .positions import _resolve_positional
 
         return self._positional_point(
-            phrase,
-            k,
-            kernel,
-            lambda: self.search_near_positional(phrase, slop, k, in_order),
+            _resolve_positional(
+                self, phrase, k, slop=slop, in_order=in_order
+            )
         )
 
     def _positional_point(
-        self, phrase: str, k: int, kernel, fallback_df,
-        seq_variants: dict[str, list[list[str]]] | None = None,
-    ) -> list[tuple[int, int]]:
-        """Shared driver-tier scaffolding for the positional kernels:
-        LRU-cached positional rows, by_lang pipeline-code filtering,
-        tombstone exclusion, (count desc, doc_id asc) top-k — with
-        ``kernel`` doing the matching and ``fallback_df`` (a callable
-        returning the distributed surface's DataFrame) taking over
-        whenever the tier cannot serve in-process. ``seq_variants``
-        (pipeline -> concrete sequences, counts summed per doc) is the
-        multi-rewrite surface — see ``positions._search_positional``."""
-        from .positions import check_positions_fresh
-
-        check_positions_fresh(self)
-        pairs = self._positional_point_inproc(
-            phrase, kernel, seq_variants=seq_variants
-        )
-        if pairs is None:
-            return [
-                (int(r[0]), int(r[2])) for r in fallback_df().collect()
-            ]
-        hits = sorted(pairs, key=lambda x: (-x[1], x[0]))
-        return hits[:k] if k > 0 else hits
-
-    def _positional_point_inproc(
-        self, phrase: str, kernel,
-        seq_variants: dict[str, list[list[str]]] | None = None,
+        self, pq, fallback: bool = True
     ) -> list[tuple[int, int]] | None:
-        """The in-process half of :meth:`_positional_point`: ALL matching
-        ``(doc_id, count)`` pairs (unsorted; tombstones excluded), or
-        ``None`` when the driver tier cannot serve this phrase (tier off,
-        term over the cache budget, by_lang pipeline array too big, too
-        many tombstones) and the caller must fall back to the distributed
-        plan. Callers must have run ``check_positions_fresh`` first.
-        With ``seq_variants``, each pipeline runs every variant and a
-        doc's counts sum across them (multi-rewrite surface)."""
-        from .positions import _phrase_sequences, fetch_point_positions
-
-        if (
-            self._pos_point_cache is None
-            or self._term_dict is None
-            or self.n_deleted > self.dead_broadcast_max
-        ):
-            return None
-        pipe_codes: np.ndarray | None = None
-        pipe_ids: dict[str, int] = {}
-        if self.preset == "by_lang":
-            got = self._point_doc_pipelines()
-            if got is None:
-                return None
-            pipe_codes, pipe_ids = got
-        # sequence variants whose terms are not all in the dictionary can
-        # never match (same skip as the distributed kernel's per-shard
-        # membership check, applied globally)
-        if seq_variants is None:
-            raw = {
-                p: [seq]
-                for p, seq in _phrase_sequences(self, phrase).items()
-            }
-        else:
-            raw = seq_variants
-        sequences = {
-            p: [
-                seq
-                for seq in vs
-                if seq and all(t in self._term_dict for t in seq)
-            ]
-            for p, vs in raw.items()
-        }
-        sequences = {p: vs for p, vs in sequences.items() if vs}
-        if not sequences:
-            return []
-        need = sorted(
-            {t for vs in sequences.values() for seq in vs for t in seq}
+        """The positional point executor: the top-k ``(doc_id, count)``
+        pairs of ``pq`` (a resolved ``positions._PositionalQuery``; count
+        desc, doc_id asc, tombstones excluded) from the positional LRU.
+        What it cannot serve — tier off, tombstones past the driver-array
+        bound, a by_lang pipeline-code array or a term's positional rows
+        over budget — runs the SAME resolved query on the distributed
+        executor (``positions._search_positional``), never re-analyzed
+        or re-expanded; without ``fallback`` it returns None instead."""
+        from .positions import (
+            _match_variants,
+            _search_positional,
+            fetch_point_positions,
         )
+
+        if not pq.sequences:
+            return []
+        td = self._term_dict
+        need = sorted(
+            {t for seqs in pq.sequences.values() for seq in seqs for t in seq}
+        )
+        pipes = None
+        served = (
+            self._pos_point_cache is not None
+            and td is not None
+            and self.n_deleted <= self.dead_broadcast_max
+        )
+        if served and self.preset == "by_lang":
+            pipes = self._point_doc_pipelines()
+            served = pipes is not None
         # a term's positional footprint is ~8 B per posting (ids+offsets)
         # + 8 B per occurrence; past half the budget it cannot live in
         # the driver cache — the distributed path streams it instead
-        half = self._pos_point_cache.max_bytes // 2
-        if any(
-            8 * (2 * self._term_dict[t][0] + self._term_dict[t][1]) > half
+        served = served and all(
+            8 * (2 * td[t][0] + td[t][1]) <= self._pos_point_cache.max_bytes // 2
             for t in need
-        ):
-            return None
+        )
+        if not served:
+            if not fallback:
+                return None
+            return [
+                (int(r[0]), int(r[2]))
+                for r in _search_positional(self, pq).collect()
+            ]
 
         def load(missing: list[str]) -> dict:
             fetched = fetch_point_positions(self, missing)
@@ -1246,37 +1232,24 @@ class FtsIndex:
             entries = self._pos_point_cache.fetch(need, load)
         docs_offs = {t: (d, o) for t, (d, o, _) in entries.items()}
         pairs: list[tuple[int, int]] = []
-        by_seq: dict[tuple[str, ...], tuple[list[int], list[int]]] = {}
-        for pipe, variants in sorted(sequences.items()):
-            acc: dict[int, int] = {}
-            for seq in variants:
-                key = tuple(seq)
-                if key not in by_seq:  # english/multilingual often agree
-                    by_seq[key] = kernel(
-                        docs_offs, lambda t: entries[t][2], seq
-                    )
-                for d, c in zip(*by_seq[key]):
-                    acc[d] = acc.get(d, 0) + c
-            if not acc:
-                continue
-            docs_m = sorted(acc)
-            counts_m = [acc[d] for d in docs_m]
-            if pipe_codes is not None:
-                # keep only docs BUILT by this pipeline (each doc belongs
-                # to exactly one, so pipelines never double-report a doc)
-                code = pipe_ids[pipe]
-                keep = pipe_codes[np.asarray(docs_m, dtype=np.int64)] == code
-                pairs.extend(
-                    p for p, ok in zip(zip(docs_m, counts_m), keep) if ok
-                )
-            else:
+        for pipe, docs_m, counts_m in _match_variants(
+            pq.sequences, pq.kernel, docs_offs, lambda t: entries[t][2]
+        ):
+            if pipes is None:
                 pairs.extend(zip(docs_m, counts_m))
+                continue
+            # keep only docs BUILT by this pipeline (each doc belongs to
+            # exactly one, so pipelines never double-report a doc)
+            codes, pipe_ids = pipes
+            keep = codes[np.asarray(docs_m, dtype=np.int64)] == pipe_ids[pipe]
+            pairs.extend(p for p, ok in zip(zip(docs_m, counts_m), keep) if ok)
         dead = self._dead_ids()
         if dead is not None and pairs:
             ids = np.fromiter((d for d, _ in pairs), dtype=np.int64)
             alive = ~np.isin(ids, dead)
             pairs = [p for p, a in zip(pairs, alive) if a]
-        return pairs
+        pairs.sort(key=lambda x: (-x[1], x[0]))
+        return pairs[: pq.k] if pq.k > 0 else pairs
 
     def _point_doc_pipelines(
         self,
@@ -1291,13 +1264,13 @@ class FtsIndex:
         if cached is not None:
             return cached if cached != "too_big" else None
         from .functions.udfs import _LANG_PRESETS
+        from .positions import _pipelines
 
         n_slots = int(self.meta.get("n_shards", 1)) * self.shard_size
         if n_slots > self._pos_point_cache.max_bytes:
             self._pos_pipe_cache = "too_big"
             return None
-        presets = sorted({*_LANG_PRESETS.values(), "multilingual"})
-        pipe_ids = {p: i for i, p in enumerate(presets)}
+        pipe_ids = {p: i for i, p in enumerate(_pipelines(self))}
         tbl = self.docs().select("doc_id", "lang").toArrow()
         ids = tbl.column("doc_id").to_numpy(zero_copy_only=False).astype(
             np.int64, copy=False
@@ -1389,6 +1362,27 @@ class FtsIndex:
             .distinct()
         )
 
+    def _match_set(
+        self, query: str, preset: str | None = None, *cols: str,
+        mult: dict[str, int] | None = None,
+    ) -> DataFrame | None:
+        """The distinct docs matching ANY term of ``query`` (OR
+        semantics, :meth:`search_bm25`'s normalization, tombstones
+        anti-joined; :meth:`_match_count_df`), joined on doc_id to the
+        docs-table ``cols`` when any are named — the one match-set
+        resolve of the facet family and ``search_full``'s total
+        (``mult``: a query the caller already analyzed). None when the
+        query analyzes to nothing: the caller returns its own empty
+        schema without a Spark job."""
+        if mult is None:
+            mult = self._query_mult(query, preset)
+        if not mult:
+            return None
+        matches = self._match_count_df(mult)
+        if not cols:
+            return matches
+        return matches.join(self.docs().select("doc_id", *cols), "doc_id")
+
     def _decoded_term_docs(self) -> DataFrame:
         """(term, doc_id) rows for EVERY posting in the index, decoding
         ONLY the doc blobs (~1/3 of the posting bytes; tf/dl never read —
@@ -1453,15 +1447,17 @@ class FtsIndex:
         dictionary slice. Stats-staleness under pending tombstones
         matches every other surface (deleted docs leave the match set
         immediately; bg_df/n_docs refresh at compaction)."""
-        mult = self._query_mult(query, preset)
-        if not mult:
+        def empty() -> DataFrame:
             return self.spark.range(0).select(
                 F.col("id").cast("string").alias("term"),
                 F.col("id").alias("fg_df"),
                 F.col("id").alias("bg_df"),
                 F.col("id").cast("double").alias("lift"),
             )
-        matches = self._match_count_df(mult)
+
+        matches = self._match_set(query, preset)
+        if matches is None:
+            return empty()
         # r6: when the match-id set fits the driver/broadcast bound (the
         # same bound the WAND `within` filter uses), the foreground count
         # runs INSIDE the doc-blob decode kernel against the sorted id
@@ -1487,12 +1483,7 @@ class FtsIndex:
             fg = fg.crossJoin(F.broadcast(m_df))
         else:
             if len(ids_arr) == 0:
-                return self.spark.range(0).select(
-                    F.col("id").cast("string").alias("term"),
-                    F.col("id").alias("fg_df"),
-                    F.col("id").alias("bg_df"),
-                    F.col("id").cast("double").alias("lift"),
-                )
+                return empty()
             m_col = F.lit(float(len(ids_arr)))
             bc = self.spark.sparkContext.broadcast(ids_arr)
             shard_size = self.shard_size
@@ -1577,17 +1568,14 @@ class FtsIndex:
 
         Returns (facet, n_docs) ordered by n_docs desc, facet asc.
         """
-        mult = self._query_mult(query, preset)
-        if not mult:
+        matches = self._match_set(query, preset, facet)
+        if matches is None:
             return self.spark.range(0).select(
                 F.col("id").cast("string").alias(facet),
                 F.col("id").alias("n_docs"),
             )
-        matches = self._match_count_df(mult)
-        docs = self.docs().select("doc_id", facet)
         return (
-            matches.join(docs, "doc_id")
-            .groupBy(facet)
+            matches.groupBy(facet)
             .agg(F.count("*").cast("long").alias("n_docs"))
             .orderBy(F.desc("n_docs"), F.asc(facet))
         )
@@ -1615,19 +1603,13 @@ class FtsIndex:
         TakeOrderedAndProject — per-partition top-k heaps and one
         reduce, never a global sort. The matches⋈docs join is the only
         wide exchange, exactly the facet plans' shape."""
-        mult = self._query_mult(query, preset)
-        if not mult:
+        matches = self._match_set(query, preset, "url", by)
+        if matches is None:
             return self.spark.createDataFrame(
                 [], f"doc_id long, url string, {by} long"
             )
-        matches = self._match_count_df(mult)
-        docs = self.docs().select("doc_id", "url", by)
         key = F.asc(by) if ascending else F.desc(by)
-        out = (
-            matches.join(docs, "doc_id")
-            .select("doc_id", "url", by)
-            .orderBy(key, F.asc("doc_id"))
-        )
+        out = matches.select("doc_id", "url", by).orderBy(key, F.asc("doc_id"))
         return out.limit(k) if k > 0 else out
 
     def facet_histogram(
@@ -1657,20 +1639,17 @@ class FtsIndex:
         """
         if width <= 0:
             raise ValueError(f"width must be > 0, got {width}")
-        mult = self._query_mult(query, preset)
-        if not mult:
+        matches = self._match_set(query, preset, col)
+        if matches is None:
             return self.spark.range(0).select(
                 F.col("id").alias("bucket"), F.col("id").alias("n_docs")
             )
-        matches = self._match_count_df(mult)
-        docs = self.docs().select("doc_id", col)
         bucket = (
             F.floor(F.col(col).cast("double") / F.lit(float(width)))
             * F.lit(int(width))
         ).cast("long")
         return (
-            matches.join(docs, "doc_id")
-            .groupBy(bucket.alias("bucket"))
+            matches.groupBy(bucket.alias("bucket"))
             .agg(F.count("*").cast("long").alias("n_docs"))
             .orderBy(F.asc("bucket"))
         )
@@ -1692,8 +1671,8 @@ class FtsIndex:
         Returns (n_docs, min_v, max_v, avg_v, sum_v); avg rounded to 4
         decimals for cross-engine float stability.
         """
-        mult = self._query_mult(query, preset)
-        if not mult:
+        matches = self._match_set(query, preset, col)
+        if matches is None:
             return self.spark.range(0).select(
                 F.col("id").alias("n_docs"),
                 F.col("id").alias("min_v"),
@@ -1701,11 +1680,8 @@ class FtsIndex:
                 F.col("id").cast("double").alias("avg_v"),
                 F.col("id").alias("sum_v"),
             )
-        matches = self._match_count_df(mult)
-        docs = self.docs().select("doc_id", col)
         return (
-            matches.join(docs, "doc_id")
-            .agg(
+            matches.agg(
                 F.count("*").cast("long").alias("n_docs"),
                 F.min(col).cast("long").alias("min_v"),
                 F.max(col).cast("long").alias("max_v"),
@@ -1740,21 +1716,17 @@ class FtsIndex:
         is the mode the DuckDB contract row runs so the hash gate stays
         exact. Same doc-blob-only match plan as :meth:`facet_counts`
         (tf/dl bytes never decoded)."""
-        mult = self._query_mult(query, preset)
-        if not mult:
+        matches = self._match_set(query, preset, col)
+        if matches is None:
             return self.spark.range(1).select(
                 F.lit(0).cast("long").alias("n_values")
             )
-        matches = self._match_count_df(mult)
-        docs = self.docs().select("doc_id", col)
         agg = (
             F.count_distinct(F.col(col))
             if exact
             else F.approx_count_distinct(col, rsd)
         )
-        return matches.join(docs, "doc_id").agg(
-            agg.cast("long").alias("n_values")
-        )
+        return matches.agg(agg.cast("long").alias("n_values"))
 
     def facet_percentiles(
         self,
@@ -1782,13 +1754,9 @@ class FtsIndex:
         pcts = [float(p) for p in percentiles]
         if not pcts or any(not 0.0 <= p <= 1.0 for p in pcts):
             raise ValueError(f"percentiles must be in [0, 1]: {pcts}")
-        mult = self._query_mult(query, preset)
-        if not mult:
-            return self.spark.createDataFrame(
-                [], "pct double, value double"
-            )
-        matches = self._match_count_df(mult)
-        docs = self.docs().select("doc_id", col)
+        matches = self._match_set(query, preset, col)
+        if matches is None:
+            return self.spark.createDataFrame([], "pct double, value double")
         pct_arr = F.array(*[F.lit(p) for p in pcts])
         agg = (
             F.percentile(F.col(col), pct_arr)
@@ -1796,8 +1764,7 @@ class FtsIndex:
             else F.percentile_approx(F.col(col), pct_arr, F.lit(accuracy))
         )
         return (
-            matches.join(docs, "doc_id")
-            .agg(agg.alias("vals"))
+            matches.agg(agg.alias("vals"))
             .select(F.posexplode("vals").alias("pos", "value"))
             .select(
                 F.element_at(pct_arr, F.col("pos") + 1).alias("pct"),
@@ -1842,32 +1809,23 @@ class FtsIndex:
         # job, one candidate-restricted positional job, N rows of Python
         # math. The float arithmetic is the same IEEE add/multiply in the
         # same order, so scores are bit-identical.
-        cand_rows = self.search_bm25(
-            query, k=n_candidates, preset=preset, mode="wand"
-        ).collect()
+        cand = _scored_rows(
+            self.search_bm25(query, k=n_candidates, preset=preset, mode="wand")
+        )
         schema = "doc_id long, score double"
-        if not cand_rows:
+        if not cand:
             return self.spark.createDataFrame([], schema)
-        ids = [int(r["doc_id"]) for r in cand_rows]
         # the phrase-match set is corpus-dependent (unbounded); the isin
         # restriction pushes to the positional plan's docs-join side, and
         # its output is <= N rows — bounded at any corpus scale
         counts = {
             int(r["doc_id"]): int(r["phrase_count"])
             for r in self.search_phrase_positional(phrase, k=0)
-            .where(F.col("doc_id").isin(ids))
+            .where(F.col("doc_id").isin([d for d, _ in cand]))
             .select("doc_id", "phrase_count")
             .collect()
         }
-        w = float(weight)
-        out = [
-            (int(r["doc_id"]), float(r["score"]) + w * counts.get(int(r["doc_id"]), 0))
-            for r in cand_rows
-        ]
-        out.sort(key=lambda x: (-x[1], x[0]))
-        if k > 0:
-            out = out[:k]
-        return self._local_result_df(out, schema)
+        return self._local_result_df(_rescore(cand, counts, weight, k), schema)
 
     def _local_result_df(self, rows: list[tuple], schema) -> DataFrame:
         """Bounded driver-side rows -> Arrow LocalRelation DataFrame (see
@@ -1897,11 +1855,7 @@ class FtsIndex:
             query, k=n_candidates, preset=preset
         )
         counts = dict(self.search_phrase_point(phrase, k=0))
-        out = [
-            (d, s + float(weight) * counts.get(d, 0)) for d, s in cand
-        ]
-        out.sort(key=lambda x: (-x[1], x[0]))
-        return out[:k] if k > 0 else out
+        return _rescore(cand, counts, weight, k)
 
     def search_bm25_collapsed(
         self,
@@ -2046,40 +2000,29 @@ class FtsIndex:
                 F.desc("unique_matches"), F.desc("total_matches"), F.asc("doc_id")
             ]
             scored = self._reference_scored(mult)
-            if with_total:
-                scored = scored.persist()
-                total = scored.count()
-            else:
-                total = -1
-            top = scored.orderBy(*order)
-            if k > 0:
-                top = top.limit(k)
-            rows = top.collect()
-            local = self._local_result_df(rows, top.schema)
-            if with_total:
-                scored.unpersist()
-        elif scorer == "bm25" and mode == "relational":
-            order = [F.desc("score"), F.asc("doc_id")]
-            scored = self._bm25_scored(mult)
-            if with_total:
-                scored = scored.persist()
-                total = scored.count()
-            else:
-                total = -1
-            top = scored.orderBy(*order)
-            if k > 0:
-                top = top.limit(k)
-            rows = top.collect()
-            local = self._local_result_df(rows, top.schema)
-            if with_total:
-                scored.unpersist()
         elif scorer == "bm25":
             order = [F.desc("score"), F.asc("doc_id")]
-            rows = self._bm25_wand(mult, k, hydrate=False).collect()
-            local = self._local_result_df(rows, WAND_SCHEMA)
-            total = self._match_count_df(mult).count() if with_total else -1
+            scored = self._bm25_scored(mult) if mode == "relational" else None
         else:
             raise ValueError(f"unknown scorer {scorer!r}")
+        if scored is None:
+            rows = self._bm25_wand(mult, k, hydrate=False).collect()
+            local = self._local_result_df(rows, WAND_SCHEMA)
+            total = (
+                self._match_set(query, mult=mult).count() if with_total else -1
+            )
+        else:
+            if with_total:
+                scored = scored.persist()
+                total = scored.count()
+            else:
+                total = -1
+            top = scored.orderBy(*order)
+            if k > 0:
+                top = top.limit(k)
+            local = self._local_result_df(top.collect(), top.schema)
+            if with_total:
+                scored.unpersist()
         timings["search_tokens"] = time.monotonic() - t1
 
         out = self._hydrate(local, order) if hydrate else local.orderBy(*order)
@@ -3230,16 +3173,13 @@ class FtsIndex:
         """The distributed include restriction of a boolean query: the
         ``within`` set, its field filters and the docs matching each
         phrase / near clause, intersected."""
+        from .positions import _resolve_positional, _search_positional
+
         incl_df = self._within_df(within)
         parts = [self._filters_df(bq.filters)] if bq.filters else []
         for ph, slop in [(ph, 0) for ph in bq.phrases] + list(bq.near):
-            parts.append(
-                (
-                    self.search_phrase_positional(ph, k=0)
-                    if slop == 0
-                    else self.search_near_positional(ph, slop, k=0)
-                ).select("doc_id")
-            )
+            pq = _resolve_positional(self, ph, 0, slop=slop or None)
+            parts.append(_search_positional(self, pq).select("doc_id"))
         for part in parts:
             incl_df = (
                 part
@@ -3421,27 +3361,18 @@ class FtsIndex:
         ``PositionsUnavailableError`` the distributed path raises — or a
         clause term over the cache budget); an empty array means a
         clause provably matches nothing."""
-        from .positions import (
-            PositionsUnavailableError,
-            check_positions_fresh,
-            phrase_match_kernel,
-            span_near_kernel,
-        )
+        from .positions import PositionsUnavailableError, _resolve_positional
 
         try:
-            check_positions_fresh(self)
+            clauses = [
+                _resolve_positional(self, ph, 0, slop=slop or None)
+                for ph, slop in [(p, 0) for p in bq.phrases] + list(bq.near)
+            ]
         except PositionsUnavailableError:
             return None
         ids: np.ndarray | None = None
-        for ph, slop in [(p, 0) for p in bq.phrases] + list(bq.near):
-            if slop == 0:
-                kern = phrase_match_kernel
-            else:
-
-                def kern(docs_offs, pos_vals, seq, _s=slop):
-                    return span_near_kernel(docs_offs, pos_vals, seq, _s)
-
-            pairs = self._positional_point_inproc(ph, kern)
+        for pq in clauses:
+            pairs = self._positional_point(pq, fallback=False)
             if pairs is None:
                 return None
             cur = np.array(sorted(d for d, _ in pairs), dtype=np.int64)
@@ -3464,13 +3395,16 @@ class FtsIndex:
         queries) are in-process. Returns ``_INCLUDE_TOO_BIG`` when the id
         set exceeds the driver bound (``include_broadcast_max``): the
         distributed relational plan serves those, exactly like the
-        distributed WAND path does."""
+        distributed WAND path does; the verdict is cached like an id
+        set, so a repeat skips the id job."""
         cache = self._point_filter_cache
         ids = cache.get(filters) if cache is not None else None
         if ids is None:
             ids = self._within_ids(self._filters_df(list(filters)))
-            if cache is not None and ids is not _INCLUDE_TOO_BIG:
-                cache.put(filters, ids, 8 * int(ids.size))
+            if cache is not None:
+                # an over-bound verdict is remembered too (8 B, like one id)
+                size = 1 if ids is _INCLUDE_TOO_BIG else int(ids.size)
+                cache.put(filters, ids, 8 * size)
         return ids
 
     def _point_restriction(self, bq):
@@ -3570,12 +3504,7 @@ class FtsIndex:
             return None
         td = self._term_dict
         present = {t: (m, td[t][0]) for t, m in rq.mult.items() if t in td}
-        covered = 0
-        for t in present:
-            covered |= (rq.term_gmask or {}).get(t, 0)
-        if len(present) < max(1, rq.require_n) or (
-            (covered & rq.full_mask) != rq.full_mask
-        ):
+        if not _can_match(present, rq.require_n, rq.term_gmask, rq.full_mask):
             return {}, []
         excl = [t for t in rq.excl if t in td]
         # a term with df * 20 bytes > budget/2 cannot be point-cached;
@@ -3635,7 +3564,7 @@ class FtsIndex:
         restriction — the same array the distributed kernel receives.
         ``n_docs``/``avgdl`` override the index-local stats — the
         federated point tier scores every snapshot with the GLOBAL
-        constants, exactly like :meth:`_bm25_wand_stats`."""
+        constants, exactly like :meth:`_bm25_wand`'s overrides."""
         eff_n_docs = self.n_docs if n_docs is None else int(n_docs)
         eff_avgdl = self.avgdl if avgdl is None else float(avgdl)
         with self._point_lock:
@@ -4005,19 +3934,40 @@ class FtsIndex:
         term_gmask: dict[str, int] | None = None,
         full_mask: int = 0,
         after: tuple[float, int] | None = None,
+        present: dict[str, tuple[float, int]] | None = None,
+        n_docs: int | None = None,
+        avgdl: float | None = None,
     ) -> DataFrame:
         """Document-partitioned block-max WAND: each shard's posting rows for
         the query terms are processed by one kernel that decodes only the
         skip blocks whose upper-bound sum can beat the running threshold.
 
-        Cold: single Spark job — df stats ride in on a broadcast join, idf
-        computed in-kernel from (df, n_docs). Warm + driver dictionary: the
-        (mult, df) map travels INSIDE the kernel closure, so the plan is
+        Cold: one pruned terms lookup, then the (mult, df) map rides the
+        kernel closure (idf computed in-kernel from (df, n_docs)) and the
+        scan feeds the kernel through one shard-bounded exchange. Warm +
+        driver dictionary: the map comes from the driver dictionary, so
+        the plan is
         just cache-scan → filter → applyInPandas → TakeOrdered — zero
         broadcast stages and zero exchanges per query (the cache is
-        pre-partitioned by shard_id)."""
+        pre-partitioned by shard_id).
+
+        ``present`` (term -> (mult, df)), ``n_docs`` and ``avgdl``
+        override the index-local stats — the scatter half of federated
+        search (:class:`fts_engine_spark.federated.FederatedFtsIndex`)
+        passes the GLOBAL ones, with ``present`` and ``excl_mult`` already
+        restricted to this index's dictionary; only the closure constants
+        differ, so the plan is the single-index one. Overridden stats have
+        no relational twin: past ``dead_broadcast_max`` pending deletes
+        they raise instead of falling back."""
         excl_mult = excl_mult or {}
         if self.n_deleted > self.dead_broadcast_max:
+            if present is not None:
+                raise RuntimeError(
+                    f"{self.n_deleted} pending deletes exceed "
+                    f"dead_broadcast_max={self.dead_broadcast_max}; run "
+                    "compact_index on this sub-index before federated "
+                    "serving"
+                )
             # too many pending deletes for the sorted-id broadcast; the
             # relational plan anti-joins the tombstone TABLE instead
             # (identical results, hash-proven) — and compact_index is due
@@ -4041,36 +3991,30 @@ class FtsIndex:
                 mult, k, hydrate, require_n, excl_mult, incl_df,
                 term_gmask=term_gmask, full_mask=full_mask, after=after,
             )
+        if present is None:
+            # (mult, df) per present term: driver-dict lookups when warm,
+            # ONE pruned terms-table lookup otherwise — both feed the
+            # kernel CLOSURE. The former cold path attached the stats via
+            # two broadcast joins (~250-300 ms of fixed cost each,
+            # measured r6); now cold and warm run the same zero-broadcast
+            # plan shape.
+            stats_all = self.term_stats(list(mult) + list(excl_mult))
+            present = {
+                t: (m, stats_all[t][0])
+                for t, m in mult.items()
+                if t in stats_all
+            }
+            excl_mult = {t: m for t, m in excl_mult.items() if t in stats_all}
+        if not _can_match(present, require_n, term_gmask, full_mask):
+            return self._empty_bm25_result(hydrate)  # no job
         dead_bc = self._dead_broadcast()
         incl_bc = (
             self.spark.sparkContext.broadcast(incl_ids)
             if incl_ids is not None
             else None
         )
-        # (mult, df) per present term: driver-dict lookups when warm, ONE
-        # pruned terms-table lookup otherwise — both feed the kernel
-        # CLOSURE. The former cold path attached the stats via two
-        # broadcast joins (~250-300 ms of fixed cost each, measured r6);
-        # now cold and warm run the same zero-broadcast plan shape.
-        stats_all = self.term_stats(list(mult) + list(excl_mult))
-        present = {
-            t: (m, stats_all[t][0]) for t, m in mult.items() if t in stats_all
-        }
-        if not present or (require_n > 0 and len(present) < require_n):
-            # conjunctive: a query term absent from the corpus can
-            # never be matched — the whole result is empty, no job
-            return self._empty_bm25_result(hydrate)
-        if full_mask and term_gmask:
-            covered = 0
-            for t in present:
-                covered |= term_gmask.get(t, 0)
-            if (covered & full_mask) != full_mask:
-                # a required group has no term in the dictionary:
-                # nothing can match — empty result, no job
-                return self._empty_bm25_result(hydrate)
-        excl_present = [t for t in excl_mult if t in stats_all]
         posts = self._pruner(
-            self._read_postings(), list(present) + excl_present
+            self._read_postings(), list(present) + list(excl_mult)
         )
         if dict(posts.dtypes).get("shard_id") != "bigint":
             posts = posts.withColumn(
@@ -4082,9 +4026,12 @@ class FtsIndex:
             # shard-partitioned and skips the exchange entirely
             posts = posts.repartition(self._agg_parts(), "shard_id")
         kernel = make_wand_kernel(
-            self.n_docs, self.shard_size, self.avgdl, k,
+            self.n_docs if n_docs is None else n_docs,
+            self.shard_size,
+            self.avgdl if avgdl is None else avgdl,
+            k,
             term_stats=present, require_n=require_n,
-            exclude_terms=frozenset(excl_present) or None,
+            exclude_terms=frozenset(excl_mult) or None,
             dead_bcast=dead_bc, include_bcast=incl_bc,
             term_gmask=term_gmask, full_mask=full_mask, after=after,
         )
@@ -4095,68 +4042,6 @@ class FtsIndex:
         if k > 0:
             out = out.limit(k)
         return self._maybe_hydrate(out, hydrate, bounded=k > 0)
-
-    def _bm25_wand_stats(
-        self,
-        present: dict[str, tuple[float, int]],
-        k: int,
-        *,
-        n_docs: int,
-        avgdl: float,
-        require_n: int = 0,
-        excl_terms: "frozenset[str] | None" = None,
-        incl_ids: "np.ndarray | None" = None,
-    ) -> DataFrame:
-        """Per-shard block-max WAND scored against EXTERNALLY-SUPPLIED
-        global stats — the scatter half of federated (multi-snapshot)
-        search. ``present`` maps term -> (mult, GLOBAL df), already
-        restricted to terms this sub-index actually contains; ``n_docs``
-        / ``avgdl`` are the corpus-wide values aggregated across all
-        sub-indexes by :class:`fts_engine_spark.federated.FederatedFtsIndex`.
-
-        Same plan as the warm :meth:`_bm25_wand` branch (pruned posting
-        scan -> one applyInPandas kernel per shard -> local top-k) —
-        only the closure constants differ, so the per-sub cost of a
-        federated query equals a single-index query. Returns the
-        UNHYDRATED sub-local top-k (doc_id, score); doc ids are dense
-        PER SUB-INDEX and must be mapped to urls before any cross-sub
-        merge. Tombstones are honored via the same sorted-id broadcast;
-        above ``dead_broadcast_max`` pending deletes the sub must be
-        compacted first (the single-index relational fallback has no
-        stats-override twin — fail loudly rather than mis-score)."""
-        if self.n_deleted > self.dead_broadcast_max:
-            raise RuntimeError(
-                f"{self.n_deleted} pending deletes exceed "
-                f"dead_broadcast_max={self.dead_broadcast_max}; run "
-                "compact_index on this sub-index before federated serving"
-            )
-        if not present:
-            return self._empty_bm25_result()
-        dead_bc = self._dead_broadcast()
-        incl_bc = (
-            self.spark.sparkContext.broadcast(incl_ids)
-            if incl_ids is not None
-            else None
-        )
-        excl_list = sorted(excl_terms or ())
-        posts = self._pruner(
-            self._read_postings(), list(present) + excl_list
-        )
-        if dict(posts.dtypes).get("shard_id") != "bigint":
-            posts = posts.withColumn("shard_id", F.col("shard_id").cast("long"))
-        kernel = make_wand_kernel(
-            n_docs, self.shard_size, avgdl, k,
-            term_stats=present, require_n=require_n,
-            exclude_terms=frozenset(excl_list) or None,
-            dead_bcast=dead_bc, include_bcast=incl_bc,
-        )
-        local_topk = posts.groupBy("shard_id").applyInPandas(
-            kernel, schema=WAND_SCHEMA
-        )
-        out = local_topk.orderBy(F.desc("score"), F.asc("doc_id"))
-        if k > 0:
-            out = out.limit(k)
-        return out
 
     def _maybe_hydrate(
         self, scored: DataFrame, hydrate: bool, bounded: bool = True

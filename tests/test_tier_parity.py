@@ -3,17 +3,18 @@ its distributed twin's rows in each state the tier can be in —
 
 - ``warm``: tier enabled, served in-process (a repeat call runs no job);
 - ``off``: tier never enabled (cold handle);
-- ``oversized``: a budget so small that almost every posting list is
-  over the df cap;
+- ``oversized``: budgets so small that almost every posting list (and
+  every positional row set) is over its cap;
 - ``tombstones``: pending deletes past ``dead_broadcast_max``.
 
-Both indexes carry one tombstone, so the in-process tier also excludes
+Every index carries one tombstone, so the in-process tier also excludes
 deletes in the other states. Decay and synonym scores compare at 8
 decimals (the relational aggregate and the kernel sum floats in different
 orders); everything else compares exactly.
 
 Also here: job counts of the point fallbacks, which run the resolved
-query on the distributed executor instead of resolving it again.
+query on the distributed executor instead of resolving it again, and the
+session conf that warm serving handles share.
 """
 
 from __future__ import annotations
@@ -67,7 +68,8 @@ def _open(ix, state: str):
             continue
         fts.warm(serving_conf=False)
         fts.enable_point_serving(
-            cache_max_bytes=40 if state == "oversized" else 256 << 20
+            cache_max_bytes=40 if state == "oversized" else 256 << 20,
+            pos_cache_max_bytes=16 if state == "oversized" else 64 << 20,
         )
         if state == "tombstones":
             fts.dead_broadcast_max = 0
@@ -255,3 +257,131 @@ def test_boolean_point_too_big_filter_resolves_once(spark, dirs):
         assert jobs < _PARENT_BOOLEAN_TOO_BIG_JOBS, jobs
     finally:
         fts.close()
+
+
+def test_boolean_point_too_big_filter_verdict_is_cached(spark, dirs):
+    """The over-bound verdict of a filter set is remembered: a repeat of
+    the query skips the id job the first call paid."""
+    fts = FtsIndex(spark, dirs[0]).warm(serving_conf=False)
+    fts.enable_point_serving()
+    fts.include_broadcast_max = 1
+    try:
+        q = "hotel turtle lang:en"
+        want = _scored_rows(fts.search_boolean(q, k=10))
+        first = fts.search_boolean_point(q, k=10)
+        again, jobs = _jobs(spark, lambda: fts.search_boolean_point(q, k=10))
+        assert first == again == want and want
+        # the parent resolved the ids again on every repeat: 5 jobs
+        assert jobs < 5, jobs
+    finally:
+        fts.close()
+
+
+def test_two_warm_handles_restore_aqe_in_any_close_order(spark, dirs):
+    """Warm handles share the session's serving conf: AQE stays off while
+    any of them is open and comes back once the last one closes, in
+    either close order."""
+    # a session of its own: no handle another test left open holds its conf
+    session = spark.newSession()
+    key = "spark.sql.adaptive.enabled"
+    session.conf.set(key, "true")
+    before = session.conf.get(key)
+    for order in ((0, 1), (1, 0)):
+        a, b = FtsIndex(session, dirs[0]), FtsIndex(session, dirs[1])
+        a.warm()
+        b.warm()
+        first, second = (a, b)[order[0]], (a, b)[order[1]]
+        first.close()
+        assert session.conf.get(key) == "false", order
+        second.close()
+        assert session.conf.get(key) == before, order
+
+
+# ---------------------------------------------------------------- positional
+
+
+@pytest.fixture(scope="module")
+def pos_handles(spark, small_corpus, tmp_path_factory):
+    """The small corpus with positional postings and one tombstone, one
+    handle per tier state."""
+    docs = spark.read.parquet(small_corpus)
+    d = str(tmp_path_factory.mktemp("tier_parity_pos") / "ix")
+    build_index(
+        spark, docs, d,
+        BuildConfig(
+            preset="by_lang", shard_size=32, id_buckets=8, n_waves=1,
+            store_positions=True,
+        ),
+    )
+    delete_documents(spark, d, [docs.orderBy("url").select("url").first()["url"]])
+    hs = {state: _open(FtsIndex(spark, d), state) for state in STATES}
+    yield hs
+    for fts in hs.values():
+        fts.close()
+
+
+def _pos_dist(name):
+    return lambda ix, **kw: [
+        (int(r[0]), int(r[2])) for r in getattr(ix, name)(**kw).collect()
+    ]
+
+
+# id -> (point call, distributed call, kwargs)
+POS_CASES = {
+    "phrase": (
+        _method("search_phrase_point"), _pos_dist("search_phrase_positional"),
+        dict(phrase="historyly island", k=0),
+    ),
+    "phrase_topk": (
+        _method("search_phrase_point"), _pos_dist("search_phrase_positional"),
+        dict(phrase="turtle seen near", k=5),
+    ),
+    "near_ordered": (
+        _method("search_near_point"), _pos_dist("search_near_positional"),
+        dict(phrase="turtle near", slop=1, k=0, in_order=True),
+    ),
+    "near_unordered": (
+        _method("search_near_point"), _pos_dist("search_near_positional"),
+        dict(phrase="island historyly", slop=1, k=0, in_order=False),
+    ),
+    "phrase_prefix": (
+        _method("search_phrase_prefix_point"), _pos_dist("search_phrase_prefix"),
+        dict(phrase="historyly is", k=0),
+    ),
+    "rescored": (
+        _method("search_bm25_rescored_point"), _dist("search_bm25_rescored"),
+        dict(query="hotel turtle", phrase="turtle seen near", k=10, n_candidates=30),
+    ),
+}
+
+
+@pytest.mark.parametrize("state", STATES)
+@pytest.mark.parametrize("case", sorted(POS_CASES))
+def test_positional_point_surface_equals_distributed_twin(
+    spark, pos_handles, case, state
+):
+    point, dist, kw = POS_CASES[case]
+    fts = pos_handles[state]
+    want = dist(fts, **kw)
+    got = point(fts, **kw)
+    assert got == want and want, (case, state)
+    if state == "warm":
+        again, jobs = _jobs(spark, lambda: point(fts, **kw))
+        assert again == got and jobs == 0, (case, jobs)
+
+
+# jobs the parent commit's phrase-prefix fallback ran for the call below on
+# this fixture: it expanded the prefix again through the public
+# distributed method
+_PARENT_PHRASE_PREFIX_FALLBACK_JOBS = 7
+
+
+def test_phrase_prefix_fallback_reuses_the_expansion(spark, pos_handles):
+    """Over the positional budget, the phrase-prefix point twin runs its
+    driver-expanded variants on the distributed executor: no
+    expand_terms job."""
+    fts = pos_handles["oversized"]
+    want = _pos_dist("search_phrase_prefix")(fts, phrase="se", k=0)
+    got, jobs = _jobs(spark, lambda: fts.search_phrase_prefix_point("se", k=0))
+    assert got == want and got
+    assert jobs < _PARENT_PHRASE_PREFIX_FALLBACK_JOBS, jobs
