@@ -9,6 +9,11 @@ feeding block-max WAND (SURVEY.md §2.3 I4 "sorted postings", §4 P5).
 
 All encode/decode paths are numpy-vectorized (no per-value Python loops over
 postings; the outer loop is bounded by 10 = max varbyte width of a uint64).
+Full posting-list decodes of many rows go through one batch decoder,
+:func:`decode_doc_blobs`: doc ids (and the row each belongs to) for a whole
+Arrow column of doc blobs in one pass, with tf/dl from
+:func:`varbyte_decode_binary` over the same batch — the query path's
+``mapInArrow`` kernels and compaction's tail decode both use it.
 """
 
 from __future__ import annotations
@@ -79,7 +84,13 @@ def varbyte_decode(blob: bytes) -> np.ndarray:
     if len(blob) == 0:
         return np.zeros(0, dtype=np.uint64)
     raw = np.frombuffer(blob, dtype=np.uint8)
-    ends = np.nonzero((raw & 0x80) == 0)[0]
+    return _varbyte_values(raw, np.nonzero((raw & 0x80) == 0)[0])
+
+
+def _varbyte_values(raw: np.ndarray, ends: np.ndarray) -> np.ndarray:
+    """The values of ``raw`` whose last bytes sit at ``ends``."""
+    if len(ends) == 0:
+        return np.zeros(0, dtype=np.uint64)
     starts = np.concatenate(([0], ends[:-1] + 1))
     lengths = ends - starts + 1
     vals = np.zeros(len(ends), dtype=np.uint64)
@@ -91,24 +102,52 @@ def varbyte_decode(blob: bytes) -> np.ndarray:
     return vals
 
 
-def varbyte_decode_binary(arr) -> np.ndarray:
-    """Decode EVERY blob of a pyarrow binary array in one varbyte pass over
-    its data buffer — zero-copy, no per-row ``bytes`` objects, honouring a
-    sliced array's offset. Each blob ends on a terminator byte, so the
-    concatenation decodes to the rows' values back to back; callers split
-    them by per-row value counts."""
+def _binary_bytes(arr) -> tuple[np.ndarray, np.ndarray]:
+    """(bytes, row offsets into them) of a pyarrow binary array, straight
+    off its buffers: zero-copy, no per-row ``bytes`` objects, honouring a
+    sliced array's offset."""
     import pyarrow as pa
 
     n = len(arr)
     _, offs_buf, data = arr.buffers()
     if n == 0 or data is None:
-        return np.zeros(0, dtype=np.uint64)
+        return np.zeros(0, dtype=np.uint8), np.zeros(n + 1, dtype=np.int64)
     width = np.int64 if pa.types.is_large_binary(arr.type) else np.int32
     offs = np.frombuffer(
         offs_buf, dtype=width, count=n + 1,
         offset=arr.offset * np.dtype(width).itemsize,
-    )
-    return varbyte_decode(np.frombuffer(data, dtype=np.uint8)[offs[0]:offs[-1]])
+    ).astype(np.int64)
+    return np.frombuffer(data, dtype=np.uint8)[offs[0]:offs[-1]], offs - offs[0]
+
+
+def varbyte_decode_binary(arr) -> np.ndarray:
+    """Decode EVERY blob of a pyarrow binary array in one varbyte pass over
+    its data buffer. Each blob ends on a terminator byte, so the
+    concatenation decodes to the rows' values back to back; callers split
+    them by per-row value counts."""
+    return varbyte_decode(_binary_bytes(arr)[0])
+
+
+def decode_doc_blobs(arr, base: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
+    """``(row, doc_id)`` of every posting of a pyarrow binary column of doc
+    blobs, decoded in one varbyte pass over its data buffer. A row's first
+    delta is relative to ``base[row]`` (its shard's first doc id), the
+    rest to the previous id, as :func:`decode_postings` reads one list. A
+    row's posting count is the number of terminator bytes in its blob, so
+    no ``count`` column is read; tf and dl of the same rows come back to
+    back from :func:`varbyte_decode_binary`. Raises ``ValueError`` when a
+    non-empty blob does not end on a terminator byte (its last value
+    would run into the next row's)."""
+    raw, offs = _binary_bytes(arr)
+    last = offs[1:][np.diff(offs) > 0] - 1
+    if last.size and (raw[last] & 0x80).any():
+        raise ValueError("doc blob does not end on a terminator byte")
+    ends = np.nonzero((raw & 0x80) == 0)[0]
+    counts = np.diff(np.searchsorted(ends, offs))
+    row = np.repeat(np.arange(len(counts)), counts)
+    csum = np.cumsum(_varbyte_values(raw, ends).astype(np.int64))
+    before = np.concatenate(([0], csum))[np.cumsum(counts) - counts]
+    return row, csum + (np.asarray(base, dtype=np.int64) - before)[row]
 
 
 @dataclass

@@ -695,7 +695,7 @@ def _resolve_positional(
     k: int,
     slop: int | None = None,
     in_order: bool = True,
-    expand=None,
+    max_expansions: int | None = None,
 ) -> _PositionalQuery:
     """Resolve a positional query once for either tier. Each pipeline
     analyzes ``phrase`` on its own (under by_lang a doc matches through
@@ -705,14 +705,14 @@ def _resolve_positional(
     :func:`span_near_unordered_kernel` with ``in_order=False``, counted
     as ``near_count``).
 
-    ``expand(pattern)`` makes it ES ``match_phrase_prefix``: the LAST
+    ``max_expansions`` makes it ES ``match_phrase_prefix``: the LAST
     whitespace token (an optional trailing ``*`` stripped) is a
     Go-lowered dictionary prefix — never stemmed, the multi-term-rewrite
-    semantics of ``_rewrite_mult`` — and each of its expansions
-    (``expand_terms`` or the driver's ``_point_expand``, both
-    df-desc/term-asc) completes one variant of the analyzed head. A head
-    that analyzes to nothing degrades to a counted prefix term, so
-    single-token autocomplete works.
+    semantics of ``_rewrite_mult`` — and each of its top
+    ``max_expansions`` expansions (``index._expand``: df desc, term asc)
+    completes one variant of the analyzed head. A head that analyzes to
+    nothing degrades to a counted prefix term, so single-token
+    autocomplete works.
 
     Empty sequences drop, and so — when the driver holds the
     dictionary, the one place that costs no job — do sequences with a
@@ -722,14 +722,18 @@ def _resolve_positional(
 
     path = check_positions_fresh(index)
     head, tails = phrase, [[]]
-    if expand is not None:
+    if max_expansions is not None:
         toks = phrase.split()
         pat = toks[-1] if toks else ""
         if len(pat) > 1 and pat.endswith("*"):
             pat = pat[:-1]
         from .textproc.gocompat import go_lower
 
-        expansions = expand(go_lower(pat)) if pat and pat != "*" else []
+        expansions = (
+            index._expand(go_lower(pat), "prefix", 0, max_expansions)
+            if pat and pat != "*"
+            else []
+        )
         head, tails = " ".join(toks[:-1]), [[e] for e in expansions]
     td = index._term_dict
     sequences = {}
@@ -796,18 +800,14 @@ def search_phrase_prefix_positional(
     expansion completes the contiguous phrase. ``(doc_id, url,
     phrase_count)`` where the count sums phrase starts over expansions
     (disjoint by construction — one token per position), count desc /
-    doc_id asc, LIMIT k (k<=0 = all). Expansion is ``expand_terms``'s
+    doc_id asc, LIMIT k (k<=0 = all). Expansion is ``index._expand``'s
     deterministic df-desc/term-asc top-``max_expansions`` (one bounded
-    dictionary job), then ONE positional job runs every variant over
-    the same pruned scan of fixed-terms ∪ expansions rows."""
+    dictionary job, none when the handle holds the driver dictionary),
+    then ONE positional job runs every variant over the same pruned scan
+    of fixed-terms ∪ expansions rows."""
     return _search_positional(
         index,
-        _resolve_positional(
-            index, phrase, k,
-            expand=lambda pat: index.expand_terms(
-                pat, "prefix", max_expand=max_expansions
-            ),
-        ),
+        _resolve_positional(index, phrase, k, max_expansions=max_expansions),
     )
 
 

@@ -50,7 +50,7 @@ from ..build import (
     salt_policy,
 )
 from ..checkpoint import Manifest, atomic_write_json
-from ..codec import varbyte_decode_binary
+from ..codec import decode_doc_blobs, varbyte_decode_binary
 from ..layout import next_version_dir, read_table, table_path
 
 # posting-list pieces of the decoded tail: one row per (old row, new shard)
@@ -103,13 +103,13 @@ def _make_tail_decoder(
 ):
     """mapInArrow kernel over tail posting rows ``(shard_id, term, count,
     doc_blob, tf_blob, dl_blob)``: decode each batch in ONE varbyte pass
-    per blob column straight off the Arrow buffers
-    (``codec.varbyte_decode_binary``), rebuild doc ids with a cumsum
-    segmented by ``count`` (each row's first delta is relative to its
-    shard base), drop tombstoned postings, renumber with
-    :func:`remap_ids` and emit posting-list pieces — one row per (input
-    row, new shard), since the remap can carry a list across a shard
-    boundary — for ``build._make_list_encoder``. No per-row Python."""
+    per blob column straight off the Arrow buffers (doc ids by
+    ``codec.decode_doc_blobs``, tf/dl by ``codec.varbyte_decode_binary``),
+    check every row's posting count against ``count``, drop tombstoned
+    postings, renumber with :func:`remap_ids` and emit posting-list
+    pieces — one row per (input row, new shard), since the remap can
+    carry a list across a shard boundary — for
+    ``build._make_list_encoder``. No per-row Python."""
     import pyarrow as pa
 
     def decode(batches):
@@ -118,17 +118,18 @@ def _make_tail_decoder(
             n = b.num_rows
             if not n:
                 continue
-            count = _i64(b.column("count"))
-            deltas = varbyte_decode_binary(b.column("doc_blob")).astype(np.int64)
+            parent, doc = decode_doc_blobs(
+                b.column("doc_blob"), _i64(b.column("shard_id")) * shard_size
+            )
             tf = varbyte_decode_binary(b.column("tf_blob")).astype(np.int32)
             dl = varbyte_decode_binary(b.column("dl_blob")).astype(np.int32)
-            if not len(deltas) == len(tf) == len(dl) == int(count.sum()):
+            if not (
+                len(tf) == len(dl) == len(doc)
+                and np.array_equal(
+                    np.bincount(parent, minlength=n), _i64(b.column("count"))
+                )
+            ):
                 raise ValueError("tail blobs disagree with their counts")
-            parent = np.repeat(np.arange(n), count)
-            csum = np.cumsum(deltas)
-            starts = np.cumsum(count) - count
-            before = np.concatenate(([0], csum))[starts]
-            doc = csum + (_i64(b.column("shard_id")) * shard_size - before)[parent]
             if dead.size:
                 pos = np.searchsorted(dead, doc)
                 np.minimum(pos, dead.size - 1, out=pos)

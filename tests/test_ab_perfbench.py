@@ -3,7 +3,7 @@ no regression, unresolved, regression) on hand-made paired runs."""
 
 from __future__ import annotations
 
-from tools.ab_perfbench import _seeds, verdict
+from tools.ab_perfbench import _cell, _seeds, per_unit, verdict
 
 BASE = [10.0, 11.0, 12.0, 10.5, 11.5, 10.0, 11.0, 12.0, 10.5, 11.5]
 
@@ -28,3 +28,16 @@ def test_regression_and_unresolved():
 def test_seed_ranges():
     assert _seeds("11-13") == [11, 12, 13]
     assert _seeds("3,5,7-8") == [3, 5, 7, 8]
+
+
+def test_time_per_unit_of_work_quartiles():
+    """A faster change spreads wider in work_per_s by 1/T scaling alone:
+    the same 10% time spread reads as 10x the absolute rate spread at
+    10x the rate, and the time-per-unit cells show it."""
+    slow = [10.0, 11.0, 10.0, 11.0]
+    fast = [100.0, 110.0, 100.0, 110.0]
+    assert per_unit(fast) == [0.01, 1 / 110, 0.01, 1 / 110]
+    assert _cell(slow) == "10.5 (10-11)"
+    assert _cell(fast) == "105 (100-110)"
+    assert _cell(per_unit(slow)) == "0.09545 (0.09091-0.1)"
+    assert _cell(per_unit(fast)) == "0.009545 (0.009091-0.01)"

@@ -385,3 +385,28 @@ def test_phrase_prefix_fallback_reuses_the_expansion(spark, pos_handles):
     got, jobs = _jobs(spark, lambda: fts.search_phrase_prefix_point("se", k=0))
     assert got == want and got
     assert jobs < _PARENT_PHRASE_PREFIX_FALLBACK_JOBS, jobs
+
+
+# Spark jobs the parent commit ran to BUILD (not collect) each DataFrame
+# below on a warm handle of this fixture: the expand_terms job, run
+# although the handle held the driver dictionary
+_PARENT_WARM_REWRITE_BUILD_JOBS = 1
+
+
+@pytest.mark.parametrize(
+    "build",
+    [
+        lambda fts: fts.search_phrase_prefix("se", k=0),
+        lambda fts: fts.search_bm25_prefix("hot* turtle", k=10),
+    ],
+    ids=["phrase_prefix", "bm25_prefix"],
+)
+def test_warm_distributed_rewrites_expand_on_the_driver(spark, pos_handles, build):
+    """A warm handle expands distributed rewrites from its driver
+    dictionary: building the query runs one job fewer than the parent."""
+    fts = pos_handles["warm"]
+    assert fts._term_dict is not None
+    fts._dead_ids()  # loaded once per handle, by whichever query is first
+    df, jobs = _jobs(spark, lambda: build(fts))
+    assert jobs == _PARENT_WARM_REWRITE_BUILD_JOBS - 1, jobs
+    assert df.collect()

@@ -26,7 +26,12 @@ out of the pairs run (ties count for neither side), and a verdict:
   every base run, which counts as no regression;
 - ``regression``: worse than the bound allows.
 
-It also prints the failed-op share per side. The tool only reads
+It also prints the failed-op share per side and, under ``work_per_s``,
+each side's time per unit of work (``1 / work_per_s``: seconds per page
+on ingest, per query on serve). Work is a rate, so a change that runs
+faster spreads wider in it by 1/T scaling alone; the time per unit shows
+whether an "unresolved" verdict comes from that. The verdict rule does
+not use it. The tool only reads
 ``perfbench/`` and ``BENCHMARK.json`` of each exported tree.
 """
 
@@ -81,6 +86,17 @@ def _quartiles(xs: list[float]) -> tuple[float, float]:
         return xs[0], xs[0]
     q = statistics.quantiles(xs, n=4, method="inclusive")
     return q[0], q[2]
+
+
+def _cell(xs: list[float]) -> str:
+    """``median (q1-q3)`` of one side's runs."""
+    q1, q3 = _quartiles(xs)
+    return f"{statistics.median(xs):.4g} ({q1:.4g}-{q3:.4g})"
+
+
+def per_unit(work: list[float]) -> list[float]:
+    """Time per unit of work of each run of a ``work_per_s`` metric."""
+    return [1.0 / w for w in work]
 
 
 def verdict(
@@ -175,13 +191,11 @@ def main() -> None:
                 for side in ("base", "change")
             )
             v, wins = verdict(b, c, m["better"], float(m["bound"]))
-            cells = [
-                f"{statistics.median(xs):.4g} ({q1:.4g}-{q3:.4g})"
-                for xs in (b, c)
-                for q1, q3 in [_quartiles(xs)]
-            ]
-            print(f"{m['name']:26} {cells[0]:>32} {cells[1]:>32} "
+            print(f"{m['name']:26} {_cell(b):>32} {_cell(c):>32} "
                   f"{wins:>3}/{len(seeds):<2}  {v}")
+            if m["name"] == "work_per_s":
+                print(f"{'  1/work_per_s (s)':26} {_cell(per_unit(b)):>32} "
+                      f"{_cell(per_unit(c)):>32}")
 
 
 if __name__ == "__main__":
