@@ -738,30 +738,10 @@ class FtsIndex:
             out.append(QueryTermStats(t, m, df, cf, bm25_idf(self.n_docs, df)))
         return out
 
-    def _query_postings(self, mult: dict[str, int]) -> DataFrame:
-        """Postings rows restricted to the query terms — isin through the
-        pruning strategy on BOTH tiers. Cold, the literals push into the
-        parquet scan (row-group stats + bloom); warm, the same predicate
-        filters the cached columnar batches (in-memory partition pruning
-        over the term-sorted cache). Warm mode USED to filter via a
-        broadcast left-semi join for codegen-source stability, but one
-        BroadcastExchange costs ~250-300 ms of fixed per-query latency
-        (measured r6, OPTIMIZATION_r06.md "Broadcast tax") vs ~70 ms for
-        the isin scan — and string literals land in the codegen
-        references array, not the generated source, so the JIT-churn
-        rationale did not hold for term lists."""
-        df = self._pruner(self._read_postings(), list(mult))
-        # cast only when needed (partition-dir column reads back as int);
-        # re-casting an already-long column would discard the cached
-        # shard_id partitioning that warm mode relies on
-        if dict(df.dtypes).get("shard_id") != "bigint":
-            df = df.withColumn("shard_id", F.col("shard_id").cast("long"))
-        return df
-
     def _query_stats(self, mult: dict[str, int]) -> DataFrame:
         """(term, df) dictionary slice for the query terms, isin-pruned on
         both tiers (same broadcast-tax rationale as
-        :meth:`_query_postings`)."""
+        :meth:`postings_for`)."""
         stats = self._read_terms()
         return stats.where(F.col("term").isin(list(mult))).select("term", "df")
 
@@ -838,7 +818,7 @@ class FtsIndex:
             return {**cols, **{c: v[t] for c, v in consts.items()}}
 
         return self._decode_map(
-            self._query_postings(mult), schema, emit, terms, tf_dl=True
+            self.postings_for(list(mult)), schema, emit, terms, tf_dl=True
         )
 
     def _decode_map(
@@ -892,10 +872,29 @@ class FtsIndex:
         return src.select("shard_id", "term", *blobs).mapInArrow(kernel, schema)
 
     def postings_for(self, terms: list[str]) -> DataFrame:
-        df = self._read_postings()
-        return self._pruner(df, terms).withColumn(
-            "shard_id", F.col("shard_id").cast("long")
-        )
+        """Posting rows of ``terms`` — the one pruned posting scan of the
+        query path: an isin through the pruning strategy on BOTH tiers
+        (under ``pruning='none'`` every row passes and the kernels drop
+        the other terms); an empty list reads no rows. Cold, the
+        literals push into the parquet scan (row-group stats + bloom);
+        warm, the same predicate filters the cached columnar batches
+        (in-memory partition pruning over the term-sorted cache). Warm
+        mode USED to filter via a broadcast left-semi join for
+        codegen-source stability, but one BroadcastExchange costs
+        ~250-300 ms of fixed per-query latency (measured r6,
+        OPTIMIZATION_r06.md "Broadcast tax") vs ~70 ms for the isin scan
+        — and string literals land in the codegen references array, not
+        the generated source, so the JIT-churn rationale did not hold
+        for term lists."""
+        df = self._pruner(self._read_postings(), list(terms))
+        if not terms:
+            df = df.limit(0)
+        # cast only when needed (partition-dir column reads back as int);
+        # re-casting an already-long column would discard the cached
+        # shard_id partitioning that warm mode relies on
+        if dict(df.dtypes).get("shard_id") != "bigint":
+            df = df.withColumn("shard_id", F.col("shard_id").cast("long"))
+        return df
 
     def docs(self) -> DataFrame:
         return read_table(
@@ -1329,13 +1328,14 @@ class FtsIndex:
     def decoded_postings(
         self, terms: list[str], mult: dict[str, int] | None = None
     ) -> DataFrame:
-        if mult is not None:
-            src, terms = self._query_postings(mult), list(mult)
-        else:
-            src, terms = self.postings_for(terms), sorted(set(terms))
-        # an empty term list reads every posting (the pruner's contract)
+        terms = list(mult) if mult is not None else sorted(set(terms))
+        if not terms:
+            # the decode kernel over an empty scan still schedules a job;
+            # limit(0) folds this plan to an empty local relation
+            return self.spark.createDataFrame([], DECODED_SCHEMA).limit(0)
         return self._decode_map(
-            src, DECODED_SCHEMA, _decoded_cols, terms or None, tf_dl=True
+            self.postings_for(terms), DECODED_SCHEMA, _decoded_cols, terms,
+            tf_dl=True,
         )
 
     def _match_count_df(self, mult: dict[str, int]) -> DataFrame:
@@ -1351,7 +1351,7 @@ class FtsIndex:
         # partial dedup in-kernel (doc ids repeat across the query's
         # terms): fewer rows cross the exchange
         src = self._decode_map(
-            self._query_postings(mult), "doc_id long",
+            self.postings_for(list(mult)), "doc_id long",
             lambda b, tix, row, doc, tf, dl: {"doc_id": np.unique(doc)},
             list(mult),
         )
@@ -3221,9 +3221,7 @@ class FtsIndex:
                 "Compact the index first, or run queries singly — "
                 "search_bm25 falls back to the relational anti-join plan"
             )
-        posts = self._pruner(self._read_postings(), live_terms)
-        if dict(posts.dtypes).get("shard_id") != "bigint":
-            posts = posts.withColumn("shard_id", F.col("shard_id").cast("long"))
+        posts = self.postings_for(live_terms)
         kernel = make_wand_batch_kernel(
             self.n_docs, self.shard_size, self.avgdl, k, per_query,
             conjunctive=conjunctive, per_query_excl=per_query_excl or None,
@@ -3511,7 +3509,8 @@ class FtsIndex:
     ) -> list[tuple[int, float]]:
         """In-process sweep over the point cache for a resolved
         term -> (mult, df) map: fetch missing terms (one pruned job),
-        run the SAME per-shard WAND kernel the executors run, merge.
+        group the cached tables by shard, score each shard with the SAME
+        :func:`_shard_topk` the executors run, merge.
         ``excl_terms`` are cached/fetched like scoring terms; their doc
         ids (doc blob only) form per-shard exclusion sets.
         ``term_gmask``/``full_mask`` are boolean MUST groups (see
@@ -3529,70 +3528,21 @@ class FtsIndex:
                 list(dict.fromkeys([*present, *sorted(excl_terms or ())])),
                 self._point_load,
             )
-            # per-shard sweep, exactly the distributed kernel's unit of
+            # per-shard scoring, exactly the distributed kernel's unit of
             # work; global merge = top-k of the union of shard top-ks
-            # term-ASCENDING weighted lists: the distributed kernel sees
-            # rows in the warm cache's (shard, term) sort order, and float
-            # summation order must match for bit-identical scores
-            shards: dict[int, list[tuple[float, dict]]] = {}
-            shard_gms: dict[int, list[int]] = {}
-            for term in sorted(present):
-                m, df_ = present[term]
-                w = m * bm25_idf(eff_n_docs, df_)
-                gm = term_gmask.get(term, 0) if term_gmask else 0
-                for shard, table in entries[term].items():
-                    shards.setdefault(shard, []).append((w, table))
-                    shard_gms.setdefault(shard, []).append(gm)
-            excl_by_shard: dict[int, np.ndarray] = {}
-            if excl_terms:
-                parts: dict[int, list[np.ndarray]] = {}
-                for term in sorted(excl_terms):
-                    for shard, table in entries[term].items():
-                        parts.setdefault(shard, []).append(
-                            _decode_doc_ids(
-                                table, shard * self.shard_size, None
-                            )
-                        )
-                excl_by_shard = {
-                    s: np.unique(np.concatenate(a)) for s, a in parts.items()
-                }
+            by_shard: dict[int, dict[str, dict]] = {}
+            for term, tables in entries.items():
+                for shard, table in tables.items():
+                    by_shard.setdefault(shard, {})[term] = table
             dead = self._dead_ids()
             heap: list[tuple[float, int]] = []
-            for shard, weighted in shards.items():
-                gms = shard_gms.get(shard, [])
-                if full_mask:
-                    shard_mask = 0
-                    for gm in gms:
-                        shard_mask |= gm
-                    if (shard_mask & full_mask) != full_mask:
-                        # a required group has no postings in this shard
-                        continue
-                base = shard * self.shard_size
-                if incl_docs is not None:
-                    # whole-shard skip: no include id in this shard's
-                    # doc-id range means nothing here can survive
-                    j = int(np.searchsorted(incl_docs, base))
-                    if j >= incl_docs.size or (
-                        int(incl_docs[j]) >= base + self.shard_size
-                    ):
-                        continue
-                # same slice+union the distributed kernel applies, so the
-                # tiers stay bit-identical under pending deletes
-                excl = _merge_dead(
-                    excl_by_shard.get(shard), dead,
-                    base, self.shard_size,
-                )
-                docs, scores = _wand_sweep(
-                    weighted, k, base, eff_avgdl, None,
-                    require_n, excl, incl_docs,
-                    group_masks=gms if full_mask else None,
-                    full_mask=full_mask, after=after,
-                )
-                for doc, sc in zip(docs.tolist(), scores.tolist()):
-                    if k <= 0 or len(heap) < k:
-                        heapq.heappush(heap, (sc, -doc))
-                    elif (sc, -doc) > heap[0]:
-                        heapq.heapreplace(heap, (sc, -doc))
+            for shard, term_map in by_shard.items():
+                _push_topk(heap, k, *_shard_topk(
+                    term_map, shard * self.shard_size, self.shard_size,
+                    present, eff_n_docs, eff_avgdl, k, require_n,
+                    excl_terms, dead, incl_docs, term_gmask, full_mask,
+                    after,
+                ))
         out = [(-d, s) for s, d in heap]
         out.sort(key=lambda x: (-x[1], x[0]))
         return [(int(d), float(s)) for d, s in out]
@@ -3968,13 +3918,7 @@ class FtsIndex:
             if incl_ids is not None
             else None
         )
-        posts = self._pruner(
-            self._read_postings(), list(present) + list(excl_mult)
-        )
-        if dict(posts.dtypes).get("shard_id") != "bigint":
-            posts = posts.withColumn(
-                "shard_id", F.col("shard_id").cast("long")
-            )
+        posts = self.postings_for(list(present) + list(excl_mult))
         if self._postings_df is None:
             # cold scan: bound the groupBy exchange feeding the kernel to
             # the shard count (see _agg_parts) — the warm cache is already
@@ -4075,8 +4019,6 @@ def _parse_posting_row(row, base: int, counters) -> dict | None:
         "tf_off": np.asarray(row.skip_tf_off, dtype=np.int64),
         "dl_off": np.asarray(row.skip_dl_off, dtype=np.int64),
         "count": int(cnt),
-        "row_mult": float(getattr(row, "mult", 1)),
-        "row_df": int(getattr(row, "df", 0)),
         "decoded": None,  # full-decode cache (tiny lists)
         "blocks": {},  # block idx -> (doc_ids, base_scores)
     }
@@ -4104,7 +4046,8 @@ def _decode_term_raw(
     t: dict, base: int
 ) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
     """(doc_ids, tfs, dls) decoded fresh from a cached block table's
-    blobs. The synonym point scorer re-saturates tf per GROUP, so it
+    blobs; :func:`_decode_term_full` caches its base scores. The synonym
+    point scorer re-saturates tf per GROUP, so it
     needs raw tf/dl rather than the per-term base scores — decoding per
     query (vectorized varbyte over in-memory bytes) keeps the point
     cache's byte accounting unchanged."""
@@ -4118,10 +4061,7 @@ def _decode_term_raw(
 
 def _decode_term_full(t: dict, base: int, avgdl: float, counters):
     if t["decoded"] is None:
-        deltas = varbyte_decode(t["doc_blob"])
-        doc_ids = np.cumsum(deltas.astype(np.int64)) + base
-        tfs = varbyte_decode(t["tf_blob"]).astype(np.float64)
-        dls = varbyte_decode(t["dl_blob"]).astype(np.float64)
+        doc_ids, tfs, dls = _decode_term_raw(t, base)
         t["decoded"] = (doc_ids, _base_score(tfs, dls, avgdl))
         if counters is not None:
             counters["full_decodes"] = counters.get("full_decodes", 0) + 1
@@ -4184,6 +4124,68 @@ def _decode_term_block(t: dict, j: int, base: int, avgdl: float, counters):
     return blk
 
 
+def _in_sorted(ids: np.ndarray, docs: np.ndarray) -> np.ndarray:
+    """Membership mask of ``docs`` in the sorted id array ``ids``."""
+    if not ids.size:
+        return np.zeros(docs.size, dtype=bool)
+    return ids[np.minimum(np.searchsorted(ids, docs), ids.size - 1)] == docs
+
+
+def _accumulate(
+    parts: list[tuple[np.ndarray, np.ndarray, int]],
+    require_n: int,
+    excl_docs: np.ndarray | None,
+    incl_docs: np.ndarray | None,
+    full_mask: int,
+    after: tuple[float, int] | None,
+) -> tuple[np.ndarray, np.ndarray]:
+    """The candidate filter of both sweeps: per-doc score sums over
+    ``parts`` — one (doc_ids, weighted scores, group mask) entry per
+    term, summed in list order, which is what keeps the two sweeps
+    bit-identical — restricted to the docs that cover every MUST group
+    of ``full_mask``, match at least ``require_n`` terms, are not in
+    ``excl_docs``, are in ``incl_docs`` and come after the ``after``
+    cursor. All five only remove candidates, so block upper bounds stay
+    conservative."""
+    uniq, inv = np.unique(
+        np.concatenate([d for d, _, _ in parts]), return_inverse=True
+    )
+    acc = np.zeros(len(uniq))
+    np.add.at(acc, inv, np.concatenate([s for _, s, _ in parts]))
+    keep = np.ones(len(uniq), dtype=bool)
+    if full_mask:
+        # per-doc OR of matched terms' group masks must cover every
+        # required group (postings unique per (term, doc))
+        gacc = np.zeros(len(uniq), dtype=np.int64)
+        gms = [np.full(d.size, gm, dtype=np.int64) for d, _, gm in parts]
+        np.bitwise_or.at(gacc, inv, np.concatenate(gms))
+        keep &= (gacc & full_mask) == full_mask
+    if require_n > 0:
+        # each term contributes <= 1 posting per doc, so the bincount
+        # over inv IS the distinct-match count per doc
+        keep &= np.bincount(inv, minlength=len(uniq)) >= require_n
+    if excl_docs is not None:
+        keep &= ~_in_sorted(excl_docs, uniq)
+    if incl_docs is not None:
+        keep &= _in_sorted(incl_docs, uniq)
+    if after is not None:
+        keep &= _after_keep(uniq, acc, after)
+    return uniq[keep], acc[keep]
+
+
+def _push_topk(
+    heap: list[tuple[float, int]], k: int, docs: np.ndarray, scores: np.ndarray
+) -> None:
+    """Offer (doc, score) pairs to a min-heap of (score, -doc) that keeps
+    the top ``k`` (every pair when k <= 0) in (score desc, doc_id asc)
+    order."""
+    for doc, sc in zip(docs.tolist(), scores.tolist()):
+        if k <= 0 or len(heap) < k:
+            heapq.heappush(heap, (sc, -doc))
+        elif (sc, -doc) > heap[0]:
+            heapq.heapreplace(heap, (sc, -doc))
+
+
 # At and above this many query terms the per-segment python loop costs
 # more than it saves (segment count grows with the union of all terms'
 # block edges, and every segment scans every term): _wand_sweep switches
@@ -4210,48 +4212,15 @@ def _dense_accumulate(
     plan (more-like-this, wide boolean queries): one vectorized
     np.unique + add.at over all postings beats thousands of per-segment
     python iterations, at the price of decoding every block. Applies
-    the same candidate filters as the sweep (masks, require_n,
-    exclusion, inclusion) and returns the same (top-)k set with
-    bit-identical scores (same per-doc summation order)."""
-    docs_l, scores_l, gmasks_l = [], [], []
+    the same candidate filter as the sweep (:func:`_accumulate`) and
+    returns the same (top-)k set with bit-identical scores (same per-doc
+    summation order)."""
+    parts = []
     for ti, (w, t) in enumerate(weighted):
         doc_ids, bscore = _decode_term_full(t, base, avgdl, counters)
-        if doc_ids.size == 0:
-            continue
-        docs_l.append(doc_ids)
-        scores_l.append(w * bscore)
-        if full_mask:
-            gm = group_masks[ti] if group_masks is not None else 0
-            gmasks_l.append(np.full(doc_ids.size, gm, dtype=np.int64))
-    if not docs_l:
-        return np.zeros(0, dtype=np.int64), np.zeros(0)
-    d = np.concatenate(docs_l)
-    s = np.concatenate(scores_l)
-    uniq, inv = np.unique(d, return_inverse=True)
-    acc = np.zeros(len(uniq))
-    np.add.at(acc, inv, s)
-    keep = np.ones(len(uniq), dtype=bool)
-    if full_mask:
-        gacc = np.zeros(len(uniq), dtype=np.int64)
-        np.bitwise_or.at(gacc, inv, np.concatenate(gmasks_l))
-        keep &= (gacc & full_mask) == full_mask
-    if require_n > 0:
-        keep &= np.bincount(inv, minlength=len(uniq)) >= require_n
-    if excl_docs is not None and excl_docs.size:
-        pos = np.minimum(np.searchsorted(excl_docs, uniq), excl_docs.size - 1)
-        keep &= excl_docs[pos] != uniq
-    if incl_docs is not None:
-        if incl_docs.size:
-            pos = np.minimum(
-                np.searchsorted(incl_docs, uniq), incl_docs.size - 1
-            )
-            keep &= incl_docs[pos] == uniq
-        else:
-            keep &= False
-    uniq, acc = uniq[keep], acc[keep]
-    if after is not None and uniq.size:
-        keep = _after_keep(uniq, acc, after)
-        uniq, acc = uniq[keep], acc[keep]
+        gm = group_masks[ti] if group_masks is not None else 0
+        parts.append((doc_ids, w * bscore, gm))
+    uniq, acc = _accumulate(parts, require_n, excl_docs, incl_docs, full_mask, after)
     if k > 0 and len(uniq) > k:
         order = np.lexsort((uniq, -acc))[:k]
         uniq, acc = uniq[order], acc[order]
@@ -4372,9 +4341,7 @@ def _wand_sweep(
         if k > 0 and len(heap) >= k and ub_sum <= theta:
             continue
 
-        seg_docs = []
-        seg_scores = []
-        seg_gmasks = []
+        parts = []
         for w, t, j, gm in active:
             doc_ids, bscore = _decode_term_block(t, j, base, avgdl, counters)
             lo = np.searchsorted(doc_ids, seg_lo, side="left")
@@ -4384,63 +4351,13 @@ def _wand_sweep(
                 else len(doc_ids)
             )
             if hi > lo:
-                seg_docs.append(doc_ids[lo:hi])
-                seg_scores.append(w * bscore[lo:hi])
-                if full_mask:
-                    seg_gmasks.append(
-                        np.full(hi - lo, gm, dtype=np.int64)
-                    )
-        if not seg_docs:
+                parts.append((doc_ids[lo:hi], w * bscore[lo:hi], gm))
+        if not parts:
             continue
-        d = np.concatenate(seg_docs)
-        s = np.concatenate(seg_scores)
-        uniq, inv = np.unique(d, return_inverse=True)
-        acc = np.zeros(len(uniq))
-        np.add.at(acc, inv, s)
-        if full_mask or require_n > 0:
-            keep = np.ones(len(uniq), dtype=bool)
-            if full_mask:
-                # per-doc OR of matched terms' group masks must cover
-                # every required group (postings unique per (term, doc))
-                gacc = np.zeros(len(uniq), dtype=np.int64)
-                np.bitwise_or.at(gacc, inv, np.concatenate(seg_gmasks))
-                keep &= (gacc & full_mask) == full_mask
-            if require_n > 0:
-                # each term contributes <= 1 posting per doc, so the
-                # bincount over inv IS the distinct-match count per doc
-                keep &= np.bincount(inv, minlength=len(uniq)) >= require_n
-            if not keep.any():
-                continue
-            uniq, acc = uniq[keep], acc[keep]
-        if excl_docs is not None and excl_docs.size and uniq.size:
-            pos = np.minimum(
-                np.searchsorted(excl_docs, uniq), excl_docs.size - 1
-            )
-            keep = excl_docs[pos] != uniq
-            if not keep.any():
-                continue
-            uniq, acc = uniq[keep], acc[keep]
-        if incl_docs is not None and uniq.size:
-            if incl_docs.size:
-                pos = np.minimum(
-                    np.searchsorted(incl_docs, uniq), incl_docs.size - 1
-                )
-                keep = incl_docs[pos] == uniq
-            else:
-                keep = np.zeros(len(uniq), dtype=bool)
-            if not keep.any():
-                continue
-            uniq, acc = uniq[keep], acc[keep]
-        if after is not None and uniq.size:
-            keep = _after_keep(uniq, acc, after)
-            if not keep.any():
-                continue
-            uniq, acc = uniq[keep], acc[keep]
-        for doc, sc in zip(uniq.tolist(), acc.tolist()):
-            if k <= 0 or len(heap) < k:
-                heapq.heappush(heap, (sc, -doc))
-            elif (sc, -doc) > heap[0]:
-                heapq.heapreplace(heap, (sc, -doc))
+        _push_topk(
+            heap, k,
+            *_accumulate(parts, require_n, excl_docs, incl_docs, full_mask, after),
+        )
         if k > 0 and len(heap) >= k:
             theta = heap[0][0]
 
@@ -4475,12 +4392,74 @@ def _merge_dead(
     return np.union1d(excl_docs, shard_dead)
 
 
+def _shard_topk(
+    term_map: dict[str, dict],
+    base: int,
+    shard_size: int,
+    present: dict[str, tuple[float, int]],
+    n_docs: int,
+    avgdl: float,
+    k: int,
+    require_n: int = 0,
+    exclude: Iterable[str] | None = None,
+    dead: np.ndarray | None = None,
+    incl: np.ndarray | None = None,
+    term_gmask: dict[str, int] | None = None,
+    full_mask: int = 0,
+    after: tuple[float, int] | None = None,
+    counters: dict[str, int] | None = None,
+) -> tuple[np.ndarray, np.ndarray]:
+    """One query's local top-k ``(doc_ids, scores)`` over one shard —
+    the per-shard unit of work of every WAND envelope (the distributed
+    and batch kernels, the point tier).
+
+    ``term_map`` holds the shard's parsed term tables
+    (:func:`_parse_posting_row`) and ``base`` its first doc id.
+    ``present`` maps each scoring term to (mult, df); a query's weight
+    is ``mult * idf``, and terms are weighed in ascending term order,
+    the per-doc summation order, so a shard scores bit-identically
+    however its rows arrive. Postings are doc-sharded, so a shard whose
+    terms cannot satisfy the query (:func:`_can_match`) or that holds no
+    id of the sorted restriction array ``incl`` scores nothing before
+    any decode. The doc ids of the ``exclude`` (NOT) terms — doc blob
+    only — and this shard's slice of the sorted tombstone array
+    ``dead`` are dropped inside :func:`_wand_sweep`, before the top-k,
+    so truncation never resurrects them."""
+    terms = sorted(t for t in present if t in term_map)
+    if not _can_match(terms, require_n, term_gmask, full_mask):
+        return np.zeros(0, dtype=np.int64), np.zeros(0)
+    incl_docs = None
+    if incl is not None:
+        lo, hi = np.searchsorted(incl, [base, base + shard_size])
+        if hi <= lo:
+            return np.zeros(0, dtype=np.int64), np.zeros(0)
+        incl_docs = incl[lo:hi]
+    arrs = [
+        _decode_doc_ids(term_map[t], base, counters)
+        for t in sorted(exclude or ())
+        if t in term_map
+    ]
+    excl_docs = _merge_dead(
+        np.unique(np.concatenate(arrs)) if arrs else None,
+        dead, base, shard_size,
+    )
+    weighted = [
+        (float(present[t][0]) * bm25_idf(n_docs, int(present[t][1])), term_map[t])
+        for t in terms
+    ]
+    gmasks = [term_gmask.get(t, 0) for t in terms] if full_mask else None
+    return _wand_sweep(
+        weighted, k, base, avgdl, counters, require_n, excl_docs,
+        incl_docs, gmasks, full_mask, after,
+    )
+
+
 def make_wand_kernel(
     n_docs: int,
     shard_size: int,
     avgdl: float,
     k: int,
-    term_stats: dict[str, tuple[int, int]] | None = None,
+    term_stats: dict[str, tuple[int, int]],
     counters: dict[str, int] | None = None,
     require_n: int = 0,
     exclude_terms: frozenset[str] | None = None,
@@ -4490,7 +4469,15 @@ def make_wand_kernel(
     full_mask: int = 0,
     after: tuple[float, int] | None = None,
 ):
-    """Build the per-shard block-max WAND applyInPandas kernel.
+    """Build the per-shard block-max WAND applyInPandas kernel: parse the
+    shard's posting rows, then :func:`_shard_topk`.
+
+    ``term_stats`` ({term: (mult, df)}) rides in the closure — the
+    driver holds the stats (warm dictionary, or one pruned terms
+    lookup), so the input rows need no mult/df columns and the
+    per-query plan has no broadcast. Under ``pruning='none'`` every
+    shard term reaches the kernel; terms outside ``term_stats`` score
+    nothing.
 
     ``after``: cursor pagination — only docs strictly after the
     ``(round6(score), doc_id)`` cursor are admitted (see
@@ -4499,24 +4486,12 @@ def make_wand_kernel(
 
     ``term_gmask`` / ``full_mask``: boolean MUST-group constraints (see
     :func:`_wand_sweep`) — per-term bitmasks of required-group
-    membership. Postings are doc-sharded, so a shard whose terms don't
-    cover every required group rules out all its docs before any decode.
+    membership.
 
-    ``exclude_terms``: boolean NOT — posting rows whose term is in the set
-    never score; their doc ids (doc blob only, tf/dl untouched) form a
-    per-shard exclusion set applied inside :func:`_wand_sweep`. Exclusion
-    is shard-local (postings are doc-sharded), so NOT costs zero extra
-    shuffles.
-
-    ``term_stats`` ({term: (mult, df)}) rides in the closure when the
-    driver holds the dictionary (warm serving mode) — the input rows then
-    need no mult/df columns and the per-query plan has no broadcast.
-
-    Machinery shared with :func:`make_wand_batch_kernel` (see
-    ``_parse_term_rows`` / ``_wand_sweep``): per-term block tables cache
-    WEIGHT-FREE base scores, block-partially decoded via the stored byte
-    offsets — a skipped block is never decoded (VERDICT r3 #1); lists of
-    <=2 blocks take the full-blob decode.
+    ``exclude_terms``: boolean NOT — their doc ids form a per-shard
+    exclusion set. Exclusion is shard-local (postings are doc-sharded),
+    so NOT costs zero extra shuffles. ``dead_bcast`` / ``include_bcast``
+    broadcast the sorted tombstone and restriction id arrays.
 
     ``counters`` (optional dict, mutated in place) records
     ``blocks_decoded`` / ``blocks_total`` / ``full_decodes`` /
@@ -4525,69 +4500,19 @@ def make_wand_kernel(
     mutates its own copy, which is discarded.
     """
 
-    def kernel(pdf: pd.DataFrame) -> pd.DataFrame:
+    # the function's name shows in the executed plan
+    def wrapped(key, pdf):
         if len(pdf) == 0:
             return pd.DataFrame({"doc_id": [], "score": []})
-        shard_id = int(pdf["shard_id"].iloc[0])
-        base = shard_id * shard_size
-        term_map = _parse_term_rows(pdf, base, counters)
-
-        excl_docs = None
-        if exclude_terms:
-            arrs = [
-                _decode_doc_ids(t, base, counters)
-                for term in sorted(exclude_terms)
-                if (t := term_map.pop(term, None)) is not None
-            ]
-            if arrs:
-                excl_docs = np.unique(np.concatenate(arrs))
-        if dead_bcast is not None:
-            excl_docs = _merge_dead(
-                excl_docs, dead_bcast.value, base, shard_size
-            )
-        incl_docs = None
-        if include_bcast is not None:
-            incl = include_bcast.value
-            lo = int(np.searchsorted(incl, base))
-            hi = int(np.searchsorted(incl, base + shard_size))
-            if hi <= lo:
-                # restriction filter has no doc in this shard: nothing to
-                # decode or sweep at all
-                return pd.DataFrame({"doc_id": [], "score": []})
-            incl_docs = incl[lo:hi]
-
-        weighted = []
-        gmasks: list[int] = []
-        shard_mask = 0
-        for term, t in term_map.items():
-            if term_stats is not None:
-                stats = term_stats.get(term)
-                if stats is None:
-                    # pruning='none' (a valid strategy) passes every shard
-                    # term through; non-query terms score nothing
-                    continue
-                mult, df_ = float(stats[0]), int(stats[1])
-            else:
-                mult, df_ = t["row_mult"], t["row_df"]
-            weighted.append((mult * bm25_idf(n_docs, df_), t))
-            gm = term_gmask.get(term, 0) if term_gmask else 0
-            gmasks.append(gm)
-            shard_mask |= gm
-        if not weighted or (require_n > 0 and len(weighted) < require_n):
-            # conjunctive: postings are doc-sharded, so a query term with
-            # no postings in this shard rules out every doc in it
-            return pd.DataFrame({"doc_id": [], "score": []})
-        if full_mask and (shard_mask & full_mask) != full_mask:
-            # a required group has no postings at all in this shard
-            return pd.DataFrame({"doc_id": [], "score": []})
-        docs, scores = _wand_sweep(
-            weighted, k, base, avgdl, counters, require_n, excl_docs,
-            incl_docs, gmasks if full_mask else None, full_mask, after,
+        base = int(pdf["shard_id"].iloc[0]) * shard_size
+        docs, scores = _shard_topk(
+            _parse_term_rows(pdf, base, counters), base, shard_size,
+            term_stats, n_docs, avgdl, k, require_n, exclude_terms,
+            dead_bcast.value if dead_bcast is not None else None,
+            include_bcast.value if include_bcast is not None else None,
+            term_gmask, full_mask, after, counters,
         )
         return pd.DataFrame({"doc_id": docs, "score": scores})
-
-    def wrapped(key, pdf: pd.DataFrame) -> pd.DataFrame:
-        return kernel(pdf)
 
     return wrapped
 
@@ -4616,50 +4541,23 @@ def make_wand_batch_kernel(
     with a corpus-absent term never reach the kernel).
     """
 
-    def kernel(pdf: pd.DataFrame) -> pd.DataFrame:
+    def wrapped(key, pdf):
         if len(pdf) == 0:
             return pd.DataFrame({"query_id": [], "doc_id": [], "score": []})
-        shard_id = int(pdf["shard_id"].iloc[0])
-        base = shard_id * shard_size
+        base = int(pdf["shard_id"].iloc[0]) * shard_size
         term_map = _parse_term_rows(pdf, base, counters)
-
-        qids: list[np.ndarray] = []
-        docs_out: list[np.ndarray] = []
-        scores_out: list[np.ndarray] = []
+        dead = dead_bcast.value if dead_bcast is not None else None
+        qids, docs_out, scores_out = [], [], []
         for qid in sorted(per_query):
-            require_n = len(per_query[qid]) if conjunctive else 0
-            weighted = [
-                (float(m) * bm25_idf(n_docs, int(df_)), term_map[t])
-                for t, (m, df_) in per_query[qid].items()
-                if t in term_map
-            ]
-            if not weighted or (require_n > 0 and len(weighted) < require_n):
-                continue
-            excl_docs = None
-            if per_query_excl and qid in per_query_excl:
-                # get, not pop: an exclusion term here may be another
-                # query's scoring term; doc-id decode reuses the shared
-                # per-term cache either way
-                arrs = [
-                    _decode_doc_ids(t, base, counters)
-                    for term in sorted(per_query_excl[qid])
-                    if (t := term_map.get(term)) is not None
-                ]
-                if arrs:
-                    excl_docs = np.unique(np.concatenate(arrs))
-            if dead_bcast is not None:
-                excl_docs = _merge_dead(
-                    excl_docs, dead_bcast.value, base, shard_size
-                )
-            docs, scores = _wand_sweep(
-                weighted, k, base, avgdl, counters, require_n, excl_docs
+            pq = per_query[qid]
+            docs, scores = _shard_topk(
+                term_map, base, shard_size, pq, n_docs, avgdl, k,
+                len(pq) if conjunctive else 0,
+                (per_query_excl or {}).get(qid), dead, counters=counters,
             )
-            if len(docs):
-                qids.append(np.full(len(docs), qid, dtype=np.int32))
-                docs_out.append(docs)
-                scores_out.append(scores)
-        if not docs_out:
-            return pd.DataFrame({"query_id": [], "doc_id": [], "score": []})
+            qids.append(np.full(len(docs), qid, dtype=np.int32))
+            docs_out.append(docs)
+            scores_out.append(scores)
         return pd.DataFrame(
             {
                 "query_id": np.concatenate(qids),
@@ -4667,8 +4565,5 @@ def make_wand_batch_kernel(
                 "score": np.concatenate(scores_out),
             }
         )
-
-    def wrapped(key, pdf: pd.DataFrame) -> pd.DataFrame:
-        return kernel(pdf)
 
     return wrapped

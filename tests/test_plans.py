@@ -23,6 +23,20 @@ def test_postings_scan_pushdown(spark, small_index):
     assert_plan(posts, "PushedFilters: [In(term", "Scan parquet")
 
 
+def test_empty_term_list_decodes_nothing(spark, small_index):
+    """An empty term list asks for no postings: no rows, and no Spark job
+    (the pruner leaves an empty list's scan unfiltered, so the posting
+    scan must not reach it)."""
+    index_dir, _ = small_index
+    fts = FtsIndex(spark, index_dir)
+    rows = []
+    jobs, _ = _jobs_launched(
+        spark, lambda: rows.extend(fts.decoded_postings([]).collect())
+    )
+    assert rows == []
+    assert jobs == 0
+
+
 def test_relational_search_shape(spark, small_index):
     index_dir, _ = small_index
     fts = FtsIndex(spark, index_dir)
@@ -183,7 +197,7 @@ def test_serving_plans_have_no_broadcast_exchange(spark, small_index):
     try:
         mult = {"turtle": 1, "hotel": 1}
         for df in (
-            fts._query_postings(mult),
+            fts.postings_for(list(mult)),
             fts._decoded_with_stats(mult),
             fts._bm25_scored(mult),
             fts.search_bm25("turtle hotel", k=5, mode="relational"),
@@ -192,11 +206,11 @@ def test_serving_plans_have_no_broadcast_exchange(spark, small_index):
             plan = formatted_plan(df)
             assert "BroadcastExchange" not in plan, plan
         assert "InMemoryTableScan" in formatted_plan(
-            fts._query_postings(mult)
+            fts.postings_for(list(mult))
         )  # served from the warmed cache
         # cold mode pushes the isin literals into the parquet scan
         cold = FtsIndex(spark, index_dir)
-        cold_plan = formatted_plan(cold._query_postings(mult))
+        cold_plan = formatted_plan(cold.postings_for(list(mult)))
         assert "turtle" in cold_plan
         assert "BroadcastExchange" not in formatted_plan(
             cold.search_bm25("turtle hotel", k=5, mode="wand")

@@ -55,9 +55,15 @@ def bm25_score(mult, n_docs, df, tf, dl, avgdl):
     return mult * idf * tf * (K1 + 1.0) / (tf + K1 * (1.0 - B + B * dl / avgdl))
 
 
+def stats_of(rows):
+    """The kernel's {term: (mult, df)} closure stats, read off the test's
+    own posting rows."""
+    return {r["term"]: (r["mult"], r["df"]) for r in rows}
+
+
 def run_kernel(rows, n_docs, avgdl, k, counters):
     kernel = make_wand_kernel(
-        n_docs, SHARD_SIZE, avgdl, k, counters=counters
+        n_docs, SHARD_SIZE, avgdl, k, stats_of(rows), counters=counters
     )
     out = kernel(None, pd.DataFrame(rows))
     return sorted(
@@ -325,7 +331,9 @@ def test_wand_sweep_matches_bruteforce_property():
             brute[local] += bm25_score(mult, n, m, tfs, dls_all[local], avgdl)
             matched[local] = True
         counters: dict[str, int] = {}
-        kernel = make_wand_kernel(n, SHARD_SIZE, avgdl, k, counters=counters)
+        kernel = make_wand_kernel(
+            n, SHARD_SIZE, avgdl, k, stats_of(rows), counters=counters
+        )
         out = kernel(None, pd.DataFrame(rows))
         got = {
             int(d) - base: float(s)
@@ -347,6 +355,38 @@ def test_wand_sweep_matches_bruteforce_property():
 
     check()
 
+def test_scores_do_not_depend_on_row_order():
+    """A shard's posting rows reach the kernel in whatever order the scan
+    yields them. Terms are weighed in ascending term order, so every
+    arrival order sums each doc's contributions the same way and gives
+    bit-identical scores (float addition is not associative)."""
+    from itertools import permutations
+
+    rng = np.random.default_rng(11)
+    n = 387
+    dls_all = rng.integers(1, 200, size=n).astype(np.int64)
+    avgdl = float(dls_all.mean())
+    rows = []
+    for ti in range(5):
+        m = int(rng.integers(n // 2, n))
+        local = np.sort(rng.choice(n, size=m, replace=False))
+        rows.append(
+            _make_row_skip(
+                f"t{ti}", local, rng.integers(1, 50, size=m), dls_all[local],
+                mult=int(rng.integers(1, 4)), df=m, skip=16,
+            )
+        )
+    kernel = make_wand_kernel(n, SHARD_SIZE, avgdl, 0, stats_of(rows))
+    results = set()
+    for order in permutations(rows):
+        out = kernel(None, pd.DataFrame(list(order)))
+        assert len(out) > 0
+        results.add(
+            tuple(sorted(zip(out["doc_id"].tolist(), out["score"].tolist())))
+        )
+    assert len(results) == 1
+
+
 def test_conjunctive_basic():
     """require_n = n_terms: only docs carrying every term are returned,
     scored identically to the OR run restricted to those docs."""
@@ -361,7 +401,9 @@ def test_conjunctive_basic():
         make_posting_row("a", docs_a, tfs_a, dls[docs_a], mult=1, df=len(docs_a)),
         make_posting_row("b", docs_b, tfs_b, dls[docs_b], mult=1, df=len(docs_b)),
     ]
-    kernel = make_wand_kernel(n, SHARD_SIZE, avgdl, 0, counters={}, require_n=2)
+    kernel = make_wand_kernel(
+        n, SHARD_SIZE, avgdl, 0, stats_of(rows), counters={}, require_n=2
+    )
     out = kernel(None, pd.DataFrame(rows))
     got = dict(zip(out["doc_id"].astype(int), out["score"].astype(float)))
     expect_docs = set(range(0, n, 6))    # evens ∩ multiples of 3
@@ -387,7 +429,8 @@ def test_conjunctive_missing_term_in_shard_returns_empty():
     ]
     counters: dict[str, int] = {}
     kernel = make_wand_kernel(
-        n, SHARD_SIZE, 60.0, 10, counters=counters, require_n=2
+        n, SHARD_SIZE, 60.0, 10, stats_of(rows), counters=counters,
+        require_n=2,
     )
     out = kernel(None, pd.DataFrame(rows))
     assert len(out) == 0
@@ -411,7 +454,8 @@ def test_conjunctive_prunes_disjoint_blocks():
     ]
     counters: dict[str, int] = {}
     kernel = make_wand_kernel(
-        n, SHARD_SIZE, 100.0, 10, counters=counters, require_n=2
+        n, SHARD_SIZE, 100.0, 10, stats_of(rows), counters=counters,
+        require_n=2,
     )
     out = kernel(None, pd.DataFrame(rows))
     assert set(out["doc_id"].astype(int)) <= set(rare_docs.tolist())
@@ -457,7 +501,8 @@ def test_conjunctive_matches_bruteforce_property():
             brute[local] += bm25_score(mult, n, m, tfs, dls_all[local], avgdl)
             match_cnt[local] += 1
         kernel = make_wand_kernel(
-            n, SHARD_SIZE, avgdl, k, counters={}, require_n=n_terms
+            n, SHARD_SIZE, avgdl, k, stats_of(rows), counters={},
+            require_n=n_terms,
         )
         out = kernel(None, pd.DataFrame(rows))
         got = {
@@ -528,7 +573,7 @@ def test_group_masks_match_bruteforce_property():
             cover[local] |= int(gmask[ti])
             term_gmask[f"t{ti}"] = int(gmask[ti])
         kernel = make_wand_kernel(
-            n, SHARD_SIZE, avgdl, k, counters={},
+            n, SHARD_SIZE, avgdl, k, stats_of(rows), counters={},
             term_gmask=term_gmask, full_mask=full_mask,
         )
         out = kernel(None, pd.DataFrame(rows))
@@ -651,7 +696,7 @@ def test_cursor_pages_tile_full_ordering_property():
                 )
             )
         pdf = pd.DataFrame(rows)
-        full_kernel = make_wand_kernel(n, SHARD_SIZE, avgdl, 0)
+        full_kernel = make_wand_kernel(n, SHARD_SIZE, avgdl, 0, stats_of(rows))
         out = full_kernel(None, pdf)
         full = sorted(
             zip(out["doc_id"].astype(int), out["score"].astype(float)),
@@ -668,7 +713,7 @@ def test_cursor_pages_tile_full_ordering_property():
         pages, cursor = [], None
         for _ in range(len(full) // page + 2):
             kern = make_wand_kernel(
-                n, SHARD_SIZE, avgdl, page, after=cursor
+                n, SHARD_SIZE, avgdl, page, stats_of(rows), after=cursor
             )
             o = kern(None, pdf)
             rows_p = sorted(
