@@ -51,7 +51,11 @@ from pyspark.sql import DataFrame, SparkSession, functions as F
 from .codec import SKIP_BLOCK
 from .checkpoint import Manifest, atomic_write_json
 from .layout import POSTINGS_SCHEMA, read_table
-from .functions.udfs import make_term_tf_by_lang_udf, make_term_tf_udf
+from .functions.udfs import (
+    make_term_tf_by_lang_udf,
+    make_term_tf_udf,
+    term_tf_pairs,
+)
 
 # v2: postings gained skip_dl_off (per-block byte offsets into dl_blob) so
 # the WAND kernel can decode doc/tf/dl per skip block instead of whole blobs
@@ -113,6 +117,14 @@ def _term_tf_col(cfg: BuildConfig):
         return lambda df: udf(F.col("text"), F.col("lang"))
     udf = make_term_tf_udf(cfg.preset)
     return lambda df: udf(F.col("text"))
+
+
+def _term_tf_pairs(cfg: BuildConfig):
+    """The pair function :func:`_term_tf_col`'s UDF runs, called in the
+    driver by :func:`stage_in_driver`."""
+    if cfg.preset == "by_lang":
+        return term_tf_pairs("multilingual", by_lang=True)
+    return term_tf_pairs(cfg.preset)
 
 
 def assign_doc_ids(
@@ -553,6 +565,33 @@ def postings_wave_plan(
     )
 
 
+class _BuildLog:
+    """Structured build log (reference setupLogger role, main.go:592-613:
+    slog JSON to file; here one JSON line per completed phase) plus the
+    phase timings a build returns as ``build_phases``. Appended, so a
+    resumed build's log shows the whole history across attempts."""
+
+    def __init__(self, index_dir: str):
+        self.path = os.path.join(index_dir, "build_log.jsonl")
+        self.t_start = time.monotonic()
+        self.phases: dict[str, float] = {}
+
+    def event(self, event: str, **fields) -> None:
+        rec = {"ts": time.time(), "event": event, "app": "fts-build", **fields}
+        with open(self.path, "a") as f:
+            f.write(json.dumps(rec) + "\n")
+
+    def lap(self, name: str, t0: float) -> float:
+        now = time.monotonic()
+        self.phases[name] = round(now - t0, 3)
+        self.event("phase_done", phase=name, seconds=self.phases[name])
+        return now
+
+    def total(self) -> float:
+        self.phases["total"] = round(time.monotonic() - self.t_start, 3)
+        return self.phases["total"]
+
+
 def build_index(
     spark: SparkSession,
     docs: DataFrame,
@@ -579,25 +618,8 @@ def build_index(
     cfg = cfg or BuildConfig()
     os.makedirs(index_dir, exist_ok=True)
     manifest = Manifest(index_dir)
-    t_start = time.monotonic()
-    phases: dict[str, float] = {}
-    # structured build log (reference setupLogger role, main.go:592-613:
-    # slog JSON to file; here one JSON line per completed phase) — appended,
-    # so a resumed build's log shows the whole history across attempts
-    log_path = os.path.join(index_dir, "build_log.jsonl")
-
-    def _log_event(event: str, **fields) -> None:
-        rec = {"ts": time.time(), "event": event, "app": "fts-build", **fields}
-        with open(log_path, "a") as f:
-            f.write(json.dumps(rec) + "\n")
-
-    def _lap(name: str, t0: float) -> float:
-        now = time.monotonic()
-        phases[name] = round(now - t0, 3)
-        _log_event("phase_done", phase=name, seconds=phases[name])
-        return now
-
-    _log_event(
+    log = _BuildLog(index_dir)
+    log.event(
         "build_start",
         preset=cfg.preset,
         shard_size=cfg.shard_size,
@@ -669,7 +691,7 @@ def build_index(
     if docs_written:
         docs_table.write.mode("overwrite").parquet(docs_path)
         manifest.mark_done("docs", {"n_docs": n_docs})
-    t_phase = _lap("docs_write", t_phase)
+    t_phase = log.lap("docs_write", t_phase)
 
     n_shards = max(1, math.ceil(n_docs / cfg.shard_size))
     n_waves = min(cfg.n_waves, n_shards)
@@ -718,8 +740,8 @@ def build_index(
             .parquet(postings_path)
         )
         manifest.mark_done(wave_key, {"shards": [lo, hi]})
-        _log_event("wave_done", wave=wave_key, shard_lo=lo, shard_hi=hi)
-    t_phase = _lap("postings", t_phase)
+        log.event("wave_done", wave=wave_key, shard_lo=lo, shard_hi=hi)
+    t_phase = log.lap("postings", t_phase)
 
     # ---- optional positional table (index-only phrase queries)
     if cfg.store_positions and not (resume and manifest.is_done("positions")):
@@ -730,7 +752,7 @@ def build_index(
             cfg.bloom_ndv, n_shards=n_shards,
         )
         manifest.mark_done("positions", {"n_docs": n_docs})
-        t_phase = _lap("positions", t_phase)
+        t_phase = log.lap("positions", t_phase)
 
     # ---- optional stored fields (point-readable text for snippets)
     if cfg.store_text and not (resume and manifest.is_done("stored")):
@@ -738,7 +760,7 @@ def build_index(
 
         build_stored_table(with_ids, index_dir, n_docs)
         manifest.mark_done("stored", {"n_docs": n_docs})
-        t_phase = _lap("stored", t_phase)
+        t_phase = log.lap("stored", t_phase)
 
     # ---- global term stats (df/cf) merged across shards; a staged build
     # skips it (its delta's df/cf are merged from the staged postings)
@@ -766,7 +788,7 @@ def build_index(
             .parquet(terms_path)
         )
         manifest.mark_done("terms", {})
-    t_phase = _lap("terms", t_phase)
+    t_phase = log.lap("terms", t_phase)
 
     # ---- per-shard metrics (lineage: reference Analyze, stats.go:3-11)
     if not (resume and manifest.is_done("meta")):
@@ -789,7 +811,7 @@ def build_index(
         base.unpersist()
         return meta
 
-    t_phase = _lap("metrics", t_phase)
+    t_phase = log.lap("metrics", t_phase)
     # avgdl = total tokens / docs: Σdoclen over the cached base, which
     # equals Σcf of the dictionary exactly (a staged build has none). A
     # resumed build that skipped the docs write has no cached base and
@@ -797,7 +819,7 @@ def build_index(
     lens = base if docs_written else read_table(spark, docs_path, "docs")
     total_tokens = lens.agg(F.sum("doclen")).first()[0]
     avgdl = float(total_tokens or 0) / max(1, n_docs)
-    phases["total"] = round(time.monotonic() - t_start, 3)
+    log.total()
     import uuid
 
     meta = {
@@ -822,8 +844,8 @@ def build_index(
         # docs table with the SAME metadata columns (a splice without
         # them would leave delta rows NULL where full rows have values)
         "meta_cols": list(meta_cols),
-        "build_seconds": time.monotonic() - t_start,
-        "build_phases": phases,
+        "build_seconds": time.monotonic() - log.t_start,
+        "build_phases": log.phases,
     }
     if cfg.store_positions:
         # snapshot identity for the positional table: phrase-from-positions
@@ -836,12 +858,157 @@ def build_index(
         meta["stored"] = {"version": STORED_VERSION, "n_docs": n_docs}
     atomic_write_json(os.path.join(index_dir, "meta.json"), meta)
     manifest.mark_done("meta", {})
-    _log_event(
+    log.event(
         "build_done",
         n_docs=n_docs,
         n_shards=n_shards,
-        seconds=phases["total"],
+        seconds=log.phases["total"],
     )
     base.unpersist()
     return meta
 
+
+def stage_in_driver(
+    batch, index_dir: str, cfg: BuildConfig, first_shard: int
+) -> dict:
+    """The driver envelope of a staged build (``build_index(...,
+    _first_shard=first_shard)``) for a batch that fits one tokenize task.
+
+    ``batch`` is the whole batch as an Arrow table of ``(url, text, lang,
+    _h)``, ``_h`` being Spark's ``xxhash64(url)`` (collected with the rows,
+    never reimplemented). The id rule, the pair function and the encoder
+    are the Spark build's own:
+
+    - ids: :func:`assign_doc_ids` numbers rows by bucket
+      (``pmod(_h, id_buckets)``) offsets plus a rank by ``(_h, url)``
+      within the bucket, which is a row's position in the
+      ``(bucket, _h, url)`` order (nulls first, as Spark sorts);
+    - pairs: :func:`_term_tf_pairs`, the function the tokenize UDF runs;
+    - postings: :func:`_make_doc_encoder` over the same document rows.
+
+    It writes the staged layout with pyarrow (``postings/shard_id=N/``,
+    ``docs/``, ``metrics/``; snappy, ``layout.TABLE_SCHEMAS`` types) and
+    no Spark job. pyarrow writes no parquet bloom filters: a
+    driver-staged delta shard keeps its row-group min/max stats and
+    regains its ``term`` bloom filter when compaction re-encodes it.
+    Returns the staged meta fields the append reads (``n_docs``,
+    ``n_shards``, ``avgdl``) and ``build_phases``.
+    """
+    import hashlib
+
+    import pyarrow as pa
+    import pyarrow.compute as pc
+    import pyarrow.parquet as pq
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    from .layout import TABLE_SCHEMAS
+
+    os.makedirs(index_dir, exist_ok=True)
+    log = _BuildLog(index_dir)
+    log.event(
+        "build_start", preset=cfg.preset, shard_size=cfg.shard_size,
+        envelope="driver",
+    )
+    n_docs = batch.num_rows
+    urls = batch.column("url").to_pylist()
+    langs = batch.column("lang").to_pylist()
+    t_phase = time.monotonic()
+    pairs = _term_tf_pairs(cfg)(batch.column("text").to_pylist(), langs)
+    t_phase = log.lap("tokenize", t_phase)
+
+    h = batch.column("_h").to_numpy().astype(np.int64)
+    bucket = np.mod(h, cfg.id_buckets)
+    order = sorted(
+        range(n_docs),
+        key=lambda i: (bucket[i], h[i], urls[i] is not None, urls[i] or ""),
+    )
+    doc_id = np.empty(n_docs, dtype=np.int64)
+    doc_id[order] = first_shard * cfg.shard_size + np.arange(n_docs)
+    doclen = np.array([sum(p["tf"] for p in ps) for ps in pairs], np.int64)
+    flat = [p for ps in pairs for p in ps]
+    pairs_arr = pa.ListArray.from_arrays(
+        np.concatenate([[0], np.cumsum([len(ps) for ps in pairs])]).astype(
+            np.int32
+        ),
+        pa.StructArray.from_arrays(
+            [
+                pa.array([p["term"] for p in flat], pa.string()),
+                pa.array([p["tf"] for p in flat], pa.int32()),
+            ],
+            names=["term", "tf"],
+        ),
+    )
+    rows = pa.RecordBatch.from_arrays(
+        [pa.array(doc_id // cfg.shard_size), pa.array(doc_id),
+         pa.array(doclen), pairs_arr],
+        names=["shard_id", "doc_id", "dl", "pairs"],
+    )
+    encoded = list(_make_doc_encoder(cfg.shard_size, cfg.skip_block)([rows]))
+    t_phase = log.lap("encode", t_phase)
+
+    def _write(table, name: str, path: str) -> None:
+        schema = to_arrow_schema(TABLE_SCHEMAS[name])
+        if name == "postings":  # shard_id is the partition directory
+            schema = schema.remove(schema.get_field_index("shard_id"))
+        os.makedirs(os.path.dirname(path), exist_ok=True)
+        pq.write_table(
+            table.select(schema.names).cast(schema), path,
+            compression="snappy",
+        )
+
+    part = "part-00000.parquet"
+    os.makedirs(os.path.join(index_dir, "postings"), exist_ok=True)
+    metrics = {n: [] for n in TABLE_SCHEMAS["metrics"].names}
+    if encoded:
+        # groups come out ordered by (shard, term): one file per shard
+        postings = pa.Table.from_batches(encoded)
+        shard = postings.column("shard_id").to_numpy()
+        starts = np.flatnonzero(np.diff(shard, prepend=-1))
+        ends = np.append(starts[1:], len(shard))
+        for lo, hi in zip(starts, ends):
+            shard_rows = postings.slice(lo, hi - lo)
+            _write(
+                shard_rows, "postings",
+                os.path.join(
+                    index_dir, "postings", f"shard_id={shard[lo]}", part
+                ),
+            )
+            # the Spark build's per-shard metrics aggregate, over the rows
+            metrics["shard_id"].append(int(shard[lo]))
+            metrics["n_terms"].append(shard_rows.num_rows)
+            metrics["n_postings"].append(pc.sum(shard_rows["count"]).as_py())
+            metrics["blob_bytes"].append(
+                sum(
+                    pc.sum(pc.binary_length(shard_rows[c])).as_py()
+                    for c in ("doc_blob", "tf_blob")
+                )
+            )
+    _write(pa.table(metrics), "metrics", os.path.join(index_dir, "metrics", part))
+    order_ids = np.argsort(doc_id)
+    docs = pa.table(
+        {
+            "doc_id": doc_id,
+            "url": urls,
+            "url_md5": [
+                hashlib.md5(u.encode("utf-8")).hexdigest()
+                if u is not None else None
+                for u in urls
+            ],
+            "lang": langs,
+            "doclen": doclen.astype(np.int32),
+        }
+    ).take(order_ids)
+    _write(docs, "docs", os.path.join(index_dir, "docs", part))
+    log.lap("write", t_phase)
+    log.total()
+    n_shards = max(1, math.ceil(n_docs / cfg.shard_size))
+    log.event(
+        "build_done", n_docs=n_docs, n_shards=n_shards,
+        seconds=log.phases["total"],
+    )
+    return {
+        "n_docs": n_docs,
+        "n_shards": n_shards,
+        "avgdl": float(int(doclen.sum())) / max(1, n_docs),
+        "build_phases": log.phases,
+    }

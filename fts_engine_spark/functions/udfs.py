@@ -84,22 +84,38 @@ def make_tokenize_by_lang_udf(default_preset: str = "multilingual"):
     return tokenize_text_lang
 
 
+def term_tf_pairs(preset: str = "english", by_lang: bool = False):
+    """The tokenize + doc-local tf function every ``term_tf`` UDF runs,
+    also called directly by the driver-staged build
+    (``build.stage_in_driver``): ``pairs(texts, langs=None)`` returns one
+    ``[{term, tf}]`` list per text, exactly ``Counter(pipeline.process(t))``
+    (``[]`` for a null text). ``by_lang`` routes each row by its lang
+    (en→english, ru→russian, anything else→``preset``)."""
+    fallback = get_pipeline(preset)
+
+    def pairs(texts, langs=None) -> list[list[dict]]:
+        fb = fallback.process
+        if not by_lang:
+            return [_pairs(Counter(fb(t))) if t is not None else [] for t in texts]
+        pipes = {k: get_pipeline(v).process for k, v in _LANG_PRESETS.items()}
+        return [
+            _pairs(Counter(pipes.get(lg, fb)(t))) if t is not None else []
+            for t, lg in zip(texts, langs)
+        ]
+
+    return pairs
+
+
 def make_term_tf_udf(preset: str = "english"):
     """``term_tf(text) -> array<struct<term,tf>>``: tokenize + doc-local tf
     aggregation in one Python pass (exactly ``Counter(pipeline.process(t))``,
     so tf values are identical to ``groupBy(term, doc_id).count()`` over the
     exploded token array — pinned by tests/test_build_pairs.py)."""
-    pipe = get_pipeline(preset)
+    pairs = term_tf_pairs(preset)
 
     @pandas_udf(TERM_TF_TYPE)
     def term_tf(text: pd.Series) -> pd.Series:
-        proc = pipe.process
-        return pd.Series(
-            [
-                _pairs(Counter(proc(t))) if t is not None else []
-                for t in text
-            ]
-        )
+        return pd.Series(pairs(text))
 
     return term_tf
 
@@ -107,19 +123,11 @@ def make_term_tf_udf(preset: str = "english"):
 def make_term_tf_by_lang_udf(default_preset: str = "multilingual"):
     """``term_tf(text, lang) -> array<struct<term,tf>>`` with per-row
     pipeline routing (en→english, ru→russian, else default)."""
-    fallback = get_pipeline(default_preset)
+    pairs = term_tf_pairs(default_preset, by_lang=True)
 
     @pandas_udf(TERM_TF_TYPE)
     def term_tf_lang(text: pd.Series, lang: pd.Series) -> pd.Series:
-        pipes = {k: get_pipeline(v).process for k, v in _LANG_PRESETS.items()}
-        fb = fallback.process
-        out = []
-        for t, lg in zip(text, lang):
-            if t is None:
-                out.append([])
-            else:
-                out.append(_pairs(Counter(pipes.get(lg, fb)(t))))
-        return pd.Series(out)
+        return pd.Series(pairs(text, lang))
 
     return term_tf_lang
 

@@ -11,7 +11,8 @@ it is a LocalTableScan the planner can broadcast without running tasks.
 ``local_df`` is the drop-in replacement used by every query-path site
 that materializes bounded results or tiny join relations. Rows must be
 non-null in non-string columns (true for every caller: ids, scores,
-counts); a row whose arity differs from the schema is rejected. When
+counts); a row whose arity differs from the schema is rejected. No rows
+give a relation Catalyst knows is empty, so it costs no job. When
 the pandas/Arrow conversion itself refuses the data it falls back to the
 classic path, so behavior can only differ in speed.
 """
@@ -30,7 +31,10 @@ def local_df(spark: SparkSession, rows, schema) -> DataFrame:
     assert isinstance(st, StructType)
     rows = [tuple(r) for r in rows]
     if not rows:
-        return spark.createDataFrame([], st)
+        # limit(0) lets Catalyst fold the relation to an empty
+        # LocalRelation: collecting it, or joining onto it, runs no job
+        # (an empty parallelized relation still schedules one)
+        return spark.createDataFrame([], st).limit(0)
     width = len(st.fields)
     bad = next((r for r in rows if len(r) != width), None)
     if bad is not None:

@@ -188,6 +188,11 @@ def update_documents(
     the index is hash-identical to a fresh build of the updated corpus
     (tests/test_update.py). ``docs``: (url, text, lang) like every build
     entry point; cost O(updates), never touching unrelated postings.
+
+    Job count: the delete and the dictionary merge run on Spark; a batch
+    of at most ``incremental._DRIVER_STAGE_MAX_DOCS`` docs (no
+    ``meta_cols``, no fresh sidecar) stages in the driver after one
+    bounded collect, a larger one through the Spark staged build.
     """
     from .build import BuildConfig
     from .streaming.incremental import _append_batch

@@ -3965,18 +3965,14 @@ class FtsIndex:
         )
 
     def _empty_bm25_result(self, hydrate: bool = False) -> DataFrame:
-        # spark.range(0) is a LocalRelation — no tasks scheduled on collect
-        empty = self.spark.range(0).select(
-            F.col("id").alias("doc_id"),
-            F.col("id").cast("double").alias("score"),
-        )
+        # a relation Catalyst knows is empty: collecting it (hydrated or
+        # not) runs no job, where spark.range(0) schedules one
+        empty = self._local_result_df([], "doc_id long, score double")
         return self._maybe_hydrate(empty, hydrate, bounded=True)
 
     def _empty_reference_result(self, hydrate: bool) -> DataFrame:
-        return self.spark.range(0).select(
-            F.col("id").alias("doc_id"),
-            F.col("id").alias("unique_matches"),
-            F.col("id").alias("total_matches"),
+        return self._local_result_df(
+            [], "doc_id long, unique_matches long, total_matches long"
         )
 
 

@@ -26,13 +26,23 @@ import os
 from pyspark.sql import DataFrame, SparkSession, functions as F
 from pyspark.sql.streaming import StreamingQuery
 
-from ..build import BuildConfig, build_index
+from ..build import (
+    _MIN_TOKENIZE_TASK_DOCS,
+    BuildConfig,
+    build_index,
+    stage_in_driver,
+)
 from ..checkpoint import Manifest, atomic_write_json
 from ..layout import next_version_dir, read_table, table_path
 
 PAGES_SCHEMA = (
     "url string, warc_ts timestamp, html binary, text string, lang string"
 )
+
+# a batch of at most this many docs stages in the driver: the Spark staged
+# build would tokenize it in one task anyway (assign_doc_ids sizes its
+# partitions by the same constant), so its ~9 jobs would be fixed cost
+_DRIVER_STAGE_MAX_DOCS = _MIN_TOKENIZE_TASK_DOCS
 
 
 def _checkpoint_stream_id(spark: SparkSession, checkpoint_dir: str) -> str:
@@ -158,6 +168,34 @@ def _merge_dictionary(
     return terms_ptr
 
 
+def _batch_head(batch_df: DataFrame, n: int):
+    """At most ``n`` rows of ``(url, text, lang, _h = xxhash64(url))`` as
+    an Arrow table, in one job of one task: ``coalesce(1)`` makes the limit
+    a single-partition collect with no exchange, and a ``text`` derived
+    from ``html`` is extracted inside that task."""
+    return (
+        batch_df.select("url", "text", "lang", F.xxhash64("url").alias("_h"))
+        .coalesce(1)
+        .limit(n)
+        .toArrow()
+    )
+
+
+def _stage_batch(
+    spark: SparkSession, batch_df: DataFrame, head, staging: str,
+    cfg: BuildConfig, first_shard: int,
+) -> dict:
+    """Stage the batch at its final ids under ``staging``: in the driver
+    when ``head`` holds the whole batch (:func:`..build.stage_in_driver`),
+    else through the Spark staged build. Both write the same layout and
+    return the staged ``n_docs`` / ``n_shards`` / ``avgdl``."""
+    if head is not None:
+        return stage_in_driver(head, staging, cfg, first_shard)
+    return build_index(
+        spark, batch_df, staging, cfg, resume=False, _first_shard=first_shard
+    )
+
+
 def _append_batch(
     spark: SparkSession,
     batch_df: DataFrame,
@@ -169,9 +207,8 @@ def _append_batch(
     compact_keep_old: bool = False,
 ) -> None:
     """foreachBatch body: build the micro-batch as delta shards appended to
-    ``index_dir``. Reuses the exact batch build pipeline against a staging
-    dir, numbered from the next free shard (``build_index``'s internal
-    ``_first_shard``), so every staged table already holds its final ids:
+    ``index_dir``. The batch is staged in a staging dir, numbered from the
+    next free shard, so every staged table already holds its final ids:
     the splice MOVES the staged postings shard dirs and the docs, metrics
     and sidecar files into the live tables (``os.replace`` /
     :func:`_move_in_tagged`) — no Spark job re-reads or re-writes them.
@@ -179,6 +216,16 @@ def _append_batch(
     and :func:`_merge_dictionary` folds the staged postings' df/cf into
     the live one before they move. The batch's avgdl comes from the
     staged build's Σdoclen; every read pins its schema (no inference).
+
+    Two staging envelopes, one kernel (:func:`_stage_batch`). The append
+    first collects at most ``_DRIVER_STAGE_MAX_DOCS + 1`` batch rows in
+    one Spark job (an empty batch returns there). A batch that fits, has
+    no ``meta_cols`` and has no fresh sidecar to extend stages in the
+    driver from those rows (``build.stage_in_driver``: the build's id
+    rule, tokenize pair function and postings encoder, written with
+    pyarrow). Any other batch runs the Spark staged build
+    (``build_index``'s internal ``_first_shard``). The manifest's
+    ``delta_batch_N`` entry records which envelope ran.
 
     EXACTLY-ONCE under foreachBatch retries: Structured Streaming re-runs
     a micro-batch after a crash, so the splice must be idempotent —
@@ -205,7 +252,8 @@ def _append_batch(
     without an external scheduler. Compaction commits atomically, so a
     crash inside it never harms the just-committed append.
     """
-    if batch_df.isEmpty():
+    head = _batch_head(batch_df, _DRIVER_STAGE_MAX_DOCS + 1)
+    if not head.num_rows:
         return
     meta_path = os.path.join(index_dir, "meta.json")
     with open(meta_path) as f:
@@ -311,9 +359,15 @@ def _append_batch(
         store_text=stored_fresh,
         store_positions=positions_fresh,
     )
-    stage_meta = build_index(
-        spark, batch_df, staging, stage_cfg, resume=False,
-        _first_shard=next_shard,
+    # the write-side point tier: a batch the Spark build would tokenize in
+    # one task, with no metadata columns and no sidecar to extend, stages
+    # in the driver from the rows already collected
+    in_driver = head.num_rows <= _DRIVER_STAGE_MAX_DOCS and not (
+        stage_cfg.meta_cols or stored_fresh or positions_fresh
+    )
+    stage_meta = _stage_batch(
+        spark, batch_df, head if in_driver else None, staging, stage_cfg,
+        next_shard,
     )
 
     # the dictionary merge reads the staged postings, so it runs before
@@ -383,7 +437,11 @@ def _append_batch(
             shutil.rmtree(g, ignore_errors=True)
     Manifest(index_dir).mark_done(
         f"delta_batch_{meta['delta_batches']}",
-        {"n_docs": n_new, "first_shard": next_shard},
+        {
+            "n_docs": n_new,
+            "first_shard": next_shard,
+            "envelope": "driver" if in_driver else "spark",
+        },
     )
     shutil.rmtree(staging, ignore_errors=True)
 

@@ -91,6 +91,69 @@ def test_pinned_schemas_match_inference_through_mutations(
     assert set(_assert_pinned_equals_inferred(spark, index_dir)) == every
 
 
+def _has_term_bloom(spark, path: str) -> bool:
+    """Whether the parquet file's first row group carries a bloom filter
+    on ``term`` (read through parquet-mr, as Spark's reader sees it)."""
+    jvm = spark._jvm
+    footer = jvm.org.apache.parquet.hadoop.ParquetFileReader.readFooter(
+        spark._jsc.hadoopConfiguration(),
+        jvm.org.apache.hadoop.fs.Path(f"file://{path}"),
+    )
+    cols = footer.getBlocks().get(0).getColumns()
+    return any(
+        str(cols.get(i).getPath()) == "[term]"
+        and cols.get(i).getBloomFilterOffset() > 0
+        for i in range(cols.size())
+    )
+
+
+def test_driver_staged_files_match_pinned_schemas_and_regain_bloom(
+    spark, small_corpus, tmp_path
+):
+    """An upsert with no sidecars and no meta_cols stages in the driver
+    and writes its postings, docs and metrics with pyarrow: Spark infers
+    the pinned schemas from those files too. pyarrow writes no parquet
+    bloom filter, so the delta shards have none until compaction
+    re-encodes them through Spark, after which every shard has one."""
+    cfg = BuildConfig(preset="by_lang", shard_size=32, id_buckets=8)
+    docs = spark.read.parquet(small_corpus).select("url", "text", "lang")
+    index_dir = str(tmp_path / "ix")
+    build_index(spark, docs.limit(70), index_dir, cfg, resume=False)
+    recrawl = docs.limit(90).withColumn(
+        "text", F.concat(F.col("text"), F.lit(" recrawled"))
+    )
+    update_documents(spark, index_dir, recrawl, cfg)
+    meta = _meta(index_dir)
+    assert meta["n_deleted"] == 70 and meta["n_docs"] == 160
+    steps = json.load(open(os.path.join(index_dir, "_manifest.json")))
+    assert steps["delta_batch_1"]["metrics"]["envelope"] == "driver"
+    every = {"postings", "terms", "docs", "metrics", "tombstones"}
+    assert set(_assert_pinned_equals_inferred(spark, index_dir)) == every
+
+    def shard_files(meta: dict) -> dict[int, list[str]]:
+        root = table_path(index_dir, meta, "postings")
+        out = {}
+        for f in glob.glob(os.path.join(root, "shard_id=*", "*.parquet")):
+            out.setdefault(int(f.split("shard_id=")[1].split("/")[0]), []).append(f)
+        return out
+
+    files = shard_files(meta)
+    delta = [s for s in files if s >= 3]  # the base build filled shards 0-2
+    assert delta and not any(
+        _has_term_bloom(spark, f) for s in delta for f in files[s]
+    )
+    assert all(_has_term_bloom(spark, f) for s in files if s < 3 for f in files[s])
+
+    meta = compact_index(spark, index_dir)
+    assert meta["n_docs"] == 90 and meta.get("n_deleted", 0) == 0
+    assert set(_assert_pinned_equals_inferred(spark, index_dir)) == every - {
+        "tombstones"
+    }
+    files = shard_files(meta)
+    assert sorted(files) == list(range(3))
+    assert all(_has_term_bloom(spark, f) for fs in files.values() for f in fs)
+
+
 def _downgrade_metrics_file(index_dir: str) -> None:
     """Rewrite one metrics file with an int ``shard_id`` — the type builds
     wrote before it was widened to long — leaving a mixed-type table."""

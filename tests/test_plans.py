@@ -626,10 +626,10 @@ def test_update_documents_splices_without_spark_jobs(
 
     sc = spark.sparkContext
     group = f"splice-{id(tmp_path)}"
-    real_build, real_merge = incremental.build_index, incremental._merge_dictionary
+    real_stage, real_merge = incremental._stage_batch, incremental._merge_dictionary
 
-    def build_then_merge(*a, **kw):
-        out = real_build(*a, **kw)
+    def stage_then_merge(*a, **kw):
+        out = real_stage(*a, **kw)
         sc.setJobGroup(f"{group}-dict", "dictionary merge")
         return out
 
@@ -638,7 +638,7 @@ def test_update_documents_splices_without_spark_jobs(
         sc.setJobGroup(group, "splice")
         return out
 
-    monkeypatch.setattr(incremental, "build_index", build_then_merge)
+    monkeypatch.setattr(incremental, "_stage_batch", stage_then_merge)
     monkeypatch.setattr(incremental, "_merge_dictionary", merge_then_splice)
     try:
         out = update_documents(spark, index_dir, docs.limit(80), cfg)
@@ -648,6 +648,68 @@ def test_update_documents_splices_without_spark_jobs(
     assert list(tracker.getJobIdsForGroup(f"{group}-dict"))  # probe works
     assert list(tracker.getJobIdsForGroup(group)) == []
     assert out["meta"]["n_docs"] == 80 + out["replaced"]
+
+
+def test_small_batch_stages_in_one_spark_job(
+    spark, small_corpus, tmp_path, monkeypatch
+):
+    """A batch the Spark build would tokenize in one task stages in the
+    driver: from the start of the append up to the dictionary merge the
+    only Spark job is the bounded collect of the batch rows (it replaced
+    ``isEmpty`` plus the Spark staged build's 9 jobs)."""
+    from fts_engine_spark.build import BuildConfig, build_index
+    from fts_engine_spark.checkpoint import Manifest
+    from fts_engine_spark.streaming import incremental
+
+    cfg = BuildConfig(preset="by_lang", shard_size=32, id_buckets=8)
+    docs = spark.read.parquet(small_corpus).select("url", "text", "lang")
+    index_dir = str(tmp_path / "ix")
+    build_index(spark, docs.limit(60), index_dir, cfg, resume=False)
+
+    sc = spark.sparkContext
+    group = f"stage-{id(tmp_path)}"
+    real_merge = incremental._merge_dictionary
+
+    def leave_group_then_merge(*a, **kw):
+        sc.setJobGroup(f"{group}-merge", "dictionary merge")
+        return real_merge(*a, **kw)
+
+    monkeypatch.setattr(
+        incremental, "_merge_dictionary", leave_group_then_merge
+    )
+    sc.setJobGroup(group, "stage")
+    try:
+        # the whole 120-doc corpus: one parquet file, one input partition
+        incremental._append_batch(spark, docs, index_dir, cfg)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    tracker = sc.statusTracker()
+    assert list(tracker.getJobIdsForGroup(f"{group}-merge"))  # probe works
+    assert len(tracker.getJobIdsForGroup(group)) == 1
+    steps = Manifest(index_dir).steps()
+    assert steps["delta_batch_1"]["metrics"]["envelope"] == "driver"
+
+
+def test_empty_answers_run_no_spark_job(spark, small_index):
+    """An answer known to be empty (every query term outside the
+    dictionary, or a stopword-only query) is a relation Catalyst knows is
+    empty: collecting it runs no job, hydrated or not; so does an empty
+    ``local_df``."""
+    from fts_engine_spark.localdf import local_df
+
+    index_dir, _ = small_index
+    fts = FtsIndex(spark, index_dir).warm(serving_conf=False)
+    try:
+        for query, hydrate in (
+            ("qqqzzzxx", False), ("the and of", False), ("qqqzzzxx", True),
+        ):
+            df = fts.search_bm25(query, k=10, hydrate=hydrate)
+            assert _jobs_launched(spark, df.collect) == (0, 0), (query, hydrate)
+            assert df.collect() == []
+    finally:
+        fts.close()
+    empty = local_df(spark, [], "id long, s string")
+    assert _jobs_launched(spark, empty.collect) == (0, 0)
 
 
 def _jobs_launched(spark, fn) -> tuple[int, int]:

@@ -9,6 +9,7 @@ import pyarrow.parquet as pq
 import pytest
 
 from fts_engine_spark.build import BuildConfig, build_index
+from fts_engine_spark.checkpoint import Manifest
 from fts_engine_spark.query import FtsIndex
 from fts_engine_spark.streaming.incremental import incremental_index, ingest_stats, stream_pages
 from tools.gen_corpus import SCHEMA, gen_rows
@@ -146,6 +147,9 @@ def test_append_batch_exactly_once_under_retry(spark, tmp_path, monkeypatch):
         meta = json.load(f)
     assert meta["n_docs"] == 130
     assert meta["last_epoch"] == ["default", 7]
+    # a 30-page batch with no sidecars or meta_cols stages in the driver
+    steps = Manifest(index_dir).steps()
+    assert steps["delta_batch_1"]["metrics"]["envelope"] == "driver"
 
     fts = FtsIndex(spark, index_dir)
     # no duplicate doc rows from the crashed attempt
