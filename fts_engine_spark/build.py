@@ -151,6 +151,7 @@ def assign_doc_ids(
     The window's exchange is sized by the collected doc count: at most
     ``ceil(n / _MIN_TOKENIZE_TASK_DOCS)`` partitions, so the downstream
     tokenize (same stage) of a small batch runs in one or a few tasks.
+    :func:`stage_in_driver` applies the same rule to a collected batch.
     """
     from pyspark.sql.window import Window
 
@@ -613,7 +614,8 @@ def build_index(
     table holds absolute ids; ``n_shards`` in the returned meta stays the
     number of shards built. A staged build writes no term dictionary: the
     append merges the staged postings' df/cf into the live dictionary
-    directly (``incremental._merge_dictionary``).
+    directly (``incremental._merge_dictionary``). An append whose batch
+    fits one tokenize task stages through :func:`stage_in_driver` instead.
     """
     cfg = cfg or BuildConfig()
     os.makedirs(index_dir, exist_ok=True)

@@ -41,7 +41,7 @@ PAGES_SCHEMA = (
 
 # a batch of at most this many docs stages in the driver: the Spark staged
 # build would tokenize it in one task anyway (assign_doc_ids sizes its
-# partitions by the same constant), so its ~9 jobs would be fixed cost
+# partitions by the same constant), so its jobs would be all fixed cost
 _DRIVER_STAGE_MAX_DOCS = _MIN_TOKENIZE_TASK_DOCS
 
 

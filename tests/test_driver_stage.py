@@ -93,38 +93,16 @@ def _force(monkeypatch, envelope: str) -> None:
         monkeypatch.setattr(incremental, "_DRIVER_STAGE_MAX_DOCS", 0)
 
 
-def test_upsert_envelopes_stage_identical_tables(
+def test_lifecycle_is_identical_through_both_envelopes(
     spark, small_corpus, base_index, tmp_path, monkeypatch
 ):
-    """One upsert (20 recrawled urls, 40 new ones, an empty and a
-    stopword-only page; 62 docs over two 32-doc shards) staged by both
-    envelopes: identical postings, docs, metrics, dictionary and
-    tombstone rows, and bit-identical n_docs / n_shards / avgdl."""
-    snaps = {}
-    for env in ENVELOPES:
-        index_dir = str(tmp_path / env)
-        shutil.copytree(base_index, index_dir)
-        _force(monkeypatch, env)
-        batch = _batch(spark, small_corpus, 40, 100, "v1")
-        out = update_documents(spark, index_dir, batch, CFG)
-        assert out["replaced"] == 20
-        assert _last_envelope(index_dir) == env
-        snaps[env] = _snapshot(spark, index_dir)
-    monkeypatch.undo()
-    driver, spark_ = snaps["driver"], snaps["spark"]
-    assert driver["n_docs"] == 60 + 62 and driver["n_shards"] == 2 + 2
-    for key in driver:
-        assert driver[key] == spark_[key], key
-    assert driver["postings"]
-
-
-def test_scripted_lifecycle_is_identical_through_both_envelopes(
-    spark, small_corpus, base_index, tmp_path, monkeypatch
-):
-    """Build, append, upsert with recrawls, delete, compaction with
-    tombstones, another append and a compaction without tombstones: the
-    index after every step is the same whichever envelope staged the
-    batches."""
+    """The scripted scenario, staged once by each envelope: build, append,
+    upsert with recrawls (50 recrawled urls, 10 new ones, an empty and a
+    stopword-only page: 62 docs over two 32-doc delta shards), delete,
+    compaction with tombstones, another append and a compaction without
+    tombstones. After every step the postings, terms, docs, metrics and
+    tombstone rows are identical and n_docs / n_shards / avgdl /
+    n_deleted bit-identical."""
     steps = {env: [] for env in ENVELOPES}
     for env in ENVELOPES:
         index_dir = str(tmp_path / env)
@@ -137,9 +115,10 @@ def test_scripted_lifecycle_is_identical_through_both_envelopes(
         )
         assert _last_envelope(index_dir) == env
         snap(_snapshot(spark, index_dir))
-        update_documents(
-            spark, index_dir, _batch(spark, small_corpus, 30, 75, "u1"), CFG
+        out = update_documents(
+            spark, index_dir, _batch(spark, small_corpus, 40, 100, "u1"), CFG
         )
+        assert out["replaced"] == 50 and _last_envelope(index_dir) == env
         snap(_snapshot(spark, index_dir))
         urls = _urls(spark, small_corpus)
         delete_documents(spark, index_dir, [urls[5], urls[33], urls[70]])
@@ -147,14 +126,19 @@ def test_scripted_lifecycle_is_identical_through_both_envelopes(
         compact_index(spark, index_dir)
         snap(_snapshot(spark, index_dir))
         incremental._append_batch(
-            spark, _batch(spark, small_corpus, 90, 120, "a2"), index_dir, CFG
+            spark, _batch(spark, small_corpus, 100, 120, "a2"), index_dir, CFG
         )
         snap(_snapshot(spark, index_dir))
         compact_index(spark, index_dir)
         snap(_snapshot(spark, index_dir))
     monkeypatch.undo()
-    assert len(steps["driver"]) == len(steps["spark"]) == 6
-    for i, (d, s) in enumerate(zip(steps["driver"], steps["spark"])):
+    driver, spark_ = steps["driver"], steps["spark"]
+    assert len(driver) == len(spark_) == 6
+    # the upsert staged 62 docs into two delta shards (3-4) after the
+    # 60-doc base (shards 0-1) and the append's 32 docs (shard 2)
+    assert driver[1]["n_docs"] == 60 + 32 + 62 and driver[1]["n_shards"] == 5
+    for i, (d, s) in enumerate(zip(driver, spark_)):
+        assert d["postings"], i
         for key in d:
             assert d[key] == s[key], (i, key)
-    assert steps["driver"][-1]["n_deleted"] in (None, 0)
+    assert driver[-1]["n_deleted"] in (None, 0)
