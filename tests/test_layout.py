@@ -125,7 +125,8 @@ def test_driver_staged_files_match_pinned_schemas_and_regain_bloom(
     update_documents(spark, index_dir, recrawl, cfg)
     meta = _meta(index_dir)
     assert meta["n_deleted"] == 70 and meta["n_docs"] == 160
-    steps = json.load(open(os.path.join(index_dir, "_manifest.json")))
+    with open(os.path.join(index_dir, "_manifest.json")) as f:
+        steps = json.load(f)
     assert steps["delta_batch_1"]["metrics"]["envelope"] == "driver"
     every = {"postings", "terms", "docs", "metrics", "tombstones"}
     assert set(_assert_pinned_equals_inferred(spark, index_dir)) == every
