@@ -64,6 +64,7 @@ from functools import reduce
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from .localdf import local_df
 from .query import (
     _INCLUDE_TOO_BIG,
     FtsIndex,
@@ -127,10 +128,8 @@ class FederatedFtsIndex:
         return mult
 
     def _empty(self) -> DataFrame:
-        return self.spark.range(0).select(
-            F.col("id").cast("string").alias("url"),
-            F.col("id").cast("string").alias("url_md5"),
-            F.col("id").cast("double").alias("score"),
+        return local_df(
+            self.spark, [], "url string, url_md5 string, score double"
         )
 
     def search_bm25(

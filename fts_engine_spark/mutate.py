@@ -9,8 +9,12 @@ Lucene/segment-file posture, re-expressed over the repo's sharded layout:
 * :func:`delete_documents` resolves urls to doc ids against the docs
   table and appends them to a small ``tombstones`` parquet table,
   committed via the same versioned-dir + meta-pointer flip every other
-  mutation uses (:mod:`.layout`) — crash-atomic, idempotent (re-deleting
-  is a distinct-union no-op), and O(deletes), never touching postings.
+  mutation uses (:mod:`.layout`) — crash-atomic and idempotent
+  (re-deleting is a distinct-union no-op). It never touches postings:
+  resolving reads the docs table's ``(doc_id, url)`` columns once and
+  the write is O(tombstones). A url list against an index of at most
+  ``_DRIVER_DELETE_MAX_DOCS`` docs resolves in the driver with pyarrow
+  (no Spark job); a DataFrame or a larger index resolves on Spark.
 * Every serving path excludes tombstoned doc ids *inside* its pruning
   boundary (the WAND kernels take the set pre-theta via the existing
   ``excl_docs`` mechanism, so top-k truncation can never resurrect a
@@ -44,7 +48,13 @@ import shutil
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from .checkpoint import Manifest, atomic_write_json
-from .layout import next_version_dir, read_table, table_path
+from .layout import TABLE_SCHEMAS, next_version_dir, read_table, table_path
+
+
+# a url list against an index of at most this many docs resolves in the
+# driver: the pyarrow scan of its (doc_id, url) columns costs well under
+# the Spark delete's ~0.8 s floor of 6-8 jobs (measured in CHANGES.md)
+_DRIVER_DELETE_MAX_DOCS = 1 << 20
 
 
 def read_tombstones(spark: SparkSession, index_dir: str, meta: dict) -> DataFrame | None:
@@ -64,14 +74,20 @@ def delete_documents(
     ``urls`` is a list (bounded, pushed into the docs scan as an ``isin``)
     or a DataFrame with a ``url`` column (unbounded — e.g. the output of a
     decontamination sweep; a plain join, so Catalyst/AQE pick the
-    strategy). Unknown urls are ignored; re-deleting is a no-op.
+    strategy). Unknown urls and ``None`` are ignored (SQL ``IN`` never
+    matches a null); re-deleting is a no-op: when no doc id is newly
+    tombstoned nothing is written and the version does not move.
 
     Returns ``{"matched": docs newly+already tombstoned in this url set,
     "n_deleted": total live tombstones, "meta": committed meta}``.
 
-    One docs scan: the (small) matched set is persisted, one aggregate
-    over it and the previous tombstones yields both counts, and the
-    table write reads the cache.
+    Job count: a list against an index of at most
+    :data:`_DRIVER_DELETE_MAX_DOCS` docs resolves in the driver
+    (:func:`_tombstones_in_driver`, pyarrow) and runs no Spark job. A
+    DataFrame, or any index over the cap, runs on Spark
+    (:func:`_tombstones_on_spark`): one docs scan, whose small matched set
+    is persisted, one aggregate over it and the previous tombstones for
+    the counts, and the table write over the cache.
 
     Commit is the standard versioned-dir + single atomic meta write; a
     crash at any point leaves the previous tombstone table (or none)
@@ -92,52 +108,30 @@ def delete_documents(
             f"this build mutates version {META_VERSION}"
         )
 
-    # only (doc_id, url) are read: the pinned base schema covers them
-    # whether or not the table carries meta_cols
-    docs = read_table(spark, table_path(index_dir, meta, "docs"), "docs")
-    if isinstance(urls, DataFrame):
-        url_rel = urls.select(F.col("url").cast("string")).distinct()
-        matched = docs.join(url_rel, "url", "left_semi")
-    else:
-        if not urls:
-            matched = docs.where(F.lit(False))
-        else:
-            matched = docs.where(F.col("url").isin(list(urls)))
-    matched = matched.select("doc_id", "url").persist()
-    prev = read_tombstones(spark, index_dir, meta)
-    # matched rows are distinct (doc ids are unique): over the distinct
-    # union with the previous tombstones, the row count is the new total
-    # and Σ max(is-matched) counts the matched rows
-    tagged = matched.withColumn("_m", F.lit(1))
-    if prev is not None:
-        tagged = (
-            prev.withColumn("_m", F.lit(0))
-            .unionByName(tagged)
-            .groupBy("doc_id", "url")
-            .agg(F.max("_m").alias("_m"))
+    new_dir, _, ptr = next_version_dir(index_dir, meta, "tombstones")
+    shutil.rmtree(new_dir, ignore_errors=True)
+    in_driver = (
+        not isinstance(urls, DataFrame)
+        and int(meta["n_docs"]) <= _DRIVER_DELETE_MAX_DOCS
+        and all(u is None or isinstance(u, str) for u in urls)
+    )
+    if in_driver:
+        n_matched, n_total, n_new = _tombstones_in_driver(
+            index_dir, meta, urls, new_dir
         )
-    n_total, n_matched = tagged.agg(F.count("*"), F.sum("_m")).first()
-    n_matched = int(n_matched or 0)
-    if n_matched == 0:
+    else:
+        n_matched, n_total, n_new = _tombstones_on_spark(
+            spark, index_dir, meta, urls, new_dir
+        )
+    if n_new == 0:
         # nothing newly tombstoned: no table write, no version bump.
         # With no prior tombstones this also avoids committing an empty
         # table that every relational plan would anti-join forever.
-        matched.unpersist()
         return {
-            "matched": 0,
+            "matched": n_matched,
             "n_deleted": int(meta.get("n_deleted", 0)),
             "meta": meta,
         }
-    combined = (
-        matched if prev is None else prev.unionByName(matched).distinct()
-    )
-
-    new_dir, _, ptr = next_version_dir(index_dir, meta, "tombstones")
-    shutil.rmtree(new_dir, ignore_errors=True)
-    # tombstones are tiny relative to the index (bounded per epoch);
-    # a handful of files is fine and keeps the write distributed
-    combined.write.mode("overwrite").parquet(new_dir)
-    matched.unpersist()
 
     old_dir = (
         table_path(index_dir, meta, "tombstones")
@@ -147,7 +141,7 @@ def delete_documents(
     old_tv = int(meta.get("table_version", 0))
     meta = dict(meta)
     meta.update(ptr)
-    meta["n_deleted"] = int(n_total)
+    meta["n_deleted"] = n_total
     # a pure tombstone-add neither renumbers nor grows doc ids, so the
     # stored-fields / positions sidecars stay valid: carry a CURRENT
     # sidecar's table_version pin forward with the bump (an already-stale
@@ -167,7 +161,105 @@ def delete_documents(
     )
     if old_dir and os.path.abspath(old_dir) != os.path.abspath(new_dir):
         shutil.rmtree(old_dir, ignore_errors=True)
-    return {"matched": int(n_matched), "n_deleted": int(n_total), "meta": meta}
+    return {"matched": n_matched, "n_deleted": n_total, "meta": meta}
+
+
+def _tombstones_on_spark(
+    spark: SparkSession, index_dir: str, meta: dict,
+    urls: list[str] | DataFrame, new_dir: str,
+) -> tuple[int, int, int]:
+    """The Spark envelope of the delete: resolve ``urls`` against the docs
+    table, and when a doc id is newly tombstoned write the distinct union
+    with the previous tombstones to ``new_dir``. Returns ``(matched,
+    total, newly tombstoned)``."""
+    # only (doc_id, url) are read: the pinned base schema covers them
+    # whether or not the table carries meta_cols
+    docs = read_table(spark, table_path(index_dir, meta, "docs"), "docs")
+    if isinstance(urls, DataFrame):
+        url_rel = urls.select(F.col("url").cast("string")).distinct()
+        matched = docs.join(url_rel, "url", "left_semi")
+    else:
+        if not urls:
+            matched = docs.where(F.lit(False))
+        else:
+            matched = docs.where(F.col("url").isin(list(urls)))
+    matched = matched.select("doc_id", "url").persist()
+    try:
+        prev = read_tombstones(spark, index_dir, meta)
+        # matched rows are distinct (doc ids are unique): over the
+        # distinct union with the previous tombstones, the row count is
+        # the new total, Σ max(is-matched) counts the matched rows and
+        # Σ max(is-previous) the previous total
+        tagged = matched.withColumn("_m", F.lit(1)).withColumn("_p", F.lit(0))
+        if prev is not None:
+            tagged = (
+                prev.withColumn("_m", F.lit(0))
+                .withColumn("_p", F.lit(1))
+                .unionByName(tagged)
+                .groupBy("doc_id", "url")
+                .agg(F.max("_m").alias("_m"), F.max("_p").alias("_p"))
+            )
+        n_total, n_matched, n_prev = tagged.agg(
+            F.count("*"), F.sum("_m"), F.sum("_p")
+        ).first()
+        n_new = int(n_total) - int(n_prev or 0)
+        if n_new:
+            # tombstones are tiny relative to the index (bounded per
+            # epoch); a handful of files is fine and keeps the write
+            # distributed
+            combined = (
+                matched if prev is None else prev.unionByName(matched).distinct()
+            )
+            combined.write.mode("overwrite").parquet(new_dir)
+    finally:
+        matched.unpersist()
+    return int(n_matched or 0), int(n_total), n_new
+
+
+def _tombstones_in_driver(
+    index_dir: str, meta: dict, urls: list[str], new_dir: str
+) -> tuple[int, int, int]:
+    """The driver envelope of :func:`_tombstones_on_spark` for a url
+    list: the docs table's ``(doc_id, url)`` columns are scanned with
+    pyarrow under the ``url`` filter, the matched rows join the previous
+    tombstones with doc ids kept distinct, and the union is written as one
+    snappy file under the tombstones schema. Same counts, same rows, no
+    Spark job."""
+    import numpy as np
+    import pyarrow as pa
+    import pyarrow.compute as pc
+    import pyarrow.dataset as ds
+    import pyarrow.parquet as pq
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    # the tombstone columns are the docs table's (doc_id, url): under
+    # this schema a docs scan reads only those two, meta_cols or not
+    schema = to_arrow_schema(TABLE_SCHEMAS["tombstones"])
+
+    def scan(name: str, where=None) -> pa.Table:
+        path = table_path(index_dir, meta, name)
+        return ds.dataset(path, format="parquet", schema=schema).to_table(
+            filter=where
+        )
+
+    # SQL IN never matches a null url, but pyarrow's is_in matches a
+    # null to a null: the nulls leave the value set
+    values = pa.array([u for u in urls if u is not None], pa.string())
+    matched = scan("docs", pc.field("url").isin(values))
+    prev = (
+        scan("tombstones") if meta.get("tombstones_dir") else schema.empty_table()
+    )
+    n_prev = len(np.unique(prev.column("doc_id").to_numpy()))
+    combined = pa.concat_tables([prev, matched])
+    _, first = np.unique(combined.column("doc_id").to_numpy(), return_index=True)
+    n_total = len(first)
+    if n_total > n_prev:
+        os.makedirs(new_dir)
+        pq.write_table(
+            combined.take(first), os.path.join(new_dir, "part-00000.parquet"),
+            compression="snappy",
+        )
+    return matched.num_rows, n_total, n_total - n_prev
 
 
 def update_documents(
@@ -189,17 +281,28 @@ def update_documents(
     (tests/test_update.py). ``docs``: (url, text, lang) like every build
     entry point; cost O(updates), never touching unrelated postings.
 
-    Job count: the delete and the dictionary merge run on Spark; a batch
-    of at most ``incremental._DRIVER_STAGE_MAX_DOCS`` docs (no
-    ``meta_cols``, no fresh sidecar) stages in the driver after one
-    bounded collect, a larger one through the Spark staged build.
+    Job count: one bounded collect reads at most
+    ``incremental._DRIVER_STAGE_MAX_DOCS + 1`` batch rows and serves both
+    halves. When it holds the whole batch, its urls go to the delete as a
+    list (resolved in the driver below :data:`_DRIVER_DELETE_MAX_DOCS`
+    index docs) and the batch stages in the driver (no ``meta_cols``, no
+    fresh sidecar), so a small upsert runs the collect and the dictionary
+    merge's jobs only. A larger batch deletes by a join and stages through
+    the Spark staged build.
     """
     from .build import BuildConfig
-    from .streaming.incremental import _append_batch
+    from .streaming import incremental
 
     cfg = cfg or BuildConfig()
-    deleted = delete_documents(spark, index_dir, docs.select("url"))
-    _append_batch(spark, docs, index_dir, cfg)
+    head = incremental._batch_head(
+        docs, incremental._DRIVER_STAGE_MAX_DOCS + 1
+    )
+    whole = head.num_rows <= incremental._DRIVER_STAGE_MAX_DOCS
+    deleted = delete_documents(
+        spark, index_dir,
+        head.column("url").to_pylist() if whole else docs.select("url"),
+    )
+    incremental._append_batch(spark, docs, index_dir, cfg, head=head)
     with open(os.path.join(index_dir, "meta.json")) as f:
         meta = json.load(f)
     return {

@@ -433,11 +433,9 @@ def search_phrase(
 
 
 def _empty_phrase(spark) -> DataFrame:
-    return spark.range(0).select(
-        F.col("id").alias("doc_id"),
-        F.col("id").cast("string").alias("url"),
-        F.col("id").alias("phrase_count"),
-    )
+    from ..localdf import local_df
+
+    return local_df(spark, [], "doc_id long, url string, phrase_count long")
 
 
 def _count_contiguous(toks: list[str], terms: list[str]) -> int:

@@ -31,6 +31,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
 
+from ..localdf import local_df
 from ..textproc.pipeline import get_pipeline
 from ..textproc.tokenizer import _TOKEN_RE
 
@@ -214,11 +215,8 @@ def search_with_snippets(
         query, k=k, preset=preset, hydrate=False, offset=offset
     ).collect()
     if not srows:
-        return spark.range(0).select(
-            F.col("id").alias("doc_id"),
-            F.col("id").cast("string").alias("url"),
-            F.col("id").cast("double").alias("score"),
-            F.col("id").cast("string").alias("snippet"),
+        return local_df(
+            spark, [], "doc_id long, url string, score double, snippet string"
         )
     url_by_id = index.doc_urls_local(int(r["doc_id"]) for r in srows)
     rows = [

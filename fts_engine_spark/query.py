@@ -90,6 +90,9 @@ WAND_BATCH_SCHEMA = StructType(
     ]
 )
 
+# the columns of explain_bm25
+_EXPLAIN_SCHEMA = "doc_id long, term string, tf long, df long, contrib double"
+
 
 def bm25_idf(n_docs: int, df: int) -> float:
     """Okapi BM25 idf with +1 smoothing (always positive)."""
@@ -738,6 +741,15 @@ class FtsIndex:
             out.append(QueryTermStats(t, m, df, cf, bm25_idf(self.n_docs, df)))
         return out
 
+    def _known_terms(self, mult: dict[str, int]) -> dict[str, int]:
+        """``mult`` less the terms a warm dictionary lacks. For a surface
+        matching ANY query term an absent term matches nothing, so a query
+        of absent terms is known empty with no job. Cold, the check would
+        cost a lookup job: ``mult`` is returned as is."""
+        if self._term_dict is None:
+            return mult
+        return {t: m for t, m in mult.items() if t in self._term_dict}
+
     def _query_stats(self, mult: dict[str, int]) -> DataFrame:
         """(term, df) dictionary slice for the query terms, isin-pruned on
         both tiers (same broadcast-tax rationale as
@@ -1374,10 +1386,12 @@ class FtsIndex:
         docs-table ``cols`` when any are named — the one match-set
         resolve of the facet family and ``search_full``'s total
         (``mult``: a query the caller already analyzed). None when the
-        query analyzes to nothing: the caller returns its own empty
-        schema without a Spark job."""
+        query analyzes to nothing, or on a warm handle to terms the
+        dictionary lacks: the caller returns its own empty schema
+        without a Spark job."""
         if mult is None:
             mult = self._query_mult(query, preset)
+        mult = self._known_terms(mult)
         if not mult:
             return None
         matches = self._match_count_df(mult)
@@ -1433,11 +1447,8 @@ class FtsIndex:
         matches every other surface (deleted docs leave the match set
         immediately; bg_df/n_docs refresh at compaction)."""
         def empty() -> DataFrame:
-            return self.spark.range(0).select(
-                F.col("id").cast("string").alias("term"),
-                F.col("id").alias("fg_df"),
-                F.col("id").alias("bg_df"),
-                F.col("id").cast("double").alias("lift"),
+            return self._local_result_df(
+                [], "term string, fg_df long, bg_df long, lift double"
             )
 
         matches = self._match_set(query, preset)
@@ -1537,9 +1548,12 @@ class FtsIndex:
         """
         matches = self._match_set(query, preset, facet)
         if matches is None:
-            return self.spark.range(0).select(
-                F.col("id").cast("string").alias(facet),
-                F.col("id").alias("n_docs"),
+            return self._local_result_df(
+                [],
+                StructType(
+                    [StructField(facet, StringType()),
+                     StructField("n_docs", LongType())]
+                ),
             )
         return (
             matches.groupBy(facet)
@@ -1572,7 +1586,7 @@ class FtsIndex:
         wide exchange, exactly the facet plans' shape."""
         matches = self._match_set(query, preset, "url", by)
         if matches is None:
-            return self.spark.createDataFrame(
+            return self._local_result_df(
                 [], f"doc_id long, url string, {by} long"
             )
         key = F.asc(by) if ascending else F.desc(by)
@@ -1608,9 +1622,7 @@ class FtsIndex:
             raise ValueError(f"width must be > 0, got {width}")
         matches = self._match_set(query, preset, col)
         if matches is None:
-            return self.spark.range(0).select(
-                F.col("id").alias("bucket"), F.col("id").alias("n_docs")
-            )
+            return self._local_result_df([], "bucket long, n_docs long")
         bucket = (
             F.floor(F.col(col).cast("double") / F.lit(float(width)))
             * F.lit(int(width))
@@ -1640,12 +1652,10 @@ class FtsIndex:
         """
         matches = self._match_set(query, preset, col)
         if matches is None:
-            return self.spark.range(0).select(
-                F.col("id").alias("n_docs"),
-                F.col("id").alias("min_v"),
-                F.col("id").alias("max_v"),
-                F.col("id").cast("double").alias("avg_v"),
-                F.col("id").alias("sum_v"),
+            return self._local_result_df(
+                [],
+                "n_docs long, min_v long, max_v long, avg_v double, "
+                "sum_v long",
             )
         return (
             matches.agg(
@@ -1685,9 +1695,7 @@ class FtsIndex:
         (tf/dl bytes never decoded)."""
         matches = self._match_set(query, preset, col)
         if matches is None:
-            return self.spark.range(1).select(
-                F.lit(0).cast("long").alias("n_values")
-            )
+            return self._local_result_df([(0,)], "n_values long")
         agg = (
             F.count_distinct(F.col(col))
             if exact
@@ -1723,7 +1731,7 @@ class FtsIndex:
             raise ValueError(f"percentiles must be in [0, 1]: {pcts}")
         matches = self._match_set(query, preset, col)
         if matches is None:
-            return self.spark.createDataFrame([], "pct double, value double")
+            return self._local_result_df([], "pct double, value double")
         pct_arr = F.array(*[F.lit(p) for p in pcts])
         agg = (
             F.percentile(F.col(col), pct_arr)
@@ -1849,12 +1857,15 @@ class FtsIndex:
         asc, deterministic. The matches⋈docs join is the only wide
         shuffle (AQE-planned, same shape as :meth:`facet_counts`).
         """
-        mult = self._query_mult(query, preset)
+        mult = self._known_terms(self._query_mult(query, preset))
         if not mult:
-            return self.spark.range(0).select(
-                F.col("id").cast("string").alias(collapse),
-                F.col("id").alias("doc_id"),
-                F.col("id").cast("double").alias("score"),
+            return self._local_result_df(
+                [],
+                StructType(
+                    [StructField(collapse, StringType()),
+                     StructField("doc_id", LongType()),
+                     StructField("score", DoubleType())]
+                ),
             )
         scored = self._bm25_scored(mult)
         docs = self.docs().select("doc_id", collapse)
@@ -1975,9 +1986,10 @@ class FtsIndex:
         if scored is None:
             rows = self._bm25_wand(mult, k, hydrate=False).collect()
             local = self._local_result_df(rows, WAND_SCHEMA)
-            total = (
-                self._match_set(query, mult=mult).count() if with_total else -1
-            )
+            total = -1
+            if with_total:
+                matches = self._match_set(query, mult=mult)
+                total = 0 if matches is None else matches.count()
         else:
             if with_total:
                 scored = scored.persist()
@@ -2441,15 +2453,9 @@ class FtsIndex:
         postings, never over the corpus; ``k <= 0`` explains every
         matching document (one pass, no gate).
         """
-        mult = self._query_mult(query, preset)
+        mult = self._known_terms(self._query_mult(query, preset))
         if not mult:
-            return self.spark.range(0).select(
-                F.col("id").alias("doc_id"),
-                F.col("id").cast("string").alias("term"),
-                F.col("id").alias("tf"),
-                F.col("id").alias("df"),
-                F.col("id").cast("double").alias("contrib"),
-            )
+            return self._local_result_df([], _EXPLAIN_SCHEMA)
         avgdl = self.avgdl
         tf = F.col("tf").cast("double")
         norm = F.lit(K1) * (
@@ -2479,13 +2485,7 @@ class FtsIndex:
                 .collect()
             ]
             if not top_ids:
-                return self.spark.range(0).select(
-                    F.col("id").alias("doc_id"),
-                    F.col("id").cast("string").alias("term"),
-                    F.col("id").alias("tf"),
-                    F.col("id").alias("df"),
-                    F.col("id").cast("double").alias("contrib"),
-                )
+                return self._local_result_df([], _EXPLAIN_SCHEMA)
             rows = rows.where(F.col("doc_id").isin(top_ids))
         return rows.select(
             "doc_id",
@@ -3204,11 +3204,7 @@ class FtsIndex:
                 if fs := frozenset(t for t in rq.excl if t in stats):
                     per_query_excl[i] = fs
         if not per_query:
-            return self.spark.range(0).select(
-                F.col("id").cast("int").alias("query_id"),
-                F.col("id").alias("doc_id"),
-                F.col("id").cast("double").alias("score"),
-            )
+            return self._local_result_df([], WAND_BATCH_SCHEMA)
         live_terms = sorted(
             {t for pq in per_query.values() for t in pq}
             | {t for fs in per_query_excl.values() for t in fs}

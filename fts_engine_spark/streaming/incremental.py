@@ -205,6 +205,8 @@ def _append_batch(
     batch_id: int | None = None,
     stream_id: str = "default",
     compact_keep_old: bool = False,
+    *,
+    head=None,
 ) -> None:
     """foreachBatch body: build the micro-batch as delta shards appended to
     ``index_dir``. The batch is staged in a staging dir, numbered from the
@@ -225,7 +227,9 @@ def _append_batch(
     rule, tokenize pair function and postings encoder, written with
     pyarrow). Any other batch runs the Spark staged build
     (``build_index``'s internal ``_first_shard``). The manifest's
-    ``delta_batch_N`` entry records which envelope ran.
+    ``delta_batch_N`` entry records which envelope ran. A caller that
+    already collected those rows (an upsert, whose delete reads their
+    urls) passes them as ``head``, so the batch is read once.
 
     EXACTLY-ONCE under foreachBatch retries: Structured Streaming re-runs
     a micro-batch after a crash, so the splice must be idempotent —
@@ -252,7 +256,8 @@ def _append_batch(
     without an external scheduler. Compaction commits atomically, so a
     crash inside it never harms the just-committed append.
     """
-    head = _batch_head(batch_df, _DRIVER_STAGE_MAX_DOCS + 1)
+    if head is None:
+        head = _batch_head(batch_df, _DRIVER_STAGE_MAX_DOCS + 1)
     if not head.num_rows:
         return
     meta_path = os.path.join(index_dir, "meta.json")

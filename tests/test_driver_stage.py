@@ -1,12 +1,15 @@
 """The two envelopes of a staged append: a batch small enough for one
 tokenize task stages in the driver (``build.stage_in_driver``), any other
-through the Spark staged build. Both must leave identical indexes."""
+through the Spark staged build. Both must leave identical indexes. The
+same holds for the delete: a url list against a small index resolves in
+the driver (``mutate._tombstones_in_driver``), anything else on Spark."""
 
 from __future__ import annotations
 
 import json
 import os
 import shutil
+import uuid
 
 import pytest
 from pyspark.sql import functions as F
@@ -14,6 +17,7 @@ from pyspark.sql import functions as F
 from fts_engine_spark.build import BuildConfig, build_index
 from fts_engine_spark.checkpoint import Manifest
 from fts_engine_spark.layout import read_table, table_path
+from fts_engine_spark import mutate
 from fts_engine_spark.mutate import delete_documents, update_documents
 from fts_engine_spark.sources.pages import conform_pages
 from fts_engine_spark.streaming import incremental
@@ -142,3 +146,96 @@ def test_lifecycle_is_identical_through_both_envelopes(
         for key in d:
             assert d[key] == s[key], (i, key)
     assert driver[-1]["n_deleted"] in (None, 0)
+
+
+def _force_delete(monkeypatch, envelope: str) -> None:
+    """Url-list deletes resolve in the driver until forced to Spark: a
+    0-doc cap sends every non-empty index to Spark."""
+    if envelope == "spark":
+        monkeypatch.setattr(mutate, "_DRIVER_DELETE_MAX_DOCS", 0)
+
+
+def _delete_jobs(spark, index_dir: str, urls) -> tuple[dict, int]:
+    """``delete_documents``'s result and the Spark jobs it launched."""
+    sc = spark.sparkContext
+    group = f"delete-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, group)
+    try:
+        out = delete_documents(spark, index_dir, urls)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_delete_is_identical_through_both_envelopes(
+    spark, tmp_path, monkeypatch
+):
+    """The delete's two envelopes over one scripted sequence on an index
+    with fresh stored/positions sidecars and a null-url doc: unknown urls,
+    a ``None`` in the url list, a re-delete, an append-only duplicate url
+    (two doc ids), prior tombstones. After every step the tombstone rows,
+    ``matched``, ``n_deleted``, the tombstones pointer and the sidecar pins
+    are identical, and only the Spark envelope launched jobs."""
+    rows = [(f"doc://{i}", f"alpha beta w{i % 5} gamma", "en") for i in range(40)]
+    rows.append((None, "alpha nullurl", "en"))
+    base = str(tmp_path / "base")
+    build_index(
+        spark, spark.createDataFrame(rows, "url string, text string, lang string"),
+        base, BuildConfig(
+            preset="by_lang", shard_size=16, id_buckets=4,
+            store_text=True, store_positions=True,
+        ),
+        resume=False,
+    )
+    dup = spark.createDataFrame(
+        [("doc://5", "alpha again", "en")], "url string, text string, lang string"
+    )
+    script = [
+        ["unknown://a"],
+        [None, "doc://1", "doc://2", "unknown://b"],
+        ["doc://2", "doc://1"],  # a re-delete
+        "append",  # doc://5 now held by two doc ids
+        ["doc://5", "doc://3", None],
+        ["unknown://c"],
+    ]
+    steps = {env: [] for env in ENVELOPES}
+    for env in ENVELOPES:
+        index_dir = str(tmp_path / env)
+        shutil.copytree(base, index_dir)
+        _force_delete(monkeypatch, env)
+        for urls in script:
+            if urls == "append":
+                incremental._append_batch(spark, dup, index_dir, CFG)
+                continue
+            out, jobs = _delete_jobs(spark, index_dir, urls)
+            assert (jobs == 0) == (env == "driver"), (env, urls, jobs)
+            meta = _meta(index_dir)
+            assert out["meta"] == meta
+            steps[env].append(
+                {
+                    "matched": out["matched"],
+                    "n_deleted": out["n_deleted"],
+                    **{
+                        k: meta.get(k)
+                        for k in ("table_version", "tombstones_dir", "stored",
+                                  "positions")
+                    },
+                    "tombstones": _snapshot(spark, index_dir).get("tombstones"),
+                }
+            )
+        monkeypatch.undo()
+    driver, spark_ = steps["driver"], steps["spark"]
+    assert [s["matched"] for s in driver] == [0, 2, 2, 3, 0]
+    assert [s["n_deleted"] for s in driver] == [0, 2, 2, 5, 5]
+    # no-ops commit nothing: unknown urls, the re-delete, unknown again
+    tv = [s["table_version"] for s in driver]
+    assert tv[0] is None and tv[2] == tv[1] and tv[4] == tv[3] != tv[1]
+    assert {u for _, u in driver[3]["tombstones"]} == {
+        "doc://1", "doc://2", "doc://3", "doc://5"
+    }
+    for s in driver[1:]:
+        # the sidecars stay current through every delete
+        assert s["stored"]["table_version"] == s["table_version"]
+        assert s["positions"]["table_version"] == s["table_version"]
+    for i, (d, s) in enumerate(zip(driver, spark_)):
+        assert d == s, i

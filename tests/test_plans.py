@@ -712,6 +712,68 @@ def test_empty_answers_run_no_spark_job(spark, small_index):
     assert _jobs_launched(spark, empty.collect) == (0, 0)
 
 
+def test_absent_term_answers_run_no_spark_job(spark, small_index):
+    """On a warm handle a query of terms the dictionary lacks is known
+    empty for the surfaces matching ANY term: the facet family, field
+    collapsing and explain collect an empty LocalRelation with no job."""
+    index_dir, _ = small_index
+    fts = FtsIndex(spark, index_dir).warm(serving_conf=False)
+    try:
+        for df in (
+            fts.facet_stats("qqqzzzxx", "doclen"),
+            fts.search_bm25_collapsed("qqqzzzxx", collapse="lang"),
+            fts.explain_bm25("qqqzzzxx"),
+        ):
+            assert _jobs_launched(spark, df.collect) == (0, 0), df.columns
+            assert df.collect() == []
+    finally:
+        fts.close()
+
+
+def test_small_upsert_deletes_in_driver(spark, small_corpus, tmp_path, monkeypatch):
+    """A sub-cap upsert's delete resolves its urls in the driver from the
+    rows the upsert's one bounded collect holds: from the delete's start
+    to its commit no Spark job runs, and the whole upsert runs at most 5
+    (the collect and the dictionary merge's 4; 11 before, 6 of them the
+    delete's)."""
+    from pyspark.sql import functions as F
+
+    from fts_engine_spark import mutate
+    from fts_engine_spark.build import BuildConfig, build_index
+
+    cfg = BuildConfig(preset="by_lang", shard_size=32, id_buckets=8)
+    docs = spark.read.parquet(small_corpus).select("url", "text", "lang")
+    urls = [r["url"] for r in docs.select("url").collect()]
+    index_dir = str(tmp_path / "ix")
+    build_index(
+        spark, docs.where(F.col("url").isin(urls[:60])), index_dir, cfg,
+        resume=False,
+    )
+    batch = docs.where(F.col("url").isin(urls[40:100]))
+
+    sc = spark.sparkContext
+    group = f"delete-{id(tmp_path)}"
+    real_delete = mutate.delete_documents
+
+    def delete_in_own_group(*a, **kw):
+        outer = sc.getLocalProperty("spark.jobGroup.id")
+        sc.setJobGroup(group, "delete")
+        try:
+            return real_delete(*a, **kw)
+        finally:
+            sc.setJobGroup(outer, outer)
+
+    monkeypatch.setattr(mutate, "delete_documents", delete_in_own_group)
+    out = {}
+    jobs, _ = _jobs_launched(
+        spark,
+        lambda: out.update(up=mutate.update_documents(spark, index_dir, batch, cfg)),
+    )
+    assert out["up"]["replaced"] == 20 and out["up"]["n_deleted"] == 20
+    assert list(sc.statusTracker().getJobIdsForGroup(group)) == []
+    assert jobs <= 5, jobs
+
+
 def _jobs_launched(spark, fn) -> tuple[int, int]:
     """(jobs, schema-inference jobs) ``fn`` launches, counted through a
     job group and the status stores. A schema-inference job (parquet
@@ -752,10 +814,11 @@ def _jobs_launched(spark, fn) -> tuple[int, int]:
     return len(jobs), inference
 
 
-# jobs the same calls launched before table reads pinned their schemas,
-# the staged build dropped its dictionary and deletes scanned docs once
-# (7 of the upsert's and 9 of the compaction's were schema inference)
-_PARENT_UPSERT_JOBS = 36
+# jobs the same calls launched before: the upsert 12 before small deletes
+# resolved in the driver (36 before table reads pinned their schemas, the
+# staged build dropped its dictionary and deletes scanned docs once); the
+# compaction 25 before (9 of them schema inference)
+_PARENT_UPSERT_JOBS = 12
 _PARENT_COMPACT_JOBS = 25
 
 
