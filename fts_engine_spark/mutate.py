@@ -110,12 +110,10 @@ def delete_documents(
 
     new_dir, _, ptr = next_version_dir(index_dir, meta, "tombstones")
     shutil.rmtree(new_dir, ignore_errors=True)
-    in_driver = (
+    if (
         not isinstance(urls, DataFrame)
         and int(meta["n_docs"]) <= _DRIVER_DELETE_MAX_DOCS
-        and all(u is None or isinstance(u, str) for u in urls)
-    )
-    if in_driver:
+    ):
         n_matched, n_total, n_new = _tombstones_in_driver(
             index_dir, meta, urls, new_dir
         )

@@ -90,7 +90,6 @@ WAND_BATCH_SCHEMA = StructType(
     ]
 )
 
-# the columns of explain_bm25
 _EXPLAIN_SCHEMA = "doc_id long, term string, tf long, df long, contrib double"
 
 

@@ -238,47 +238,49 @@ def test_engine_api_and_stats(spark, tmp_path):
     assert s["n_deleted"] == 0 and s["n_docs"] == 98
 
 
-@pytest.mark.parametrize("envelope", ["driver", "spark"])
-def test_delete_commit_is_crash_atomic(spark, tmp_path, monkeypatch, envelope):
+def test_delete_commit_is_crash_atomic(spark, tmp_path, monkeypatch):
     """A delete killed after its tombstone write and before the meta
     commit leaves the live meta and the previous tombstones untouched; the
-    retry commits the same rows. Through both envelopes (a 0-doc driver
-    cap sends the url list to Spark)."""
+    retry commits the rows the killed attempt wrote. Through both
+    envelopes (a 0-doc driver cap sends the url list to Spark)."""
     import fts_engine_spark.mutate as mutate_mod
 
-    index_dir = str(tmp_path / "cix")
-    build_index(spark, _docs(spark, 80), index_dir, CFG, resume=False)
-    if envelope == "spark":
-        monkeypatch.setattr(mutate_mod, "_DRIVER_DELETE_MAX_DOCS", 0)
-    delete_documents(spark, index_dir, ["doc://3"])
-    with open(os.path.join(index_dir, "meta.json")) as f:
-        meta0 = json.load(f)
-    fts0 = FtsIndex(spark, index_dir)
-    old_rows = sorted(map(tuple, fts0.tombstones().collect()))
-    new_dir = os.path.join(
-        index_dir, f"tombstones_v{int(meta0['table_version']) + 1}"
-    )
+    for envelope in ("driver", "spark"):
+        with monkeypatch.context() as mp:
+            index_dir = str(tmp_path / envelope)
+            build_index(spark, _docs(spark, 80), index_dir, CFG, resume=False)
+            if envelope == "spark":
+                mp.setattr(mutate_mod, "_DRIVER_DELETE_MAX_DOCS", 0)
+            delete_documents(spark, index_dir, ["doc://3"])
+            with open(os.path.join(index_dir, "meta.json")) as f:
+                meta0 = json.load(f)
+            fts0 = FtsIndex(spark, index_dir)
+            old_rows = sorted(map(tuple, fts0.tombstones().collect()))
+            new_dir = os.path.join(
+                index_dir, f"tombstones_v{int(meta0['table_version']) + 1}"
+            )
+            written = []
 
-    written = []
+            def boom(*a, **k):
+                t = pq.read_table(new_dir, columns=["doc_id", "url"])
+                written.extend(zip(t["doc_id"].to_pylist(), t["url"].to_pylist()))
+                raise RuntimeError("injected kill before delete commit")
 
-    def boom(*a, **k):
-        t = pq.read_table(new_dir, columns=["doc_id", "url"])
-        written.extend(zip(t["doc_id"].to_pylist(), t["url"].to_pylist()))
-        raise RuntimeError("injected kill before delete commit")
+            mp.setattr(mutate_mod, "atomic_write_json", boom)
+            with pytest.raises(RuntimeError, match="injected kill"):
+                delete_documents(spark, index_dir, ["doc://5"])
+            with open(os.path.join(index_dir, "meta.json")) as f:
+                assert json.load(f) == meta0, envelope  # live meta untouched
+            assert sorted(map(tuple, fts0.tombstones().collect())) == old_rows
+            mp.setattr(mutate_mod, "atomic_write_json", atomic_write_json)
 
-    monkeypatch.setattr(mutate_mod, "atomic_write_json", boom)
-    with pytest.raises(RuntimeError, match="injected kill"):
-        delete_documents(spark, index_dir, ["doc://5"])
-    with open(os.path.join(index_dir, "meta.json")) as f:
-        assert json.load(f) == meta0  # live meta untouched
-    assert sorted(map(tuple, fts0.tombstones().collect())) == old_rows
-    monkeypatch.setattr(mutate_mod, "atomic_write_json", atomic_write_json)
-
-    out = delete_documents(spark, index_dir, ["doc://5"])
-    assert out["n_deleted"] == 2 and out["matched"] == 1
-    rows = sorted(map(tuple, FtsIndex(spark, index_dir).tombstones().collect()))
-    assert sorted(u for _, u in rows) == ["doc://3", "doc://5"]
-    assert rows == sorted(written)  # the crashed attempt wrote the same
+            out = delete_documents(spark, index_dir, ["doc://5"])
+            assert out["n_deleted"] == 2 and out["matched"] == 1
+            rows = sorted(
+                map(tuple, FtsIndex(spark, index_dir).tombstones().collect())
+            )
+            assert sorted(u for _, u in rows) == ["doc://3", "doc://5"]
+            assert rows == sorted(written), envelope
 
 
 def test_noop_delete_commits_nothing(spark, tmp_path):
