@@ -12,9 +12,8 @@ Lucene/segment-file posture, re-expressed over the repo's sharded layout:
   mutation uses (:mod:`.layout`) — crash-atomic and idempotent
   (re-deleting is a distinct-union no-op). It never touches postings:
   resolving reads the docs table's ``(doc_id, url)`` columns once and
-  the write is O(tombstones). A url list against an index of at most
-  ``_DRIVER_DELETE_MAX_DOCS`` docs resolves in the driver with pyarrow
-  (no Spark job); a DataFrame or a larger index resolves on Spark.
+  the write is O(tombstones). A url list resolves in the driver with
+  pyarrow (no Spark job); a DataFrame of urls resolves on Spark.
 * Every serving path excludes tombstoned doc ids *inside* its pruning
   boundary (the WAND kernels take the set pre-theta via the existing
   ``excl_docs`` mechanism, so top-k truncation can never resurrect a
@@ -51,11 +50,6 @@ from .checkpoint import Manifest, atomic_write_json
 from .layout import TABLE_SCHEMAS, next_version_dir, read_table, table_path
 
 
-# a url list against an index of at most this many docs resolves in the
-# driver: the pyarrow scan of its (doc_id, url) columns costs well under
-# the Spark delete's ~0.8 s floor of 6-8 jobs (measured in CHANGES.md)
-_DRIVER_DELETE_MAX_DOCS = 1 << 20
-
 
 def read_tombstones(spark: SparkSession, index_dir: str, meta: dict) -> DataFrame | None:
     """The live tombstone table, or None when the index has none."""
@@ -71,23 +65,23 @@ def delete_documents(
 ) -> dict:
     """Tombstone every index document whose url is in ``urls``.
 
-    ``urls`` is a list (bounded, pushed into the docs scan as an ``isin``)
-    or a DataFrame with a ``url`` column (unbounded — e.g. the output of a
-    decontamination sweep; a plain join, so Catalyst/AQE pick the
-    strategy). Unknown urls and ``None`` are ignored (SQL ``IN`` never
+    ``urls`` is a list (bounded, pushed into a driver-side docs scan as
+    an ``isin``) or a DataFrame with a ``url`` column (unbounded — e.g. the
+    output of a decontamination sweep; a plain join, so Catalyst/AQE pick
+    the strategy). Unknown urls and ``None`` are ignored (SQL ``IN`` never
     matches a null); re-deleting is a no-op: when no doc id is newly
     tombstoned nothing is written and the version does not move.
 
     Returns ``{"matched": docs newly+already tombstoned in this url set,
     "n_deleted": total live tombstones, "meta": committed meta}``.
 
-    Job count: a list against an index of at most
-    :data:`_DRIVER_DELETE_MAX_DOCS` docs resolves in the driver
-    (:func:`_tombstones_in_driver`, pyarrow) and runs no Spark job. A
-    DataFrame, or any index over the cap, runs on Spark
-    (:func:`_tombstones_on_spark`): one docs scan, whose small matched set
-    is persisted, one aggregate over it and the previous tombstones for
-    the counts, and the table write over the cache.
+    Job count: a list resolves in the driver
+    (:func:`_tombstones_in_driver`: a pyarrow scan of the docs table's
+    ``(doc_id, url)`` columns that keeps only the matched rows) and runs
+    no Spark job. A DataFrame runs on Spark (:func:`_tombstones_on_spark`):
+    one docs join, whose small matched set is persisted, one aggregate
+    over it and the previous tombstones for the counts, and the table
+    write over the cache.
 
     Commit is the standard versioned-dir + single atomic meta write; a
     crash at any point leaves the previous tombstone table (or none)
@@ -110,16 +104,13 @@ def delete_documents(
 
     new_dir, _, ptr = next_version_dir(index_dir, meta, "tombstones")
     shutil.rmtree(new_dir, ignore_errors=True)
-    if (
-        not isinstance(urls, DataFrame)
-        and int(meta["n_docs"]) <= _DRIVER_DELETE_MAX_DOCS
-    ):
-        n_matched, n_total, n_new = _tombstones_in_driver(
-            index_dir, meta, urls, new_dir
-        )
-    else:
+    if isinstance(urls, DataFrame):
         n_matched, n_total, n_new = _tombstones_on_spark(
             spark, index_dir, meta, urls, new_dir
+        )
+    else:
+        n_matched, n_total, n_new = _tombstones_in_driver(
+            index_dir, meta, urls, new_dir
         )
     if n_new == 0:
         # nothing newly tombstoned: no table write, no version bump.
@@ -163,25 +154,20 @@ def delete_documents(
 
 
 def _tombstones_on_spark(
-    spark: SparkSession, index_dir: str, meta: dict,
-    urls: list[str] | DataFrame, new_dir: str,
+    spark: SparkSession, index_dir: str, meta: dict, urls: DataFrame,
+    new_dir: str,
 ) -> tuple[int, int, int]:
-    """The Spark envelope of the delete: resolve ``urls`` against the docs
-    table, and when a doc id is newly tombstoned write the distinct union
-    with the previous tombstones to ``new_dir``. Returns ``(matched,
-    total, newly tombstoned)``."""
+    """The Spark envelope of the delete: resolve the ``url`` column of
+    ``urls`` against the docs table, and when a doc id is newly
+    tombstoned write the distinct union with the previous tombstones to
+    ``new_dir``. Returns ``(matched, total, newly tombstoned)``."""
     # only (doc_id, url) are read: the pinned base schema covers them
     # whether or not the table carries meta_cols
     docs = read_table(spark, table_path(index_dir, meta, "docs"), "docs")
-    if isinstance(urls, DataFrame):
-        url_rel = urls.select(F.col("url").cast("string")).distinct()
-        matched = docs.join(url_rel, "url", "left_semi")
-    else:
-        if not urls:
-            matched = docs.where(F.lit(False))
-        else:
-            matched = docs.where(F.col("url").isin(list(urls)))
-    matched = matched.select("doc_id", "url").persist()
+    url_rel = urls.select(F.col("url").cast("string")).distinct()
+    matched = (
+        docs.join(url_rel, "url", "left_semi").select("doc_id", "url").persist()
+    )
     try:
         prev = read_tombstones(spark, index_dir, meta)
         # matched rows are distinct (doc ids are unique): over the
@@ -217,7 +203,7 @@ def _tombstones_on_spark(
 def _tombstones_in_driver(
     index_dir: str, meta: dict, urls: list[str], new_dir: str
 ) -> tuple[int, int, int]:
-    """The driver envelope of :func:`_tombstones_on_spark` for a url
+    """The driver envelope of :func:`_tombstones_on_spark`, for a url
     list: the docs table's ``(doc_id, url)`` columns are scanned with
     pyarrow under the ``url`` filter, the matched rows join the previous
     tombstones with doc ids kept distinct, and the union is written as one
@@ -279,28 +265,25 @@ def update_documents(
     (tests/test_update.py). ``docs``: (url, text, lang) like every build
     entry point; cost O(updates), never touching unrelated postings.
 
-    Job count: one bounded collect reads at most
-    ``incremental._DRIVER_STAGE_MAX_DOCS + 1`` batch rows and serves both
-    halves. When it holds the whole batch, its urls go to the delete as a
-    list (resolved in the driver below :data:`_DRIVER_DELETE_MAX_DOCS`
-    index docs) and the batch stages in the driver (no ``meta_cols``, no
-    fresh sidecar), so a small upsert runs the collect and the dictionary
-    merge's jobs only. A larger batch deletes by a join and stages through
-    the Spark staged build.
+    Job count: one bounded collect (``incremental._batch_head``) serves
+    both halves. When it holds the whole batch, its urls go to the delete
+    as a list (resolved in the driver, no job) and the batch stages in the
+    driver (no ``meta_cols``, no fresh sidecar), so a small upsert runs
+    the collect and the dictionary merge's jobs only. A larger batch
+    deletes by a join and stages through the Spark staged build.
     """
     from .build import BuildConfig
     from .streaming import incremental
 
     cfg = cfg or BuildConfig()
-    head = incremental._batch_head(
-        docs, incremental._DRIVER_STAGE_MAX_DOCS + 1
-    )
-    whole = head.num_rows <= incremental._DRIVER_STAGE_MAX_DOCS
+    head, whole = incremental._batch_head(docs)
     deleted = delete_documents(
         spark, index_dir,
         head.column("url").to_pylist() if whole else docs.select("url"),
     )
-    incremental._append_batch(spark, docs, index_dir, cfg, head=head)
+    incremental._append_batch(
+        spark, docs, index_dir, cfg, head=(head, whole)
+    )
     with open(os.path.join(index_dir, "meta.json")) as f:
         meta = json.load(f)
     return {

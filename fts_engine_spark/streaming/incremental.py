@@ -168,17 +168,20 @@ def _merge_dictionary(
     return terms_ptr
 
 
-def _batch_head(batch_df: DataFrame, n: int):
-    """At most ``n`` rows of ``(url, text, lang, _h = xxhash64(url))`` as
-    an Arrow table, in one job of one task: ``coalesce(1)`` makes the limit
-    a single-partition collect with no exchange, and a ``text`` derived
-    from ``html`` is extracted inside that task."""
-    return (
+def _batch_head(batch_df: DataFrame):
+    """``(head, whole)``: at most ``_DRIVER_STAGE_MAX_DOCS + 1`` rows of
+    ``(url, text, lang, _h = xxhash64(url))`` as an Arrow table, and
+    whether they are the whole batch, small enough to stage in the driver.
+    One job of one task: ``coalesce(1)`` makes the limit a
+    single-partition collect with no exchange, and a ``text`` derived from
+    ``html`` is extracted inside that task."""
+    head = (
         batch_df.select("url", "text", "lang", F.xxhash64("url").alias("_h"))
         .coalesce(1)
-        .limit(n)
+        .limit(_DRIVER_STAGE_MAX_DOCS + 1)
         .toArrow()
     )
+    return head, head.num_rows <= _DRIVER_STAGE_MAX_DOCS
 
 
 def _stage_batch(
@@ -228,8 +231,9 @@ def _append_batch(
     pyarrow). Any other batch runs the Spark staged build
     (``build_index``'s internal ``_first_shard``). The manifest's
     ``delta_batch_N`` entry records which envelope ran. A caller that
-    already collected those rows (an upsert, whose delete reads their
-    urls) passes them as ``head``, so the batch is read once.
+    already collected them with :func:`_batch_head` (an upsert, whose
+    delete reads their urls) passes its result as ``head``, so the batch
+    is read once.
 
     EXACTLY-ONCE under foreachBatch retries: Structured Streaming re-runs
     a micro-batch after a crash, so the splice must be idempotent —
@@ -256,8 +260,7 @@ def _append_batch(
     without an external scheduler. Compaction commits atomically, so a
     crash inside it never harms the just-committed append.
     """
-    if head is None:
-        head = _batch_head(batch_df, _DRIVER_STAGE_MAX_DOCS + 1)
+    head, whole = head if head is not None else _batch_head(batch_df)
     if not head.num_rows:
         return
     meta_path = os.path.join(index_dir, "meta.json")
@@ -367,7 +370,7 @@ def _append_batch(
     # the write-side point tier: a batch the Spark build would tokenize in
     # one task, with no metadata columns and no sidecar to extend, stages
     # in the driver from the rows already collected
-    in_driver = head.num_rows <= _DRIVER_STAGE_MAX_DOCS and not (
+    in_driver = whole and not (
         stage_cfg.meta_cols or stored_fresh or positions_fresh
     )
     stage_meta = _stage_batch(

@@ -242,16 +242,20 @@ def test_delete_commit_is_crash_atomic(spark, tmp_path, monkeypatch):
     """A delete killed after its tombstone write and before the meta
     commit leaves the live meta and the previous tombstones untouched; the
     retry commits the rows the killed attempt wrote. Through both
-    envelopes (a 0-doc driver cap sends the url list to Spark)."""
+    envelopes (a url list resolves in the driver, a DataFrame on Spark)."""
     import fts_engine_spark.mutate as mutate_mod
 
     for envelope in ("driver", "spark"):
         with monkeypatch.context() as mp:
             index_dir = str(tmp_path / envelope)
             build_index(spark, _docs(spark, 80), index_dir, CFG, resume=False)
-            if envelope == "spark":
-                mp.setattr(mutate_mod, "_DRIVER_DELETE_MAX_DOCS", 0)
-            delete_documents(spark, index_dir, ["doc://3"])
+
+            def urls(*u):
+                if envelope == "spark":
+                    return spark.createDataFrame([(x,) for x in u], "url string")
+                return list(u)
+
+            delete_documents(spark, index_dir, urls("doc://3"))
             with open(os.path.join(index_dir, "meta.json")) as f:
                 meta0 = json.load(f)
             fts0 = FtsIndex(spark, index_dir)
@@ -268,13 +272,13 @@ def test_delete_commit_is_crash_atomic(spark, tmp_path, monkeypatch):
 
             mp.setattr(mutate_mod, "atomic_write_json", boom)
             with pytest.raises(RuntimeError, match="injected kill"):
-                delete_documents(spark, index_dir, ["doc://5"])
+                delete_documents(spark, index_dir, urls("doc://5"))
             with open(os.path.join(index_dir, "meta.json")) as f:
                 assert json.load(f) == meta0, envelope  # live meta untouched
             assert sorted(map(tuple, fts0.tombstones().collect())) == old_rows
             mp.setattr(mutate_mod, "atomic_write_json", atomic_write_json)
 
-            out = delete_documents(spark, index_dir, ["doc://5"])
+            out = delete_documents(spark, index_dir, urls("doc://5"))
             assert out["n_deleted"] == 2 and out["matched"] == 1
             rows = sorted(
                 map(tuple, FtsIndex(spark, index_dir).tombstones().collect())

@@ -1,8 +1,8 @@
 """The two envelopes of a staged append: a batch small enough for one
 tokenize task stages in the driver (``build.stage_in_driver``), any other
 through the Spark staged build. Both must leave identical indexes. The
-same holds for the delete: a url list against a small index resolves in
-the driver (``mutate._tombstones_in_driver``), anything else on Spark."""
+same holds for the delete: a url list resolves in the driver
+(``mutate._tombstones_in_driver``), a DataFrame of urls on Spark."""
 
 from __future__ import annotations
 
@@ -17,7 +17,6 @@ from pyspark.sql import functions as F
 from fts_engine_spark.build import BuildConfig, build_index
 from fts_engine_spark.checkpoint import Manifest
 from fts_engine_spark.layout import read_table, table_path
-from fts_engine_spark import mutate
 from fts_engine_spark.mutate import delete_documents, update_documents
 from fts_engine_spark.sources.pages import conform_pages
 from fts_engine_spark.streaming import incremental
@@ -148,11 +147,12 @@ def test_lifecycle_is_identical_through_both_envelopes(
     assert driver[-1]["n_deleted"] in (None, 0)
 
 
-def _force_delete(monkeypatch, envelope: str) -> None:
-    """Url-list deletes resolve in the driver until forced to Spark: a
-    0-doc cap sends every non-empty index to Spark."""
+def _delete_urls(spark, envelope: str, urls: list):
+    """The delete's input for ``envelope``: a url list resolves in the
+    driver, the same urls as a DataFrame on Spark."""
     if envelope == "spark":
-        monkeypatch.setattr(mutate, "_DRIVER_DELETE_MAX_DOCS", 0)
+        return spark.createDataFrame([(u,) for u in urls], "url string")
+    return urls
 
 
 def _delete_jobs(spark, index_dir: str, urls) -> tuple[dict, int]:
@@ -167,9 +167,7 @@ def _delete_jobs(spark, index_dir: str, urls) -> tuple[dict, int]:
     return out, len(sc.statusTracker().getJobIdsForGroup(group))
 
 
-def test_delete_is_identical_through_both_envelopes(
-    spark, tmp_path, monkeypatch
-):
+def test_delete_is_identical_through_both_envelopes(spark, tmp_path):
     """The delete's two envelopes over one scripted sequence on an index
     with fresh stored/positions sidecars and a null-url doc: unknown urls,
     a ``None`` in the url list, a re-delete, an append-only duplicate url
@@ -202,12 +200,13 @@ def test_delete_is_identical_through_both_envelopes(
     for env in ENVELOPES:
         index_dir = str(tmp_path / env)
         shutil.copytree(base, index_dir)
-        _force_delete(monkeypatch, env)
         for urls in script:
             if urls == "append":
                 incremental._append_batch(spark, dup, index_dir, CFG)
                 continue
-            out, jobs = _delete_jobs(spark, index_dir, urls)
+            out, jobs = _delete_jobs(
+                spark, index_dir, _delete_urls(spark, env, urls)
+            )
             assert (jobs == 0) == (env == "driver"), (env, urls, jobs)
             meta = _meta(index_dir)
             assert out["meta"] == meta
@@ -223,7 +222,6 @@ def test_delete_is_identical_through_both_envelopes(
                     "tombstones": _snapshot(spark, index_dir).get("tombstones"),
                 }
             )
-        monkeypatch.undo()
     driver, spark_ = steps["driver"], steps["spark"]
     assert [s["matched"] for s in driver] == [0, 2, 2, 3, 0]
     assert [s["n_deleted"] for s in driver] == [0, 2, 2, 5, 5]

@@ -731,7 +731,7 @@ def test_absent_term_answers_run_no_spark_job(spark, small_index):
 
 
 def test_small_upsert_deletes_in_driver(spark, small_corpus, tmp_path, monkeypatch):
-    """A sub-cap upsert's delete resolves its urls in the driver from the
+    """A small upsert's delete resolves its urls in the driver from the
     rows the upsert's one bounded collect holds: from the delete's start
     to its commit no Spark job runs, and the whole upsert runs at most 5
     (the collect and the dictionary merge's 4; 11 before, 6 of them the
