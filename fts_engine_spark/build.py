@@ -614,7 +614,7 @@ def build_index(
     table holds absolute ids; ``n_shards`` in the returned meta stays the
     number of shards built. A staged build writes no term dictionary: the
     append merges the staged postings' df/cf into the live dictionary
-    directly (``incremental._merge_dictionary``). An append whose batch
+    directly (``layout.merge_terms``). An append whose batch
     fits one tokenize task stages through :func:`stage_in_driver` instead.
     """
     cfg = cfg or BuildConfig()
@@ -893,8 +893,12 @@ def stage_in_driver(
     no Spark job. pyarrow writes no parquet bloom filters: a
     driver-staged delta shard keeps its row-group min/max stats and
     regains its ``term`` bloom filter when compaction re-encodes it.
-    Returns the staged meta fields the append reads (``n_docs``,
-    ``n_shards``, ``avgdl``) and ``build_phases``.
+    It writes no dictionary: the append merges the staged postings'
+    ``count``/``tf_sum`` into the live one (``layout.merge_terms``, in
+    the driver too within ``layout.DRIVER_DICT_MAX`` rows), so the
+    staged files are the only input that merge reads. Returns the staged
+    meta fields the append reads (``n_docs``, ``n_shards``, ``avgdl``)
+    and ``build_phases``.
     """
     import hashlib
 

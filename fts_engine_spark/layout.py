@@ -21,14 +21,21 @@ with the table's known schema, so Spark runs no schema-inference job
 (one footer-reading job per ``spark.read.parquet`` of a directory — the
 bulk of the fixed cost of a small upsert or compaction). Reads of user
 input keep inference.
+
+:func:`merge_terms` is the one writer of a merged term dictionary
+(upsert, compaction under tombstones, index merge): the live terms table
+plus signed per-term ``(df, cf)`` deltas, merged in the driver with
+pyarrow when the rows fit the driver dictionary budget, else on Spark.
 """
 
 from __future__ import annotations
 
 import os
+import shutil
 from collections.abc import Sequence
+from typing import NamedTuple
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, SparkSession, functions as F
 from pyspark.sql.types import (
     ArrayType,
     BinaryType,
@@ -141,3 +148,166 @@ def next_version_dir(index_dir: str, meta: dict, name: str) -> tuple[str, int, d
         v,
         {f"{name}_dir": rel, "table_version": v},
     )
+
+
+# the most dictionary rows merged in the driver: the entry budget under
+# which a warm FtsIndex holds its dictionary in the driver
+# (``FtsIndex.warm``'s ``driver_dict_max`` default)
+DRIVER_DICT_MAX = 5_000_000
+
+
+class TermDelta(NamedTuple):
+    """Signed per-term ``(df, cf)`` read from an index table at ``path``:
+    a postings table's ``(count, tf_sum)`` (only its shards
+    ``>= min_shard`` when given) or a terms table's ``(df, cf)``."""
+
+    path: str
+    table: str  # "postings" | "terms"
+    sign: int = 1
+    min_shard: int | None = None
+
+
+def _dataset(path: str, name: str):
+    """A pyarrow dataset over table ``name`` at ``path`` under its pinned
+    schema; a postings table's ``shard_id=N`` dirs are hive partitions.
+    Hidden (``.crc``) and ``_``-prefixed files are skipped, as Spark does."""
+    import pyarrow as pa
+    import pyarrow.dataset as ds
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    schema = to_arrow_schema(TABLE_SCHEMAS[name])
+    part = None
+    if name == "postings":
+        part = ds.partitioning(
+            pa.schema([schema.field("shard_id")]), flavor="hive"
+        )
+    return ds.dataset(path, format="parquet", schema=schema, partitioning=part)
+
+
+def _delta_filter(d: TermDelta):
+    import pyarrow.compute as pc
+
+    return None if d.min_shard is None else pc.field("shard_id") >= d.min_shard
+
+
+def _delta_cols(d: TermDelta) -> tuple[str, str]:
+    return ("count", "tf_sum") if d.table == "postings" else ("df", "cf")
+
+
+def _terms_in_driver(live: str, deltas: Sequence[TermDelta], out_dir: str,
+                     files: int) -> int:
+    """The driver envelope of :func:`merge_terms`: pyarrow sums the live
+    and signed delta rows by term, drops ``df <= 0``, sorts by term (byte
+    order of the UTF-8, as Spark sorts strings; nulls first) and writes
+    ``files`` snappy files split at equal row counts. Returns Σcf."""
+    import pyarrow as pa
+    import pyarrow.compute as pc
+    import pyarrow.parquet as pq
+
+    live_rows = _dataset(live, "terms")
+    schema = live_rows.schema
+    parts = [live_rows.to_table(columns=["term", "df", "cf"])]
+    for d in deltas:
+        df, cf = _delta_cols(d)
+        t = _dataset(d.path, d.table).to_table(
+            columns=["term", df, cf], filter=_delta_filter(d)
+        )
+        parts.append(pa.Table.from_arrays(
+            [t["term"]] + [
+                pc.multiply(t[c].cast(pa.int64()), d.sign) for c in (df, cf)
+            ],
+            schema=schema,
+        ))
+    merged = pa.concat_tables(parts).group_by("term").aggregate(
+        [("df", "sum"), ("cf", "sum")]
+    )
+    merged = merged.filter(pc.greater(merged["df_sum"], 0)).sort_by(
+        [("term", "ascending")], null_placement="at_start"
+    )
+    table = pa.Table.from_arrays(
+        [merged["term"], merged["df_sum"], merged["cf_sum"]], schema=schema
+    )
+    os.makedirs(out_dir)
+    n = table.num_rows
+    files = max(1, min(files, n))
+    for i in range(files):
+        lo, hi = i * n // files, (i + 1) * n // files
+        pq.write_table(
+            table.slice(lo, hi - lo),
+            os.path.join(out_dir, f"part-{i:05d}.parquet"),
+            compression="snappy",
+        )
+    return _total_cf(table)
+
+
+def _total_cf(table) -> int:
+    import pyarrow.compute as pc
+
+    return int(pc.sum(table["cf"]).as_py() or 0)
+
+
+def _spark_terms(spark: SparkSession, live: str,
+                 deltas: Sequence[TermDelta]) -> DataFrame:
+    """The Spark envelope's merged dictionary: one JVM aggregate over the
+    live rows and the signed delta rows, terms left at ``df <= 0``
+    dropped (no Python stage)."""
+    merged = read_table(spark, live, "terms").select("term", "df", "cf")
+    for d in deltas:
+        rows = read_table(spark, d.path, d.table)
+        if d.min_shard is not None:
+            rows = rows.where(F.col("shard_id") >= d.min_shard)
+        df, cf = _delta_cols(d)
+        merged = merged.unionByName(rows.select(
+            "term",
+            (F.col(df).cast("long") * d.sign).alias("df"),
+            (F.col(cf).cast("long") * d.sign).alias("cf"),
+        ))
+    return (
+        merged.groupBy("term")
+        .agg(F.sum("df").alias("df"), F.sum("cf").alias("cf"))
+        .where(F.col("df") > 0)
+    )
+
+
+def merge_terms(
+    spark: SparkSession,
+    index_dir: str,
+    meta: dict,
+    deltas: Sequence[TermDelta],
+    bloom_ndv: int,
+) -> tuple[dict, int]:
+    """Write the live term dictionary plus ``deltas`` into the next
+    versioned ``terms_vN`` dir. Returns ``(pointer_update, Σcf)``; the
+    caller merges the pointer into meta in its single committing
+    ``atomic_write_json``, so a crash before it leaves the old dictionary
+    live and the retry overwrites the uncommitted dir.
+
+    The envelope follows the row counts in the parquet footers (no job):
+    when the live rows plus the delta rows fit :data:`DRIVER_DICT_MAX`,
+    pyarrow merges them in the driver (:func:`_terms_in_driver`, no Spark
+    job); above it Spark aggregates and range-writes them with a ``term``
+    bloom filter, and the driver reads Σcf from the written ``cf``
+    column. Both write the same rows, sorted by term over
+    ``defaultParallelism // 2`` files. pyarrow writes no bloom filter:
+    the driver's dictionary is pruned by its sorted files' min/max stats,
+    and warm handles read it whole."""
+    live = table_path(index_dir, meta, "terms")
+    out_dir, _, ptr = next_version_dir(index_dir, meta, "terms")
+    files = max(1, spark.sparkContext.defaultParallelism // 2)
+    rows = _dataset(live, "terms").count_rows() + sum(
+        _dataset(d.path, d.table).count_rows(filter=_delta_filter(d))
+        for d in deltas
+    )
+    shutil.rmtree(out_dir, ignore_errors=True)
+    if rows <= DRIVER_DICT_MAX:
+        return ptr, _terms_in_driver(live, deltas, out_dir, files)
+    (
+        _spark_terms(spark, live, deltas)
+        .repartitionByRange(files, "term")
+        .sortWithinPartitions("term")
+        .write.mode("overwrite")
+        .option("parquet.bloom.filter.enabled#term", "true")
+        .option("parquet.bloom.filter.expected.ndv#term", str(bloom_ndv))
+        .parquet(out_dir)
+    )
+    return ptr, _total_cf(_dataset(out_dir, "terms").to_table(columns=["cf"]))

@@ -47,7 +47,14 @@ import shutil
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from .checkpoint import Manifest, atomic_write_json
-from .layout import TABLE_SCHEMAS, next_version_dir, read_table, table_path
+from .layout import (
+    TABLE_SCHEMAS,
+    TermDelta,
+    merge_terms,
+    next_version_dir,
+    read_table,
+    table_path,
+)
 
 
 
@@ -268,9 +275,11 @@ def update_documents(
     Job count: one bounded collect (``incremental._batch_head``) serves
     both halves. When it holds the whole batch, its urls go to the delete
     as a list (resolved in the driver, no job) and the batch stages in the
-    driver (no ``meta_cols``, no fresh sidecar), so a small upsert runs
-    the collect and the dictionary merge's jobs only. A larger batch
-    deletes by a join and stages through the Spark staged build.
+    driver (no ``meta_cols``, no fresh sidecar); the dictionary merges in
+    the driver too (``layout.merge_terms``, within
+    ``layout.DRIVER_DICT_MAX`` rows), so a small upsert runs one Spark
+    job, the collect. A larger batch deletes by a join and stages through
+    the Spark staged build.
     """
     from .build import BuildConfig
     from .streaming import incremental
@@ -468,31 +477,13 @@ def merge_indexes(
     )
     _move_in_tagged(metrics_delta, table_path(dst_dir, dst, "metrics"), tag)
 
-    # dictionary delta-merge, atomic via versioned dir + pointer flip
+    # dictionary delta-merge (df/cf add), atomic via versioned dir +
+    # pointer flip
     old_terms = table_path(dst_dir, dst, "terms")
-    merged_terms = (
-        read_table(spark, old_terms, "terms")
-        .unionByName(
-            read_table(spark, table_path(src_dir, src, "terms"), "terms")
-        )
-        .groupBy("term")
-        .agg(
-            F.sum("df").cast("long").alias("df"),
-            F.sum("cf").cast("long").alias("cf"),
-        )
-    )
-    new_terms, _, terms_ptr = next_version_dir(dst_dir, dst, "terms")
-    dict_buckets = max(1, spark.sparkContext.defaultParallelism // 2)
-    (
-        merged_terms.repartitionByRange(dict_buckets, "term")
-        .sortWithinPartitions("term")
-        .write.mode("overwrite")
-        .option("parquet.bloom.filter.enabled#term", "true")
-        .option(
-            "parquet.bloom.filter.expected.ndv#term",
-            str(dst.get("bloom_ndv", 1 << 16)),
-        )
-        .parquet(new_terms)
+    terms_ptr, _ = merge_terms(
+        spark, dst_dir, dst,
+        [TermDelta(table_path(src_dir, src, "terms"), "terms")],
+        int(dst.get("bloom_ndv", 1 << 16)),
     )
 
     # pending deletes on either side survive the merge at shifted ids

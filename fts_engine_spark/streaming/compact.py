@@ -51,7 +51,13 @@ from ..build import (
 )
 from ..checkpoint import Manifest, atomic_write_json
 from ..codec import decode_doc_blobs, varbyte_decode_binary
-from ..layout import next_version_dir, read_table, table_path
+from ..layout import (
+    TermDelta,
+    merge_terms,
+    next_version_dir,
+    read_table,
+    table_path,
+)
 
 # posting-list pieces of the decoded tail: one row per (old row, new shard)
 _TAIL_PIECES_SCHEMA = (
@@ -195,32 +201,6 @@ def _reencoded_tail(
     )
 
 
-def _corrected_terms(
-    terms: DataFrame, old_tail: DataFrame, new_tail: DataFrame
-) -> DataFrame:
-    """The dictionary after a tombstone purge: each term's df/cf minus the
-    old tail's Σcount/Σtf_sum plus the re-encoded tail's. Live postings
-    re-encode unchanged, so the difference is exactly the dead docs'
-    contribution — one JVM aggregate over posting rows, no blob decoded a
-    second time (plan-asserted Python-free). Terms left at df 0 drop."""
-
-    def stats(df: DataFrame, sign: int) -> DataFrame:
-        return df.select(
-            "term",
-            (F.col("count").cast("long") * sign).alias("df"),
-            (F.col("tf_sum").cast("long") * sign).alias("cf"),
-        )
-
-    return (
-        terms.select("term", "df", "cf")
-        .unionByName(stats(old_tail, -1))
-        .unionByName(stats(new_tail, 1))
-        .groupBy("term")
-        .agg(F.sum("df").alias("df"), F.sum("cf").alias("cf"))
-        .where(F.col("df") > 0)
-    )
-
-
 def _occupancy(docs: DataFrame, shard_size: int) -> dict[int, int]:
     """Docs per shard — one small aggregate row per shard (collect is
     bounded by shard count: 10^6 rows at 10^12 docs / 1M shard_size)."""
@@ -265,7 +245,14 @@ def compact_index(
     additionally need the stored table as their text source, so
     positions-without-stored stays stale too (documented). The rebuild
     runs AFTER the compaction commit — a crash mid-rebuild leaves stale
-    sidecar pins, which the staleness gates already reject loudly."""
+    sidecar pins, which the staleness gates already reject loudly.
+
+    Under tombstones the dictionary is corrected by
+    :func:`..layout.merge_terms` from the old tail (sign −1) and the
+    re-encoded tail (+1) posting rows at ``shard_id >= P`` — in the
+    driver (no Spark job) within ``layout.DRIVER_DICT_MAX`` rows, else on
+    Spark — and avgdl is re-derived from the Σcf the merge returns, so no
+    job re-reads the written dictionary."""
     cfg = cfg or BuildConfig()
     meta_path = os.path.join(index_dir, "meta.json")
     with open(meta_path) as f:
@@ -508,11 +495,13 @@ def compact_index(
     )
 
     # under deletes: correct the global dictionary by the dead docs' EXACT
-    # contributions (:func:`_corrected_terms`, an O(tail rows + vocab)
-    # JVM pass), then re-derive avgdl the way the batch build derives it
-    # (sum(cf)/n_docs, exact integer division), so a compacted index's
-    # scores are hash-identical to a fresh build of the surviving corpus
-    # (tests/test_delete.py).
+    # contributions — each term's df/cf minus the old tail's
+    # Σcount/Σtf_sum plus the re-encoded tail's (live postings re-encode
+    # unchanged, so the difference is the dead docs'; no blob is decoded a
+    # second time; terms left at df 0 drop) — then re-derive avgdl the way
+    # the batch build derives it (Σcf/n_docs, Σcf from the merge), so a
+    # compacted index's scores are hash-identical to a fresh build of the
+    # surviving corpus (tests/test_delete.py).
     pointer_updates = {**post_ptr, **docs_ptr, **metr_ptr}
     meta_updates: dict = {}
     drop_keys: list[str] = []
@@ -523,30 +512,13 @@ def compact_index(
     )
     if have_dead:
         terms_path = table_path(index_dir, meta, "terms")
-        new_terms_df = _corrected_terms(
-            read_table(spark, terms_path, "terms"),
-            tail,
-            read_table(spark, new_postings, "postings").where(
-                F.col("shard_id") >= P
-            ),
-        )
-        new_terms_dir, _, terms_ptr = next_version_dir(index_dir, meta, "terms")
-        dict_buckets = max(1, spark.sparkContext.defaultParallelism // 2)
-        (
-            new_terms_df.repartitionByRange(dict_buckets, "term")
-            .sortWithinPartitions("term")
-            .write.mode("overwrite")
-            .option("parquet.bloom.filter.enabled#term", "true")
-            .option(
-                "parquet.bloom.filter.expected.ndv#term", str(bloom_ndv)
-            )
-            .parquet(new_terms_dir)
+        terms_ptr, total_tokens = merge_terms(
+            spark, index_dir, meta,
+            [TermDelta(postings_path, "postings", -1, P),
+             TermDelta(new_postings, "postings", 1, P)],
+            bloom_ndv,
         )
         pointer_updates.update(terms_ptr)
-        total_tokens = int(
-            read_table(spark, new_terms_dir, "terms").agg(F.sum("cf")).first()[0]
-            or 0
-        )
         meta_updates["n_docs"] = n_live
         meta_updates["avgdl"] = float(total_tokens) / max(1, n_live)
         meta_updates["n_deleted"] = 0

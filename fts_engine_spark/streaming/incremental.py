@@ -20,7 +20,6 @@ page stream (late pages tolerated up to the watermark horizon).
 from __future__ import annotations
 
 import json
-import math
 import os
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
@@ -33,7 +32,7 @@ from ..build import (
     stage_in_driver,
 )
 from ..checkpoint import Manifest, atomic_write_json
-from ..layout import next_version_dir, read_table, table_path
+from ..layout import TermDelta, merge_terms, table_path
 
 PAGES_SCHEMA = (
     "url string, warc_ts timestamp, html binary, text string, lang string"
@@ -122,52 +121,6 @@ def stream_pages(spark: SparkSession, input_dir: str, fmt: str = "parquet") -> D
     )
 
 
-def _merge_dictionary(
-    spark: SparkSession, index_dir: str, meta: dict, staged_postings: str,
-    bloom_ndv: int,
-) -> dict:
-    """Delta-merge the global term dictionary: union the STAGED batch's
-    posting rows (``count``/``tf_sum`` per (shard, term) — the staged
-    build writes no dictionary of its own) with the existing dictionary
-    and aggregate df/cf in one pass inside the write — O(|batch postings
-    rows| + |dictionary|) per batch instead of re-scanning every posting
-    in the index; written range-bucketed like the batch build (no
-    single-task repartition(1)).
-
-    Atomic dictionary swap (VERDICT r3 wrong #4): the merge lands in a
-    fresh VERSIONED dir whose meta pointer (returned) flips in the
-    append's single committing ``atomic_write_json`` — a crash at any
-    point leaves meta pointing at a complete dictionary (old before the
-    flip, new after); the old dir is removed only after commit."""
-    delta = read_table(spark, staged_postings, "postings").select(
-        "term",
-        F.col("count").cast("long").alias("df"),
-        F.col("tf_sum").alias("cf"),
-    )
-    merged = (
-        read_table(spark, table_path(index_dir, meta, "terms"), "terms")
-        .unionByName(delta)
-        .groupBy("term")
-        .agg(
-            F.sum("df").cast("long").alias("df"),
-            F.sum("cf").cast("long").alias("cf"),
-        )
-    )
-    dict_buckets = max(1, spark.sparkContext.defaultParallelism // 2)
-    new_terms, _, terms_ptr = next_version_dir(index_dir, meta, "terms")
-    (
-        merged.repartitionByRange(dict_buckets, "term")
-        .sortWithinPartitions("term")
-        .write.mode("overwrite")
-        .option("parquet.bloom.filter.enabled#term", "true")
-        .option(
-            "parquet.bloom.filter.expected.ndv#term", str(bloom_ndv)
-        )
-        .parquet(new_terms)
-    )
-    return terms_ptr
-
-
 def _batch_head(batch_df: DataFrame):
     """``(head, whole)``: at most ``_DRIVER_STAGE_MAX_DOCS + 1`` rows of
     ``(url, text, lang, _h = xxhash64(url))`` as an Arrow table, and
@@ -218,9 +171,13 @@ def _append_batch(
     and sidecar files into the live tables (``os.replace`` /
     :func:`_move_in_tagged`) — no Spark job re-reads or re-writes them.
     Only the term dictionary is re-written: the staged build writes none,
-    and :func:`_merge_dictionary` folds the staged postings' df/cf into
-    the live one before they move. The batch's avgdl comes from the
-    staged build's Σdoclen; every read pins its schema (no inference).
+    and :func:`..layout.merge_terms` folds the staged postings'
+    ``count``/``tf_sum`` into the live one before they move — in the
+    driver with pyarrow (no Spark job) while the live and staged rows fit
+    ``layout.DRIVER_DICT_MAX``, else on Spark. The batch's avgdl comes
+    from the staged build's Σdoclen; every read pins its schema (no
+    inference). A driver-staged batch therefore runs one Spark job, the
+    collect.
 
     Two staging envelopes, one kernel (:func:`_stage_batch`). The append
     first collects at most ``_DRIVER_STAGE_MAX_DOCS + 1`` batch rows in
@@ -378,11 +335,13 @@ def _append_batch(
         next_shard,
     )
 
-    # the dictionary merge reads the staged postings, so it runs before
-    # they move; its versioned dir is uncommitted until the meta write
+    # the dictionary merge reads the staged postings' count/tf_sum, so it
+    # runs before they move; its versioned dir is uncommitted until the
+    # meta write
     old_terms = table_path(index_dir, meta, "terms")
-    terms_ptr = _merge_dictionary(
-        spark, index_dir, meta, os.path.join(staging, "postings"),
+    terms_ptr, _ = merge_terms(
+        spark, index_dir, meta,
+        [TermDelta(os.path.join(staging, "postings"), "postings")],
         stage_cfg.bloom_ndv,
     )
 

@@ -3,7 +3,7 @@ no regression, unresolved, regression) on hand-made paired runs."""
 
 from __future__ import annotations
 
-from tools.ab_perfbench import _cell, _seeds, per_unit, verdict
+from tools.ab_perfbench import _cell, _seeds, cycle_pairs, per_unit, verdict
 
 BASE = [10.0, 11.0, 12.0, 10.5, 11.5, 10.0, 11.0, 12.0, 10.5, 11.5]
 
@@ -41,3 +41,15 @@ def test_time_per_unit_of_work_quartiles():
     assert _cell(fast) == "105 (100-110)"
     assert _cell(per_unit(slow)) == "0.09545 (0.09091-0.1)"
     assert _cell(per_unit(fast)) == "0.009545 (0.009091-0.01)"
+
+
+def test_cycle_pairs_flag_unequal_ingest_work():
+    """Each ingest pair's cycles print as ``seed base/change``; a pair
+    whose sides ran different cycle counts is flagged, a run without an
+    info line (recorded before the tool kept it) is not."""
+    info = [{"info": {"cycles": n}} for n in (2, 2, 3)]
+    base = [info[0], info[0], {}]
+    change = [info[1], info[2], info[2]]
+    assert cycle_pairs([11, 12, 13], base, change) == (
+        ["11 2/2", "12 2/3", "13 ?/3"], [12]
+    )

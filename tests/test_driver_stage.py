@@ -1,8 +1,10 @@
 """The two envelopes of a staged append: a batch small enough for one
 tokenize task stages in the driver (``build.stage_in_driver``), any other
 through the Spark staged build. Both must leave identical indexes. The
-same holds for the delete: a url list resolves in the driver
-(``mutate._tombstones_in_driver``), a DataFrame of urls on Spark."""
+same holds for the delete (a url list resolves in the driver,
+``mutate._tombstones_in_driver``; a DataFrame of urls on Spark) and for
+the dictionary merge (``layout.merge_terms``: in the driver within
+``layout.DRIVER_DICT_MAX`` rows, else on Spark)."""
 
 from __future__ import annotations
 
@@ -11,9 +13,11 @@ import os
 import shutil
 import uuid
 
+import pyarrow.parquet as pq
 import pytest
 from pyspark.sql import functions as F
 
+from fts_engine_spark import layout
 from fts_engine_spark.build import BuildConfig, build_index
 from fts_engine_spark.checkpoint import Manifest
 from fts_engine_spark.layout import read_table, table_path
@@ -96,45 +100,39 @@ def _force(monkeypatch, envelope: str) -> None:
         monkeypatch.setattr(incremental, "_DRIVER_STAGE_MAX_DOCS", 0)
 
 
-def test_lifecycle_is_identical_through_both_envelopes(
-    spark, small_corpus, base_index, tmp_path, monkeypatch
-):
-    """The scripted scenario, staged once by each envelope: build, append,
-    upsert with recrawls (50 recrawled urls, 10 new ones, an empty and a
-    stopword-only page: 62 docs over two 32-doc delta shards), delete,
-    compaction with tombstones, another append and a compaction without
-    tombstones. After every step the postings, terms, docs, metrics and
-    tombstone rows are identical and n_docs / n_shards / avgdl /
-    n_deleted bit-identical."""
-    steps = {env: [] for env in ENVELOPES}
-    for env in ENVELOPES:
-        index_dir = str(tmp_path / env)
-        shutil.copytree(base_index, index_dir)
-        _force(monkeypatch, env)
-        snap = steps[env].append
+def _lifecycle(spark, corpus: str, index_dir: str, staged: str) -> list:
+    """The scripted scenario on ``index_dir``: append, upsert with
+    recrawls (50 recrawled urls, 10 new ones, an empty and a stopword-only
+    page: 62 docs over two 32-doc delta shards), delete, compaction with
+    tombstones, another append and a compaction without tombstones. Every
+    batch stages through envelope ``staged``. Returns the snapshot after
+    each step."""
+    steps = []
+    incremental._append_batch(
+        spark, _batch(spark, corpus, 60, 90, "a1"), index_dir, CFG
+    )
+    assert _last_envelope(index_dir) == staged
+    steps.append(_snapshot(spark, index_dir))
+    out = update_documents(
+        spark, index_dir, _batch(spark, corpus, 40, 100, "u1"), CFG
+    )
+    assert out["replaced"] == 50 and _last_envelope(index_dir) == staged
+    steps.append(_snapshot(spark, index_dir))
+    urls = _urls(spark, corpus)
+    delete_documents(spark, index_dir, [urls[5], urls[33], urls[70]])
+    steps.append(_snapshot(spark, index_dir))
+    compact_index(spark, index_dir)
+    steps.append(_snapshot(spark, index_dir))
+    incremental._append_batch(
+        spark, _batch(spark, corpus, 100, 120, "a2"), index_dir, CFG
+    )
+    steps.append(_snapshot(spark, index_dir))
+    compact_index(spark, index_dir)
+    steps.append(_snapshot(spark, index_dir))
+    return steps
 
-        incremental._append_batch(
-            spark, _batch(spark, small_corpus, 60, 90, "a1"), index_dir, CFG
-        )
-        assert _last_envelope(index_dir) == env
-        snap(_snapshot(spark, index_dir))
-        out = update_documents(
-            spark, index_dir, _batch(spark, small_corpus, 40, 100, "u1"), CFG
-        )
-        assert out["replaced"] == 50 and _last_envelope(index_dir) == env
-        snap(_snapshot(spark, index_dir))
-        urls = _urls(spark, small_corpus)
-        delete_documents(spark, index_dir, [urls[5], urls[33], urls[70]])
-        snap(_snapshot(spark, index_dir))
-        compact_index(spark, index_dir)
-        snap(_snapshot(spark, index_dir))
-        incremental._append_batch(
-            spark, _batch(spark, small_corpus, 100, 120, "a2"), index_dir, CFG
-        )
-        snap(_snapshot(spark, index_dir))
-        compact_index(spark, index_dir)
-        snap(_snapshot(spark, index_dir))
-    monkeypatch.undo()
+
+def _assert_identical(steps: dict) -> None:
     driver, spark_ = steps["driver"], steps["spark"]
     assert len(driver) == len(spark_) == 6
     # the upsert staged 62 docs into two delta shards (3-4) after the
@@ -145,6 +143,153 @@ def test_lifecycle_is_identical_through_both_envelopes(
         for key in d:
             assert d[key] == s[key], (i, key)
     assert driver[-1]["n_deleted"] in (None, 0)
+
+
+def test_lifecycle_is_identical_through_both_envelopes(
+    spark, small_corpus, base_index, tmp_path, monkeypatch
+):
+    """The scripted scenario (:func:`_lifecycle`), staged once by each
+    envelope. After every step the postings, terms, docs, metrics and
+    tombstone rows are identical and n_docs / n_shards / avgdl /
+    n_deleted bit-identical."""
+    steps = {}
+    for env in ENVELOPES:
+        index_dir = str(tmp_path / env)
+        shutil.copytree(base_index, index_dir)
+        _force(monkeypatch, env)
+        steps[env] = _lifecycle(spark, small_corpus, index_dir, env)
+    monkeypatch.undo()
+    _assert_identical(steps)
+
+
+def _force_dictionary(monkeypatch, envelope: str) -> None:
+    """Dictionaries merge in the driver until forced to Spark: a 0-row
+    budget sends every merge to the Spark envelope."""
+    if envelope == "spark":
+        monkeypatch.setattr(layout, "DRIVER_DICT_MAX", 0)
+
+
+def _terms_in_file_order(index_dir: str) -> list:
+    """The live dictionary's terms, file by file in name order (the
+    order of the range split), rows in file order."""
+    terms_dir = table_path(index_dir, _meta(index_dir), "terms")
+    files = sorted(
+        f for f in os.listdir(terms_dir) if f.endswith(".parquet")
+    )
+    return [
+        t for f in files
+        for t in pq.read_table(os.path.join(terms_dir, f))["term"].to_pylist()
+    ]
+
+
+def test_lifecycle_is_identical_through_both_dictionary_envelopes(
+    spark, small_corpus, base_index, tmp_path, monkeypatch
+):
+    """The scripted scenario with every dictionary merge (upserts and
+    appends, the compaction under tombstones) forced through each
+    envelope: identical tables after every step, n_docs / avgdl
+    bit-identical, and both dictionaries sorted by term across their
+    files in UTF-8 byte order, over a corpus holding Cyrillic (``ru``)
+    terms. Only the Spark envelope leaves a ``_SUCCESS`` marker."""
+    steps, order = {}, {}
+    for env in ENVELOPES:
+        index_dir = str(tmp_path / env)
+        shutil.copytree(base_index, index_dir)
+        _force_dictionary(monkeypatch, env)
+        steps[env] = _lifecycle(spark, small_corpus, index_dir, "driver")
+        monkeypatch.undo()
+        # the last merge is the tombstone compaction's (step 4): the
+        # final compaction has none to purge and keeps that dictionary
+        terms_dir = table_path(index_dir, _meta(index_dir), "terms")
+        assert os.path.exists(os.path.join(terms_dir, "_SUCCESS")) == (
+            env == "spark"
+        )
+        order[env] = _terms_in_file_order(index_dir)
+    _assert_identical(steps)
+    terms = order["driver"]
+    assert any(
+        any("\u0400" <= ch <= "\u04ff" for ch in t) for t in terms
+    ), "no ru terms"
+    assert terms == sorted(terms, key=lambda t: t.encode("utf-8"))
+    assert order["spark"] == terms
+
+
+def test_dictionary_commit_is_crash_atomic(
+    spark, small_corpus, base_index, tmp_path, monkeypatch
+):
+    """Through each dictionary envelope, after recrawled urls are
+    deleted, a kill between the dictionary write and the meta commit (of
+    the append, then of the compaction purging the tombstones) leaves the
+    live meta untouched, and the retry leaves the same tables as an
+    uninterrupted run — in the driver envelope the same dictionary bytes
+    too."""
+    from fts_engine_spark.streaming import compact
+
+    def boom(*a, **kw):
+        raise RuntimeError("injected kill before commit")
+
+    recrawled = _urls(spark, small_corpus)[40:100]
+    batch = _batch(spark, small_corpus, 40, 100, "u1")
+    for env in ENVELOPES:
+        runs = {}
+        for run in ("clean", "killed"):
+            index_dir = runs[run] = str(tmp_path / f"{env}-{run}")
+            shutil.copytree(base_index, index_dir)
+            delete_documents(spark, index_dir, recrawled)
+            _force_dictionary(monkeypatch, env)
+            for module, name, op in (
+                (incremental, "atomic_write_json",
+                 lambda: incremental._append_batch(
+                     spark, batch, index_dir, CFG
+                 )),
+                (compact, "_commit_compaction",
+                 lambda: compact_index(spark, index_dir)),
+            ):
+                if run == "killed":
+                    before = _meta(index_dir)
+                    with monkeypatch.context() as m:
+                        m.setattr(module, name, boom)
+                        with pytest.raises(RuntimeError, match="injected"):
+                            op()
+                    assert _meta(index_dir) == before, name
+                op()
+            monkeypatch.undo()
+        clean, killed = runs["clean"], runs["killed"]
+        assert _meta(killed)["n_deleted"] == 0
+        assert _snapshot(spark, killed) == _snapshot(spark, clean), env
+        if env == "driver":
+            assert _dir_bytes(killed) == _dir_bytes(clean)
+
+
+def _dir_bytes(index_dir: str) -> dict:
+    """``{file name: bytes}`` of the live dictionary's parquet files."""
+    terms_dir = table_path(index_dir, _meta(index_dir), "terms")
+    return {
+        f: open(os.path.join(terms_dir, f), "rb").read()
+        for f in sorted(os.listdir(terms_dir))
+    }
+
+
+def test_driver_dictionary_bytes_are_deterministic(
+    spark, small_corpus, base_index, tmp_path
+):
+    """The same upsert and tombstone compaction on two copies of one
+    index, with RDDs created between the runs (they advance the session's
+    RDD counter, which seeds Spark's range-partition sample), write
+    byte-identical dictionaries after each step."""
+    a, b = str(tmp_path / "a"), str(tmp_path / "b")
+    for d in (a, b):
+        shutil.copytree(base_index, d)
+    batch = _batch(spark, small_corpus, 40, 100, "u1")
+    for op in (
+        lambda ix: update_documents(spark, ix, batch, CFG),
+        lambda ix: compact_index(spark, ix),
+    ):
+        op(a)
+        for _ in range(3):
+            spark.sparkContext.emptyRDD()
+        op(b)
+        assert _dir_bytes(a) == _dir_bytes(b)
 
 
 def _delete_urls(spark, envelope: str, urls: list):

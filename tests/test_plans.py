@@ -157,9 +157,10 @@ def test_jaccard_lsh_no_shingle_selfjoin(spark, docs):
 
 
 def test_postings_parquet_has_term_bloom_filter(spark, small_index):
-    """The postings (and terms) files carry a parquet bloom filter on
-    `term` — the reference's probabilistic-filter role (SURVEY.md §2.5,
-    pkg/filter/bloom.go) at the storage layer."""
+    """The postings files carry a parquet bloom filter on `term` — the
+    reference's probabilistic-filter role (SURVEY.md §2.5,
+    pkg/filter/bloom.go) at the storage layer. (The batch build's terms
+    files carry one too; a dictionary merged in the driver has none.)"""
     import glob
     import os
 
@@ -583,25 +584,28 @@ def test_compaction_reencode_plan_is_arrow_without_sort(spark, small_index):
 def test_compaction_dictionary_correction_has_no_python_stage(
     spark, small_index
 ):
-    """Under tombstones the dictionary is corrected by a JVM difference of
-    Σcount/Σtf_sum between the old and re-encoded tail rows — no blob is
-    decoded a second time."""
+    """Under tombstones the Spark envelope of the dictionary merge
+    corrects df/cf by a JVM difference of Σcount/Σtf_sum between the old
+    and re-encoded tail rows — no blob is decoded a second time."""
     import os
 
-    import numpy as np
-
-    from fts_engine_spark.streaming.compact import _corrected_terms
+    from fts_engine_spark.layout import TermDelta, _spark_terms, read_table
 
     index_dir, _ = small_index
-    tail, _ = _tail_reencode(spark, small_index, np.array([40], dtype=np.int64))
-    terms = spark.read.parquet(os.path.join(index_dir, "terms"))
-    df = _corrected_terms(terms, tail, tail)
+    postings = os.path.join(index_dir, "postings")
+    terms_path = os.path.join(index_dir, "terms")
+    df = _spark_terms(
+        spark, terms_path,
+        [TermDelta(postings, "postings", -1, 1),
+         TermDelta(postings, "postings", 1, 1)],
+    )
     assert_plan(df, "HashAggregate")
     assert_plan_absent(
         df, "MapInArrow", "MapInPandas", "ArrowEvalPython", "BatchEvalPython",
         "PythonUDF",
     )
     # old == new tail: a no-op correction
+    terms = read_table(spark, terms_path, "terms")
     assert sorted(map(tuple, df.collect())) == sorted(
         map(tuple, terms.select("term", "df", "cf").collect())
     )
@@ -614,7 +618,12 @@ def test_update_documents_splices_without_spark_jobs(
     postings, docs and metrics into place: after the dictionary merge
     (which reads the staged postings before they move) no Spark job runs
     up to the commit (counted per job group through the status
-    tracker)."""
+    tracker). The merge itself runs in the driver, with no job; forced
+    onto its Spark envelope it runs some."""
+    import json
+    import os
+
+    from fts_engine_spark import layout
     from fts_engine_spark.build import BuildConfig, build_index
     from fts_engine_spark.mutate import update_documents
     from fts_engine_spark.streaming import incremental
@@ -626,7 +635,7 @@ def test_update_documents_splices_without_spark_jobs(
 
     sc = spark.sparkContext
     group = f"splice-{id(tmp_path)}"
-    real_stage, real_merge = incremental._stage_batch, incremental._merge_dictionary
+    real_stage, real_merge = incremental._stage_batch, incremental.merge_terms
 
     def stage_then_merge(*a, **kw):
         out = real_stage(*a, **kw)
@@ -639,15 +648,19 @@ def test_update_documents_splices_without_spark_jobs(
         return out
 
     monkeypatch.setattr(incremental, "_stage_batch", stage_then_merge)
-    monkeypatch.setattr(incremental, "_merge_dictionary", merge_then_splice)
-    try:
-        out = update_documents(spark, index_dir, docs.limit(80), cfg)
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
+    monkeypatch.setattr(incremental, "merge_terms", merge_then_splice)
     tracker = sc.statusTracker()
-    assert list(tracker.getJobIdsForGroup(f"{group}-dict"))  # probe works
-    assert list(tracker.getJobIdsForGroup(group)) == []
-    assert out["meta"]["n_docs"] == 80 + out["replaced"]
+    for budget, merge_jobs in ((layout.DRIVER_DICT_MAX, False), (0, True)):
+        monkeypatch.setattr(layout, "DRIVER_DICT_MAX", budget)
+        with open(os.path.join(index_dir, "meta.json")) as f:
+            n_before = json.load(f)["n_docs"]
+        try:
+            out = update_documents(spark, index_dir, docs.limit(80), cfg)
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        assert bool(tracker.getJobIdsForGroup(f"{group}-dict")) == merge_jobs
+        assert list(tracker.getJobIdsForGroup(group)) == []
+        assert out["meta"]["n_docs"] == n_before + 80
 
 
 def test_small_batch_stages_in_one_spark_job(
@@ -656,38 +669,40 @@ def test_small_batch_stages_in_one_spark_job(
     """A batch the Spark build would tokenize in one task stages in the
     driver: from the start of the append up to the dictionary merge the
     only Spark job is the bounded collect of the batch rows (it replaced
-    ``isEmpty`` plus the Spark staged build's 9 jobs)."""
+    ``isEmpty`` plus the Spark staged build's 9 jobs). The merge then
+    runs in the driver with no job; forced onto its Spark envelope it
+    runs some."""
+    from fts_engine_spark import layout
     from fts_engine_spark.build import BuildConfig, build_index
     from fts_engine_spark.checkpoint import Manifest
     from fts_engine_spark.streaming import incremental
 
     cfg = BuildConfig(preset="by_lang", shard_size=32, id_buckets=8)
     docs = spark.read.parquet(small_corpus).select("url", "text", "lang")
-    index_dir = str(tmp_path / "ix")
-    build_index(spark, docs.limit(60), index_dir, cfg, resume=False)
-
     sc = spark.sparkContext
-    group = f"stage-{id(tmp_path)}"
-    real_merge = incremental._merge_dictionary
-
-    def leave_group_then_merge(*a, **kw):
-        sc.setJobGroup(f"{group}-merge", "dictionary merge")
-        return real_merge(*a, **kw)
-
-    monkeypatch.setattr(
-        incremental, "_merge_dictionary", leave_group_then_merge
-    )
-    sc.setJobGroup(group, "stage")
-    try:
-        # the whole 120-doc corpus: one parquet file, one input partition
-        incremental._append_batch(spark, docs, index_dir, cfg)
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
     tracker = sc.statusTracker()
-    assert list(tracker.getJobIdsForGroup(f"{group}-merge"))  # probe works
-    assert len(tracker.getJobIdsForGroup(group)) == 1
-    steps = Manifest(index_dir).steps()
-    assert steps["delta_batch_1"]["metrics"]["envelope"] == "driver"
+    real_merge = incremental.merge_terms
+    for budget, merge_jobs in ((layout.DRIVER_DICT_MAX, False), (0, True)):
+        index_dir = str(tmp_path / f"ix{budget}")
+        build_index(spark, docs.limit(60), index_dir, cfg, resume=False)
+        group = f"stage-{budget}-{id(tmp_path)}"
+
+        def leave_group_then_merge(*a, group=group, **kw):
+            sc.setJobGroup(f"{group}-merge", "dictionary merge")
+            return real_merge(*a, **kw)
+
+        monkeypatch.setattr(incremental, "merge_terms", leave_group_then_merge)
+        monkeypatch.setattr(layout, "DRIVER_DICT_MAX", budget)
+        sc.setJobGroup(group, "stage")
+        try:
+            # the whole 120-doc corpus: one parquet file, one input partition
+            incremental._append_batch(spark, docs, index_dir, cfg)
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        assert bool(tracker.getJobIdsForGroup(f"{group}-merge")) == merge_jobs
+        assert len(tracker.getJobIdsForGroup(group)) == 1
+        steps = Manifest(index_dir).steps()
+        assert steps["delta_batch_1"]["metrics"]["envelope"] == "driver"
 
 
 def test_empty_answers_run_no_spark_job(spark, small_index):
@@ -733,9 +748,10 @@ def test_absent_term_answers_run_no_spark_job(spark, small_index):
 def test_small_upsert_deletes_in_driver(spark, small_corpus, tmp_path, monkeypatch):
     """A small upsert's delete resolves its urls in the driver from the
     rows the upsert's one bounded collect holds: from the delete's start
-    to its commit no Spark job runs, and the whole upsert runs at most 5
-    (the collect and the dictionary merge's 4; 11 before, 6 of them the
-    delete's)."""
+    to its commit no Spark job runs, and the whole upsert runs exactly
+    one, the collect (11 before the driver delete, 6 of them the
+    delete's; 5 before the driver dictionary merge, 4 of them the
+    merge's)."""
     from pyspark.sql import functions as F
 
     from fts_engine_spark import mutate
@@ -771,7 +787,7 @@ def test_small_upsert_deletes_in_driver(spark, small_corpus, tmp_path, monkeypat
     )
     assert out["up"]["replaced"] == 20 and out["up"]["n_deleted"] == 20
     assert list(sc.statusTracker().getJobIdsForGroup(group)) == []
-    assert jobs <= 5, jobs
+    assert jobs == 1, jobs
 
 
 def _jobs_launched(spark, fn) -> tuple[int, int]:
@@ -856,6 +872,61 @@ def test_upsert_compact_and_warm_run_no_schema_inference(
     assert (up_inf, c_inf, w_inf) == (0, 0, 0), (up_jobs, c_jobs, w_jobs)
     assert up_jobs < _PARENT_UPSERT_JOBS
     assert c_jobs < _PARENT_COMPACT_JOBS
+
+
+def test_pages_upsert_and_tombstone_compaction_job_budget(
+    spark, small_corpus, tmp_path
+):
+    """The write cycle's Spark job budget. An upsert of an html-only page
+    file through ``read_pages`` runs 2 jobs: the input's schema inference
+    and the bounded collect (6 when the dictionary merged on Spark). The
+    compaction that purges its tombstones runs at most 10 (16 when the
+    dictionary correction range-wrote on Spark and re-read Σcf)."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+    from pyspark.sql import functions as F
+
+    from fts_engine_spark.build import BuildConfig, build_index
+    from fts_engine_spark.mutate import update_documents
+    from fts_engine_spark.sources.pages import read_pages
+    from fts_engine_spark.streaming.compact import compact_index
+
+    cfg = BuildConfig(preset="by_lang", shard_size=32, id_buckets=8)
+    corpus = spark.read.parquet(small_corpus)
+    urls = [r["url"] for r in corpus.select("url").collect()]
+    index_dir = str(tmp_path / "ix")
+    build_index(
+        spark, corpus.where(F.col("url").isin(urls[:60])), index_dir, cfg,
+        resume=False,
+    )
+    pages = str(tmp_path / "batch.parquet")
+    rows = corpus.where(F.col("url").isin(urls[40:100])).select(
+        "url", "html", "lang"
+    ).collect()
+    pq.write_table(
+        pa.table({
+            "url": [r["url"] for r in rows],
+            "html": pa.array([r["html"] for r in rows], pa.binary()),
+            "lang": [r["lang"] for r in rows],
+        }),
+        pages,
+    )
+
+    out = {}
+    up_jobs, up_inf = _jobs_launched(
+        spark,
+        lambda: out.update(up=update_documents(
+            spark, index_dir,
+            read_pages(spark, pages).select("url", "text", "lang"), cfg,
+        )),
+    )
+    assert out["up"]["replaced"] == 20
+    assert (up_jobs, up_inf) == (2, 1)
+    c_jobs, c_inf = _jobs_launched(
+        spark, lambda: out.update(c=compact_index(spark, index_dir))
+    )
+    assert out["c"]["n_docs"] == 100 and out["c"]["n_deleted"] == 0
+    assert c_inf == 0 and c_jobs <= 10, c_jobs
 
 
 def test_staged_build_writes_no_dictionary(spark, small_corpus, tmp_path):

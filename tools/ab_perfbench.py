@@ -26,7 +26,10 @@ out of the pairs run (ties count for neither side), and a verdict:
   every base run, which counts as no regression;
 - ``regression``: worse than the bound allows.
 
-It also prints the failed-op share per side and, under ``work_per_s``,
+It also prints the failed-op share per side, each ingest pair's
+upsert+compaction ``cycles`` (from the run's ``info`` line, kept in
+``runs.jsonl``; a faster side can fit one more cycle in the window),
+flagging pairs whose counts differ, and, under ``work_per_s``,
 each side's time per unit of work (``1 / work_per_s``: seconds per page
 on ingest, per query on serve). Work is a rate, so a change that runs
 faster spreads wider in it by 1/T scaling alone; the time per unit shows
@@ -69,6 +72,8 @@ def _export(rev: str, dest: str) -> str:
 
 
 def _run(tree: str, workload: str, seed: int, seconds: float) -> dict:
+    """The run's result line, with its ``info`` line (when printed) under
+    the ``info`` key."""
     cmd = [
         sys.executable, "perfbench/run.py", "--workload", workload,
         "--seed", str(seed), "--seconds", str(seconds), "--trace", "0",
@@ -78,7 +83,10 @@ def _run(tree: str, workload: str, seed: int, seconds: float) -> dict:
     if proc.returncode != 0 or not lines:
         tail = (proc.stderr or proc.stdout)[-2000:]
         raise RuntimeError(f"{workload} seed {seed} in {tree} failed:\n{tail}")
-    return json.loads(lines[-1])
+    res = json.loads(lines[-1])
+    for ln in lines[:-1]:
+        res.update(info=json.loads(ln).get("info", {}))
+    return res
 
 
 def _quartiles(xs: list[float]) -> tuple[float, float]:
@@ -120,6 +128,22 @@ def verdict(
         )
         return ("no regression" if all_better else "unresolved"), wins
     return "no regression", wins
+
+
+def cycle_pairs(
+    seeds: list[int], base: list[dict], change: list[dict]
+) -> tuple[list[str], list[int]]:
+    """``seed base/change`` cells of each pair's ingest ``info.cycles``
+    (``?`` where a run kept no info line), and the seeds whose two runs
+    did unequal numbers of cycles: their end-to-end metrics describe
+    unequal work."""
+    cells, unequal = [], []
+    for seed, b, c in zip(seeds, base, change):
+        nb, nc = (r.get("info", {}).get("cycles", "?") for r in (b, c))
+        cells.append(f"{seed} {nb}/{nc}")
+        if "?" not in (nb, nc) and nb != nc:
+            unequal.append(seed)
+    return cells, unequal
 
 
 def _seeds(spec: str) -> list[int]:
@@ -183,6 +207,13 @@ def main() -> None:
         }
         print(f"\n[{wl}] failed-op share: base {fails['base']:.4f}, "
               f"change {fails['change']:.4f}")
+        if wl == "ingest":
+            cells, unequal = cycle_pairs(seeds, runs["base"], runs["change"])
+            print("cycles (seed base/change): " + ", ".join(cells))
+            if unequal:
+                print(f"UNEQUAL cycles at seeds {unequal}: "
+                      "index_bytes_per_text_byte and work_per_s of these "
+                      "pairs compare unequal work")
         print(f"{'metric':26} {'base med (q1-q3)':>32} "
               f"{'change med (q1-q3)':>32} {'wins':>6}  verdict")
         for m in spec["end_to_end"]:
