@@ -10,6 +10,7 @@ from __future__ import annotations
 
 import json
 import os
+import pathlib
 import shutil
 import uuid
 
@@ -182,6 +183,12 @@ def _terms_in_file_order(index_dir: str) -> list:
     ]
 
 
+def _terms_bytes(index_dir: str) -> dict:
+    """``{file name: bytes}`` of the live dictionary's files."""
+    terms_dir = pathlib.Path(table_path(index_dir, _meta(index_dir), "terms"))
+    return {f.name: f.read_bytes() for f in sorted(terms_dir.iterdir())}
+
+
 def test_lifecycle_is_identical_through_both_dictionary_envelopes(
     spark, small_corpus, base_index, tmp_path, monkeypatch
 ):
@@ -258,16 +265,7 @@ def test_dictionary_commit_is_crash_atomic(
         assert _meta(killed)["n_deleted"] == 0
         assert _snapshot(spark, killed) == _snapshot(spark, clean), env
         if env == "driver":
-            assert _dir_bytes(killed) == _dir_bytes(clean)
-
-
-def _dir_bytes(index_dir: str) -> dict:
-    """``{file name: bytes}`` of the live dictionary's parquet files."""
-    terms_dir = table_path(index_dir, _meta(index_dir), "terms")
-    return {
-        f: open(os.path.join(terms_dir, f), "rb").read()
-        for f in sorted(os.listdir(terms_dir))
-    }
+            assert _terms_bytes(killed) == _terms_bytes(clean)
 
 
 def test_driver_dictionary_bytes_are_deterministic(
@@ -289,7 +287,7 @@ def test_driver_dictionary_bytes_are_deterministic(
         for _ in range(3):
             spark.sparkContext.emptyRDD()
         op(b)
-        assert _dir_bytes(a) == _dir_bytes(b)
+        assert _terms_bytes(a) == _terms_bytes(b)
 
 
 def _delete_urls(spark, envelope: str, urls: list):
