@@ -895,7 +895,7 @@ def stage_in_driver(
     regains its ``term`` bloom filter when compaction re-encodes it.
     It writes no dictionary: the append merges the staged postings'
     ``count``/``tf_sum`` into the live one (``layout.merge_terms``, in
-    the driver too within ``layout.DRIVER_DICT_MAX`` rows), so the
+    the driver too within ``layout.DRIVER_MERGE_MAX_BYTES``), so the
     staged files are the only input that merge reads. Returns the staged
     meta fields the append reads (``n_docs``, ``n_shards``, ``avgdl``)
     and ``build_phases``.

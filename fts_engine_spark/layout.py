@@ -25,7 +25,8 @@ input keep inference.
 :func:`merge_terms` is the one writer of a merged term dictionary
 (upsert, compaction under tombstones, index merge): the live terms table
 plus signed per-term ``(df, cf)`` deltas, merged in the driver with
-pyarrow when the rows fit the driver dictionary budget, else on Spark.
+pyarrow when its estimated peak memory fits :data:`DRIVER_MERGE_MAX_BYTES`,
+else on Spark.
 """
 
 from __future__ import annotations
@@ -150,10 +151,12 @@ def next_version_dir(index_dir: str, meta: dict, name: str) -> tuple[str, int, d
     )
 
 
-# the most dictionary rows merged in the driver: the entry budget under
-# which a warm FtsIndex holds its dictionary in the driver
-# (``FtsIndex.warm``'s ``driver_dict_max`` default)
-DRIVER_DICT_MAX = 5_000_000
+# the most memory a dictionary merge may take in the driver (its
+# estimated peak, :func:`_merge_peak_bytes`); above it the merge runs on
+# Spark. The driver merge was faster at every size measured (up to 20M
+# rows), so the cut is a memory budget: half the benchmark's 2 GiB
+# driver heap, about 9M rows of 9-byte terms (measured in CHANGES.md).
+DRIVER_MERGE_MAX_BYTES = 1 << 30
 
 
 class TermDelta(NamedTuple):
@@ -196,10 +199,14 @@ def _delta_cols(d: TermDelta) -> tuple[str, str]:
 
 def _terms_in_driver(live: str, deltas: Sequence[TermDelta], out_dir: str,
                      files: int) -> int:
-    """The driver envelope of :func:`merge_terms`: pyarrow sums the live
-    and signed delta rows by term, drops ``df <= 0``, sorts by term (byte
-    order of the UTF-8, as Spark sorts strings; nulls first) and writes
-    ``files`` snappy files split at equal row counts. Returns Σcf."""
+    """The driver envelope of :func:`merge_terms`: pyarrow sorts the live
+    and signed delta rows by term (byte order of the UTF-8, as Spark
+    sorts strings; nulls first), numpy sums each run of equal terms, terms
+    left at ``df <= 0`` are dropped, and ``files`` snappy files are
+    written split at equal row counts. Returns Σcf. Sorting then summing
+    runs holds about a third of the memory of a hash aggregate followed by
+    a sort, and takes half the time (measured in CHANGES.md)."""
+    import numpy as np
     import pyarrow as pa
     import pyarrow.compute as pc
     import pyarrow.parquet as pq
@@ -218,14 +225,28 @@ def _terms_in_driver(live: str, deltas: Sequence[TermDelta], out_dir: str,
             ],
             schema=schema,
         ))
-    merged = pa.concat_tables(parts).group_by("term").aggregate(
-        [("df", "sum"), ("cf", "sum")]
-    )
-    merged = merged.filter(pc.greater(merged["df_sum"], 0)).sort_by(
-        [("term", "ascending")], null_placement="at_start"
-    )
+    rows = pa.concat_tables(parts)
+    del parts
+    rows = rows.take(pc.sort_indices(rows["term"], null_placement="at_start"))
+    term = rows["term"].combine_chunks()
+    starts = np.zeros(0, np.int64)
+    if len(term):
+        # a run starts where the term differs from the one before; the
+        # nulls (sorted first) are one run
+        new = pc.fill_null(pc.not_equal(term[1:], term[:-1]), True)
+        new = np.concatenate([[True], new.to_numpy(zero_copy_only=False)])
+        new[1:term.null_count] = False
+        starts = np.flatnonzero(new)
+    sums = [
+        np.add.reduceat(rows[c].to_numpy(), starts) if len(starts)
+        else np.zeros(0, np.int64)
+        for c in ("df", "cf")
+    ]
+    del rows
+    keep = sums[0] > 0
     table = pa.Table.from_arrays(
-        [merged["term"], merged["df_sum"], merged["cf_sum"]], schema=schema
+        [term.take(pa.array(starts[keep]))] + [s[keep] for s in sums],
+        schema=schema,
     )
     os.makedirs(out_dir)
     n = table.num_rows
@@ -244,6 +265,25 @@ def _total_cf(table) -> int:
     import pyarrow.compute as pc
 
     return int(pc.sum(table["cf"]).as_py() or 0)
+
+
+def _merge_peak_bytes(live: str, rows: int) -> int:
+    """The driver merge's estimated peak memory over ``rows`` input rows:
+    ``rows · (80 + 3·t)`` bytes, ``t`` the live ``term`` column's
+    uncompressed bytes per row in the parquet footers (no job; the live
+    terms are unique, so that is their length prefixes and UTF-8 bytes,
+    and the deltas' terms are taken to be alike). Fitted on
+    ``tools/dict_merge_envelope.py`` runs of the merge: 117 B a row at
+    9-byte terms, 162 B at 24-byte ones (5M rows); at 1M and 20M rows
+    the estimate was 0.73× and 1.26× the measured peak."""
+    size = n = 0
+    for frag in _dataset(live, "terms").get_fragments():
+        md = frag.metadata
+        col = md.schema.names.index("term")
+        for i in range(md.num_row_groups):
+            size += md.row_group(i).column(col).total_uncompressed_size
+            n += md.row_group(i).num_rows
+    return int(rows * (80 + 3 * (size / n if n else 0)))
 
 
 def _spark_terms(spark: SparkSession, live: str,
@@ -282,8 +322,9 @@ def merge_terms(
     ``atomic_write_json``, so a crash before it leaves the old dictionary
     live and the retry overwrites the uncommitted dir.
 
-    The envelope follows the row counts in the parquet footers (no job):
-    when the live rows plus the delta rows fit :data:`DRIVER_DICT_MAX`,
+    The envelope follows the parquet footers (no job): when the merge's
+    estimated peak over the live rows plus the delta rows
+    (:func:`_merge_peak_bytes`) fits :data:`DRIVER_MERGE_MAX_BYTES`,
     pyarrow merges them in the driver (:func:`_terms_in_driver`, no Spark
     job); above it Spark aggregates and range-writes them with a ``term``
     bloom filter, and the driver reads Σcf from the written ``cf``
@@ -299,7 +340,7 @@ def merge_terms(
         for d in deltas
     )
     shutil.rmtree(out_dir, ignore_errors=True)
-    if rows <= DRIVER_DICT_MAX:
+    if _merge_peak_bytes(live, rows) <= DRIVER_MERGE_MAX_BYTES:
         return ptr, _terms_in_driver(live, deltas, out_dir, files)
     (
         _spark_terms(spark, live, deltas)

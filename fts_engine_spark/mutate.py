@@ -277,7 +277,7 @@ def update_documents(
     as a list (resolved in the driver, no job) and the batch stages in the
     driver (no ``meta_cols``, no fresh sidecar); the dictionary merges in
     the driver too (``layout.merge_terms``, within
-    ``layout.DRIVER_DICT_MAX`` rows), so a small upsert runs one Spark
+    ``layout.DRIVER_MERGE_MAX_BYTES`` of estimated memory), so a small upsert runs one Spark
     job, the collect. A larger batch deletes by a join and stages through
     the Spark staged build.
     """

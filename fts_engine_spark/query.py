@@ -54,7 +54,7 @@ from .codec import (
     varbyte_decode,
     varbyte_decode_binary,
 )
-from .layout import DRIVER_DICT_MAX, read_table
+from .layout import read_table
 from .textproc.gocompat import go_lower
 from .textproc.pipeline import get_pipeline
 
@@ -545,7 +545,7 @@ class FtsIndex:
 
     def warm(
         self,
-        driver_dict_max: int = DRIVER_DICT_MAX,
+        driver_dict_max: int = 5_000_000,
         driver_dict_max_bytes: int = 256 << 20,
         serving_conf: bool = True,
     ) -> "FtsIndex":

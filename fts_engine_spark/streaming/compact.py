@@ -250,8 +250,8 @@ def compact_index(
     Under tombstones the dictionary is corrected by
     :func:`..layout.merge_terms` from the old tail (sign −1) and the
     re-encoded tail (+1) posting rows at ``shard_id >= P`` — in the
-    driver (no Spark job) within ``layout.DRIVER_DICT_MAX`` rows, else on
-    Spark — and avgdl is re-derived from the Σcf the merge returns, so no
+    driver (no Spark job) within ``layout.DRIVER_MERGE_MAX_BYTES`` of
+    estimated memory, else on Spark — and avgdl is re-derived from the Σcf the merge returns, so no
     job re-reads the written dictionary."""
     cfg = cfg or BuildConfig()
     meta_path = os.path.join(index_dir, "meta.json")

@@ -173,8 +173,9 @@ def _append_batch(
     Only the term dictionary is re-written: the staged build writes none,
     and :func:`..layout.merge_terms` folds the staged postings'
     ``count``/``tf_sum`` into the live one before they move — in the
-    driver with pyarrow (no Spark job) while the live and staged rows fit
-    ``layout.DRIVER_DICT_MAX``, else on Spark. The batch's avgdl comes
+    driver with pyarrow (no Spark job) while its estimated memory over the
+    live and staged rows fits ``layout.DRIVER_MERGE_MAX_BYTES``, else on
+    Spark. The batch's avgdl comes
     from the staged build's Σdoclen; every read pins its schema (no
     inference). A driver-staged batch therefore runs one Spark job, the
     collect.

@@ -4,7 +4,7 @@ through the Spark staged build. Both must leave identical indexes. The
 same holds for the delete (a url list resolves in the driver,
 ``mutate._tombstones_in_driver``; a DataFrame of urls on Spark) and for
 the dictionary merge (``layout.merge_terms``: in the driver within
-``layout.DRIVER_DICT_MAX`` rows, else on Spark)."""
+``layout.DRIVER_MERGE_MAX_BYTES`` of estimated memory, else on Spark)."""
 
 from __future__ import annotations
 
@@ -164,10 +164,10 @@ def test_lifecycle_is_identical_through_both_envelopes(
 
 
 def _force_dictionary(monkeypatch, envelope: str) -> None:
-    """Dictionaries merge in the driver until forced to Spark: a 0-row
+    """Dictionaries merge in the driver until forced to Spark: a 0-byte
     budget sends every merge to the Spark envelope."""
     if envelope == "spark":
-        monkeypatch.setattr(layout, "DRIVER_DICT_MAX", 0)
+        monkeypatch.setattr(layout, "DRIVER_MERGE_MAX_BYTES", 0)
 
 
 def _terms_in_file_order(index_dir: str) -> list:
@@ -288,6 +288,45 @@ def test_driver_dictionary_bytes_are_deterministic(
             spark.sparkContext.emptyRDD()
         op(b)
         assert _terms_bytes(a) == _terms_bytes(b)
+
+
+def test_dictionary_envelope_follows_term_bytes(spark, tmp_path, monkeypatch):
+    """The envelope rule weighs rows by their term bytes: two dictionaries
+    of equal row count, one of 6-byte terms and one of 400-byte terms,
+    with a budget between their estimates. The short one merges in the
+    driver, the long one on Spark (its ``_SUCCESS`` marker), and both
+    write their rows plus the delta's, summed by term."""
+    import pyarrow as pa
+
+    monkeypatch.setattr(layout, "DRIVER_MERGE_MAX_BYTES", 100_000)
+    written = {}
+    for pad in (0, 394):
+        index_dir = str(tmp_path / f"pad{pad}")
+        terms = [f"t{i:05d}" + "x" * pad for i in range(200)]
+        for name, rows in (("terms", terms), ("delta", terms[:50])):
+            os.makedirs(os.path.join(index_dir, name))
+            pq.write_table(
+                pa.table({"term": rows, "df": [1] * len(rows),
+                          "cf": [2] * len(rows)}),
+                os.path.join(index_dir, name, "part-0.parquet"),
+            )
+        live = os.path.join(index_dir, "terms")
+        assert (layout._merge_peak_bytes(live, 250) <= 100_000) == (pad == 0)
+        ptr, total_cf = layout.merge_terms(
+            spark, index_dir, {},
+            [layout.TermDelta(os.path.join(index_dir, "delta"), "terms")],
+            1 << 10,
+        )
+        out = os.path.join(index_dir, ptr["terms_dir"])
+        assert os.path.exists(os.path.join(out, "_SUCCESS")) == (pad > 0)
+        assert total_cf == 500
+        written[pad] = [
+            (r["term"][:6], r["df"], r["cf"])
+            for r in layout._dataset(out, "terms").to_table().to_pylist()
+        ]
+    expected = [(t[:6], 2 if i < 50 else 1, 4 if i < 50 else 2)
+                for i, t in enumerate(terms)]
+    assert written[0] == written[394] == expected
 
 
 def _delete_urls(spark, envelope: str, urls: list):

@@ -650,8 +650,10 @@ def test_update_documents_splices_without_spark_jobs(
     monkeypatch.setattr(incremental, "_stage_batch", stage_then_merge)
     monkeypatch.setattr(incremental, "merge_terms", merge_then_splice)
     tracker = sc.statusTracker()
-    for budget, merge_jobs in ((layout.DRIVER_DICT_MAX, False), (0, True)):
-        monkeypatch.setattr(layout, "DRIVER_DICT_MAX", budget)
+    for budget, merge_jobs in (
+        (layout.DRIVER_MERGE_MAX_BYTES, False), (0, True)
+    ):
+        monkeypatch.setattr(layout, "DRIVER_MERGE_MAX_BYTES", budget)
         with open(os.path.join(index_dir, "meta.json")) as f:
             n_before = json.load(f)["n_docs"]
         try:
@@ -661,6 +663,9 @@ def test_update_documents_splices_without_spark_jobs(
         assert bool(tracker.getJobIdsForGroup(f"{group}-dict")) == merge_jobs
         assert list(tracker.getJobIdsForGroup(group)) == []
         assert out["meta"]["n_docs"] == n_before + 80
+        # replaced counts every doc of the batch's urls, newly or already
+        # tombstoned: the 60-doc base first, then it and the first 80
+        assert out["replaced"] == (60 if budget else 140)
 
 
 def test_small_batch_stages_in_one_spark_job(
@@ -682,7 +687,9 @@ def test_small_batch_stages_in_one_spark_job(
     sc = spark.sparkContext
     tracker = sc.statusTracker()
     real_merge = incremental.merge_terms
-    for budget, merge_jobs in ((layout.DRIVER_DICT_MAX, False), (0, True)):
+    for budget, merge_jobs in (
+        (layout.DRIVER_MERGE_MAX_BYTES, False), (0, True)
+    ):
         index_dir = str(tmp_path / f"ix{budget}")
         build_index(spark, docs.limit(60), index_dir, cfg, resume=False)
         group = f"stage-{budget}-{id(tmp_path)}"
@@ -692,7 +699,7 @@ def test_small_batch_stages_in_one_spark_job(
             return real_merge(*a, **kw)
 
         monkeypatch.setattr(incremental, "merge_terms", leave_group_then_merge)
-        monkeypatch.setattr(layout, "DRIVER_DICT_MAX", budget)
+        monkeypatch.setattr(layout, "DRIVER_MERGE_MAX_BYTES", budget)
         sc.setJobGroup(group, "stage")
         try:
             # the whole 120-doc corpus: one parquet file, one input partition
