@@ -237,7 +237,7 @@ def _ensure_incremental_index(spark: SparkSession, sf_dir: str) -> str:
     under the same DuckDB hash gate as the batch build. The split is
     deterministic on the source doc_id (6/2/2 by ``doc_id % 10``);
     BM25 over the union corpus is split-invariant (term/df/dl exact;
-    avgdl is an exactly-weighted running mean). The bootstrap builds
+    avgdl is the dictionary's Σcf over n_docs). The bootstrap builds
     stored+positional sidecars, so the appends EXTEND them and the
     compaction REBUILDS them (r5-cont maintenance) — fts_incremental_phrase
     then puts the whole sidecar mutation lifecycle under the same gate."""

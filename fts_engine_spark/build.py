@@ -50,7 +50,8 @@ from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from .codec import SKIP_BLOCK
 from .checkpoint import Manifest, atomic_write_json
-from .layout import POSTINGS_SCHEMA, read_table
+from .layout import POSTINGS_SCHEMA, TermDelta, avgdl, read_table
+from .layout import terms_cf, write_terms
 from .functions.udfs import (
     make_term_tf_by_lang_udf,
     make_term_tf_udf,
@@ -109,6 +110,13 @@ class BuildConfig:
     # (deterministic; for a recrawl timestamp that is "latest wins")
     meta_cols: tuple = ()
     extra: dict = field(default_factory=dict)
+
+
+def meta_bloom_ndv(meta: dict) -> int:
+    """The ``bloom_ndv`` an index's postings and positions were written
+    with; a meta written before it was recorded gets
+    :class:`BuildConfig`'s default."""
+    return int(meta.get("bloom_ndv", BuildConfig.bloom_ndv))
 
 
 def _term_tf_col(cfg: BuildConfig):
@@ -612,10 +620,16 @@ def build_index(
     so an incremental append stages its delta at its final ids and moves
     the written files into place instead of re-writing them shifted. Every
     table holds absolute ids; ``n_shards`` in the returned meta stays the
-    number of shards built. A staged build writes no term dictionary: the
-    append merges the staged postings' df/cf into the live dictionary
-    directly (``layout.merge_terms``). An append whose batch
-    fits one tokenize task stages through :func:`stage_in_driver` instead.
+    number of shards built. A staged build writes no term dictionary and
+    no avgdl: the append merges the staged postings' df/cf into the live
+    dictionary directly (``layout.merge_terms``) and takes avgdl from the
+    merged Σcf. An append whose batch fits one tokenize task stages
+    through :func:`stage_in_driver` instead.
+
+    A full build writes its dictionary with ``layout.write_terms`` from
+    the postings (in the driver within ``layout.DRIVER_MERGE_MAX_BYTES``
+    of estimated memory, else on Spark), and its avgdl is that
+    dictionary's Σcf over ``n_docs`` (``layout.avgdl``).
     """
     cfg = cfg or BuildConfig()
     os.makedirs(index_dir, exist_ok=True)
@@ -687,11 +701,11 @@ def build_index(
         docs_table = docs_table.join(meta_df, "url", "left").select(
             "doc_id", "url", "url_md5", "lang", "doclen", *meta_cols
         )
-    docs_path = os.path.join(index_dir, "docs")
     t_phase = time.monotonic()
-    docs_written = not (resume and manifest.is_done("docs"))
-    if docs_written:
-        docs_table.write.mode("overwrite").parquet(docs_path)
+    if not (resume and manifest.is_done("docs")):
+        docs_table.write.mode("overwrite").parquet(
+            os.path.join(index_dir, "docs")
+        )
         manifest.mark_done("docs", {"n_docs": n_docs})
     t_phase = log.lap("docs_write", t_phase)
 
@@ -764,32 +778,23 @@ def build_index(
         manifest.mark_done("stored", {"n_docs": n_docs})
         t_phase = log.lap("stored", t_phase)
 
-    # ---- global term stats (df/cf) merged across shards; a staged build
-    # skips it (its delta's df/cf are merged from the staged postings)
-    terms_path = os.path.join(index_dir, "terms")
-    if _first_shard is None and not (resume and manifest.is_done("terms")):
-        postings_all = read_table(spark, postings_path, "postings")
-        # df/cf merge across shard-partial indexes — the "merge partial
-        # segment indexes into a global index" step, over the (small)
-        # postings table instead of the raw token stream.
-        terms = postings_all.groupBy("term").agg(
-            F.sum("count").cast("long").alias("df"),
-            F.sum("tf_sum").cast("long").alias("cf"),
-        )
-        # range-bucketed dictionary: each bucket is a term range sorted
-        # within, so a point lookup prunes to one file via min/max stats
-        # (plus the bloom filter below). No single-task repartition(1) —
-        # the dictionary write scales with the vocabulary.
-        dict_buckets = max(1, spark.sparkContext.defaultParallelism // 2)
-        (
-            terms.repartitionByRange(dict_buckets, "term")
-            .sortWithinPartitions("term")
-            .write.mode("overwrite")
-            .option("parquet.bloom.filter.enabled#term", "true")
-            .option("parquet.bloom.filter.expected.ndv#term", str(cfg.bloom_ndv))
-            .parquet(terms_path)
-        )
-        manifest.mark_done("terms", {})
+    # ---- global term stats (df/cf) merged across shards — the "merge
+    # partial segment indexes into a global index" step, over the postings
+    # table instead of the raw token stream, by the one dictionary writer
+    # (layout.write_terms). Its Σcf is avgdl's numerator; a resumed build
+    # whose dictionary is written reads Σcf back. A staged build writes
+    # none: the append merges the staged postings into the live one.
+    total_cf = None
+    if _first_shard is None:
+        terms_path = os.path.join(index_dir, "terms")
+        if resume and manifest.is_done("terms"):
+            total_cf = terms_cf(terms_path)
+        else:
+            total_cf = write_terms(
+                spark, terms_path, None,
+                [TermDelta(postings_path, "postings")],
+            )
+            manifest.mark_done("terms", {})
     t_phase = log.lap("terms", t_phase)
 
     # ---- per-shard metrics (lineage: reference Analyze, stats.go:3-11)
@@ -814,13 +819,6 @@ def build_index(
         return meta
 
     t_phase = log.lap("metrics", t_phase)
-    # avgdl = total tokens / docs: Σdoclen over the cached base, which
-    # equals Σcf of the dictionary exactly (a staged build has none). A
-    # resumed build that skipped the docs write has no cached base and
-    # sums the written docs table instead of re-tokenizing.
-    lens = base if docs_written else read_table(spark, docs_path, "docs")
-    total_tokens = lens.agg(F.sum("doclen")).first()[0]
-    avgdl = float(total_tokens or 0) / max(1, n_docs)
     log.total()
     import uuid
 
@@ -832,7 +830,6 @@ def build_index(
         # cache's tag (layout.gate_tag)
         "build_id": uuid.uuid4().hex,
         "n_docs": n_docs,
-        "avgdl": float(avgdl),
         "shard_size": cfg.shard_size,
         "n_shards": n_shards,
         "skip_block": cfg.skip_block,
@@ -849,6 +846,8 @@ def build_index(
         "build_seconds": time.monotonic() - log.t_start,
         "build_phases": log.phases,
     }
+    if total_cf is not None:
+        meta["avgdl"] = avgdl(total_cf, n_docs)
     if cfg.store_positions:
         # snapshot identity for the positional table: phrase-from-positions
         # refuses to serve when the index has grown past it (positions.py)
@@ -897,8 +896,8 @@ def stage_in_driver(
     ``count``/``tf_sum`` into the live one (``layout.merge_terms``, in
     the driver too within ``layout.DRIVER_MERGE_MAX_BYTES``), so the
     staged files are the only input that merge reads. Returns the staged
-    meta fields the append reads (``n_docs``, ``n_shards``, ``avgdl``)
-    and ``build_phases``.
+    meta fields the append reads (``n_docs``, ``n_shards``) and
+    ``build_phases``.
     """
     import hashlib
 
@@ -1015,6 +1014,5 @@ def stage_in_driver(
     return {
         "n_docs": n_docs,
         "n_shards": n_shards,
-        "avgdl": float(int(doclen.sum())) / max(1, n_docs),
         "build_phases": log.phases,
     }

@@ -22,11 +22,13 @@ with the table's known schema, so Spark runs no schema-inference job
 bulk of the fixed cost of a small upsert or compaction). Reads of user
 input keep inference.
 
-:func:`merge_terms` is the one writer of a merged term dictionary
-(upsert, compaction under tombstones, index merge): the live terms table
-plus signed per-term ``(df, cf)`` deltas, merged in the driver with
-pyarrow when its estimated peak memory fits :data:`DRIVER_MERGE_MAX_BYTES`,
-else on Spark.
+:func:`write_terms` is the one writer of a term dictionary: the batch
+build's (from its postings) and, through :func:`merge_terms`, every merged
+one (upsert, compaction under tombstones, index merge): an optional live
+terms table plus signed per-term ``(df, cf)`` deltas, merged in the driver
+with pyarrow when its estimated peak memory fits
+:data:`DRIVER_MERGE_MAX_BYTES`, else on Spark. Its Σcf is every write's
+avgdl numerator (:func:`avgdl`).
 """
 
 from __future__ import annotations
@@ -197,11 +199,11 @@ def _delta_cols(d: TermDelta) -> tuple[str, str]:
     return ("count", "tf_sum") if d.table == "postings" else ("df", "cf")
 
 
-def _terms_in_driver(live: str, deltas: Sequence[TermDelta], out_dir: str,
+def _terms_in_driver(inputs: Sequence[TermDelta], out_dir: str,
                      files: int) -> int:
-    """The driver envelope of :func:`merge_terms`: pyarrow sorts the live
-    and signed delta rows by term (byte order of the UTF-8, as Spark
-    sorts strings; nulls first), numpy sums each run of equal terms, terms
+    """The driver envelope of :func:`write_terms`: pyarrow sorts the
+    signed input rows by term (byte order of the UTF-8, as Spark sorts
+    strings; nulls first), numpy sums each run of equal terms, terms
     left at ``df <= 0`` are dropped, and ``files`` snappy files are
     written split at equal row counts. Returns Σcf. Sorting then summing
     runs holds about a third of the memory of a hash aggregate followed by
@@ -210,11 +212,11 @@ def _terms_in_driver(live: str, deltas: Sequence[TermDelta], out_dir: str,
     import pyarrow as pa
     import pyarrow.compute as pc
     import pyarrow.parquet as pq
+    from pyspark.sql.pandas.types import to_arrow_schema
 
-    live_rows = _dataset(live, "terms")
-    schema = live_rows.schema
-    parts = [live_rows.to_table(columns=["term", "df", "cf"])]
-    for d in deltas:
+    schema = to_arrow_schema(TABLE_SCHEMAS["terms"])
+    parts = []
+    for d in inputs:
         df, cf = _delta_cols(d)
         t = _dataset(d.path, d.table).to_table(
             columns=["term", df, cf], filter=_delta_filter(d)
@@ -258,50 +260,59 @@ def _terms_in_driver(live: str, deltas: Sequence[TermDelta], out_dir: str,
             os.path.join(out_dir, f"part-{i:05d}.parquet"),
             compression="snappy",
         )
-    return _total_cf(table)
+    return int(sums[1][keep].sum())
 
 
-def _total_cf(table) -> int:
+def terms_cf(path: str) -> int:
+    """Σcf of the terms table at ``path``, read from its ``cf`` column
+    with pyarrow (no job)."""
     import pyarrow.compute as pc
 
-    return int(pc.sum(table["cf"]).as_py() or 0)
+    cf = _dataset(path, "terms").to_table(columns=["cf"])["cf"]
+    return int(pc.sum(cf).as_py() or 0)
 
 
-def _merge_peak_bytes(live: str, rows: int) -> int:
+def avgdl(total_cf: int, n_docs: int) -> float:
+    """The one avgdl rule of every write: the dictionary's Σcf (the
+    index's token count) over ``n_docs``."""
+    return float(total_cf) / max(1, n_docs)
+
+
+def _merge_peak_bytes(inputs: Sequence[TermDelta], rows: int) -> int:
     """The driver merge's estimated peak memory over ``rows`` input rows:
-    ``rows · (80 + 3·t)`` bytes, ``t`` the live ``term`` column's
-    uncompressed bytes per row in the parquet footers (no job; the live
-    terms are unique, so that is their length prefixes and UTF-8 bytes,
-    and the deltas' terms are taken to be alike). Fitted on
-    ``tools/dict_merge_envelope.py`` runs of the merge: 117 B a row at
-    9-byte terms, 162 B at 24-byte ones (5M rows); at 1M and 20M rows
-    the estimate was 0.73× and 1.26× the measured peak."""
+    ``rows · (80 + 3·t)`` bytes, ``t`` the inputs' ``term`` column
+    uncompressed bytes per row in their parquet footers (no job; within a
+    file each term is one row, so that is about their length prefixes
+    and UTF-8 bytes). Fitted on ``tools/dict_merge_envelope.py`` runs of
+    the merge: 117 B a row at 9-byte terms, 162 B at 24-byte ones (5M
+    rows); at 1M and 20M rows the estimate was 0.73× and 1.26× the
+    measured peak."""
     size = n = 0
-    for frag in _dataset(live, "terms").get_fragments():
-        md = frag.metadata
-        col = md.schema.names.index("term")
-        for i in range(md.num_row_groups):
-            size += md.row_group(i).column(col).total_uncompressed_size
-            n += md.row_group(i).num_rows
+    for d in inputs:
+        for frag in _dataset(d.path, d.table).get_fragments():
+            md = frag.metadata
+            col = md.schema.names.index("term")
+            for i in range(md.num_row_groups):
+                size += md.row_group(i).column(col).total_uncompressed_size
+                n += md.row_group(i).num_rows
     return int(rows * (80 + 3 * (size / n if n else 0)))
 
 
-def _spark_terms(spark: SparkSession, live: str,
-                 deltas: Sequence[TermDelta]) -> DataFrame:
+def _spark_terms(spark: SparkSession,
+                 inputs: Sequence[TermDelta]) -> DataFrame:
     """The Spark envelope's merged dictionary: one JVM aggregate over the
-    live rows and the signed delta rows, terms left at ``df <= 0``
-    dropped (no Python stage)."""
-    merged = read_table(spark, live, "terms").select("term", "df", "cf")
-    for d in deltas:
+    signed input rows, terms left at ``df <= 0`` dropped (no Python
+    stage)."""
+    merged = None
+    for d in inputs:
         rows = read_table(spark, d.path, d.table)
         if d.min_shard is not None:
             rows = rows.where(F.col("shard_id") >= d.min_shard)
-        df, cf = _delta_cols(d)
-        merged = merged.unionByName(rows.select(
-            "term",
-            (F.col(df).cast("long") * d.sign).alias("df"),
-            (F.col(cf).cast("long") * d.sign).alias("cf"),
-        ))
+        rows = rows.select("term", *[
+            (F.col(c).cast("long") * d.sign).alias(name)
+            for c, name in zip(_delta_cols(d), ("df", "cf"))
+        ])
+        merged = rows if merged is None else merged.unionByName(rows)
     return (
         merged.groupBy("term")
         .agg(F.sum("df").alias("df"), F.sum("cf").alias("cf"))
@@ -309,46 +320,55 @@ def _spark_terms(spark: SparkSession, live: str,
     )
 
 
+def write_terms(spark: SparkSession, out_dir: str, live: str | None,
+                deltas: Sequence[TermDelta]) -> int:
+    """Write the terms table ``live`` (None: no live table) plus
+    ``deltas``, summed by term, to ``out_dir``, replacing whatever is
+    there. Returns Σcf, the numerator of :func:`avgdl`. Every term
+    dictionary is written here: the batch build's (no live table, its
+    postings as the one delta) and every merge (:func:`merge_terms`).
+
+    The envelope follows the parquet footers (no job): when the merge's
+    estimated peak over the input rows (:func:`_merge_peak_bytes`) fits
+    :data:`DRIVER_MERGE_MAX_BYTES`, pyarrow merges them in the driver
+    (:func:`_terms_in_driver`, no Spark job); above it Spark aggregates
+    and range-writes them, and the driver reads Σcf from the written
+    ``cf`` column. Both write the same rows, sorted by term over
+    ``defaultParallelism // 2`` files. Neither writes a bloom filter: the
+    sorted files' min/max stats and the parquet dictionary-page filter
+    prune a lookup, and warm handles read the table whole."""
+    # the live table is one more input, of sign +1
+    inputs = ([TermDelta(live, "terms")] if live else []) + list(deltas)
+    files = max(1, spark.sparkContext.defaultParallelism // 2)
+    rows = sum(
+        _dataset(d.path, d.table).count_rows(filter=_delta_filter(d))
+        for d in inputs
+    )
+    shutil.rmtree(out_dir, ignore_errors=True)
+    if _merge_peak_bytes(inputs, rows) <= DRIVER_MERGE_MAX_BYTES:
+        return _terms_in_driver(inputs, out_dir, files)
+    (
+        _spark_terms(spark, inputs)
+        .repartitionByRange(files, "term")
+        .sortWithinPartitions("term")
+        .write.mode("overwrite")
+        .parquet(out_dir)
+    )
+    return terms_cf(out_dir)
+
+
 def merge_terms(
     spark: SparkSession,
     index_dir: str,
     meta: dict,
     deltas: Sequence[TermDelta],
-    bloom_ndv: int,
 ) -> tuple[dict, int]:
     """Write the live term dictionary plus ``deltas`` into the next
-    versioned ``terms_vN`` dir. Returns ``(pointer_update, Σcf)``; the
-    caller merges the pointer into meta in its single committing
-    ``atomic_write_json``, so a crash before it leaves the old dictionary
-    live and the retry overwrites the uncommitted dir.
-
-    The envelope follows the parquet footers (no job): when the merge's
-    estimated peak over the live rows plus the delta rows
-    (:func:`_merge_peak_bytes`) fits :data:`DRIVER_MERGE_MAX_BYTES`,
-    pyarrow merges them in the driver (:func:`_terms_in_driver`, no Spark
-    job); above it Spark aggregates and range-writes them with a ``term``
-    bloom filter, and the driver reads Σcf from the written ``cf``
-    column. Both write the same rows, sorted by term over
-    ``defaultParallelism // 2`` files. pyarrow writes no bloom filter:
-    the driver's dictionary is pruned by its sorted files' min/max stats,
-    and warm handles read it whole."""
-    live = table_path(index_dir, meta, "terms")
+    versioned ``terms_vN`` dir (:func:`write_terms`). Returns
+    ``(pointer_update, Σcf)``; the caller merges the pointer into meta in
+    its single committing ``atomic_write_json``, so a crash before it
+    leaves the old dictionary live and the retry overwrites the
+    uncommitted dir."""
     out_dir, _, ptr = next_version_dir(index_dir, meta, "terms")
-    files = max(1, spark.sparkContext.defaultParallelism // 2)
-    rows = _dataset(live, "terms").count_rows() + sum(
-        _dataset(d.path, d.table).count_rows(filter=_delta_filter(d))
-        for d in deltas
-    )
-    shutil.rmtree(out_dir, ignore_errors=True)
-    if _merge_peak_bytes(live, rows) <= DRIVER_MERGE_MAX_BYTES:
-        return ptr, _terms_in_driver(live, deltas, out_dir, files)
-    (
-        _spark_terms(spark, live, deltas)
-        .repartitionByRange(files, "term")
-        .sortWithinPartitions("term")
-        .write.mode("overwrite")
-        .option("parquet.bloom.filter.enabled#term", "true")
-        .option("parquet.bloom.filter.expected.ndv#term", str(bloom_ndv))
-        .parquet(out_dir)
-    )
-    return ptr, _total_cf(_dataset(out_dir, "terms").to_table(columns=["cf"]))
+    live = table_path(index_dir, meta, "terms")
+    return ptr, write_terms(spark, out_dir, live, deltas)

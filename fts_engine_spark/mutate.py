@@ -50,6 +50,7 @@ from .checkpoint import Manifest, atomic_write_json
 from .layout import (
     TABLE_SCHEMAS,
     TermDelta,
+    avgdl,
     merge_terms,
     next_version_dir,
     read_table,
@@ -80,7 +81,8 @@ def delete_documents(
     tombstoned nothing is written and the version does not move.
 
     Returns ``{"matched": docs newly+already tombstoned in this url set,
-    "n_deleted": total live tombstones, "meta": committed meta}``.
+    "n_new": docs newly tombstoned, "n_deleted": total live tombstones,
+    "meta": committed meta}``.
 
     Job count: a list resolves in the driver
     (:func:`_tombstones_in_driver`: a pyarrow scan of the docs table's
@@ -125,6 +127,7 @@ def delete_documents(
         # table that every relational plan would anti-join forever.
         return {
             "matched": n_matched,
+            "n_new": 0,
             "n_deleted": int(meta.get("n_deleted", 0)),
             "meta": meta,
         }
@@ -157,7 +160,8 @@ def delete_documents(
     )
     if old_dir and os.path.abspath(old_dir) != os.path.abspath(new_dir):
         shutil.rmtree(old_dir, ignore_errors=True)
-    return {"matched": n_matched, "n_deleted": n_total, "meta": meta}
+    return {"matched": n_matched, "n_new": n_new, "n_deleted": n_total,
+            "meta": meta}
 
 
 def _tombstones_on_spark(
@@ -271,14 +275,16 @@ def update_documents(
     the index is hash-identical to a fresh build of the updated corpus
     (tests/test_update.py). ``docs``: (url, text, lang) like every build
     entry point; cost O(updates), never touching unrelated postings.
+    ``replaced`` counts the docs this upsert tombstoned; docs of its urls
+    that an earlier upsert already tombstoned are not counted again.
 
     Job count: one bounded collect (``incremental._batch_head``) serves
     both halves. When it holds the whole batch, its urls go to the delete
     as a list (resolved in the driver, no job) and the batch stages in the
     driver (no ``meta_cols``, no fresh sidecar); the dictionary merges in
     the driver too (``layout.merge_terms``, within
-    ``layout.DRIVER_MERGE_MAX_BYTES`` of estimated memory), so a small upsert runs one Spark
-    job, the collect. A larger batch deletes by a join and stages through
+    ``layout.DRIVER_MERGE_MAX_BYTES`` of estimated memory), so a small
+    upsert runs one Spark job, the collect. A larger batch deletes by a join and stages through
     the Spark staged build.
     """
     from .build import BuildConfig
@@ -296,7 +302,7 @@ def update_documents(
     with open(os.path.join(index_dir, "meta.json")) as f:
         meta = json.load(f)
     return {
-        "replaced": deleted["matched"],
+        "replaced": deleted["n_new"],
         "n_deleted": int(meta.get("n_deleted", 0)),
         "meta": meta,
     }
@@ -319,7 +325,8 @@ def merge_indexes(
     store shard-relative deltas) and only the absolute ``skip_last_doc``
     arrays shift, a pure JVM ``transform`` over the src postings scan.
     Dictionaries delta-merge (df/cf add), docs/metrics splice in with
-    shifted ids, avgdl is the exactly-weighted mean, and src tombstones
+    shifted ids, avgdl is the merged dictionary's Σcf over the summed
+    n_docs (``layout.avgdl``), and src tombstones
     (pending deletes) carry over at their shifted ids. Cost is O(src),
     independent of dst's size.
 
@@ -350,7 +357,7 @@ def merge_indexes(
         dst = json.load(f)
     with open(os.path.join(src_dir, "meta.json")) as f:
         src = json.load(f)
-    from .build import META_VERSION
+    from .build import META_VERSION, meta_bloom_ndv
 
     for name, m in (("dst", dst), ("src", src)):
         if int(m.get("version", -1)) != META_VERSION:
@@ -480,10 +487,9 @@ def merge_indexes(
     # dictionary delta-merge (df/cf add), atomic via versioned dir +
     # pointer flip
     old_terms = table_path(dst_dir, dst, "terms")
-    terms_ptr, _ = merge_terms(
+    terms_ptr, total_cf = merge_terms(
         spark, dst_dir, dst,
         [TermDelta(table_path(src_dir, src, "terms"), "terms")],
-        int(dst.get("bloom_ndv", 1 << 16)),
     )
 
     # pending deletes on either side survive the merge at shifted ids
@@ -528,7 +534,7 @@ def merge_indexes(
             .option("parquet.bloom.filter.enabled#term", "true")
             .option(
                 "parquet.bloom.filter.expected.ndv#term",
-                str(dst.get("bloom_ndv", 1 << 16)),
+                str(meta_bloom_ndv(dst)),
             )
             .parquet(dst_positions)
         )
@@ -545,9 +551,7 @@ def merge_indexes(
 
     n_total = int(dst["n_docs"]) + int(src["n_docs"])
     meta = dict(dst)
-    meta["avgdl"] = (
-        dst["avgdl"] * dst["n_docs"] + src["avgdl"] * src["n_docs"]
-    ) / max(1, n_total)
+    meta["avgdl"] = avgdl(total_cf, n_total)
     meta["n_docs"] = n_total
     meta["n_shards"] = next_shard + int(src["n_shards"])
     meta["n_deleted"] = n_deleted

@@ -68,7 +68,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession, functions as F
 from pyspark.sql import types as T
 
-from .build import salt_policy
+from .build import meta_bloom_ndv, salt_policy
 from .codec import varbyte_decode, varbyte_encode
 from .layout import read_table
 
@@ -371,7 +371,7 @@ def add_positions_to_index(
         index_dir,
         meta["preset"],
         int(meta["shard_size"]),
-        int(meta.get("bloom_ndv", 1 << 16)),
+        meta_bloom_ndv(meta),
         n_shards=-(-int(meta["n_docs"]) // int(meta["shard_size"])),
     )
     commit_sidecar_meta(index_dir, meta, "positions", 1)

@@ -47,12 +47,14 @@ from ..build import (
     BuildConfig,
     _i64,
     _make_list_encoder,
+    meta_bloom_ndv,
     salt_policy,
 )
 from ..checkpoint import Manifest, atomic_write_json
 from ..codec import decode_doc_blobs, varbyte_decode_binary
 from ..layout import (
     TermDelta,
+    avgdl,
     merge_terms,
     next_version_dir,
     read_table,
@@ -251,8 +253,9 @@ def compact_index(
     :func:`..layout.merge_terms` from the old tail (sign −1) and the
     re-encoded tail (+1) posting rows at ``shard_id >= P`` — in the
     driver (no Spark job) within ``layout.DRIVER_MERGE_MAX_BYTES`` of
-    estimated memory, else on Spark — and avgdl is re-derived from the Σcf the merge returns, so no
-    job re-reads the written dictionary."""
+    estimated memory, else on Spark — and avgdl is re-derived from the
+    Σcf the merge returns (``layout.avgdl``), so no job re-reads the
+    written dictionary."""
     cfg = cfg or BuildConfig()
     meta_path = os.path.join(index_dir, "meta.json")
     with open(meta_path) as f:
@@ -499,7 +502,7 @@ def compact_index(
     # Σcount/Σtf_sum plus the re-encoded tail's (live postings re-encode
     # unchanged, so the difference is the dead docs'; no blob is decoded a
     # second time; terms left at df 0 drop) — then re-derive avgdl the way
-    # the batch build derives it (Σcf/n_docs, Σcf from the merge), so a
+    # every write derives it (Σcf/n_docs, Σcf from the merge), so a
     # compacted index's scores are hash-identical to a fresh build of the
     # surviving corpus (tests/test_delete.py).
     pointer_updates = {**post_ptr, **docs_ptr, **metr_ptr}
@@ -512,15 +515,14 @@ def compact_index(
     )
     if have_dead:
         terms_path = table_path(index_dir, meta, "terms")
-        terms_ptr, total_tokens = merge_terms(
+        terms_ptr, total_cf = merge_terms(
             spark, index_dir, meta,
             [TermDelta(postings_path, "postings", -1, P),
              TermDelta(new_postings, "postings", 1, P)],
-            bloom_ndv,
         )
         pointer_updates.update(terms_ptr)
         meta_updates["n_docs"] = n_live
-        meta_updates["avgdl"] = float(total_tokens) / max(1, n_live)
+        meta_updates["avgdl"] = avgdl(total_cf, n_live)
         meta_updates["n_deleted"] = 0
         drop_keys.append("tombstones_dir")
         if remove_old:
@@ -644,7 +646,7 @@ def _rebuild_sidecars(
             index_dir,
             committed["preset"],
             int(committed["shard_size"]),
-            int(committed.get("bloom_ndv", 1 << 16)),
+            meta_bloom_ndv(committed),
             n_shards=-(
                 -int(committed["n_docs"]) // int(committed["shard_size"])
             ),

@@ -32,7 +32,7 @@ from ..build import (
     stage_in_driver,
 )
 from ..checkpoint import Manifest, atomic_write_json
-from ..layout import TermDelta, merge_terms, table_path
+from ..layout import TermDelta, avgdl, merge_terms, table_path
 
 PAGES_SCHEMA = (
     "url string, warc_ts timestamp, html binary, text string, lang string"
@@ -144,7 +144,7 @@ def _stage_batch(
     """Stage the batch at its final ids under ``staging``: in the driver
     when ``head`` holds the whole batch (:func:`..build.stage_in_driver`),
     else through the Spark staged build. Both write the same layout and
-    return the staged ``n_docs`` / ``n_shards`` / ``avgdl``."""
+    return the staged ``n_docs`` / ``n_shards``."""
     if head is not None:
         return stage_in_driver(head, staging, cfg, first_shard)
     return build_index(
@@ -175,10 +175,10 @@ def _append_batch(
     ``count``/``tf_sum`` into the live one before they move — in the
     driver with pyarrow (no Spark job) while its estimated memory over the
     live and staged rows fits ``layout.DRIVER_MERGE_MAX_BYTES``, else on
-    Spark. The batch's avgdl comes
-    from the staged build's Σdoclen; every read pins its schema (no
-    inference). A driver-staged batch therefore runs one Spark job, the
-    collect.
+    Spark. avgdl is the merged dictionary's Σcf over the new n_docs
+    (``layout.avgdl``), so the staging computes none; every read pins its
+    schema (no inference). A driver-staged batch therefore runs one Spark
+    job, the collect.
 
     Two staging envelopes, one kernel (:func:`_stage_batch`). The append
     first collects at most ``_DRIVER_STAGE_MAX_DOCS + 1`` batch rows in
@@ -340,10 +340,9 @@ def _append_batch(
     # runs before they move; its versioned dir is uncommitted until the
     # meta write
     old_terms = table_path(index_dir, meta, "terms")
-    terms_ptr, _ = merge_terms(
+    terms_ptr, total_cf = merge_terms(
         spark, index_dir, meta,
         [TermDelta(os.path.join(staging, "postings"), "postings")],
-        stage_cfg.bloom_ndv,
     )
 
     # splice: the staged tables already carry their final shard and doc
@@ -366,12 +365,8 @@ def _append_batch(
             _move_in_tagged(os.path.join(staging, src), dst, tag)
 
     n_new = int(stage_meta["n_docs"])
-    total_docs = meta["n_docs"] + n_new
-    # running avgdl over old + new
-    meta["avgdl"] = (
-        meta["avgdl"] * meta["n_docs"] + stage_meta["avgdl"] * n_new
-    ) / max(1, total_docs)
-    meta["n_docs"] = total_docs
+    meta["n_docs"] += n_new
+    meta["avgdl"] = avgdl(total_cf, meta["n_docs"])
     meta["n_shards"] = next_shard + int(stage_meta["n_shards"])
     meta.setdefault("delta_batches", 0)
     meta["delta_batches"] += 1

@@ -132,3 +132,18 @@ class OracleIndex:
         if 0 < k < len(ranked):
             ranked = ranked[:k]
         return ranked
+
+
+def dictionary_avgdl(index_dir: str) -> float:
+    """Σcf of the index's live term dictionary over its ``n_docs``: the
+    value every write must leave in ``meta["avgdl"]``, bit for bit."""
+    import json
+    import os
+
+    import pyarrow.dataset as ds
+
+    with open(os.path.join(index_dir, "meta.json")) as f:
+        meta = json.load(f)
+    terms = os.path.join(index_dir, meta.get("terms_dir", "terms"))
+    cf = ds.dataset(terms, format="parquet").to_table(columns=["cf"])["cf"]
+    return float(sum(cf.to_pylist())) / meta["n_docs"]

@@ -21,6 +21,8 @@ from fts_engine_spark.query import FtsIndex
 from fts_engine_spark.streaming.compact import compact_index
 from fts_engine_spark.streaming.incremental import _append_batch
 
+from .oracle import dictionary_avgdl
+
 CFG = BuildConfig(preset="simple", shard_size=64, id_buckets=4, n_waves=1)
 QUERIES = ["alpha w12", "epsilon gamma", "w12 delta", "w10 w11 beta"]
 
@@ -151,6 +153,7 @@ def test_compaction_purges_and_matches_fresh_build(
     meta = compact_index(spark, deleted_index, CFG)
     n_live = 200 - len(DEAD)
     assert meta["n_docs"] == n_live
+    assert meta["avgdl"] == dictionary_avgdl(deleted_index)
     assert meta.get("n_deleted", 0) == 0
     assert "tombstones_dir" not in meta
     assert meta["n_shards"] == -(-n_live // 64)

@@ -27,6 +27,8 @@ from fts_engine_spark.sources.pages import conform_pages
 from fts_engine_spark.streaming import incremental
 from fts_engine_spark.streaming.compact import compact_index
 
+from .oracle import dictionary_avgdl
+
 CFG = BuildConfig(preset="by_lang", shard_size=32, id_buckets=8)
 ENVELOPES = ("driver", "spark")
 
@@ -46,8 +48,10 @@ def _last_envelope(index_dir: str) -> str:
 
 
 def _snapshot(spark, index_dir: str) -> dict:
-    """Every live table's rows (sorted) and the meta counters."""
+    """Every live table's rows (sorted) and the meta counters; avgdl is
+    the dictionary's Σcf over n_docs, bit for bit."""
     meta = _meta(index_dir)
+    assert meta["avgdl"] == dictionary_avgdl(index_dir)
     out = {
         k: meta.get(k) for k in ("n_docs", "n_shards", "avgdl", "n_deleted")
     }
@@ -91,6 +95,7 @@ def base_index(spark, small_corpus, tmp_path):
         spark, docs.where(F.col("url").isin(_urls(spark, small_corpus)[:60])),
         index_dir, CFG, resume=False,
     )
+    assert _meta(index_dir)["avgdl"] == dictionary_avgdl(index_dir)
     return index_dir
 
 
@@ -290,6 +295,21 @@ def test_driver_dictionary_bytes_are_deterministic(
         assert _terms_bytes(a) == _terms_bytes(b)
 
 
+def test_batch_build_dictionary_bytes_are_deterministic(
+    spark, small_corpus, tmp_path
+):
+    """The same corpus built twice, with RDDs created between the builds
+    (they advance the session's RDD counter, which seeds Spark's
+    range-partition sample), writes byte-identical dictionaries."""
+    docs = spark.read.parquet(small_corpus).select("url", "text", "lang")
+    a, b = str(tmp_path / "a"), str(tmp_path / "b")
+    build_index(spark, docs, a, CFG, resume=False)
+    for _ in range(3):
+        spark.sparkContext.emptyRDD()
+    build_index(spark, docs, b, CFG, resume=False)
+    assert _terms_bytes(a) and _terms_bytes(a) == _terms_bytes(b)
+
+
 def test_dictionary_envelope_follows_term_bytes(spark, tmp_path, monkeypatch):
     """The envelope rule weighs rows by their term bytes: two dictionaries
     of equal row count, one of 6-byte terms and one of 400-byte terms,
@@ -310,12 +330,11 @@ def test_dictionary_envelope_follows_term_bytes(spark, tmp_path, monkeypatch):
                           "cf": [2] * len(rows)}),
                 os.path.join(index_dir, name, "part-0.parquet"),
             )
-        live = os.path.join(index_dir, "terms")
-        assert (layout._merge_peak_bytes(live, 250) <= 100_000) == (pad == 0)
+        live = layout.TermDelta(os.path.join(index_dir, "terms"), "terms")
+        assert (layout._merge_peak_bytes([live], 250) <= 100_000) == (pad == 0)
         ptr, total_cf = layout.merge_terms(
             spark, index_dir, {},
             [layout.TermDelta(os.path.join(index_dir, "delta"), "terms")],
-            1 << 10,
         )
         out = os.path.join(index_dir, ptr["terms_dir"])
         assert os.path.exists(os.path.join(out, "_SUCCESS")) == (pad > 0)

@@ -17,6 +17,8 @@ from fts_engine_spark.build import BuildConfig, build_index
 from fts_engine_spark.mutate import delete_documents, merge_indexes
 from fts_engine_spark.query import FtsIndex
 
+from .oracle import dictionary_avgdl
+
 CFG = BuildConfig(preset="simple", shard_size=64, id_buckets=4, n_waves=1)
 QUERIES = ["alpha w12", "epsilon gamma", "w12 delta", "w10 w11 beta"]
 
@@ -52,6 +54,7 @@ def test_merge_matches_union_build(spark, tmp_path):
 
     meta = merge_indexes(spark, a_dir, b_dir)
     assert meta["n_docs"] == 260
+    assert meta["avgdl"] == dictionary_avgdl(a_dir)
     assert meta["n_shards"] == -(-260 // 64)
 
     merged = FtsIndex(spark, a_dir)
@@ -103,6 +106,7 @@ def test_merge_carries_tombstones_from_both_sides(spark, tmp_path):
 
     meta = merge_indexes(spark, a_dir, b_dir, compact_after=False)
     assert meta["n_deleted"] == 3
+    assert meta["avgdl"] == dictionary_avgdl(a_dir)
     merged = FtsIndex(spark, a_dir)
     got = {
         r["url"]

@@ -159,8 +159,8 @@ def test_jaccard_lsh_no_shingle_selfjoin(spark, docs):
 def test_postings_parquet_has_term_bloom_filter(spark, small_index):
     """The postings files carry a parquet bloom filter on `term` — the
     reference's probabilistic-filter role (SURVEY.md §2.5,
-    pkg/filter/bloom.go) at the storage layer. (The batch build's terms
-    files carry one too; a dictionary merged in the driver has none.)"""
+    pkg/filter/bloom.go) at the storage layer. (The terms files carry
+    none: their sorted files' min/max stats prune a lookup.)"""
     import glob
     import os
 
@@ -595,8 +595,9 @@ def test_compaction_dictionary_correction_has_no_python_stage(
     postings = os.path.join(index_dir, "postings")
     terms_path = os.path.join(index_dir, "terms")
     df = _spark_terms(
-        spark, terms_path,
-        [TermDelta(postings, "postings", -1, 1),
+        spark,
+        [TermDelta(terms_path, "terms"),
+         TermDelta(postings, "postings", -1, 1),
          TermDelta(postings, "postings", 1, 1)],
     )
     assert_plan(df, "HashAggregate")
@@ -663,9 +664,9 @@ def test_update_documents_splices_without_spark_jobs(
         assert bool(tracker.getJobIdsForGroup(f"{group}-dict")) == merge_jobs
         assert list(tracker.getJobIdsForGroup(group)) == []
         assert out["meta"]["n_docs"] == n_before + 80
-        # replaced counts every doc of the batch's urls, newly or already
-        # tombstoned: the 60-doc base first, then it and the first 80
-        assert out["replaced"] == (60 if budget else 140)
+        # replaced counts the docs this upsert tombstoned: the 60-doc
+        # base first, then the first upsert's 80
+        assert out["replaced"] == (60 if budget else 80)
 
 
 def test_small_batch_stages_in_one_spark_job(
@@ -936,9 +937,67 @@ def test_pages_upsert_and_tombstone_compaction_job_budget(
     assert c_inf == 0 and c_jobs <= 10, c_jobs
 
 
+# jobs the same batch build ran while it aggregated and range-wrote its
+# dictionary on Spark and summed doclen for avgdl
+_PARENT_BUILD_JOBS = 16
+
+
+def test_batch_build_job_budget(spark, small_corpus, tmp_path, monkeypatch):
+    """A 60-doc batch build runs 10 Spark jobs. Its dictionary is written
+    by ``layout.write_terms`` from the postings, in the driver with no
+    job; forced onto the Spark envelope it runs some and writes the same
+    rows and the same avgdl."""
+    import os
+    import uuid
+
+    from fts_engine_spark import build, layout
+    from fts_engine_spark.build import BuildConfig, build_index
+
+    cfg = BuildConfig(preset="by_lang", shard_size=32, id_buckets=8)
+    docs = spark.read.parquet(small_corpus).select("url", "text", "lang")
+    sc = spark.sparkContext
+    real_write = build.write_terms
+    group = {}
+
+    def terms_in_own_group(*a, **kw):
+        outer = sc.getLocalProperty("spark.jobGroup.id")
+        sc.setJobGroup(group["terms"], "terms")
+        try:
+            return real_write(*a, **kw)
+        finally:
+            sc.setJobGroup(outer, outer)
+
+    monkeypatch.setattr(build, "write_terms", terms_in_own_group)
+    jobs, meta, rows = {}, {}, {}
+    for env, budget in (
+        ("driver", layout.DRIVER_MERGE_MAX_BYTES), ("spark", 0)
+    ):
+        monkeypatch.setattr(layout, "DRIVER_MERGE_MAX_BYTES", budget)
+        group["terms"] = f"terms-{uuid.uuid4().hex}"
+        index_dir = str(tmp_path / env)
+        total, _ = _jobs_launched(spark, lambda: meta.update({
+            env: build_index(spark, docs.limit(60), index_dir, cfg,
+                             resume=False)
+        }))
+        jobs[env] = (
+            total, len(sc.statusTracker().getJobIdsForGroup(group["terms"]))
+        )
+        rows[env] = sorted(
+            layout._dataset(os.path.join(index_dir, "terms"), "terms")
+            .to_table().to_pylist(),
+            key=repr,
+        )
+    assert jobs["driver"] == (10, 0)
+    assert jobs["driver"][0] < _PARENT_BUILD_JOBS
+    assert jobs["spark"][1] > 0
+    assert rows["driver"] and rows["spark"] == rows["driver"]
+    assert meta["spark"]["avgdl"] == meta["driver"]["avgdl"]
+
+
 def test_staged_build_writes_no_dictionary(spark, small_corpus, tmp_path):
     """A staged build (``_first_shard``) writes postings, docs and metrics
-    at its final ids but no ``terms`` table; its avgdl is Σdoclen / n."""
+    at its final ids but no ``terms`` table and no avgdl: the append takes
+    avgdl from the merged dictionary's Σcf."""
     import os
 
     from fts_engine_spark.build import BuildConfig, build_index
@@ -954,9 +1013,8 @@ def test_staged_build_writes_no_dictionary(spark, small_corpus, tmp_path):
     for table in ("postings", "docs", "metrics"):
         assert os.path.isdir(os.path.join(staging, table))
     lens = read_table(spark, os.path.join(staging, "docs"), "docs")
-    row = lens.agg({"doclen": "sum", "doc_id": "min"}).first()
-    assert row["min(doc_id)"] == 3 * 32
-    assert meta["avgdl"] == float(row["sum(doclen)"]) / 40
+    assert lens.agg({"doc_id": "min"}).first()[0] == 3 * 32
+    assert "avgdl" not in meta
 
 
 def test_repeat_write_cycle_reuses_generated_code(spark, small_corpus, tmp_path):

@@ -114,7 +114,7 @@ def run(index_dir: str, envelope: str, reps: int) -> None:
     walls = []
     for _ in range(reps):
         t0 = time.perf_counter()
-        layout.merge_terms(spark, index_dir, meta, [delta], 1 << 16)
+        layout.merge_terms(spark, index_dir, meta, [delta])
         walls.append(round(time.perf_counter() - t0, 3))
     peak = resource.getrusage(resource.RUSAGE_SELF).ru_maxrss / 1024.0
     out_rows = layout._dataset(
