@@ -943,18 +943,23 @@ _PARENT_BUILD_JOBS = 16
 
 
 def test_batch_build_job_budget(spark, small_corpus, tmp_path, monkeypatch):
-    """A 60-doc batch build runs 10 Spark jobs. Its dictionary is written
-    by ``layout.write_terms`` from the postings, in the driver with no
-    job; forced onto the Spark envelope it runs some and writes the same
-    rows and the same avgdl."""
+    """A 60-doc batch build runs 10 Spark jobs under the session's
+    default conf (AQE on). Its dictionary is written by
+    ``layout.write_terms`` from the postings, in the driver with no job;
+    forced onto the Spark envelope it runs some and writes the same rows
+    and the same avgdl."""
     import os
     import uuid
 
     from fts_engine_spark import build, layout
     from fts_engine_spark.build import BuildConfig, build_index
 
+    # a session of its own: a warm handle another test left open turns
+    # AQE off session-wide, and AQE runs each shuffle stage as its own job
+    session = spark.newSession()
+    session.conf.set("spark.sql.adaptive.enabled", "true")
     cfg = BuildConfig(preset="by_lang", shard_size=32, id_buckets=8)
-    docs = spark.read.parquet(small_corpus).select("url", "text", "lang")
+    docs = session.read.parquet(small_corpus).select("url", "text", "lang")
     sc = spark.sparkContext
     real_write = build.write_terms
     group = {}
@@ -976,7 +981,7 @@ def test_batch_build_job_budget(spark, small_corpus, tmp_path, monkeypatch):
         group["terms"] = f"terms-{uuid.uuid4().hex}"
         index_dir = str(tmp_path / env)
         total, _ = _jobs_launched(spark, lambda: meta.update({
-            env: build_index(spark, docs.limit(60), index_dir, cfg,
+            env: build_index(session, docs.limit(60), index_dir, cfg,
                              resume=False)
         }))
         jobs[env] = (
