@@ -278,24 +278,27 @@ def avgdl(total_cf: int, n_docs: int) -> float:
     return float(total_cf) / max(1, n_docs)
 
 
-def _merge_peak_bytes(inputs: Sequence[TermDelta], rows: int) -> int:
-    """The driver merge's estimated peak memory over ``rows`` input rows:
+def _merge_peak_bytes(inputs: Sequence[TermDelta]) -> int:
+    """The driver merge's estimated peak memory over the input rows:
     ``rows · (80 + 3·t)`` bytes, ``t`` the inputs' ``term`` column
-    uncompressed bytes per row in their parquet footers (no job; within a
-    file each term is one row, so that is about their length prefixes
-    and UTF-8 bytes). Fitted on ``tools/dict_merge_envelope.py`` runs of
-    the merge: 117 B a row at 9-byte terms, 162 B at 24-byte ones (5M
-    rows); at 1M and 20M rows the estimate was 0.73× and 1.26× the
-    measured peak."""
-    size = n = 0
+    uncompressed bytes per row, both from the parquet footers of the
+    files the inputs read (no job; a ``min_shard`` prunes whole
+    ``shard_id`` partitions; within a file each term is one row, so
+    ``t`` is about their length prefixes and UTF-8 bytes). Fitted on
+    ``tools/dict_merge_envelope.py`` runs of the merge: 117 B a row at
+    9-byte terms, 162 B at 24-byte ones (5M rows); at 1M and 20M rows
+    the estimate was 0.73× and 1.26× the measured peak."""
+    size = rows = 0
     for d in inputs:
-        for frag in _dataset(d.path, d.table).get_fragments():
+        for frag in _dataset(d.path, d.table).get_fragments(
+            filter=_delta_filter(d)
+        ):
             md = frag.metadata
             col = md.schema.names.index("term")
             for i in range(md.num_row_groups):
                 size += md.row_group(i).column(col).total_uncompressed_size
-                n += md.row_group(i).num_rows
-    return int(rows * (80 + 3 * (size / n if n else 0)))
+                rows += md.row_group(i).num_rows
+    return int(rows * (80 + 3 * (size / rows if rows else 0)))
 
 
 def _spark_terms(spark: SparkSession,
@@ -340,12 +343,8 @@ def write_terms(spark: SparkSession, out_dir: str, live: str | None,
     # the live table is one more input, of sign +1
     inputs = ([TermDelta(live, "terms")] if live else []) + list(deltas)
     files = max(1, spark.sparkContext.defaultParallelism // 2)
-    rows = sum(
-        _dataset(d.path, d.table).count_rows(filter=_delta_filter(d))
-        for d in inputs
-    )
     shutil.rmtree(out_dir, ignore_errors=True)
-    if _merge_peak_bytes(inputs, rows) <= DRIVER_MERGE_MAX_BYTES:
+    if _merge_peak_bytes(inputs) <= DRIVER_MERGE_MAX_BYTES:
         return _terms_in_driver(inputs, out_dir, files)
     (
         _spark_terms(spark, inputs)

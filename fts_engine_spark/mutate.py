@@ -284,8 +284,8 @@ def update_documents(
     driver (no ``meta_cols``, no fresh sidecar); the dictionary merges in
     the driver too (``layout.merge_terms``, within
     ``layout.DRIVER_MERGE_MAX_BYTES`` of estimated memory), so a small
-    upsert runs one Spark job, the collect. A larger batch deletes by a join and stages through
-    the Spark staged build.
+    upsert runs one Spark job, the collect. A larger batch deletes by a
+    join and stages through the Spark staged build.
     """
     from .build import BuildConfig
     from .streaming import incremental

@@ -330,12 +330,12 @@ def test_dictionary_envelope_follows_term_bytes(spark, tmp_path, monkeypatch):
                           "cf": [2] * len(rows)}),
                 os.path.join(index_dir, name, "part-0.parquet"),
             )
-        live = layout.TermDelta(os.path.join(index_dir, "terms"), "terms")
-        assert (layout._merge_peak_bytes([live], 250) <= 100_000) == (pad == 0)
-        ptr, total_cf = layout.merge_terms(
-            spark, index_dir, {},
-            [layout.TermDelta(os.path.join(index_dir, "delta"), "terms")],
-        )
+        inputs = [
+            layout.TermDelta(os.path.join(index_dir, name), "terms")
+            for name in ("terms", "delta")
+        ]
+        assert (layout._merge_peak_bytes(inputs) <= 100_000) == (pad == 0)
+        ptr, total_cf = layout.merge_terms(spark, index_dir, {}, inputs[1:])
         out = os.path.join(index_dir, ptr["terms_dir"])
         assert os.path.exists(os.path.join(out, "_SUCCESS")) == (pad > 0)
         assert total_cf == 500
