@@ -574,6 +574,27 @@ def postings_wave_plan(
     )
 
 
+def shard_metrics(rows) -> dict[str, int]:
+    """The metrics table's sums over Arrow postings rows of one shard (a
+    table or batch with ``count``, ``doc_blob`` and ``tf_blob``): rows
+    (``n_terms``), Σ``count`` (``n_postings``) and the blobs' Σ byte
+    length (``blob_bytes``), the Spark build's per-shard aggregate. Sums
+    over parts of a shard add up to the shard's."""
+    import pyarrow.compute as pc
+
+    def total(arr) -> int:
+        return int(pc.sum(arr).as_py() or 0)
+
+    return {
+        "n_terms": rows.num_rows,
+        "n_postings": total(rows.column("count")),
+        "blob_bytes": sum(
+            total(pc.binary_length(rows.column(c)))
+            for c in ("doc_blob", "tf_blob")
+        ),
+    }
+
+
 class _BuildLog:
     """Structured build log (reference setupLogger role, main.go:592-613:
     slog JSON to file; here one JSON line per completed phase) plus the
@@ -902,7 +923,6 @@ def stage_in_driver(
     import hashlib
 
     import pyarrow as pa
-    import pyarrow.compute as pc
     import pyarrow.parquet as pq
     from pyspark.sql.pandas.types import to_arrow_schema
 
@@ -978,16 +998,9 @@ def stage_in_driver(
                     index_dir, "postings", f"shard_id={shard[lo]}", part
                 ),
             )
-            # the Spark build's per-shard metrics aggregate, over the rows
             metrics["shard_id"].append(int(shard[lo]))
-            metrics["n_terms"].append(shard_rows.num_rows)
-            metrics["n_postings"].append(pc.sum(shard_rows["count"]).as_py())
-            metrics["blob_bytes"].append(
-                sum(
-                    pc.sum(pc.binary_length(shard_rows[c])).as_py()
-                    for c in ("doc_blob", "tf_blob")
-                )
-            )
+            for name, v in shard_metrics(shard_rows).items():
+                metrics[name].append(v)
     _write(pa.table(metrics), "metrics", os.path.join(index_dir, "metrics", part))
     order_ids = np.argsort(doc_id)
     docs = pa.table(

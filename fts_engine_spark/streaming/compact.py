@@ -20,9 +20,19 @@ straight off the Arrow binary buffers (:func:`_make_tail_decoder`: one
 varbyte pass per batch, doc ids rebuilt by a segmented cumsum, tombstones
 dropped, ids remapped) and re-encoded by the batch build's own
 sort-group-encode core (``build._make_list_encoder``), term-salted under
-``build.salt_policy`` — no pandas stage and no JVM sort. After a long
-ingest P covers almost the whole index, so compaction cost is
-proportional to the delta tail, not the index.
+``build.salt_policy`` — no pandas stage and no JVM sort.
+
+Cost: the postings work (decode, re-encode, the tail metrics, the
+dictionary correction) reads only shards ``>= P``; after a long ingest P
+covers almost the whole index, so that part is proportional to the delta
+tail. Two passes are O(n_docs): the driver's occupancy scan of the docs
+table's ``doc_id`` column and the docs rewrite, which renumbers every docs
+row (a full copy of that table, whose rows are small next to postings).
+Only the two data passes run on Spark — the postings re-encode, which
+must write each shard's ``term`` bloom filter (pyarrow writes none), and
+the docs rewrite; occupancy, tombstones, the prefix check, the metrics
+table and (within ``layout.DRIVER_MERGE_MAX_BYTES``) the dictionary are
+driver work over pyarrow scans.
 
 Crash safety: new postings/docs/metrics are written to versioned dirs; one
 ``atomic_write_json`` flips all three pointers + ``n_shards`` together. A
@@ -37,23 +47,27 @@ from __future__ import annotations
 import json
 import os
 import shutil
+import time
+from collections import Counter
 
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from ..build import (
     POSTINGS_SCHEMA,
     BuildConfig,
+    _BuildLog,
     _i64,
     _make_list_encoder,
     meta_bloom_ndv,
     salt_policy,
+    shard_metrics,
 )
 from ..checkpoint import Manifest, atomic_write_json
 from ..codec import decode_doc_blobs, varbyte_decode_binary
 from ..layout import (
     TermDelta,
+    _dataset,
     avgdl,
     merge_terms,
     next_version_dir,
@@ -92,6 +106,35 @@ def remap_ids(
             shifted = shifted - np.searchsorted(dead, t)
         out[tail] = shifted
     return out
+
+
+def _alive(ids: np.ndarray, dead: np.ndarray) -> np.ndarray:
+    """Mask of the ``ids`` not in the sorted, non-empty ``dead`` array."""
+    pos = np.searchsorted(dead, ids)
+    np.minimum(pos, dead.size - 1, out=pos)
+    return dead[pos] != ids
+
+
+def _make_id_remap(P: int, shard_size: int, shift_bc, dead_bc):
+    """mapInArrow kernel over rows keyed by ``doc_id`` (the docs table, the
+    stored sidecar): drop tombstoned rows and renumber ``doc_id`` with
+    :func:`remap_ids`; every other column passes through untouched."""
+    import pyarrow as pa
+
+    def remap(batches):
+        shift, dead = shift_bc.value, dead_bc.value
+        for b in batches:
+            ids = _i64(b.column("doc_id"))
+            if dead.size:
+                keep = _alive(ids, dead)
+                b, ids = b.filter(pa.array(keep)), ids[keep]
+            i = b.schema.get_field_index("doc_id")
+            yield b.set_column(
+                i, b.schema.field(i),
+                pa.array(remap_ids(ids, P, shard_size, shift, dead)),
+            )
+
+    return remap
 
 
 def _tail_postings(spark: SparkSession, postings_path: str, P: int) -> DataFrame:
@@ -139,9 +182,7 @@ def _make_tail_decoder(
             ):
                 raise ValueError("tail blobs disagree with their counts")
             if dead.size:
-                pos = np.searchsorted(dead, doc)
-                np.minimum(pos, dead.size - 1, out=pos)
-                keep = dead[pos] != doc
+                keep = _alive(doc, dead)
                 doc, tf, dl, parent = doc[keep], tf[keep], dl[keep], parent[keep]
             m = len(doc)
             if not m:
@@ -203,17 +244,17 @@ def _reencoded_tail(
     )
 
 
-def _occupancy(docs: DataFrame, shard_size: int) -> dict[int, int]:
-    """Docs per shard — one small aggregate row per shard (collect is
-    bounded by shard count: 10^6 rows at 10^12 docs / 1M shard_size)."""
-    rows = (
-        docs.groupBy(
-            (F.col("doc_id") / shard_size).cast("long").alias("shard_id")
-        )
-        .count()
-        .collect()
-    )
-    return {int(r["shard_id"]): int(r["count"]) for r in rows}
+def _docs_per_shard(docs_path: str, shard_size: int) -> np.ndarray:
+    """Docs per shard (index = shard id), counted in the driver over a
+    pyarrow scan of the docs table's ``doc_id`` column batch by batch, so
+    memory stays O(shards): 10^6 counts at 10^12 docs / 1M shard_size."""
+    occ = np.zeros(0, dtype=np.int64)
+    for b in _dataset(docs_path, "docs").to_batches(columns=["doc_id"]):
+        c = np.bincount(_i64(b.column("doc_id")) // shard_size)
+        if len(c) > len(occ):
+            occ = np.pad(occ, (0, len(c) - len(occ)))
+        occ[: len(c)] += c
+    return occ
 
 
 def compact_index(
@@ -238,8 +279,8 @@ def compact_index(
 
     ``maintain_sidecars`` (default True) carries the stored-fields and
     positional sidecars through the compaction instead of leaving them
-    stale: the stored table is renumbered with the SAME pure remap the
-    postings/docs rewrite used (dead rows dropped, no tokenize), and the
+    stale: the stored table is renumbered by the docs rewrite's kernel
+    (dead rows dropped, no tokenize), and the
     positional table is rebuilt from the renumbered stored text (one
     tokenize pass — the same cost class as the opt-in build pass). Only
     sidecars that were FRESH going in are maintained (an appends-made-it-
@@ -248,6 +289,19 @@ def compact_index(
     positions-without-stored stays stale too (documented). The rebuild
     runs AFTER the compaction commit — a crash mid-rebuild leaves stale
     sidecar pins, which the staleness gates already reject loudly.
+
+    Spark jobs: the postings re-encode (2 with AQE on: its shuffle stage
+    and the write) and the docs rewrite (1), one ``mapInArrow`` kernel
+    (:func:`_make_id_remap`) that drops dead rows and renumbers ids; a
+    docs table carrying ``meta_cols`` adds its schema-inference job, and
+    maintained sidecars run theirs after the commit. Everything else
+    reads with pyarrow in the driver: occupancy from the docs table's
+    ``doc_id`` column, tombstones, the prefix metrics rows (which both
+    check the carried prefix and start the new metrics table) and the
+    re-encoded tail's per-shard sums (``build.shard_metrics``), written as
+    one metrics file. Per-phase seconds (bookkeeping, reencode, docs,
+    metrics, dictionary, commit, sidecars) go to ``build_log.jsonl`` and
+    to the ``compact_N`` manifest entry, which is written last.
 
     Under tombstones the dictionary is corrected by
     :func:`..layout.merge_terms` from the old tail (sign −1) and the
@@ -305,10 +359,17 @@ def compact_index(
         maintain_sidecars and stored_fresh and _sidecar_fresh("positions", 1)
     )
 
+    import pyarrow as pa
+    import pyarrow.compute as pc
+    import pyarrow.dataset as ds
+    import pyarrow.parquet as pq
+
+    log = _BuildLog(index_dir)
+    t_phase = time.monotonic()
     docs_path = table_path(index_dir, meta, "docs")
     postings_path = table_path(index_dir, meta, "postings")
-    docs = read_table(spark, docs_path, "docs", meta.get("meta_cols", ()))
-    occ = _occupancy(docs, shard_size)
+    metrics_path = table_path(index_dir, meta, "metrics")
+    occ = _docs_per_shard(docs_path, shard_size)
 
     # tombstones (mutate.delete_documents): compaction is where logical
     # deletes become physical — dead docs drop out of the re-encoded tail,
@@ -316,19 +377,14 @@ def compact_index(
     # corrected exactly. The sorted dead-id array is bounded by the
     # deletes-between-compactions discipline (same posture as serving's
     # broadcast; see mutate.py docstring).
-    from ..mutate import read_tombstones
-
-    dead_df = read_tombstones(spark, index_dir, meta)
-    dead = (
-        np.sort(
-            np.array(
-                [r["doc_id"] for r in dead_df.select("doc_id").collect()],
-                dtype=np.int64,
-            )
+    dead = np.zeros(0, dtype=np.int64)
+    if meta.get("tombstones_dir"):
+        dead = np.unique(
+            _dataset(table_path(index_dir, meta, "tombstones"), "tombstones")
+            .to_table(columns=["doc_id"])["doc_id"]
+            .to_numpy()
+            .astype(np.int64)
         )
-        if dead_df is not None
-        else np.zeros(0, dtype=np.int64)
-    )
     have_dead = dead.size > 0
 
     # P = first shard that is not full; everything before it is untouched.
@@ -336,11 +392,11 @@ def compact_index(
     # after) into the re-encoded tail — the file-copy fast path only ever
     # carries shards with zero pending mutations.
     P = 0
-    while P < n_shards and occ.get(P, 0) == shard_size:
+    while P < min(n_shards, len(occ)) and occ[P] == shard_size:
         P += 1
     if have_dead:
         P = min(P, int(dead[0]) // shard_size)
-    tail_shards = sorted(s for s in occ if s >= P)
+    tail_shards = [int(s) for s in np.flatnonzero(occ[P:]) + P]
     if len(tail_shards) <= 1 and not have_dead:
         return meta  # already compact
 
@@ -359,7 +415,7 @@ def compact_index(
     acc = base
     for s in tail_shards:
         shift_arr[s - P] = acc - s * shard_size
-        acc += occ[s]
+        acc += int(occ[s])
     if acc != n_docs:
         raise RuntimeError(
             f"compaction occupancy mismatch: docs table holds {acc} "
@@ -367,15 +423,39 @@ def compact_index(
         )
     n_live = n_docs - int(dead.size)
     n_new_shards = max(1, -(-n_live // shard_size))
-    dead_bc = spark.sparkContext.broadcast(dead)
+
+    # the full prefix is carried unchanged. Occupancy proved shards
+    # 0..P-1 are full of DOCS; a missing postings directory is either
+    # corruption (committing would flip to a table missing that shard's
+    # postings — ADVICE r4 #2) or a legitimately posting-less shard (every
+    # doc tokenized to zero terms: punctuation-only / empty pages, which
+    # partitionBy writes no dir for). The metrics table tells them apart:
+    # it has a row exactly for shards the build emitted posting rows for.
+    # Its prefix rows are also the prefix of the new metrics table.
+    prefix_metrics = _dataset(metrics_path, "metrics").to_table(
+        filter=pc.field("shard_id") < P
+    )
+    prefix_dirs = [
+        os.path.join(postings_path, f"shard_id={s}") for s in range(P)
+    ]
+    for s in prefix_metrics["shard_id"].to_pylist():
+        if not os.path.isdir(prefix_dirs[s]):
+            raise RuntimeError(
+                f"compaction: prefix shard dir {prefix_dirs[s]} is missing "
+                "but the metrics table says the shard has postings — "
+                "postings table is corrupt or the path is not locally "
+                "accessible; aborting before the pointer flip"
+            )
+    sc = spark.sparkContext
+    shift_bc, dead_bc = sc.broadcast(shift_arr), sc.broadcast(dead)
+    t_phase = log.lap("bookkeeping", t_phase)
 
     tail = _tail_postings(spark, postings_path, P)
     reencoded = _reencoded_tail(
         tail, P, shard_size, skip, shift_arr, dead_bc,
         max(1, n_new_shards - P),
-        cfg.enc_partitions or spark.sparkContext.defaultParallelism * 2,
+        cfg.enc_partitions or sc.defaultParallelism * 2,
     )
-
     new_postings, _, post_ptr = next_version_dir(index_dir, meta, "postings")
     shutil.rmtree(new_postings, ignore_errors=True)
     (
@@ -385,117 +465,54 @@ def compact_index(
         .option("parquet.bloom.filter.expected.ndv#term", str(bloom_ndv))
         .parquet(new_postings)
     )
-    # carry the full prefix unchanged. Occupancy proved shards 0..P-1 are
-    # full of DOCS; a missing postings directory is either corruption
-    # (committing would flip to a table missing that shard's postings —
-    # ADVICE r4 #2) or a legitimately posting-less shard (every doc
-    # tokenized to zero terms: punctuation-only / empty pages, which
-    # partitionBy writes no dir for). The metrics table tells them apart:
-    # it has a row exactly for shards the build emitted posting rows for.
-    shards_with_postings = {
-        int(r["shard_id"])
-        for r in read_table(
-            spark, table_path(index_dir, meta, "metrics"), "metrics"
-        )
-        .select("shard_id").where(F.col("shard_id") < P).collect()
-    }
-    for s in range(P):
-        src = os.path.join(postings_path, f"shard_id={s}")
-        if not os.path.isdir(src):
-            if s in shards_with_postings:
-                raise RuntimeError(
-                    f"compaction: prefix shard dir {src} is missing but "
-                    "the metrics table says the shard has postings — "
-                    "postings table is corrupt or the path is not locally "
-                    "accessible; aborting before the pointer flip"
-                )
-            continue  # legitimately posting-less full shard
-        shutil.copytree(
-            src, os.path.join(new_postings, f"shard_id={s}"),
-            dirs_exist_ok=True,
-        )
+    for src in prefix_dirs:
+        if os.path.isdir(src):  # else a legitimately posting-less shard
+            shutil.copytree(
+                src, os.path.join(new_postings, os.path.basename(src)),
+                dirs_exist_ok=True,
+            )
+    t_phase = log.lap("reencode", t_phase)
 
-    # docs: drop tombstoned rows, renumber the tail ids; one broadcast
-    # join on shard plus (under deletes) a vectorized dead-rank subtraction
-    # — every dead id is >= P*shard_size, so prefix ids subtract rank 0
-    from ..localdf import local_df
-
-    shift_df = local_df(
-        spark,
-        [(s, int(shift_arr[s - P])) for s in tail_shards],
-        "shard long, shift long",
-    )
+    # docs: drop tombstoned rows and renumber the tail ids with the SAME
+    # pure remap the postings re-encode uses — every dead id is
+    # >= P*shard_size, so prefix ids pass through unchanged
+    docs = read_table(spark, docs_path, "docs", meta.get("meta_cols", ()))
     new_docs_dir, _, docs_ptr = next_version_dir(index_dir, meta, "docs")
-    if have_dead:
-        # one vectorized pandas UDF applying the SAME pure remap the
-        # postings re-encode uses (shift_arr + dead ride the broadcast)
-        from pyspark.sql.functions import pandas_udf
-
-        shift_bc = spark.sparkContext.broadcast(shift_arr)
-
-        @pandas_udf("long")
-        def remap_udf(ids: pd.Series) -> pd.Series:
-            return pd.Series(
-                remap_ids(
-                    ids.to_numpy(), P, shard_size,
-                    shift_bc.value, dead_bc.value,
-                ),
-                dtype="int64",
-            )
-
-        (
-            docs.join(
-                F.broadcast(dead_df.select("doc_id")), "doc_id", "left_anti"
-            )
-            .withColumn("doc_id", remap_udf(F.col("doc_id")))
-            .write.mode("overwrite")
-            .parquet(new_docs_dir)
-        )
-    else:
-        # no deletes: the remap is a per-shard scalar shift — stay JVM-side
-        (
-            docs.withColumn(
-                "shard", (F.col("doc_id") / shard_size).cast("long")
-            )
-            .join(F.broadcast(shift_df), "shard", "left")
-            .withColumn(
-                "doc_id",
-                F.col("doc_id") + F.coalesce(F.col("shift"), F.lit(0)),
-            )
-            .drop("shard", "shift")
-            .write.mode("overwrite")
-            .parquet(new_docs_dir)
-        )
-
-    # metrics: carry the prefix rows (shard < P) unchanged and recompute
-    # only the re-encoded tail — rescanning every prefix shard's blob
-    # columns would make this O(index) when the job is otherwise O(tail)
-    new_metrics, _, metr_ptr = next_version_dir(index_dir, meta, "metrics")
-    old_metrics = read_table(
-        spark, table_path(index_dir, meta, "metrics"), "metrics"
-    ).where(F.col("shard_id") < P)
-    tail_metrics = (
-        read_table(spark, new_postings, "postings")
-        .where(F.col("shard_id") >= P)
-        .groupBy("shard_id")
-        .agg(
-            F.count("*").alias("n_terms"),
-            F.sum("count").alias("n_postings"),
-            F.sum(F.length("doc_blob") + F.length("tf_blob")).alias(
-                "blob_bytes"
-            ),
-        )
-    )
     (
-        old_metrics.select("shard_id", "n_terms", "n_postings", "blob_bytes")
-        .unionByName(
-            tail_metrics.withColumn(
-                "shard_id", F.col("shard_id").cast("long")
-            )
+        docs.mapInArrow(
+            _make_id_remap(P, shard_size, shift_bc, dead_bc), docs.schema
         )
         .write.mode("overwrite")
-        .parquet(new_metrics)
+        .parquet(new_docs_dir)
     )
+    t_phase = log.lap("docs", t_phase)
+
+    # metrics: the prefix rows carried unchanged plus the re-encoded
+    # tail's, summed file by file from the columns they count —
+    # rescanning every prefix shard's blob columns would make this
+    # O(index) when the postings work is otherwise O(tail)
+    new_metrics, _, metr_ptr = next_version_dir(index_dir, meta, "metrics")
+    tail_metrics: dict[int, Counter] = {}
+    for frag in _dataset(new_postings, "postings").get_fragments(
+        filter=pc.field("shard_id") >= P
+    ):
+        s = ds.get_partition_keys(frag.partition_expression)["shard_id"]
+        for b in frag.to_batches(columns=["count", "doc_blob", "tf_blob"]):
+            tail_metrics.setdefault(s, Counter()).update(shard_metrics(b))
+    shutil.rmtree(new_metrics, ignore_errors=True)
+    os.makedirs(new_metrics)
+    pq.write_table(
+        pa.concat_tables([
+            prefix_metrics,
+            pa.Table.from_pylist(
+                [{"shard_id": s, **m} for s, m in sorted(tail_metrics.items())],
+                schema=prefix_metrics.schema,
+            ),
+        ]),
+        os.path.join(new_metrics, "part-00000.parquet"),
+        compression="snappy",
+    )
+    t_phase = log.lap("metrics", t_phase)
 
     # under deletes: correct the global dictionary by the dead docs' EXACT
     # contributions — each term's df/cf minus the old tail's
@@ -508,11 +525,7 @@ def compact_index(
     pointer_updates = {**post_ptr, **docs_ptr, **metr_ptr}
     meta_updates: dict = {}
     drop_keys: list[str] = []
-    old_dirs = (
-        [postings_path, docs_path, table_path(index_dir, meta, "metrics")]
-        if remove_old
-        else []
-    )
+    old_dirs = [postings_path, docs_path, metrics_path] if remove_old else []
     if have_dead:
         terms_path = table_path(index_dir, meta, "terms")
         terms_ptr, total_cf = merge_terms(
@@ -528,8 +541,9 @@ def compact_index(
         if remove_old:
             old_dirs.append(terms_path)
             old_dirs.append(table_path(index_dir, meta, "tombstones"))
+    t_phase = log.lap("dictionary", t_phase)
 
-    _commit_compaction(
+    step = _commit_compaction(
         index_dir, meta_path, meta,
         {**pointer_updates,
          # pointer updates above each bumped table_version; keep the max
@@ -542,13 +556,23 @@ def compact_index(
         old_dirs=old_dirs,
         drop_keys=drop_keys,
     )
+    t_phase = log.lap("commit", t_phase)
     if stored_fresh:
         with open(meta_path) as f:
             committed = json.load(f)
         _rebuild_sidecars(
             spark, index_dir, committed, positions_fresh,
-            P, shard_size, shift_arr, dead,
+            P, shard_size, shift_bc, dead_bc,
         )
+    log.lap("sidecars", t_phase)
+    log.total()
+    log.event(
+        "compact_done", step=step, n_shards=n_new_shards,
+        seconds=log.phases["total"],
+    )
+    Manifest(index_dir).mark_done(
+        step, {"n_shards": n_new_shards, "phases": log.phases}
+    )
     with open(meta_path) as f:
         return json.load(f)
 
@@ -560,13 +584,13 @@ def _rebuild_sidecars(
     positions_fresh: bool,
     P: int,
     shard_size: int,
-    shift_arr: np.ndarray,
-    dead: np.ndarray,
+    shift_bc,
+    dead_bc,
 ) -> None:
     """Carry the stored-fields (and, on top of it, the positional)
-    sidecar through a compaction. The stored table is rewritten with the
-    SAME pure ``remap_ids`` the postings/docs rewrite used — dead rows
-    dropped, tail ids shifted, no tokenize — into a temp dir, swapped
+    sidecar through a compaction. The stored table is rewritten through
+    the docs rewrite's kernel (:func:`_make_id_remap`: dead rows dropped,
+    tail ids renumbered by ``remap_ids``, no tokenize) into a temp dir, swapped
     in, and its meta pin re-committed against the NEW
     (n_docs, table_version). The positional table is then rebuilt from
     the renumbered stored rows directly (they already carry doc_id —
@@ -580,8 +604,6 @@ def _rebuild_sidecars(
     staleness gates reject that loudly, so readers can never attach
     text/positions to the wrong renumbered id. The dir swap itself has
     a tiny rmtree→rename window with the same failure mode."""
-    from pyspark.sql.functions import pandas_udf
-
     from ..stored import (
         STORED_TABLE,
         STORED_VERSION,
@@ -592,31 +614,10 @@ def _rebuild_sidecars(
     stored_path = os.path.join(index_dir, STORED_TABLE)
     tmp_parent = os.path.join(index_dir, "_stored_compact_tmp")
     shutil.rmtree(tmp_parent, ignore_errors=True)
-    dead_bc = spark.sparkContext.broadcast(dead)
-    shift_bc = spark.sparkContext.broadcast(shift_arr)
-
-    @pandas_udf("long")
-    def remap_udf(ids: pd.Series) -> pd.Series:
-        return pd.Series(
-            remap_ids(
-                ids.to_numpy(), P, shard_size, shift_bc.value, dead_bc.value
-            ),
-            dtype="int64",
-        )
-
     stored = read_table(spark, stored_path, "stored")
-    if dead.size:
-
-        @pandas_udf("boolean")
-        def alive_udf(ids: pd.Series) -> pd.Series:
-            dl = dead_bc.value
-            arr = ids.to_numpy()
-            pos = np.searchsorted(dl, arr)
-            np.minimum(pos, dl.size - 1, out=pos)
-            return pd.Series(dl[pos] != arr)
-
-        stored = stored.where(alive_udf(F.col("doc_id")))
-    remapped = stored.withColumn("doc_id", remap_udf(F.col("doc_id")))
+    remapped = stored.mapInArrow(
+        _make_id_remap(P, shard_size, shift_bc, dead_bc), stored.schema
+    )
     # build_stored_table writes <dir>/stored — point it at the temp
     # parent, then swap the finished table in
     build_stored_table(remapped, tmp_parent, int(meta["n_docs"]))
@@ -662,12 +663,13 @@ def _commit_compaction(
     n_new_shards: int,
     old_dirs: list[str],
     drop_keys: list[str] | None = None,
-) -> None:
+) -> str:
     """The single commit point: one atomic meta write flips every table
     pointer + n_shards together (and, when tombstones were purged, the
     corrected n_docs/avgdl and the cleared tombstone pointer); old
-    directories are removed only after. Split out so kill-injection tests
-    can fail exactly here."""
+    directories are removed only after. Returns the compaction's manifest
+    step name (``compact_N``). Split out so kill-injection tests can fail
+    exactly here."""
     meta = dict(meta)
     meta.update(pointer_updates)
     for key in drop_keys or ():
@@ -676,8 +678,6 @@ def _commit_compaction(
     meta["compactions"] = int(meta.get("compactions", 0)) + 1
     meta["delta_batches"] = 0
     atomic_write_json(meta_path, meta)
-    Manifest(index_dir).mark_done(
-        f"compact_{meta['compactions']}", {"n_shards": n_new_shards}
-    )
     for d in old_dirs:
         shutil.rmtree(d, ignore_errors=True)
+    return f"compact_{meta['compactions']}"

@@ -168,3 +168,111 @@ def test_append_batch_auto_compacts(spark, tmp_path):
     build_index(spark, _docs(spark, 160), ref_dir, CFG, resume=False)
     assert full_sets(index_dir) == full_sets(ref_dir)
     assert before  # sanity: pre-compaction searches returned rows
+
+
+def test_compacted_metrics_equal_the_spark_aggregate(
+    spark, small_corpus, tmp_path
+):
+    """Compaction writes its metrics table in the driver: after an upsert
+    that tombstones recrawled urls, over a docs table carrying
+    ``meta_cols``, the table equals the Spark definition of the metrics
+    — per shard of the compacted postings, ``count(*)``, Σ``count`` and
+    Σ(``length(doc_blob)`` + ``length(tf_blob)``) — one row per shard."""
+    from pyspark.sql import functions as F
+
+    from fts_engine_spark.layout import read_table, table_path
+    from fts_engine_spark.mutate import update_documents
+
+    cfg = BuildConfig(
+        preset="by_lang", shard_size=32, id_buckets=8, meta_cols=("warc_ts",)
+    )
+    docs = spark.read.parquet(small_corpus)
+    index_dir = str(tmp_path / "ix")
+    build_index(spark, docs.limit(70), index_dir, cfg, resume=False)
+    update_documents(
+        spark, index_dir,
+        docs.limit(90).withColumn(
+            "text", F.concat(F.col("text"), F.lit(" recrawled"))
+        ),
+        cfg,
+    )
+    with open(os.path.join(index_dir, "meta.json")) as f:
+        assert json.load(f)["n_deleted"] == 70
+    meta = compact_index(spark, index_dir)
+    assert meta["n_docs"] == 90 and meta["n_deleted"] == 0
+
+    expected = (
+        read_table(spark, table_path(index_dir, meta, "postings"), "postings")
+        .groupBy(F.col("shard_id").cast("long").alias("shard_id"))
+        .agg(
+            F.count("*").alias("n_terms"),
+            F.sum("count").alias("n_postings"),
+            F.sum(F.length("doc_blob") + F.length("tf_blob")).alias(
+                "blob_bytes"
+            ),
+        )
+    )
+    got = read_table(spark, table_path(index_dir, meta, "metrics"), "metrics")
+    assert sorted(map(tuple, got.collect())) == sorted(
+        map(tuple, expected.collect())
+    )
+    assert got.count() == meta["n_shards"]
+
+
+def _blank_docs(spark, n, start):
+    """Pages that tokenize to no term at all: empty or punctuation-only."""
+    rows = [
+        (f"blank://{i}", "" if i % 2 else "... !? --", "en")
+        for i in range(start, start + n)
+    ]
+    return spark.createDataFrame(rows, "url string, text string, lang string")
+
+
+def _index_with_blank_prefix_shard(spark, index_dir):
+    """Shards 0-1 full of words, shard 2 full of blank pages (no postings
+    dir, no metrics row), shards 3-4 under-filled deltas: compaction
+    carries shards 0-2 as the prefix (P = 3)."""
+    build_index(spark, _docs(spark, 128), index_dir, CFG, resume=False)
+    _append_batch(spark, _blank_docs(spark, 64, 0), index_dir, CFG)
+    _append_batch(spark, _docs(spark, 10, start=128), index_dir, CFG)
+    _append_batch(spark, _docs(spark, 10, start=138), index_dir, CFG)
+    with open(os.path.join(index_dir, "meta.json")) as f:
+        meta = json.load(f)
+    assert meta["n_shards"] == 5 and meta["n_docs"] == 212
+    from fts_engine_spark.layout import table_path
+
+    postings = table_path(index_dir, meta, "postings")
+    assert not os.path.exists(os.path.join(postings, "shard_id=2"))
+    return meta, postings
+
+
+def test_compact_carries_a_prefix_shard_without_postings(spark, tmp_path):
+    """A full prefix shard whose pages all tokenize to nothing has no
+    postings dir and no metrics row: it is carried, not reported
+    missing, and results are unchanged."""
+    index_dir = str(tmp_path / "ix")
+    _index_with_blank_prefix_shard(spark, index_dir)
+    before = _search_sets(spark, index_dir)
+    meta = compact_index(spark, index_dir, CFG)
+    assert meta["n_shards"] == 4 and meta["n_docs"] == 212  # ceil(212/64)
+    assert _search_sets(spark, index_dir) == before
+
+
+def test_compact_missing_prefix_shard_dir_raises_before_commit(
+    spark, tmp_path
+):
+    """A prefix shard dir removed while the metrics table lists that shard
+    is corruption: compaction raises before the pointer flip and leaves
+    meta.json as it was."""
+    import shutil
+
+    index_dir = str(tmp_path / "ix")
+    _meta0, postings = _index_with_blank_prefix_shard(spark, index_dir)
+    shutil.rmtree(os.path.join(postings, "shard_id=1"))
+    meta_path = os.path.join(index_dir, "meta.json")
+    with open(meta_path, "rb") as f:
+        meta_bytes = f.read()
+    with pytest.raises(RuntimeError, match="prefix shard dir .*shard_id=1"):
+        compact_index(spark, index_dir, CFG)
+    with open(meta_path, "rb") as f:
+        assert f.read() == meta_bytes

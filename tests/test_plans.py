@@ -840,10 +840,23 @@ def _jobs_launched(spark, fn) -> tuple[int, int]:
 
 # jobs the same calls launched before: the upsert 12 before small deletes
 # resolved in the driver (36 before table reads pinned their schemas, the
-# staged build dropped its dictionary and deletes scanned docs once); the
-# compaction 25 before (9 of them schema inference)
+# staged build dropped its dictionary and deletes scanned docs once)
 _PARENT_UPSERT_JOBS = 12
-_PARENT_COMPACT_JOBS = 25
+# a compaction's Spark jobs with AQE on: the postings re-encode's shuffle
+# stage and write, and the docs rewrite; the rest reads with pyarrow in
+# the driver (10 jobs under tombstones, 9 without, while occupancy,
+# tombstones, the prefix check and the tail metrics ran on Spark; 25
+# before table reads pinned their schemas)
+_COMPACT_JOBS = 3
+
+
+def _aqe_session(spark):
+    """A session of its own with AQE on: a warm handle another test left
+    open turns AQE off session-wide, and AQE runs each shuffle stage as
+    its own job, so job counts are pinned under AQE."""
+    session = spark.newSession()
+    session.conf.set("spark.sql.adaptive.enabled", "true")
+    return session
 
 
 def test_upsert_compact_and_warm_run_no_schema_inference(
@@ -851,7 +864,8 @@ def test_upsert_compact_and_warm_run_no_schema_inference(
 ):
     """Every read of an index table pins its schema: an upsert, a
     compaction and a warm reopen launch no schema-inference job, and the
-    write path runs fewer jobs than before."""
+    write path runs fewer jobs than before. The compaction, with no
+    tombstone to purge, runs only its two data passes on Spark."""
     from fts_engine_spark.build import BuildConfig, build_index
     from fts_engine_spark.mutate import update_documents
     from fts_engine_spark.streaming.compact import compact_index
@@ -868,8 +882,9 @@ def test_upsert_compact_and_warm_run_no_schema_inference(
         lambda: out.update(up=update_documents(spark, index_dir, batch, cfg)),
     )
     assert out["up"]["replaced"] == 60
+    session = _aqe_session(spark)
     c_jobs, c_inf = _jobs_launched(
-        spark, lambda: out.update(c=compact_index(spark, index_dir))
+        spark, lambda: out.update(c=compact_index(session, index_dir))
     )
     assert out["c"]["n_docs"] == 80 and int(out["c"].get("n_deleted", 0)) == 0
 
@@ -879,7 +894,7 @@ def test_upsert_compact_and_warm_run_no_schema_inference(
     w_jobs, w_inf = _jobs_launched(spark, reopen)
     assert (up_inf, c_inf, w_inf) == (0, 0, 0), (up_jobs, c_jobs, w_jobs)
     assert up_jobs < _PARENT_UPSERT_JOBS
-    assert c_jobs < _PARENT_COMPACT_JOBS
+    assert c_jobs == _COMPACT_JOBS
 
 
 def test_pages_upsert_and_tombstone_compaction_job_budget(
@@ -888,7 +903,9 @@ def test_pages_upsert_and_tombstone_compaction_job_budget(
     """The write cycle's Spark job budget. An upsert of an html-only page
     file through ``read_pages`` runs 2 jobs: the input's schema inference
     and the bounded collect (6 when the dictionary merged on Spark). The
-    compaction that purges its tombstones runs at most 10 (16 when the
+    compaction that purges its tombstones runs 3 with AQE on: the postings
+    re-encode (its shuffle stage and write) and the docs rewrite (10
+    while its bookkeeping and metrics ran on Spark, 16 when the
     dictionary correction range-wrote on Spark and re-read Σcf)."""
     import pyarrow as pa
     import pyarrow.parquet as pq
@@ -930,11 +947,12 @@ def test_pages_upsert_and_tombstone_compaction_job_budget(
     )
     assert out["up"]["replaced"] == 20
     assert (up_jobs, up_inf) == (2, 1)
+    session = _aqe_session(spark)
     c_jobs, c_inf = _jobs_launched(
-        spark, lambda: out.update(c=compact_index(spark, index_dir))
+        spark, lambda: out.update(c=compact_index(session, index_dir))
     )
     assert out["c"]["n_docs"] == 100 and out["c"]["n_deleted"] == 0
-    assert c_inf == 0 and c_jobs <= 10, c_jobs
+    assert c_inf == 0 and c_jobs == _COMPACT_JOBS, c_jobs
 
 
 # jobs the same batch build ran while it aggregated and range-wrote its
@@ -954,10 +972,7 @@ def test_batch_build_job_budget(spark, small_corpus, tmp_path, monkeypatch):
     from fts_engine_spark import build, layout
     from fts_engine_spark.build import BuildConfig, build_index
 
-    # a session of its own: a warm handle another test left open turns
-    # AQE off session-wide, and AQE runs each shuffle stage as its own job
-    session = spark.newSession()
-    session.conf.set("spark.sql.adaptive.enabled", "true")
+    session = _aqe_session(spark)
     cfg = BuildConfig(preset="by_lang", shard_size=32, id_buckets=8)
     docs = session.read.parquet(small_corpus).select("url", "text", "lang")
     sc = spark.sparkContext
